@@ -65,21 +65,8 @@ object Bench {
     "wordpiece_train", "wordpiece_encode", "wordpiece_encode_served",
     "unigram_train", "unigram_encode", "unigram_encode_served")
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Let AQE size post-shuffle partitions by bytes (advisory 64MB)
-      // instead of defending the session's parallelism: at fixture scale
-      // this collapses 32 near-empty reducers into a few right-sized ones
-      // (fixed task overhead dominates small shuffles); at 100 TB the same
-      // rule yields full parallelism because partitions are byte-bound.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  private def buildSession(): SparkSession = {
+    val spark = GraftSession.local()
     // ERROR, not WARN: the invoking harness records only the tail of the
     // combined output, and per-query WARN chatter (streaming's
     // ResolveWriteToStream most of all) can push the final JSON line out
@@ -89,15 +76,24 @@ object Bench {
     spark
   }
 
+  /** `s` as a JSON string literal (quotes, backslashes and control
+    * characters escaped): exception messages carry all three. */
+  private def jsonString(s: String): String =
+    s.map {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-3 MINIMUM: a one-shot record is not a statistic; the env
     // var can raise the run count, never lower it below 3
     val runs = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt, 3)
     val restartEvery =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_RESTART", "60").toInt
-    var spark = buildSession(cpus)
+    var spark = buildSession()
 
     def time(fn: => Unit): Double = {
       val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
@@ -174,6 +170,9 @@ object Bench {
     // 5 samples reported "runs":3, so round-over-round comparisons could
     // not tell which medians were defended) — lives in the on-disk record
     val runsByQuery = scala.collection.mutable.LinkedHashMap[String, Int]()
+    // per-QUERY failure reason ("<class>: <message>") for rows recorded
+    // as -1.0, so a failed row says why in the on-disk record
+    val errorByQuery = scala.collection.mutable.LinkedHashMap[String, String]()
     // per-QUERY max EXTERNAL load (loadavg minus own CPU share): the
     // value the re-run trigger fires on; the compact attribution lists
     // rows by THIS, while loadByQuery keeps raw loadavg for comparability
@@ -255,8 +254,9 @@ object Bench {
           loadByQuery(key) = rowLoad
           extByQuery(key) = rowExt
           median(ts)
-        } catch { case _: Throwable =>
+        } catch { case e: Throwable =>
           runsByQuery(key) = 0
+          errorByQuery(key) = s"${e.getClass.getName}: ${e.getMessage}"
           loadByQuery(key) = osBean.getSystemLoadAverage
           extByQuery(key) = externalLoad(loadByQuery(key))
           -1.0
@@ -268,7 +268,7 @@ object Bench {
       if (idx > 0 && restartEvery > 0 && idx % restartEvery == 0) {
         // session rotation (untimed): bounded-state execution windows
         spark.stop()
-        spark = buildSession(cpus)
+        spark = buildSession()
       }
       q.name -> measureRow(q, q.name)
     }
@@ -289,7 +289,7 @@ object Bench {
     val endByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
     if (filter.isEmpty) {
       spark.stop()
-      spark = buildSession(cpus)
+      spark = buildSession()
       toRun.filter(q => baselineAnchors.contains(q.name) &&
           startByName.get(q.name).exists(_ >= 0))
         .foreach(q => endByQuery(q.name) = measureRow(q, q.name + "#end"))
@@ -362,7 +362,7 @@ object Bench {
       s"""{"load_avg":$load,"free_mem_gb":$freeGb,"heap_gb":$heapGb,""" +
         s""""gc_count":$gcN,"gc_sec":$gcSec,""" +
         f""""gc_timed_sec":$gcTimed%.1f,"gc_hygiene_sec":$gcHygiene%.1f,""" +
-        s""""cpus":$cpus}"""
+        s""""cpus":${GraftSession.defaultCpus}}"""
     }
     val env = envJson()
     val tier =
@@ -429,6 +429,8 @@ object Bench {
             .mkString(""""ext_load_by_query":{""", ",", "},") +
           runsByQuery.collect { case (k, n) if n != runs => s""""$k":$n""" }
             .mkString(""""runs_by_query":{""", ",", "},") +
+          errorByQuery.map { case (k, e) => s""""$k":${jsonString(e)}""" }
+            .mkString(""""error_by_query":{""", ",", "},") +
           headlineEndJson
       val head = s"""{"metric":"total","value":$suiteTotal,"unit":"sec",""" +
         comparableJson + s""""queries":$qs,"""

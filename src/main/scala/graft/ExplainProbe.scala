@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: print the formatted physical plan of registered queries
   * (`runMain graft.ExplainProbe <sfDir> <name>[,<name>...]`) — the
   * plan-audit loop (pushdown/broadcast/exchange shapes) without writing a
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     // "exec" as a third arg: materialize first (noop sink) and print the
     // POST-EXECUTION adaptive plan — the only place AQE decisions
     // (ReusedExchange, AQEShuffleRead coalescing, runtime join swaps)

@@ -33,20 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object StressScale {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Perturbed replica k of the documents table (k = 0 → identity). */
   private[graft] def documentReplica(docs: DataFrame, k: Int, idStride: Long): DataFrame = {
     val text =
@@ -553,7 +539,7 @@ object StressScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = GraftSession.local()
     args.toList match {
       case "gen" :: src :: out :: n :: Nil => gen(spark, src, out, n.toInt)
       case "gentpch" :: src :: out :: n :: Nil => genTpch(spark, src, out, n.toInt)

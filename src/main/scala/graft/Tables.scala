@@ -66,30 +66,6 @@ object Tables {
   def fanOut(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Size-adaptive [[fanOut]]: spread across `ceil(inputBytes /
-    * targetBytes)` partitions, clamped to [1, defaultParallelism].
-    * `inputBytes` is Catalyst's optimized-plan estimate — for the
-    * parquet-scan pipelines this is applied to, that is the file size,
-    * known before any job runs. Rationale (guide §2 partition sizing): a
-    * flat `repartition(defaultParallelism)` is a constant tuned for the
-    * CLUSTER — on a small input it schedules cores-many near-empty
-    * partitions through every downstream consumer of the (often pinned)
-    * result, which measured ~2× slower at 32 cores than 8 on the sf0.1
-    * dedup shingle pipelines; deriving the count from input size keeps
-    * small inputs compact while a big input still fans to full
-    * parallelism. The plan estimate for a parquet scan is COMPRESSED
-    * file bytes; the shingle pipelines expand that ~30× into in-flight
-    * exploded rows (measured sf0.1: 0.6 MB on disk → ~20 MB exploded),
-    * so the estimate is scaled by that factor before dividing by the
-    * 8 MiB per-partition target.
-    */
-  def fanOutBySize(df: DataFrame, targetBytes: Long = 8L << 20): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes * 30
-    val cap = BigInt(df.sparkSession.sparkContext.defaultParallelism)
-    val n = ((bytes / targetBytes) + 1).min(cap).max(1)
-    df.repartition(n.toInt)
-  }
-
   /** Eager localCheckpoint at MEMORY_AND_DISK_SER — the pinning
     * primitive every operator should use instead of bare
     * `localCheckpoint(true)`. Serialized blocks hold compact UnsafeRow

@@ -303,7 +303,7 @@ object GraphOps {
     * task ever materializes a pathological hub's list. A one-pass
     * collect_set fusion would save two exchanges of a 2-column table but
     * build every hub's full set first — the wrong trade at 100 TB. (r18
-    * DevTime, solo sf1: prologue 17 s of the 19–21 s total; the sized
+    * stage probe, solo sf1: prologue 17 s of the 19–21 s total; the sized
     * pair aggregate beats naive session partitioning ~5×; sf10 probe
     * growth 2.7× per 10× data.)
     */

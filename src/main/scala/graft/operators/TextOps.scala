@@ -445,11 +445,16 @@ object TextOps {
       .select(expr("substring(word, p, 1)").as("piece")).distinct()
       .collect().map(_.getString(0))
     val vocab = (alphabet ++ merges.map { case (a, b) => a + b }).distinct
-    val maxL = vocab.map(_.length).max
-    val vmapLit = vocab.sorted.map(p => s"'$p', 1").mkString("map(", ", ", ")")
-    val enc = dw
-      .withColumn("seg", expr(greedyMatchExpr(maxL, vmapLit)))
-      .select(col("word"), split(col("seg.t"), "[|]").as("toks"))
+    // an empty vocab means no [a-z] word in the corpus and no merges: dw
+    // is empty, and there is no piece to match (nor a max length)
+    val enc =
+      if (vocab.isEmpty) dw.select(col("word"), typedLit(Seq.empty[String]).as("toks"))
+      else {
+        val maxL = vocab.map(_.length).max
+        val vmapLit = vocab.sorted.map(p => s"'$p', 1").mkString("map(", ", ", ")")
+        dw.withColumn("seg", expr(greedyMatchExpr(maxL, vmapLit)))
+          .select(col("word"), split(col("seg.t"), "[|]").as("toks"))
+      }
     corpusTokenAggs(dwc, enc)
   }
 

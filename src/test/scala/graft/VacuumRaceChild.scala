@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Forked-JVM writer for [[VacuumRaceSpec]]: a SEPARATE process whose
@@ -21,14 +20,7 @@ import org.apache.spark.sql.functions._
 object VacuumRaceChild {
   def main(args: Array[String]): Unit = {
     val Array(wh, tCommit, tCrash, release) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-vacuum-race-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(2)
     try {
       val cat = new graft.sources.Catalog(spark, wh)
       import spark.implicits._

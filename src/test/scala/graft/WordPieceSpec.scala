@@ -52,6 +52,12 @@ class WordPieceSpec extends SparkSpec {
     assert(enc.getLong(1) === 4L && enc.getLong(2) === 3L)
   }
 
+  test("a corpus with no [a-z] word and no merges encodes to no rows") {
+    val enc = operators.TextOps.wordpieceApplyCorpus(
+      docs("123 456", "!!! \u00c4\u00d6\u00dc", ""), Seq.empty)
+    assert(enc.collect().isEmpty)
+  }
+
   test("train is deterministic and score-ordered output is stable") {
     val d = Tables.documents(spark, sf0001)
     val a = operators.TextOps.wordpieceTrain(d, 50, 3)._1
