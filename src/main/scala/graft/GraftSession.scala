@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one place a SparkSession is built. Every main, the specs and the
@@ -30,6 +32,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // every streaming query logs that AQE is off for it, once or twice per
+    // start; AQE stays on for the batch rows sharing this session
+    Seq("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
+      .foreach(Configurator.setLevel(_, Level.ERROR))
     spark
   }
 }

@@ -94,46 +94,48 @@ object TextOps {
       .groupBy(col(id)).agg(Det.davg(col("lp")).as("avg_logp3"))
   }
 
-  // ---------------------------------------------------------------- BPE
+  // --------------------------------------------------------- tokenizers
+  //
+  // BPE, WordPiece and unigram-LM share one skeleton: corpus word table →
+  // model → per-word encode → [[corpusTokenAggs]]. Each tokenizer supplies
+  // only its merge choice ([[trainMerges]]' `pick`) or its DP
+  // ([[viterbiLocal]]).
+  //
+  // The trainers run their round loops DRIVER-LOCAL over the collected
+  // top-`topN` word table. This is the model-sized-collect discipline (the
+  // k-means centroid hop, sampled-centroid training), not a driver-data
+  // anti-pattern: the ONLY corpus-sized pass is word counting + top-N
+  // selection ([[collectWordTable]]), which stays distributed; everything
+  // after is bounded by the vocab PARAMETER (≤ topN rows, ≤ topN·maxWordLen
+  // symbols) at every corpus scale — 100 TB included — exactly like every
+  // production tokenizer trainer, which fits its aggregated word counts in
+  // memory. Tie-breaks and arithmetic are total orders over integers and
+  // ASCII strings (Java string order == Spark's UTF8 binary order), and the
+  // DuckDB oracle replays every round in SQL, so hash-equality across all
+  // fixtures is the equivalence proof. Model data reaches a Spark plan only
+  // as a typed literal column (`model`), never as SQL text.
 
-  /** The BPE training vocabulary: top-`topN` lowercase alpha words by
-    * (freq desc, word) — the word-frequency table BPE trainers actually
-    * operate on (corpus-scale text folds into a vocab-scale table first;
-    * Zipf makes the tail irrelevant to early merges).
+  /** One corpus word per row: the non-empty lowercase `[a-z]+` runs of
+    * `text` — the alphabet of every tokenizer, trainer and encoder alike.
+    * (Java's split keeps a trailing empty element; the filter drops it.)
     */
-  private[graft] def bpeWords(docs: DataFrame, topN: Int): DataFrame =
-    docs.select(explode(split(lower(col("text")), "[^a-z]+")).as("word"))
-      .filter(length(col("word")) > 0)
+  private def corpusWord: Column =
+    explode(filter(split(lower(col("text")), "[^a-z]+"), w => length(w) > 0))
+      .as("word")
+
+  /** The one distributed pass of training: the top-`topN` `(word, freq)`
+    * table by (freq desc, word) — the word-frequency table subword
+    * trainers actually operate on (Zipf makes the tail irrelevant to early
+    * merges).
+    */
+  private def collectWordTable(docs: DataFrame, topN: Int): Array[(String, Long)] =
+    docs.select(corpusWord)
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word")).limit(topN)
-
-  // ---------------- driver-local training over the collected word table
-  //
-  // The three tokenizer TRAINERS (BPE / WordPiece / unigram-LM) run their
-  // round loops DRIVER-LOCAL over the collected top-`topN` word table.
-  // This is the model-sized-collect discipline (the k-means centroid hop,
-  // sampled-centroid training), not a driver-data anti-pattern: the ONLY
-  // corpus-sized pass is word counting + top-N selection ([[bpeWords]]),
-  // which stays distributed; everything after is bounded by the vocab
-  // PARAMETER (≤ topN rows, ≤ topN·maxWordLen symbols) at every corpus
-  // scale — 100 TB included — exactly like every production tokenizer
-  // trainer, which fits its aggregated word counts in memory. The
-  // previous relational round loop had the same semantics but spent ~20
-  // serial vocab-sized Spark jobs per trainer (per round: plan + schedule
-  // + a 1-row argmax collect + an eager localCheckpoint) on tables that
-  // fit in L2 cache — measured 2.0 s for bpe_train at sf0.1 where the
-  // collected loop runs in milliseconds; the corpus-scan floor stays.
-  // Tie-breaks and arithmetic replicate the relational forms bit-exactly
-  // (ASCII-only symbols make Java string order == Spark's UTF8 binary
-  // order), and the DuckDB oracle still replays every round in SQL, so
-  // hash-equality across all fixtures is the equivalence proof.
-
-  /** The one distributed pass: collect the top-N `(word, freq)` table. */
-  private def collectWordTable(docs: DataFrame, topN: Int): Array[(String, Long)] =
-    bpeWords(docs, topN).collect().map(r => (r.getString(0), r.getLong(1)))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
 
   /** Greedy LEFT-TO-RIGHT non-overlapping application of merge (a, b) —
-    * the driver-local twin of [[mergeFoldExpr]]'s per-array fold.
+    * the driver-local twin of [[mergeFold]]'s per-array fold.
     */
   private def applyMergeLocal(syms: Array[String], a: String, b: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
@@ -146,10 +148,13 @@ object TextOps {
     out.toArray
   }
 
+  /** A word table with each word's current symbols: `(word, freq, syms)`. */
+  private type SymTable = Array[(String, Long, Array[String])]
+
   /** Freq-weighted adjacent-pair counts (every adjacent position pair
     * counts, overlaps included — "aaa" contributes (a,a) twice).
     */
-  private def pairCountsLocal(tab: Array[(String, Long, Array[String])])
+  private def pairCountsLocal(tab: SymTable)
       : scala.collection.mutable.HashMap[(String, String), Long] = {
     val m = scala.collection.mutable.HashMap[(String, String), Long]()
     tab.foreach { case (_, f, s) =>
@@ -161,40 +166,44 @@ object TextOps {
     m
   }
 
-  /** The symbolized vocab as the (word, freq, pos, sym) rows the
-    * relational round loop used to carry — same schema, local relation.
+  /** The merge trainer shared by BPE and WordPiece, over the top-`topN`
+    * word table: per round, freq-weighted adjacent-pair counts → `pick`
+    * chooses the merge (and its published score) → greedy left-to-right
+    * non-overlapping application; a round with no pair left learns
+    * nothing. Deterministic end to end (integer freqs, total-order
+    * tie-breaks), so the DuckDB oracle replays every round hash-exactly.
+    * Returns `(round, left, right, pairCount, score)` per merge plus each
+    * word's final symbols.
     */
-  private def symsDf(spark: org.apache.spark.sql.SparkSession,
-      tab: Array[(String, Long, Array[String])]): DataFrame =
-    spark.createDataFrame(tab.toSeq.flatMap { case (w, f, s) =>
-      s.iterator.zipWithIndex.map { case (sym, i) => (w, f, (i + 1).toLong, sym) }
-    }).toDF("word", "freq", "pos", "sym")
-
-  /** Byte-pair-encoding merge learning over the top-`topN` word table:
-    * per round, freq-weighted adjacent-pair counts → merge argmax by
-    * (count desc, pair asc) → greedy left-to-right non-overlapping
-    * application. Deterministic end to end (integer freqs, total-order
-    * tie-breaks), so the DuckDB oracle replays every round hash-exactly
-    * ([[bpeOracleCtes]] unrolls them). Scale shape: see the section
-    * comment above — one distributed corpus pass, then a driver-local
-    * loop over model-sized state.
-    */
-  private[graft] def bpeTrain(docs: DataFrame, topN: Int, rounds: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) = {
-    var tab: Array[(String, Long, Array[String])] =
-      collectWordTable(docs, topN).map { case (w, f) =>
-        (w, f, w.toCharArray.map(_.toString))
-      }
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
+  private def trainMerges(docs: DataFrame, topN: Int, rounds: Int)(
+      pick: (SymTable, scala.collection.Map[(String, String), Long]) => ((String, String), Long))
+      : (Seq[(Int, String, String, Long, Long)], Seq[(String, Seq[String])]) = {
+    var tab: SymTable = collectWordTable(docs, topN).map { case (w, f) =>
+      (w, f, w.toCharArray.map(_.toString))
+    }
+    val merges = Seq.newBuilder[(Int, String, String, Long, Long)]
     for (r <- 1 to rounds) {
       val pc = pairCountsLocal(tab)
       if (pc.nonEmpty) {
-        val ((a, b), c) = pc.minBy { case ((x, y), n) => (-n, x, y) }
-        merges += ((r, a, b, c))
+        val ((a, b), score) = pick(tab, pc)
+        merges += ((r, a, b, pc((a, b)), score))
         tab = tab.map { case (w, f, s) => (w, f, applyMergeLocal(s, a, b)) }
       }
     }
-    (merges.result(), symsDf(docs.sparkSession, tab))
+    (merges.result(), tab.toSeq.map { case (w, _, s) => (w, s.toSeq) })
+  }
+
+  /** Byte-pair-encoding merge learning ([[trainMerges]]): the merge is
+    * the pair argmax by (count desc, pair asc) ([[bpeOracleCtes]] unrolls
+    * the rounds). Returns `(round, left, right, pairCount)` per merge plus
+    * each word's final symbols.
+    */
+  private[graft] def bpeTrain(docs: DataFrame, topN: Int, rounds: Int)
+      : (Seq[(Int, String, String, Long)], Seq[(String, Seq[String])]) = {
+    val (merges, syms) = trainMerges(docs, topN, rounds) { (_, pc) =>
+      pc.minBy { case ((x, y), n) => (-n, x, y) }
+    }
+    (merges.map { case (r, a, b, c, _) => (r, a, b, c) }, syms)
   }
 
   /** Apply the learned merge table to the WHOLE corpus in rank order —
@@ -206,120 +215,103 @@ object TextOps {
       rounds: Int): DataFrame =
     bpeApplyCorpus(docs, bpeTrain(docs, topN, rounds)._1)
 
-  /** Greedy left-to-right non-overlapping application of a WHOLE merge
-    * table to a token array, as one codegen'd doubly-nested fold: the
-    * outer `aggregate` walks the merge table (a literal array of
-    * (a, b) structs, in rank order); the inner one is [[applyMergeLocal]]
-    * as a SQL fold — scan state (output array, skip-next flag), a matched
-    * pair appends `a||b` and skips its right element. Every repeated
-    * reference inside the folds is a LAMBDA VARIABLE (a leaf), so the
-    * expression tree stays O(merges + 1) — a per-round withColumn chain
-    * was collapsed by the optimizer into 4-way subtree duplication per
-    * round (4⁶ copies: 321 MiB task binaries, unrunnable). Literals are
-    * [a-z]-only (the [[bpeWords]] alphabet), so no escaping is needed.
+  /** Greedy left-to-right non-overlapping application of the WHOLE merge
+    * table `model` (an array of (a, b) structs, in rank order) to the
+    * word's characters, as one codegen'd doubly-nested fold: the outer
+    * `aggregate` walks the merge table; the inner one is
+    * [[applyMergeLocal]] as a SQL fold — scan state (output array,
+    * skip-next flag), a matched pair appends `a||b` and skips its right
+    * element. Every repeated reference inside the folds is a LAMBDA
+    * VARIABLE (a leaf), so the expression tree stays O(1) in the merges —
+    * a per-round withColumn chain was collapsed by the optimizer into
+    * 4-way subtree duplication per round (4⁶ copies: 321 MiB task
+    * binaries, unrunnable).
     */
-  private def mergeFoldExpr(arrCol: String,
-      merges: Seq[(String, String)]): String = {
-    val table = merges
-      .map { case (a, b) => s"named_struct('a', '$a', 'b', '$b')" }
-      .mkString("array(", ", ", ")")
-    s"""aggregate(
-       |  $table,
-       |  $arrCol,
-       |  (ts, m) -> aggregate(
-       |    sequence(1, size(ts)),
-       |    named_struct('o', cast(array() as array<string>), 'skip', false),
-       |    (st, i) -> CASE
-       |      WHEN st.skip THEN named_struct('o', st.o, 'skip', false)
-       |      WHEN i < size(ts) AND element_at(ts, i) = m.a
-       |           AND element_at(ts, i + 1) = m.b
-       |        THEN named_struct('o', array_append(st.o, concat(m.a, m.b)),
-       |             'skip', true)
-       |      ELSE named_struct('o', array_append(st.o, element_at(ts, i)),
-       |           'skip', false) END,
-       |    st -> st.o))""".stripMargin
-  }
+  private val mergeFold: String =
+    """aggregate(
+      |  model,
+      |  filter(split(word, ''), s -> s <> ''),
+      |  (ts, m) -> aggregate(
+      |    sequence(1, size(ts)),
+      |    named_struct('o', cast(array() as array<string>), 'skip', false),
+      |    (st, i) -> CASE
+      |      WHEN st.skip THEN named_struct('o', st.o, 'skip', false)
+      |      WHEN i < size(ts) AND element_at(ts, i) = m.a
+      |           AND element_at(ts, i + 1) = m.b
+      |        THEN named_struct('o', array_append(st.o, concat(m.a, m.b)),
+      |             'skip', true)
+      |      ELSE named_struct('o', array_append(st.o, element_at(ts, i)),
+      |           'skip', false) END,
+      |    st -> st.o))""".stripMargin
+
+  /** One BPE merge as the struct element of [[mergeFold]]'s `model`. */
+  private final case class Merge(a: String, b: String)
 
   /** Apply an already-learned merge table (e.g. loaded from
     * [[graft.sources.ModelStore.loadMerges]]) to every document — the
-    * serving half of the tokenizer. A word's tokenization depends only on
-    * the word string, so merges are applied ONCE PER DISTINCT WORD and
-    * the corpus gets its tokenizations by a dictionary join — the
-    * amortization every real tokenizer runs; the corpus is never pushed
-    * through the merge rounds row by row. The whole merge-table
-    * application is ONE codegen'd nested fold per distinct word
-    * ([[mergeFoldExpr]]) — a single shuffle-free map stage. (History: a
-    * per-OCCURRENCE window form cost 6 corpus-sized window shuffles —
-    * 10× this one's wall-clock; the per-word WINDOW form it replaced
-    * still paid 6 vocab-sized window rounds + an eager localCheckpoint
-    * each. The plan is 6 Windows + 7 checkpoint scans → 1
-    * WholeStageCodegen span; bench numbers in OPTIMIZATION_r19.md.)
+    * serving half of the tokenizer: [[corpusTokenAggs]] with the merge
+    * table as `model` and [[mergeFold]] as the per-word encode (a single
+    * shuffle-free map stage; bench numbers in OPTIMIZATION_r19.md).
     */
   private[graft] def bpeApplyCorpus(docs: DataFrame,
-      merges: Seq[(Int, String, String, Long)]): DataFrame = {
-    // the exploded word table is CORPUS-sized and NOT pinned (pin()'s
-    // contract is model-sized or O(1)-read state); it has ONE consumer —
-    // the (doc_id, word) occurrence-count aggregate — so the corpus is
-    // scanned exactly once and nothing corpus-sized is ever retained
-    val words = docs.select(col("doc_id"), explode(filter(
-        split(lower(col("text")), "[^a-z]+"),
-        w => length(w) > 0)).as("word"))
-    val dwc = words.groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
-    // split('') can carry a trailing empty element (Java split limit -1);
-    // the filter drops it, and the session-parallelism repartition spreads
-    // the per-word fold compute (AQE would coalesce the few-MB distinct
-    // table to ~1 partition). dw dedups the ALREADY-deduped (doc_id,
-    // word) table, never the raw corpus.
-    val dw = dwc.select("word").distinct()
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("word"))
-      .withColumn("toks", expr(mergeFoldExpr(
-        "filter(split(word, ''), s -> s <> '')",
-        merges.map(m => (m._2, m._3)))))
-    corpusTokenAggs(dwc, dw)
-  }
+      merges: Seq[(Int, String, String, Long)]): DataFrame =
+    corpusTokenAggs(docs,
+      typedLit(merges.map { case (_, a, b, _) => Merge(a, b) }),
+      expr(mergeFold))
 
-  /** The shared per-doc aggregate tail of the corpus tokenizers, fed the
-    * deduped occurrence-count table `dwc(doc_id, word, c)` and the
-    * encoded dictionary `enc(word, toks)`.
+  /** The corpus half of the tokenizer skeleton: count each document's
+    * words once, encode each DISTINCT word once, and aggregate per
+    * document — `(doc_id, n_tokens, n_token_types)`. A word's
+    * tokenization depends only on the word string, so the corpus gets its
+    * tokenizations by a dictionary join — the amortization every real
+    * tokenizer runs; the corpus is never pushed through the encoder row
+    * by row. `model` (a typed literal) is bound as column `model` on the
+    * distinct-word table, and `toks` — the word's token array — may
+    * reference it and `word` by name.
+    *
+    * The exploded word table is CORPUS-sized and NOT pinned (pin()'s
+    * contract is model-sized or O(1)-read state); it has ONE consumer —
+    * the (doc_id, word) occurrence-count aggregate `dwc` — so the corpus
+    * is scanned exactly once and nothing corpus-sized is ever retained.
+    * The distinct-word table derives from the SAME aggregate (ReuseExchange
+    * keeps it one physical scan) and is spread by an explicit hash(word)
+    * repartition at session parallelism: the encode fold is the heavy
+    * per-row work, and AQE's byte-bound coalesce would funnel the few-MB
+    * table (and so the fold) onto ~1 partition.
     *
     * ONE dictionary join and ONE per-doc aggregation produce BOTH
-    * outputs: broadcast-join `enc` (projected to `n_toks` + distinct
-    * `syms` — the token arrays never ride a corpus-sized row) onto the
-    * distinct-(doc, word) table, then a single groupBy(doc_id) —
-    * `n_tokens` = Σ c·n_toks (exact: Σ_occurrences n_toks =
-    * Σ_(doc,word) c·n_toks), `n_token_types` = |array_distinct(flatten(
-    * collect_set(syms)))| (the per-doc union of the per-word distinct
-    * symbol sets; partial-aggregated state is bounded by the DOC's own
-    * vocabulary, never the corpus). No Generate: an earlier posexplode
-    * form let InferFiltersFromGenerate push `size(syms)>0 AND
-    * isnotnull(syms)` — with the whole per-word encode fold substituted
-    * in, twice — below the dictionary's distinct aggregate onto the
-    * per-occurrence corpus scan (measured 5× the row's cost at sf0.1).
+    * outputs: broadcast-join the encoded dictionary (projected to
+    * `n_toks` + distinct `syms` — the token arrays never ride a
+    * corpus-sized row) onto `dwc(doc_id, word, c)`, then a single
+    * groupBy(doc_id) — `n_tokens` = Σ c·n_toks (exact: Σ_occurrences
+    * n_toks = Σ_(doc,word) c·n_toks), `n_token_types` =
+    * |array_distinct(flatten(collect_set(syms)))| (the per-doc union of
+    * the per-word distinct symbol sets; partial-aggregated state is
+    * bounded by the DOC's own vocabulary, never the corpus). No Generate
+    * after the word split: an earlier posexplode form let
+    * InferFiltersFromGenerate push `size(syms)>0 AND isnotnull(syms)` —
+    * with the whole per-word encode fold substituted in, twice — below the
+    * dictionary's distinct aggregate onto the per-occurrence corpus scan
+    * (measured 5× the row's cost at sf0.1).
     *
-    * vs the r19 form it replaces: that one consumed the CORPUS-sized
-    * exploded word table in TWO subtrees (a per-occurrence n_tokens join
-    * + a distinct for the types path — two full corpus scans), evaluated
-    * `enc` — the expensive per-word fold — in both, fanned the types
-    * path out by (doc, sym) pairs through two more distinct shuffles,
-    * and joined the two per-doc aggregates at the end. Here the corpus
-    * is scanned once (the caller's groupBy(doc_id, word)
-    * partial-aggregates map-side before its only shuffle — and the
-    * caller's dictionary derives from the SAME aggregate, so
-    * ReuseExchange keeps it one physical scan), the dictionary fold runs
-    * in ONE subtree, and the final per-doc join is gone.
-    *
-    * The dictionary side is an EXPLICIT broadcast, not planner choice:
-    * it is distinct-word-sized (the language's vocabulary, not the
-    * corpus) — the same side the r19 plan already broadcast. Catalyst's
-    * size estimate for the post-aggregate dwc is wildly wrong and the
-    * static planner answered by broadcasting the CORPUS-derived side
-    * (BuildLeft; measured 3.5× slower), and a SHUFFLE_HASH hint instead
-    * re-shuffles dwc by hash(word) — catastrophically skewed on a small
-    * vocabulary. The broadcast keeps the corpus side shuffle-free at the
-    * join exactly as in r19.
+    * The dictionary side is an EXPLICIT broadcast, not planner choice: it
+    * is distinct-word-sized (the language's vocabulary, not the corpus).
+    * Catalyst's size estimate for the post-aggregate dwc is wildly wrong
+    * and the static planner answered by broadcasting the CORPUS-derived
+    * side (BuildLeft; measured 3.5× slower), and a SHUFFLE_HASH hint
+    * instead re-shuffles dwc by hash(word) — catastrophically skewed on a
+    * small vocabulary. The broadcast keeps the corpus side shuffle-free
+    * at the join.
     */
-  private def corpusTokenAggs(dwc: DataFrame, enc: DataFrame): DataFrame =
+  private def corpusTokenAggs(docs: DataFrame, model: Column,
+      toks: Column): DataFrame = {
+    val dwc = docs.select(col("doc_id"), corpusWord)
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
+    val enc = dwc.select("word").distinct()
+      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
+        col("word"))
+      .select(col("word"), model.as("model"))
+      .select(col("word"), toks.as("toks"))
     dwc
       .join(broadcast(enc.select(col("word"),
         size(col("toks")).cast("long").as("n_toks"),
@@ -330,132 +322,75 @@ object TextOps {
           .cast("long").as("n_token_types"))
       .select(col("doc_id"), col("n_tokens"), col("n_token_types"))
       .orderBy("doc_id")
+  }
 
   // ------------------------------------------ WordPiece tokenizer
 
   /** WordPiece merge learning (Schuster & Nakajima 2012; the BERT-family
-    * tokenizer) — BPE's merge loop with the merge chosen by the
+    * tokenizer) — [[trainMerges]] with the merge chosen by the
     * LIKELIHOOD score `count(ab) / (count(a)·count(b))` instead of raw
     * pair count (the unigram-LM likelihood gain of the merge). The score
     * is published as the exact integer
     * `(count(ab)·10¹²) DIV (count(a)·count(b))`, computed in unbounded
     * BigInt here and HUGEINT in the oracle so it can never overflow or
-    * diverge; ties break by (pair count desc, pair asc). Greedy
-    * application and scale discipline are [[bpeTrain]]'s (driver-local
-    * loop over the collected model-sized word table — see the section
-    * comment above it). Returns `(round, left, right, pairCount,
-    * scoreFix)` per merge plus the final symbol rows.
+    * diverge; ties break by (pair count desc, pair asc). Returns
+    * `(round, left, right, pairCount, scoreFix)` per merge plus each
+    * word's final symbols.
     */
   private[graft] def wordpieceTrain(docs: DataFrame, topN: Int, rounds: Int)
-      : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
-    var tab: Array[(String, Long, Array[String])] =
-      collectWordTable(docs, topN).map { case (w, f) =>
-        (w, f, w.toCharArray.map(_.toString))
-      }
+      : (Seq[(Int, String, String, Long, Long)], Seq[(String, Seq[String])]) = {
     val trillion = BigInt(1000000000000L)
-    val merges = Seq.newBuilder[(Int, String, String, Long, Long)]
-    for (r <- 1 to rounds) {
-      val pc = pairCountsLocal(tab)
-      if (pc.nonEmpty) {
-        // unigram symbol counts over ALL positions (the denominator)
-        val uc = scala.collection.mutable.HashMap[String, Long]()
-        tab.foreach { case (_, f, s) =>
-          s.foreach(sym => uc(sym) = uc.getOrElse(sym, 0L) + f)
-        }
-        // score = (c·10¹²) DIV (ua·ub) in unbounded integers — BigInt
-        // reproduces the relational DECIMAL(38) / oracle HUGEINT exactly
-        val scored = pc.iterator.map { case ((a, b), c) =>
-          val s = (BigInt(c) * trillion / (BigInt(uc(a)) * BigInt(uc(b)))).toLong
-          (a, b, c, s)
-        }.toSeq
-        val (a, b, c, s) = scored.minBy { case (x, y, n, sc) => (-sc, -n, x, y) }
-        merges += ((r, a, b, c, s))
-        tab = tab.map { case (w, f, sy) => (w, f, applyMergeLocal(sy, a, b)) }
+    trainMerges(docs, topN, rounds) { (tab, pc) =>
+      // unigram symbol counts over ALL positions (the denominator)
+      val uc = scala.collection.mutable.HashMap[String, Long]()
+      tab.foreach { case (_, f, s) =>
+        s.foreach(sym => uc(sym) = uc.getOrElse(sym, 0L) + f)
       }
+      val (pair, _, score) = pc.iterator.map { case ((a, b), c) =>
+        ((a, b), c, (BigInt(c) * trillion / (BigInt(uc(a)) * BigInt(uc(b)))).toLong)
+      }.minBy { case ((x, y), n, s) => (-s, -n, x, y) }
+      (pair, score)
     }
-    (merges.result(), symsDf(docs.sparkSession, tab))
   }
 
   /** Greedy LONGEST-MATCH-FIRST segmentation as one codegen'd fold per
     * word — real WordPiece's SERVING algorithm, which is NOT merge
     * replay (a merge sequence and longest-match can tokenize a word
     * differently; production encoders all ship the matcher). State =
-    * (cursor, token_str, n); at the cursor, an inner descending-length
-    * fold finds the longest piece present in `vmap` (an expression
-    * evaluating to a map keyed by piece — a column or a literal), with a
-    * single-char fallback so unseen characters can never dead-end the
-    * scan.
+    * (cursor, token_str); at the cursor, an inner descending-length fold
+    * finds the longest piece (≤ `maxL` chars) present in the map `model`,
+    * with a single-char fallback, so unseen characters can never
+    * dead-end the scan and single chars need no vocab entry.
     */
-  private[graft] def greedyMatchExpr(maxL: Int,
-      vmap: String = "vmap"): String = {
+  private def greedyMatch(maxL: Int): String = {
     val lstar = s"coalesce(aggregate(" +
       s"sequence(least($maxL, length(word) - acc.p + 1), 1, -1), " +
       "cast(null as int), (m, l) -> CASE WHEN m IS NOT NULL THEN m " +
-      s"WHEN element_at($vmap, substring(word, acc.p, l)) IS NOT NULL THEN l " +
+      "WHEN element_at(model, substring(word, acc.p, l)) IS NOT NULL THEN l " +
       "ELSE cast(null as int) END), 1)"
     val tok = s"substring(word, acc.p, $lstar)"
     s"""aggregate(
        |  sequence(1, length(word)),
-       |  named_struct('p', 1, 't', '', 'n', 0L),
+       |  named_struct('p', 1, 't', ''),
        |  (acc, i) -> CASE WHEN i <> acc.p THEN acc ELSE named_struct(
        |    'p', acc.p + $lstar,
        |    't', CASE WHEN acc.t = '' THEN $tok
-       |         ELSE concat(acc.t, '|', $tok) END,
-       |    'n', acc.n + 1L) END,
-       |  acc -> named_struct('t', acc.t, 'n', acc.n))""".stripMargin
+       |         ELSE concat(acc.t, '|', $tok) END) END,
+       |  acc -> acc.t)""".stripMargin
   }
 
-  /** Tokenize every document with a WordPiece merge table: the encode
-    * vocabulary is the merge products plus the corpus's single-char
-    * alphabet (the char-fallback alphabet every production tokenizer
-    * carries), each DISTINCT word is segmented once by
-    * [[greedyMatchExpr]], and documents get their tokenizations by a
-    * dictionary join — the [[bpeApplyCorpus]] amortization. Returns
-    * `(doc_id, n_tokens, n_token_types)`.
+  /** Tokenize every document with a WordPiece merge table:
+    * [[corpusTokenAggs]] with the merge products as the `model` map and
+    * [[greedyMatch]] as the per-word encode. The single-char fallback
+    * stands in for the corpus's char alphabet (the char-fallback
+    * alphabet every production tokenizer carries).
     */
   private[graft] def wordpieceApplyCorpus(docs: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    // corpus-sized, so not pinned — see the bpeApplyCorpus words note;
-    // one consumer: the (doc_id, word) occurrence-count aggregate
-    val words = docs.select(col("doc_id"), explode(filter(
-        split(lower(col("text")), "[^a-z]+"),
-        w => length(w) > 0)).as("word"))
-    val dwc = words.groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
-    // explicit hash(word) spread: the greedy-match fold below is the
-    // heavy per-row work, and AQE's byte-bound coalesce would funnel the
-    // few-MB distinct-word table (and so the fold) onto ~1 partition
-    val dw = dwc.select("word").distinct()
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("word"))
-    // the encode vocabulary — the corpus's single-char alphabet plus the
-    // merge products — is MODEL-sized at ANY corpus size (≤26 [a-z]
-    // chars + one row per merge), so it is collected once and inlined as
-    // a LITERAL map in the greedy matcher: per-word segmentation becomes
-    // one join-free codegen'd fold. The previous form built a per-word
-    // piece-membership map distributed-side (substring explode +
-    // distinct + vocab join + map_from_entries + dictionary re-join —
-    // four exchanges), and that whole subtree evaluated TWICE under
-    // corpusTokenAggs' two consumers. Probing the full-vocab literal is
-    // equivalent to probing the per-word map: the matcher only ever
-    // probes substrings of the word itself. Literal safety: alphabet
-    // chars come from the [a-z]+ split; merge symbols are validated
-    // ^[a-z]+$ at the ModelStore trust boundary.
-    val alphabet = dw
-      .select(explode(sequence(lit(1), length(col("word")))).as("p"), col("word"))
-      .select(expr("substring(word, p, 1)").as("piece")).distinct()
-      .collect().map(_.getString(0))
-    val vocab = (alphabet ++ merges.map { case (a, b) => a + b }).distinct
-    // an empty vocab means no [a-z] word in the corpus and no merges: dw
-    // is empty, and there is no piece to match (nor a max length)
-    val enc =
-      if (vocab.isEmpty) dw.select(col("word"), typedLit(Seq.empty[String]).as("toks"))
-      else {
-        val maxL = vocab.map(_.length).max
-        val vmapLit = vocab.sorted.map(p => s"'$p', 1").mkString("map(", ", ", ")")
-        dw.withColumn("seg", expr(greedyMatchExpr(maxL, vmapLit)))
-          .select(col("word"), split(col("seg.t"), "[|]").as("toks"))
-      }
-    corpusTokenAggs(dwc, enc)
+    val pieces = merges.map { case (a, b) => a + b }
+    corpusTokenAggs(docs,
+      typedLit(pieces.map(_ -> 1).toMap),
+      split(expr(greedyMatch((1 +: pieces.map(_.length)).max)), "[|]"))
   }
 
   /** Oracle CTE chain for [[wordpieceTrain]]: [[bpeOracleCtes]]'s round
@@ -544,8 +479,8 @@ object TextOps {
 
   /** Driver-local twin of the SQL [[quantLnMicros]] scalar — the SAME
     * IEEE double expression tree evaluated in the same order, so the
-    * three engines (this loop, Spark codegen, DuckDB) produce identical
-    * bits and the floor can never flip on a libm ulp. Requires 1 ≤ c ≤ n.
+    * JVM loop and DuckDB produce identical bits and the floor can never
+    * flip on a libm ulp. Requires 1 ≤ c ≤ n.
     */
   private def quantLnMicrosLocal(c: Long, n: Long): Long = {
     val q = n / c
@@ -559,15 +494,19 @@ object TextOps {
     math.floor(1000000.0 * (2.0 * t * poly - e.toDouble * 0.6931471805599453)).toLong
   }
 
-  /** Driver-local twin of [[viterbiExpr]]'s fold: best
-    * (score, n_pieces, token_str) per prefix, totally ordered by
-    * (score desc, n asc, token_str asc); pieces looked up in the full
-    * vocab map (equivalent to the per-word substring-restricted lpmap the
-    * distributed form builds). ASCII pieces make the Java string compare
-    * identical to Spark's UTF8 binary order.
+  /** The unigram Viterbi DP over one word: the best
+    * `(score, n_pieces, token_str)` per prefix, pieces (≤ `maxL` chars)
+    * looked up in `lp`. Totally ordered by (score desc, n asc, token_str
+    * asc) so the argmax segmentation is deterministic and the oracle's
+    * exhaustive path enumeration picks the identical winner (the order is
+    * dominance-preserving: all three components compose
+    * additively/append-only, so a better prefix stays better under any
+    * shared continuation). ASCII pieces make the Java string compare
+    * identical to DuckDB's. `None` when no segmentation covers the whole
+    * word (a model lacking one of its characters).
     */
   private def viterbiLocal(word: String, lp: scala.collection.Map[String, Long],
-      maxL: Int): (Long, Int, String) = {
+      maxL: Int): Option[(Long, Int, String)] = {
     final case class S(s: Long, n: Int, t: String)
     val acc = new Array[S](word.length + 1)
     acc(0) = S(0L, 0, "")
@@ -596,88 +535,24 @@ object TextOps {
       acc(i) = best
       i += 1
     }
-    val r = acc(word.length)
-    (r.s, r.n, r.t)
+    Option(acc(word.length)).map(r => (r.s, r.n, r.t))
   }
 
-  /** The Viterbi DP as ONE codegen'd fold expression per word — no UDF,
-    * no per-position join round. State = the best
-    * `(score, n_pieces, token_str)` per prefix length, totally ordered by
-    * (score desc, n asc, token_str asc) so the argmax segmentation is
-    * deterministic and the oracle's exhaustive path enumeration picks the
-    * identical winner (the order is dominance-preserving: all three
-    * components compose additively/append-only, so a better prefix stays
-    * better under any shared continuation).
+  /** Segment each word under a unigram piece table `(piece, usage, lp)`
+    * with [[viterbiLocal]] — the word table and the model are both
+    * model-sized, so the encode runs where training does. Returns
+    * `(word, n_tokens, token_str)` by word; a word with no complete
+    * segmentation has no row, as in the oracle's `b1`.
     */
-  private def viterbiExpr(maxL: Int): String = {
-    val piece = "substring(word, i - l + 1, l)"
-    val lp = s"element_at(lpmap, $piece)"
-    val prev = "element_at(acc, i - l + 1)"
-    val cand = s"named_struct('s', ($prev).s + $lp, 'n', ($prev).n + 1, " +
-      s"'t', CASE WHEN ($prev).t = '' THEN $piece " +
-      s"ELSE concat(($prev).t, '|', $piece) END)"
-    val step =
-      s"""CASE WHEN $lp IS NULL THEN b
-         |     WHEN b IS NULL THEN $cand
-         |     WHEN ($cand).s > b.s THEN $cand
-         |     WHEN ($cand).s < b.s THEN b
-         |     WHEN ($cand).n < b.n THEN $cand
-         |     WHEN ($cand).n > b.n THEN b
-         |     WHEN ($cand).t < b.t THEN $cand
-         |     ELSE b END""".stripMargin
-    s"""aggregate(
-       |  sequence(1, length(word)),
-       |  array(named_struct('s', 0L, 'n', 0, 't', '')),
-       |  (acc, i) -> array_append(acc,
-       |    aggregate(sequence(1, least($maxL, i)),
-       |      cast(null as struct<s: bigint, n: int, t: string>),
-       |      (b, l) -> $step)),
-       |  acc -> element_at(acc, -1))""".stripMargin
+  private[graft] def unigramEncode(spark: org.apache.spark.sql.SparkSession,
+      words: Seq[String], vocab: Seq[(String, Long, Long)], maxL: Int): DataFrame = {
+    val lp = vocab.iterator.map { case (p, _, l) => p -> l }.toMap
+    import spark.implicits._
+    words.flatMap(w => viterbiLocal(w, lp, maxL).map { case (_, n, t) => (w, n.toLong, t) })
+      .toDF("word", "n_tokens", "token_str")
+      .orderBy("word")
   }
 
-  /** Viterbi-segment each `(word, freq)` row against `vocab(piece, lp)`:
-    * returns `(word, freq, score, n_tokens, token_str)`. One join builds
-    * the per-word piece→logprob map (only the word's own substrings —
-    * model-sized rows), then [[viterbiExpr]] runs the DP per row.
-    */
-  private[graft] def viterbiSegment(
-      words: DataFrame, vocab: DataFrame, maxPieceLen: Int): DataFrame = {
-    val subs = words
-      .select(col("word"),
-        explode(sequence(lit(1), length(col("word")))).as("p"))
-      .select(col("word"), col("p"),
-        explode(sequence(lit(1),
-          least(lit(maxPieceLen), length(col("word")) - col("p") + 1))).as("l"))
-      .select(col("word"), expr("substring(word, p, l)").as("piece"))
-      .distinct()
-    val pm = subs.join(vocab.select("piece", "lp"), "piece")
-      .groupBy("word")
-      .agg(map_from_entries(collect_list(struct(col("piece"), col("lp"))))
-        .as("lpmap"))
-    words.join(pm, "word")
-      .withColumn("seg", expr(viterbiExpr(maxPieceLen)))
-      .select(col("word"), col("freq"), col("seg.s").as("score"),
-        col("seg.n").cast("long").as("n_tokens"), col("seg.t").as("token_str"))
-  }
-
-  /** Unigram-LM tokenizer training (SentencePiece-style, Kudo 2018 —
-    * the OTHER mainstream subword algorithm beside BPE), relationally:
-    *   1. seed = char + top-`mTop` substring candidates with
-    *      freq-weighted counts ([[unigramSeedVocab]]); seed logprobs are
-    *      integer micros `FLOOR(1e6·ln(c/N))` computed LIBM-FREE by
-    *      [[quantLnMicros]] — bit-identical cross-engine by construction;
-    *   2. E-step: Viterbi segmentation of the vocabulary word table under
-    *      the seed model ([[viterbiSegment]]);
-    *   3. M-step + prune: piece usage = freq-weighted counts over the
-    *      argmax segmentations; multi-char pieces keep only the
-    *      top-`vTop` by (usage desc, piece) — the EM prune step — and
-    *      logprobs re-estimate add-1-smoothed over the pruned set (chars
-    *      with zero usage survive via smoothing, as SentencePiece keeps
-    *      required chars).
-    * Returns (final vocab `(piece, usage, lp)`, the word table). All
-    * state is model-sized; the corpus is touched once building the word
-    * table — the [[bpeTrain]] scale discipline.
-    */
   /** `FLOOR(1e6·ln(c/n))` as a DuckDB-dialect SQL scalar with NO libm
     * call — the ORACLE twin of [[quantLnMicrosLocal]] (the Spark side
     * computes lp driver-locally since the r19 trainer rewrite, so this
@@ -705,9 +580,28 @@ object TextOps {
       s"CAST($e AS DOUBLE) * 0.6931471805599453)) AS BIGINT)"
   }
 
+  /** Unigram-LM tokenizer training (SentencePiece-style, Kudo 2018 —
+    * the OTHER mainstream subword algorithm beside BPE):
+    *   1. seed = char + top-`mTop` substring candidates with
+    *      freq-weighted counts; seed logprobs are integer micros
+    *      `FLOOR(1e6·ln(c/N))` computed LIBM-FREE by
+    *      [[quantLnMicrosLocal]] — bit-identical cross-engine by
+    *      construction;
+    *   2. E-step: Viterbi segmentation of the word table under the seed
+    *      model ([[viterbiLocal]]);
+    *   3. M-step + prune: piece usage = freq-weighted counts over the
+    *      argmax segmentations; multi-char pieces keep only the
+    *      top-`vTop` by (usage desc, piece) — the EM prune step — and
+    *      logprobs re-estimate add-1-smoothed over the pruned set (chars
+    *      with zero usage survive via smoothing, as SentencePiece keeps
+    *      required chars).
+    * Returns (final vocab `(piece, usage, lp)`, the `(word, freq)` table).
+    * All state is model-sized; the corpus is touched once building the
+    * word table — the [[trainMerges]] scale discipline.
+    */
   private[graft] def unigramTrain(docs: DataFrame, topN: Int,
-      maxPieceLen: Int, mTop: Int, vTop: Int): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
+      maxPieceLen: Int, mTop: Int, vTop: Int)
+      : (Seq[(String, Long, Long)], Seq[(String, Long)]) = {
     val wf = collectWordTable(docs, topN)
     // seed: freq-weighted counts of every ≤ maxPieceLen substring; keep
     // ALL single chars (segmentation must never dead-end) + top-mTop
@@ -738,8 +632,9 @@ object TextOps {
     // M-step: freq-weighted piece usage over the argmax segmentations
     val usage = scala.collection.mutable.HashMap[String, Long]()
     wf.foreach { case (w, f) =>
-      val (_, _, toks) = viterbiLocal(w, vocab0, maxPieceLen)
-      toks.split("[|]").foreach(p => usage(p) = usage.getOrElse(p, 0L) + f)
+      viterbiLocal(w, vocab0, maxPieceLen).foreach { case (_, _, toks) =>
+        toks.split("[|]").foreach(p => usage(p) = usage.getOrElse(p, 0L) + f)
+      }
     }
     // prune: chars always survive (add-1 smoothing keeps zero-usage
     // chars alive, as SentencePiece keeps required chars); multi-char
@@ -754,14 +649,13 @@ object TextOps {
     val vocab1 = pruned.map { case (p, u) =>
       (p, u, quantLnMicrosLocal(u + 1, n2 + v2))
     }
-    (spark.createDataFrame(vocab1).toDF("piece", "usage", "lp"),
-      spark.createDataFrame(wf.toSeq).toDF("word", "freq"))
+    (vocab1, wf.toSeq)
   }
 
   /** DuckDB CTE chain replaying [[unigramTrain]] + the final-vocab encode:
     * seed (`v0`), exhaustive segmentation enumeration via a RECURSIVE CTE
     * (`p0`/`b0` — the argmax under (score desc, n, toks) is the same
-    * winner the Spark DP picks, see [[viterbiExpr]]), usage/prune (`v1`),
+    * winner the Spark DP picks, see [[viterbiLocal]]), usage/prune (`v1`),
     * second enumeration (`p1`/`b1`). Callers prefix `WITH RECURSIVE`.
     */
   private[graft] def unigramOracleCtes(
@@ -1127,6 +1021,24 @@ object TextOps {
     }
   }
 
+  /** The oracles each `_served` row shares with its trained twin:
+    * served ≡ trained.
+    */
+  private val bpeCorpusOracle: String =
+    s"""WITH ${bpeCorpusCtes(150, 6)}
+       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       |  CAST(COUNT(DISTINCT sym) AS BIGINT) AS n_token_types
+       |FROM c6 GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  private val unigramEncodeOracle: String =
+    s"""WITH RECURSIVE ${unigramOracleCtes(150, 4, 40, 24)}
+       |SELECT b.word, CAST(b.n AS BIGINT) AS n_tokens, b.toks AS token_str
+       |FROM b1 b ORDER BY word""".stripMargin
+  private val wordpieceEncodeOracle: String =
+    s"""WITH RECURSIVE ${wordpieceCorpusCtes(150, 6)}
+       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       |  CAST(COUNT(DISTINCT t) AS BIGINT) AS n_token_types
+       |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
   val queries: Seq[Q] = Seq(
     // ---- BPE merge learning, relationally (see [[bpeTrain]]): 6 merge
     // rounds over the top-150 word vocabulary; the oracle replays every
@@ -1160,11 +1072,9 @@ object TextOps {
          |FROM s6 GROUP BY word ORDER BY word""".stripMargin,
     ) { (s, d) =>
       val (_, syms) = bpeTrain(Tables.documents(s, d), topN = 150, rounds = 6)
-      syms.groupBy("word")
-        .agg(count(lit(1)).as("n_tokens"),
-          concat_ws("|", transform(
-            array_sort(collect_list(struct(col("pos"), col("sym")))),
-            t => t.getField("sym"))).as("token_str"))
+      import s.implicits._
+      syms.map { case (w, t) => (w, t.size.toLong, t.mkString("|")) }
+        .toDF("word", "n_tokens", "token_str")
         .orderBy("word")
     },
 
@@ -1172,27 +1082,15 @@ object TextOps {
     // token counts after the 6 trained merges (train on the vocab table,
     // tokenize every document — the production encode path); windows key
     // by word occurrence, one shuffle over corpus symbol rows per round ----
-    Q.weekly(
-      "bpe_corpus_tokens",
-      s"""WITH ${bpeCorpusCtes(150, 6)}
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |  CAST(COUNT(DISTINCT sym) AS BIGINT) AS n_token_types
-         |FROM c6 GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
+    Q.weekly("bpe_corpus_tokens", bpeCorpusOracle) { (s, d) =>
       bpeEncodeCorpus(Tables.documents(s, d), topN = 150, rounds = 6)
     },
 
     // ---- the tokenizer SERVED from its persisted model: the merge table
     // is trained once per fixture identity, written via ModelStore, and
     // every later encode loads it — no retraining (the ANN serving
-    // discipline applied to tokenization). Same oracle: served ≡ trained ----
-    Q(
-      "bpe_corpus_tokens_served",
-      s"""WITH ${bpeCorpusCtes(150, 6)}
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |  CAST(COUNT(DISTINCT sym) AS BIGINT) AS n_token_types
-         |FROM c6 GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
+    // discipline applied to tokenization) ----
+    Q("bpe_corpus_tokens_served", bpeCorpusOracle) { (s, d) =>
       val dir = Similarity.withStagedIndex(s, d, "bpe:150:6",
         fixture = "documents.parquet") { tmp =>
         graft.sources.ModelStore.saveMerges(s, tmp,
@@ -1216,49 +1114,34 @@ object TextOps {
          |  lp AS logp_micros
          |FROM v1 ORDER BY piece""".stripMargin,
     ) { (s, d) =>
-      val (vocab, _) =
-        unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)
-      vocab.select(col("piece"),
-        length(col("piece")).cast("long").as("piece_len"),
-        col("usage"), col("lp").as("logp_micros")).orderBy("piece")
+      val (vocab, _) = unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)
+      import s.implicits._
+      vocab.map { case (p, u, lp) => (p, p.length.toLong, u, lp) }
+        .toDF("piece", "piece_len", "usage", "logp_micros")
+        .orderBy("piece")
     },
 
     // ---- the trained unigram model APPLIED: each vocab word's Viterbi
     // segmentation under the final pruned model — the encode side of the
     // same run (ties → fewer pieces, then lexicographic token string;
     // the oracle's exhaustive argmax applies the identical order) ----
-    Q(
-      "unigram_encode",
-      s"""WITH RECURSIVE ${unigramOracleCtes(150, 4, 40, 24)}
-         |SELECT b.word, CAST(b.n AS BIGINT) AS n_tokens, b.toks AS token_str
-         |FROM b1 b ORDER BY word""".stripMargin,
-    ) { (s, d) =>
-      val (vocab, words) =
-        unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)
-      viterbiSegment(words, vocab, 4)
-        .select(col("word"), col("n_tokens"), col("token_str"))
-        .orderBy("word")
+    Q("unigram_encode", unigramEncodeOracle) { (s, d) =>
+      val (vocab, words) = unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)
+      unigramEncode(s, words.map(_._1), vocab, 4)
     },
 
     // ---- the unigram tokenizer SERVED from its persisted model: piece
     // table trained once per fixture identity, written via ModelStore,
     // later encodes load it and never retrain (the bpe_*_served
-    // discipline). Same oracle: served ≡ trained ----
-    Q(
-      "unigram_encode_served",
-      s"""WITH RECURSIVE ${unigramOracleCtes(150, 4, 40, 24)}
-         |SELECT b.word, CAST(b.n AS BIGINT) AS n_tokens, b.toks AS token_str
-         |FROM b1 b ORDER BY word""".stripMargin,
-    ) { (s, d) =>
+    // discipline) ----
+    Q("unigram_encode_served", unigramEncodeOracle) { (s, d) =>
       val dir = Similarity.withStagedIndex(s, d, "unigram:150:4:40:24",
         fixture = "documents.parquet") { tmp =>
         graft.sources.ModelStore.saveUnigram(s, tmp,
           unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)._1)
       }
-      val vocab = graft.sources.ModelStore.loadUnigram(s, dir)
-      viterbiSegment(bpeWords(Tables.documents(s, d), 150), vocab, 4)
-        .select(col("word"), col("n_tokens"), col("token_str"))
-        .orderBy("word")
+      unigramEncode(s, collectWordTable(Tables.documents(s, d), 150).map(_._1).toSeq,
+        graft.sources.ModelStore.loadUnigram(s, dir), 4)
     },
 
     // ---- WordPiece tokenizer TRAINING (Schuster & Nakajima 2012 — the
@@ -1290,13 +1173,7 @@ object TextOps {
     // segmentations per distinct corpus word (recursive CTE) and picks
     // the lexicographically largest token-length sequence — provably the
     // greedy matcher's output — then replays the per-doc aggregate ----
-    Q.weekly(
-      "wordpiece_encode",
-      s"""WITH RECURSIVE ${wordpieceCorpusCtes(150, 6)}
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |  CAST(COUNT(DISTINCT t) AS BIGINT) AS n_token_types
-         |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
+    Q.weekly("wordpiece_encode", wordpieceEncodeOracle) { (s, d) =>
       val merges = wordpieceTrain(Tables.documents(s, d), 150, 6)._1
       wordpieceApplyCorpus(Tables.documents(s, d),
         merges.map(m => (m._2, m._3)))
@@ -1305,14 +1182,8 @@ object TextOps {
     // ---- the WordPiece matcher SERVED from its persisted merge table
     // (ModelStore, trained once per fixture identity) — the BPE/unigram
     // serving discipline applied to the third tokenizer family ----
-    Q(
-      "wordpiece_encode_served",
-      s"""WITH RECURSIVE ${wordpieceCorpusCtes(150, 6)}
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |  CAST(COUNT(DISTINCT t) AS BIGINT) AS n_token_types
-         |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
-      val dir = graft.operators.Similarity.withStagedIndex(
+    Q("wordpiece_encode_served", wordpieceEncodeOracle) { (s, d) =>
+      val dir = Similarity.withStagedIndex(
         s, d, "wordpiece:150:6", fixture = "documents.parquet") { tmp =>
         graft.sources.ModelStore.saveMerges(s, tmp,
           wordpieceTrain(Tables.documents(s, d), 150, 6)._1
@@ -1321,7 +1192,6 @@ object TextOps {
       wordpieceApplyCorpus(Tables.documents(s, d),
         graft.sources.ModelStore.loadMerges(s, dir).map(m => (m._2, m._3)))
     },
-
     // ---- per-document stats: token counts, lengths, fingerprints ----
     Q(
       "text_stats",

@@ -17,8 +17,10 @@ import org.apache.spark.sql.functions._
   * Storage shape: everything is parquet, readable by ANY engine (the
   * portability argument that makes parquet the index format of record for
   * lakehouse ANN — same reasoning as storing Faiss-style codes in columnar
-  * files). Model-sized artifacts (codebooks, centroids) round-trip through
-  * model-sized `collect()`s — the sanctioned MLlib-style driver hop;
+  * files). Model-sized artifacts (codebooks, centroids, tokenizer merge
+  * and piece tables) round-trip through model-sized `collect()`s — the
+  * sanctioned MLlib-style driver hop — into local `Seq`s, which the
+  * tokenizers bind into plans as typed literals or run driver-local;
   * data-sized artifacts (codes, assignment) stay distributed end to end.
   */
 object ModelStore {
@@ -87,11 +89,10 @@ object ModelStore {
       .select(col("merge_rank"), col("lhs"), col("rhs"), col("pair_freq"))
       .collect()
       .map { r =>
-        // trust boundary: downstream encoders (mergeFoldExpr /
-        // greedyMatchExpr's literal vocab) interpolate these symbols into
-        // SQL literals under the [a-z]-only invariant of the trainers'
-        // word alphabet — enforce it HERE so a foreign or corrupted model
-        // dir fails loudly instead of becoming expression injection
+        // trust boundary: the trainers only ever learn [a-z]+ symbols
+        // (the tokenizers' word alphabet) — enforce it HERE so a foreign
+        // or corrupted model dir fails loudly instead of serving pieces no
+        // corpus word can contain
         val (l, rr) = (r.getString(1), r.getString(2))
         require(l.matches("^[a-z]+$") && rr.matches("^[a-z]+$"),
           s"merge symbols must be [a-z]+ (got '$l', '$rr' in $dir)")
@@ -104,13 +105,13 @@ object ModelStore {
     * [[saveMerges]].
     */
   def saveUnigram(spark: SparkSession, dir: String,
-      vocab: org.apache.spark.sql.DataFrame): Unit =
-    vocab.select(col("piece"), col("usage"), col("lp"))
+      vocab: Seq[(String, Long, Long)]): Unit =
+    spark.createDataFrame(vocab).toDF("piece", "usage", "lp")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/unigram")
 
-  /** Load [[saveUnigram]]'s piece table back as a DataFrame (stays
-    * distributed — the encode side joins it, never collects it).
-    */
-  def loadUnigram(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    spark.read.parquet(s"$dir/unigram").select("piece", "usage", "lp")
+  /** Load [[saveUnigram]]'s piece table back by piece (model-sized). */
+  def loadUnigram(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
+    spark.read.parquet(s"$dir/unigram").select("piece", "usage", "lp").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
 }

@@ -611,9 +611,7 @@ class FunctionsSpec extends SparkSpec {
     assert(merges == Seq(
       (1, "l", "o", 5L), (2, "lo", "w", 5L), (3, "a", "a", 3L),
       (4, "low", "e", 2L), (5, "aa", "aa", 1L)))
-    val toks = syms.orderBy("word", "pos")
-      .collect().groupBy(_.getString(0))
-      .map { case (w, rs) => w -> rs.sortBy(_.getLong(2)).map(_.getString(3)).toSeq }
+    val toks = syms.toMap
     assert(toks("low") == Seq("low"))
     assert(toks("lower") == Seq("lowe", "r"))
     assert(toks("lowest") == Seq("lowe", "s", "t"))

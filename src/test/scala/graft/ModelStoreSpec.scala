@@ -119,6 +119,20 @@ class ModelStoreSpec extends SparkSpec {
     assert(served.nonEmpty && served == trained)
   }
 
+  test("unigram encode under a served model lacking a character drops that word") {
+    // no piece covers 'z', so "zab" has no complete segmentation: the
+    // oracle's b1 has no row for it, and neither may the encoder
+    val dir = tmpDir("unigram")
+    val vocab = Seq(("a", 3L, -1200000L), ("ab", 2L, -900000L),
+      ("b", 1L, -1500000L))
+    ModelStore.saveUnigram(spark, dir, vocab)
+    assert(ModelStore.loadUnigram(spark, dir) == vocab)
+    val enc = graft.operators.TextOps
+      .unigramEncode(spark, Seq("zab", "ab", "ba"), ModelStore.loadUnigram(spark, dir), 4)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+    assert(enc == Seq(("ab", 1L, "ab"), ("ba", 2L, "b|a")))
+  }
+
   test("staged index builds once per fixture identity and is reused") {
     var builds = 0
     def dir(): String =

@@ -349,4 +349,59 @@ class PlanSpec extends SparkSpec {
     val exchanges = wf.toString.linesIterator.count(_.trim.startsWith("Exchange"))
     assert(exchanges <= 2, s"expected window exchange + output sort only, got $exchanges")
   }
+
+  /** (Exchange, Generate) node counts of a plan before execution: AQE's
+    * current physical plan (exchanges already placed), else the plan.
+    */
+  private def exchangesAndGenerates(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan: SparkPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    (plan.collect { case e: Exchange => e }.size,
+      plan.collect { case g: GenerateExec => g }.size)
+  }
+
+  test("tokenizer rows plan no more Exchanges or Generates than their pinned counts") {
+    // measured at sf0.001 before the tokenizers shared one skeleton;
+    // bpe_encode, unigram_encode and unigram_encode_served then planned
+    // 2/0, 5/2 and 4/4 — their bounds are the local encode's sort alone
+    val pinned = Map(
+      "bpe_train" -> (1, 0),
+      "bpe_encode" -> (1, 0),
+      "bpe_corpus_tokens" -> (5, 2),
+      "bpe_corpus_tokens_served" -> (5, 2),
+      "unigram_train" -> (1, 0),
+      "unigram_encode" -> (1, 0),
+      "unigram_encode_served" -> (1, 0),
+      "wordpiece_train" -> (1, 0),
+      "wordpiece_encode" -> (5, 2),
+      "wordpiece_encode_served" -> (5, 2))
+    pinned.foreach { case (name, (maxEx, maxGen)) =>
+      val (ex, gen) = exchangesAndGenerates(SparkEntry.queries(name)(spark, sf0001))
+      assert(ex <= maxEx && gen <= maxGen,
+        s"$name plans $ex Exchanges / $gen Generates (pinned $maxEx / $maxGen)")
+    }
+  }
+
+  test("tokenizer plans do not grow with the model: 10 vs 30,000 merges") {
+    import spark.implicits._
+    val docs = Seq((1L, "the lower lowest"), (2L, "newer wider"), (3L, "aaaa b"))
+      .toDF("doc_id", "text")
+    // base-26 [a-z]+ symbols; merge i joins symbols i and i + 1
+    def sym(i: Int): String = Iterator.iterate(i)(_ / 26).takeWhile(_ > 0)
+      .map(k => ('a' + k % 26).toChar).mkString
+    def merges(n: Int) = (1 to n).map(i => (i, sym(i), sym(i + 1), 1L))
+    def exprNodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.flatMap(_.expressions)
+        .map(_.collect { case e => e }.size).sum
+    def bpe(n: Int) = exprNodes(graft.operators.TextOps.bpeApplyCorpus(docs, merges(n)))
+    def wp(n: Int) = exprNodes(graft.operators.TextOps.wordpieceApplyCorpus(
+      docs, merges(n).map(m => (m._2, m._3))))
+    assert(bpe(10) == bpe(30000))
+    assert(wp(10) == wp(30000))
+  }
 }
