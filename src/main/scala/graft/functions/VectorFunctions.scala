@@ -43,10 +43,4 @@ object VectorFunctions {
     val bd = asDouble(b)
     dot(ad, bd) / (sqrt(normSq(ad)) * sqrt(normSq(bd)))
   }
-
-  /** Euclidean distance in double. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

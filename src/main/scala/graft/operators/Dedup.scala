@@ -710,7 +710,6 @@ object Dedup {
   // ---------------------------------------------------------------- queries
 
   private[graft] def shingles3(c: Column) = TextFunctions.wordShingles(c, 3)
-  private def shingles2(c: Column) = TextFunctions.wordShingles(c, 2)
 
   /** Oracle-side exact shingle-Jaccard pair query (DuckDB list
     * comprehension builds the same distinct word n-shingles).

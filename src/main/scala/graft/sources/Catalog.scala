@@ -460,11 +460,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     commitAppend(name, "insert", files)
 
   /** Exact row count of freshly written parquet files from their footer
-    * metadata — a driver-side footer read per file, NO Spark job (the
-    * previous `spark.read.parquet(...).count()` launched a full job per
-    * insert just to report the inserted-row count). O(added files) small
-    * reads, the same order as the manifest commit itself; falls back to
-    * the distributed count if any footer is unreadable.
+    * metadata — a driver-side footer read per file, NO Spark job.
+    * O(added files) small reads, the same order as the manifest commit
+    * itself; falls back to the distributed count if any footer is
+    * unreadable.
     */
   private def parquetRowCount(paths: Seq[java.nio.file.Path]): Long =
     try {
@@ -545,11 +544,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val v = currentVersion(src)
     val files = manifest(src, v)
     Files.createDirectories(metaDir(dst))
-    Seq("schema.json", "partition.txt", "indexed.txt", "retired.txt", "checks.txt")
-      .foreach { f =>
-        val p = metaDir(src).resolve(f)
-        if (Files.exists(p)) Files.copy(p, metaDir(dst).resolve(f))
-      }
+    copySidecars(metaDir(src), metaDir(dst))
     val sDir = dataDir(src)
     val dDir = dataDir(dst)
     files.foreach { rel =>
@@ -579,11 +574,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     require(!Files.exists(dest) || listDir(dest).isEmpty,
       s"export destination $destDir must be empty")
     Files.createDirectories(dest.resolve("meta"))
-    Seq("schema.json", "partition.txt", "indexed.txt", "retired.txt", "checks.txt")
-      .foreach { f =>
-        val p = metaDir(name).resolve(f)
-        if (Files.exists(p)) Files.copy(p, dest.resolve("meta").resolve(f))
-      }
+    copySidecars(metaDir(name), dest.resolve("meta"))
     val sDir = dataDir(name)
     files.foreach { rel =>
       val to = dest.resolve("data").resolve(rel)
@@ -609,11 +600,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val files = Files.readString(snap).split("\n").toSeq
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
     Files.createDirectories(metaDir(name))
-    Seq("schema.json", "partition.txt", "indexed.txt", "retired.txt", "checks.txt")
-      .foreach { f =>
-        val p = src.resolve("meta").resolve(f)
-        if (Files.exists(p)) Files.copy(p, metaDir(name).resolve(f))
-      }
+    copySidecars(src.resolve("meta"), metaDir(name))
     val dDir = dataDir(name)
     files.foreach { rel =>
       val to = dDir.resolve(rel)
@@ -622,6 +609,17 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
     commitVersion(name, s"import $srcDir", files)
   }
+
+  /** Copy a table's metadata sidecars (schema, partition column, indexes,
+    * retired physical names, CHECKs) between directories, skipping the
+    * optional ones the table lacks.
+    */
+  private def copySidecars(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+    Seq("schema.json", "partition.txt", "indexed.txt", "retired.txt", "checks.txt")
+      .foreach { f =>
+        val p = from.resolve(f)
+        if (Files.exists(p)) Files.copy(p, to.resolve(f))
+      }
 
   /** CDC change feed between two retained snapshots: the row-level
     * multiset diff `tableAt(toV) ∖ tableAt(fromV)` tagged 'insert' plus
@@ -641,12 +639,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       s"tableChanges($name): fromV $fromV must be <= toV $toV")
     val from = manifest(name, fromV).toSet
     val to = manifest(name, toV).toSet
-    val dir = dataDir(name)
     def readSide(files: Set[String]): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema(name))
-      else logicalOverFiles(name, files.toSeq.sorted.map(rel => dir.resolve(rel).toString))
+      toLogical(name, readFiles(name, files.toSeq.sorted))
     val added = readSide(to -- from)
     val removed = readSide(from -- to)
     added.exceptAll(removed).withColumn(Catalog.ChangeCol, lit("insert"))
@@ -665,11 +659,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
 
   /** Atomic snapshot commit: write the next manifest to a temp file, then
-    * rename it into place — the rename IS the commit point. A crash
-    * before it leaves freshly staged data files orphaned (invisible to
-    * every reader, reclaimed by [[vacuum]]); a crash after it leaves the
-    * new version fully live. No reader ever observes a partial mutation —
-    * the discipline that replaces the pre-manifest `.bak` swap dance.
+    * link it into place — the link IS the commit point (see
+    * [[tryCommitAt]]). A crash before it leaves freshly staged data files
+    * orphaned (invisible to every reader, reclaimed by [[vacuum]]); a
+    * crash after it leaves the new version fully live. No reader ever
+    * observes a partial mutation.
     */
   private def commitVersion(name: String, op: String, files: Seq[String]): Int =
     commitVersionAt(name, currentVersion(name), op, files)
@@ -679,9 +673,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * file list from (pinned at the operation's first state access), so
     * if any other writer committed base+1 in the meantime the
     * fail-if-exists link detects it and the operation aborts LOUDLY
-    * instead of silently clobbering the concurrent change (the
-    * lost-update window the old commit-time `currentVersion+1` left
-    * open). Appends don't need this — they rebase via [[commitAppend]].
+    * instead of silently clobbering the concurrent change. Appends don't
+    * need this — they rebase via [[commitAppend]].
     */
   private[graft] def commitVersionAt(
       name: String, base: Int, op: String, files: Seq[String]): Int = {
@@ -858,9 +851,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       .filter(d => d != dir && listDir(d).isEmpty)
       .foreach(Files.delete)
     vs.dropRight(keep).foreach(v => Files.deleteIfExists(manifestPath(name, v)))
-    // crash-orphaned staging dirs (writer-unique names don't self-clean
-    // the way the old fixed .stage_tmp did) — vacuum is the reclaim API,
-    // age-gated because an ACTIVE writer's staging dir looks identical
+    // crash-orphaned staging dirs (writer-unique names don't self-clean)
+    // — vacuum is the reclaim API, age-gated because an ACTIVE writer's
+    // staging dir looks identical
     listDir(dir.getParent)
       .filter(_.getFileName.toString.startsWith(dir.getFileName.toString + ".stage_tmp"))
       .filter(d => Files.getLastModifiedTime(d).toMillis < orphanCutoff)
@@ -889,22 +882,26 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * columns) cast and renamed to their PHYSICAL storage names — the
     * projection every data write goes through.
     */
-  private def projectToPhysical(name: String, df: DataFrame): DataFrame = {
+  private def projectToPhysical(name: String, df: DataFrame): DataFrame =
+    // Writers address LOGICAL names; files store PHYSICAL names. The
+    // constraint guard sits between default-fill and the physical rename
+    // so CHECK expressions resolve against the declared logical schema.
+    constraintGuard(name, alignLogical(name, df)).select(
+      schema(name).fields.map(f => col(f.name).as(physicalName(f))).toSeq: _*)
+
+  /** `df` in logical terms and schema order, each column cast to its
+    * declared type; a column the writer omits takes its declared default
+    * (added columns only), a missing non-defaulted column errors.
+    */
+  private def alignLogical(name: String, df: DataFrame): DataFrame = {
     val s = schema(name)
-    val logical = df.select(s.fields.map { f =>
-      // a column omitted by the writer takes its declared default (added
-      // columns only); a missing non-defaulted column errors as before.
+    df.select(s.fields.map { f =>
       val c =
         if (!df.columns.contains(f.name) && defaultOf(f).isDefined)
           expr(defaultOf(f).get).cast(f.dataType)
         else col(f.name).cast(f.dataType)
       c.as(f.name)
     }.toSeq: _*)
-    // Writers address LOGICAL names; files store PHYSICAL names. The
-    // constraint guard sits between default-fill and the physical rename
-    // so CHECK expressions resolve against the declared logical schema.
-    constraintGuard(name, logical).select(
-      s.fields.map(f => col(f.name).as(physicalName(f))).toSeq: _*)
   }
 
   // ------------------------------------------------------------ constraints
@@ -1111,22 +1108,23 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   /** Compact a table's data files to `targetFiles` per partition (the
     * OPTIMIZE / small-files lifecycle op: streaming and per-batch inserts
     * accumulate many small files, and at scale file-open overhead and
-    * footer reads come to dominate scans). Rewrites into a staging
-    * directory, then swaps it in — content is unchanged (CatalogSpec
-    * asserts the fingerprint; `catalog_compact`'s oracle the profile).
-    * Partitioned tables keep their Hive layout, compacted per partition.
+    * footer reads come to dominate scans). Rewrites every live file
+    * into staged ones and commits a manifest listing only those —
+    * content is unchanged (CatalogSpec asserts the fingerprint;
+    * `catalog_compact`'s oracle the profile). Partitioned tables keep
+    * their Hive layout, compacted per partition.
     */
   def compact(name: String, targetFiles: Int = 1): Unit = {
     val base = currentVersion(name)
-    // a created-but-never-inserted table has nothing to compact
-    if (manifest(name, base).isEmpty) return
+    val live = manifest(name, base)
     // compact rewrites the PHYSICAL bytes as-is (no default coalescing):
     // a pre-addColumn file's nulls stay nulls on disk, so compaction never
-    // bakes read-time defaults into data files. The new manifest lists
-    // ONLY the compacted files; the old fragments stay on disk for time
-    // travel until a vacuum reclaims them.
-    val added = stageIn(name, rawData(name).repartition(targetFiles))
-    commitVersionAt(name, base, "compact", added)
+    // bakes read-time defaults into data files. The old fragments stay on
+    // disk for time travel until a vacuum reclaims them. A
+    // created-but-never-inserted table has nothing to compact.
+    if (live.nonEmpty)
+      commitRewrite(name, "compact", base, live, live,
+        readFiles(name, live).repartition(targetFiles))
   }
 
   /** Partition-scoped OPTIMIZE (`OPTIMIZE t WHERE <pred>`): compact ONLY
@@ -1141,20 +1139,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * rewritten as-is — read-time defaults are never baked in.
     */
   def compactWhere(name: String, condition: org.apache.spark.sql.Column,
-      targetFiles: Int = 1): Unit = {
-    val base = currentVersion(name)
-    if (manifest(name, base).isEmpty) return
-    val perFile = collectBounded("compactWhere", name,
-      logicalWithFile(name).filter(condition)
-        .groupBy(Catalog.FileCol).agg(count(lit(1)).as("n")))
-    if (perFile.isEmpty) return
-    val affected = perFile.map(_.getString(0)).toSeq.sorted
-    val added = stageIn(name, rawOverFiles(name, affected)
-      .repartition(targetFiles))
-    commitVersionAt(name, base, "compact_where",
-      manifest(name, base)
-        .diff(relativize(name, affected)) ++ added)
-  }
+      targetFiles: Int = 1): Unit =
+    rewriteWhere("compact_where", name, condition)(_.repartition(targetFiles))
 
   /** [[compact]] with Z-ORDER clustering: rewrite the table's files
     * range-partitioned and sorted by the Morton z-value of `zcols`, so
@@ -1169,7 +1155,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     */
   def compactZOrder(name: String, zcols: Seq[String], targetFiles: Int = 8): Unit = {
     val base = currentVersion(name)
-    if (manifest(name, base).isEmpty) return
+    val live = manifest(name, base)
+    if (live.isEmpty) return
     require(zcols.nonEmpty, "ZORDER BY needs at least one column")
     val s = schema(name)
     val phys = zcols.map { c =>
@@ -1177,7 +1164,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         throw new IllegalArgumentException(s"z-order column $c not in schema of $name"))
       physicalName(f)
     }
-    val raw = rawData(name)
+    val raw = readFiles(name, live)
     val aggs = phys.flatMap(c =>
       Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
     val g = raw.agg(aggs.head, aggs.tail: _*).head()
@@ -1191,12 +1178,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           "numeric/date/timestamp columns with at least one non-null value")
       (col(c), g.getDouble(2 * i), g.getDouble(2 * i + 1))
     }
-    val added = stageIn(name, raw
+    commitRewrite(name, s"zorder(${zcols.mkString(",")})", base, live, live, raw
       .withColumn("__graft_z", ZOrder.zValue(dims))
       .repartitionByRange(targetFiles, col("__graft_z"))
       .sortWithinPartitions("__graft_z")
       .drop("__graft_z"))
-    commitVersionAt(name, base, s"zorder(${zcols.mkString(",")})", added)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
@@ -1206,19 +1192,20 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       finally s.close()
     }
 
-  /** The data files as stored at the HEAD version: physical column names,
-    * no default coalescing — the read [[table]] and [[compact]] build on.
+  /** The one data reader: the given manifest entries as stored —
+    * physical column names, no default coalescing; [[toLogical]] over it
+    * is the logical view. `basePath` keeps Hive partition columns
+    * resolvable, and each entry resolves to a plain filesystem path under
+    * the data dir (a `file:` URI string would be percent-encoded a second
+    * time by `spark.read`). No entries is the empty table.
     */
-  private def rawData(name: String): DataFrame =
-    rawDataAt(name, currentVersion(name))
-
-  private def rawDataAt(name: String, v: Int): DataFrame = {
+  private def readFiles(name: String, files: Seq[String]): DataFrame = {
     val dir = dataDir(name)
-    val s = schema(name)
-    spark.read
-      .option("basePath", dir.toString)
-      .schema(StructType(s.fields.map(f => f.copy(name = physicalName(f)))))
-      .parquet(manifest(name, v).map(rel => dir.resolve(rel).toString): _*)
+    val physical = StructType(schema(name).fields.map(f => f.copy(name = physicalName(f))))
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physical)
+    else spark.read.option("basePath", dir.toString).schema(physical)
+      .parquet(files.map(rel => dir.resolve(rel).toString): _*)
   }
 
   /** Read a table back. Partition pruning applies when filtering on the
@@ -1325,15 +1312,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * mapping plus defaults make any retained snapshot readable under the
     * live schema.
     */
-  def tableAt(name: String, v: Int): DataFrame = {
-    val s = schema(name)
-    if (manifest(name, v).isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    else toLogical(name, rawDataAt(name, v))
-  }
+  def tableAt(name: String, v: Int): DataFrame =
+    toLogical(name, readFiles(name, manifest(name, v)))
 
   /** The latest retained version committed at or before `ts`. Commit
-    * times are the manifests' own mtimes — the atomic rename that IS the
+    * times are the manifests' own mtimes — the atomic link that IS the
     * commit point stamps them, so no extra bookkeeping can drift from
     * the truth. Loud when `ts` predates the oldest retained commit
     * (either the table didn't exist yet or the version was vacuumed —
@@ -1377,38 +1360,12 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** The logical table plus a `FileCol` source-file tag — the manifest
-    * view row-level DML plans over.
+  /** The logical view of the `live` files plus a `FileCol` source-file
+    * tag — the view the row-level DML manifest passes plan over.
     */
-  private def logicalWithFile(name: String): DataFrame =
-    toLogical(name, rawData(name).withColumn(Catalog.FileCol, input_file_name()),
+  private def logicalWithFile(name: String, live: Seq[String]): DataFrame =
+    toLogical(name, readFiles(name, live).withColumn(Catalog.FileCol, input_file_name()),
       extra = Seq(Catalog.FileCol))
-
-  /** RAW (physical-name, no default coalescing) read over the given
-    * `file:` URIs — the [[rawData]] counterpart of [[logicalOverFiles]],
-    * for rewrites that must preserve stored bytes semantically
-    * (compaction).
-    */
-  private def rawOverFiles(name: String, files: Seq[String]): DataFrame = {
-    val s = schema(name)
-    spark.read
-      .option("basePath", dataDir(name).toString)
-      .schema(StructType(s.fields.map(f => f.copy(name = physicalName(f)))))
-      .parquet(files: _*)
-  }
-
-  /** Read ONLY the given data files (as `file:` URIs from
-    * [[logicalWithFile]]), logical view. `basePath` keeps Hive partition
-    * columns resolvable, so partition values survive the rewrite.
-    */
-  private def logicalOverFiles(name: String, files: Seq[String]): DataFrame = {
-    val s = schema(name)
-    val raw = spark.read
-      .option("basePath", dataDir(name).toString)
-      .schema(StructType(s.fields.map(f => f.copy(name = physicalName(f)))))
-      .parquet(files: _*)
-    toLogical(name, raw)
-  }
 
   /** List partition values LIVE at the head version (manifest-derived:
     * stale directories retained for time travel don't count).
@@ -1530,42 +1487,77 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     rows
   }
 
+  /** The manifest pass of the row-level DML: the `live` files holding at
+    * least one row of `hits` (a filter or semi-join of [[logicalWithFile]]),
+    * as manifest entries with their hit counts, sorted — one job, driver
+    * retrieval bounded by `graft.dml.maxAffectedFiles`. An empty snapshot
+    * has no hits and runs no job.
+    */
+  private def affectedFiles(op: String, name: String, live: Seq[String])(
+      hits: DataFrame => DataFrame): Seq[(String, Long)] =
+    if (live.isEmpty) Seq.empty
+    else collectBounded(op, name,
+        hits(logicalWithFile(name, live)).groupBy(Catalog.FileCol).agg(count(lit(1))))
+      .map(r => relativize(name, r.getString(0)) -> r.getLong(1)).toSeq.sortBy(_._1)
+
+  /** The one commit of every copy-on-write rewrite: stage `rewritten` (the
+    * physical rows replacing the `affected` files) and publish snapshot
+    * `base`'s `live` files minus `affected` plus the staged ones as
+    * version base+1, failing loudly if another writer got there first.
+    */
+  private def commitRewrite(name: String, op: String, base: Int, live: Seq[String],
+      affected: Seq[String], rewritten: DataFrame): Int =
+    commitVersionAt(name, base, op, live.diff(affected) ++ stageIn(name, rewritten))
+
+  /** The copy-on-write skeleton of the predicate DML ([[deleteRows]],
+    * [[updateRows]], [[compactWhere]]): read snapshot `base` once, find the
+    * files holding rows that match `condition` in one manifest pass, and
+    * commit `rewrite` of exactly those files' stored (physical) rows in
+    * their place; every other file stays untouched bytes. Nothing is
+    * written when nothing matches. Returns the matched-row count.
+    */
+  private def rewriteWhere(op: String, name: String, condition: org.apache.spark.sql.Column)(
+      rewrite: DataFrame => DataFrame): Long = {
+    val base = currentVersion(name)
+    val live = manifest(name, base)
+    val hits = affectedFiles(op, name, live)(_.filter(condition))
+    if (hits.nonEmpty) {
+      val affected = hits.map(_._1)
+      commitRewrite(name, op, base, live, affected, rewrite(readFiles(name, affected)))
+    }
+    hits.map(_._2).sum
+  }
+
+  /** The rows of `raw` (stored rows of rewritten files) where `condition`
+    * is not TRUE, logical view — what a delete keeps (SQL: NULL keeps).
+    */
+  private def notMatching(name: String, raw: DataFrame,
+      condition: org.apache.spark.sql.Column): DataFrame =
+    toLogical(name, raw).filter(!coalesce(condition, lit(false)))
+
   /** Row-level copy-on-write DELETE (extension beyond the reference's
     * partition-granularity [[delete]] — the table-format discipline for
     * mutating an append-only store). FILE-granular: one manifest pass
     * finds the data files that actually CONTAIN matching rows, and ONLY
-    * those files are rewritten (their retained rows re-staged, the
-    * originals swapped out); every other file is untouched bytes. At
-    * 100 TB that makes a targeted delete cost proportional to the files
-    * it hits — the same copy-on-write shape Delta/Iceberg use — instead
-    * of a full-table rewrite.
+    * those files are rewritten (their retained rows re-staged); every
+    * other file is untouched bytes. At 100 TB that makes a targeted
+    * delete cost proportional to the files it hits — the same
+    * copy-on-write shape Delta/Iceberg use — instead of a full-table
+    * rewrite.
     *
     * SQL DELETE semantics: rows where `condition` is NULL are KEPT.
     * Returns the number of rows deleted.
     *
-    * Crash discipline (same as [[compact]]): the staged rewrite is fully
-    * written before any original moves; originals go to a `.bak` tree
-    * before staged files move in, and `.bak` is only removed last — an
-    * interruption leaves either the original files live or a recoverable
-    * `.bak` copy, never silent loss.
+    * Crash discipline: the retained rows are staged as new files that no
+    * manifest lists yet, then one manifest commit drops the rewritten
+    * files and lists the staged ones. An interruption before the commit
+    * leaves the previous snapshot live (the staged files are orphans a
+    * [[vacuum]] reclaims); the replaced files stay readable by time
+    * travel until a vacuum drops their snapshot.
     */
-  def deleteRows(name: String, condition: org.apache.spark.sql.Column): Long = {
-    val base = currentVersion(name)
-    if (manifest(name, base).isEmpty) return 0L
-    // manifest pass: affected files + per-file matched-row counts in ONE
-    // job; driver retrieval bounded by graft.dml.maxAffectedFiles
-    val perFile = collectBounded("deleteRows", name,
-      logicalWithFile(name).filter(condition)
-        .groupBy(Catalog.FileCol).agg(count(lit(1)).as("n")))
-    if (perFile.isEmpty) return 0L
-    val affected = perFile.map(_.getString(0)).toSeq.sorted
-    val retained = logicalOverFiles(name, affected)
-      .filter(!coalesce(condition, lit(false)))
-    val added = stageIn(name, projectToPhysical(name, retained))
-    commitVersionAt(name, base, "deleteRows",
-      manifest(name, base).diff(relativize(name, affected)) ++ added)
-    perFile.map(_.getLong(1)).sum
-  }
+  def deleteRows(name: String, condition: org.apache.spark.sql.Column): Long =
+    rewriteWhere("deleteRows", name, condition)(raw =>
+      projectToPhysical(name, notMatching(name, raw, condition)))
 
   /** Atomic REPLACE WHERE (Delta's `INSERT INTO t REPLACE WHERE cond`):
     * delete every row matching `condition` AND insert `df`, as ONE
@@ -1573,34 +1565,22 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * replaced one, never the deleted-but-not-yet-inserted gap that a
     * deleteRows-then-insert sequence exposes (and a crash between the
     * two can't strand the table half-mutated). File-granular like
-    * [[deleteRows]]: only files containing matching rows are rewritten;
-    * the incoming batch stages alongside; one manifest swap covers both.
-    * This is the idempotent-backfill primitive (re-materialize one day /
-    * partition of a derived table). Returns rows deleted.
+    * [[deleteRows]]: only files containing matching rows are rewritten,
+    * their retained rows staged in the same write as the incoming batch;
+    * it commits even when nothing matches. This is the idempotent-backfill
+    * primitive (re-materialize one day / partition of a derived table).
+    * Returns rows deleted.
     */
   def replaceWhere(name: String, condition: org.apache.spark.sql.Column,
       df: DataFrame): Long = {
     val base = currentVersion(name)
-    val cur = manifest(name, base)
-    val (survivorFiles, removedCount) =
-      if (cur.isEmpty) (cur, 0L)
-      else {
-        val perFile = collectBounded("replaceWhere", name,
-          logicalWithFile(name).filter(condition)
-            .groupBy(Catalog.FileCol).agg(count(lit(1)).as("n")))
-        if (perFile.isEmpty) (cur, 0L)
-        else {
-          val affected = perFile.map(_.getString(0)).toSeq.sorted
-          val retained = logicalOverFiles(name, affected)
-            .filter(!coalesce(condition, lit(false)))
-          val kept = stageIn(name, projectToPhysical(name, retained))
-          (cur.diff(relativize(name, affected)) ++ kept,
-            perFile.map(_.getLong(1)).sum)
-        }
-      }
-    val added = stageIn(name, projectToPhysical(name, df))
-    commitVersionAt(name, base, "replace_where", survivorFiles ++ added)
-    removedCount
+    val live = manifest(name, base)
+    val hits = affectedFiles("replace_where", name, live)(_.filter(condition))
+    val affected = hits.map(_._1)
+    commitRewrite(name, "replace_where", base, live, affected, projectToPhysical(name,
+      notMatching(name, readFiles(name, affected), condition)
+        .unionByName(alignLogical(name, df))))
+    hits.map(_._2).sum
   }
 
   /** Right-to-be-forgotten erasure (GDPR art.17 shape): COW-delete the
@@ -1638,25 +1618,15 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       require(s.fieldNames.contains(c), s"update column $c not in schema of $name") }
     require(set.map(_._1).distinct.size == set.size,
       "UPDATE assigns a column twice")
-    val base = currentVersion(name)
-    if (manifest(name, base).isEmpty) return 0L
-    val perFile = collectBounded("updateRows", name,
-      logicalWithFile(name).filter(condition)
-        .groupBy(Catalog.FileCol).agg(count(lit(1)).as("n")))
-    if (perFile.isEmpty) return 0L
-    val affected = perFile.map(_.getString(0)).toSeq.sorted
     val hit = coalesce(condition, lit(false))
     val assign = set.toMap
-    val rewritten = logicalOverFiles(name, affected).select(s.fields.map { f =>
-      assign.get(f.name) match {
-        case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toSeq: _*)
-    val added = stageIn(name, projectToPhysical(name, rewritten))
-    commitVersionAt(name, base, "updateRows",
-      manifest(name, base).diff(relativize(name, affected)) ++ added)
-    perFile.map(_.getLong(1)).sum
+    rewriteWhere("updateRows", name, condition)(raw =>
+      projectToPhysical(name, toLogical(name, raw).select(s.fields.map { f =>
+        assign.get(f.name) match {
+          case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
+        }
+      }.toSeq: _*)))
   }
 
   /** TRUNCATE TABLE: commit an EMPTY manifest — metadata-only and O(1) in
@@ -1667,6 +1637,21 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   def truncate(name: String): Unit = {
     require(exists(name), s"table $name does not exist")
     commitVersion(name, "truncate", Seq.empty)
+  }
+
+  /** The number of `updates` rows, checked key-unique on `key` in one
+    * pass (multiple update rows per key is the ambiguity SQL MERGE
+    * rejects at runtime). count_distinct ignores NULLs, so the null key
+    * group is counted back in (max(isNull) = 1 if any): a SINGLE
+    * NULL-keyed row passes, two or more are duplicates of one key group.
+    */
+  private def keyUniqueCount(updates: DataFrame, key: String): Long = {
+    val st = updates.agg(count(lit(1)),
+      count_distinct(col(key)) + coalesce(max(col(key).isNull.cast("long")), lit(0L))).head()
+    val (nUpd, nKeys) = (st.getLong(0), st.getLong(1))
+    require(nUpd == nKeys,
+      s"merge updates must be key-unique on $key: $nUpd rows over $nKeys keys")
+    nUpd
   }
 
   /** Copy-on-write MERGE (upsert) by key — SQL MERGE's `WHEN MATCHED THEN
@@ -1698,37 +1683,20 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     */
   def merge(name: String, updates: DataFrame, key: String): (Long, Long) = {
     val base = currentVersion(name)
+    val live = manifest(name, base)
     val s = schema(name)
     require(s.fieldNames.contains(key), s"merge key $key not in schema of $name")
-    // one pass over updates for both counts (was two separate jobs — at
-    // scale each job is a full scan of the update set). count_distinct
-    // ignores NULLs, so the null key group is counted back in explicitly
-    // (max(isNull) = 1 if any) — a SINGLE NULL-keyed update row is
-    // accepted, never matches any stored row (SQL equality), and is
-    // inserted; two or more NULL-keyed rows are duplicates of one key
-    // group and rejected, exactly the distinct().count() semantics this
-    // folded pass replaced.
-    val updStats = updates.agg(
-      count(lit(1)).as("n"),
-      (count_distinct(col(key)) +
-        coalesce(max(col(key).isNull.cast("long")), lit(0L))).as("k")).head()
-    val (nUpd, nKeys) = (updStats.getLong(0), updStats.getLong(1))
-    require(nUpd == nKeys,
-      s"merge updates must be key-unique on $key: $nUpd rows over $nKeys keys")
+    val nUpd = keyUniqueCount(updates, key)
     val keys = updates.select(col(key)).distinct()
-    val updLogical = alignUpdates(name, updates)
-    if (manifest(name, currentVersion(name)).isEmpty) {
-      insert(name, updLogical); return (0L, nUpd)
-    }
-    // rollup folds the old separate matchedKeys job (a second semi-join
-    // scan of the affected files) into the manifest pass: the grand-total
-    // row carries the distinct matched key count, the per-file rows the
-    // rewrite set. Expand doubles only the MATCHED rows (the trickle),
-    // never the full table scan.
+    val updLogical = alignLogical(name, updates)
+    if (live.isEmpty) { insert(name, updLogical); return (0L, nUpd) }
+    // one rollup pass: the per-file rows are the rewrite set, the
+    // grand-total row carries the distinct matched key count. Expand
+    // doubles only the MATCHED rows (the trickle), never the full scan.
     // fresh-aliased left side: `updates` routinely derives from this very
     // table (read-modify-write), and an unqualified post-join reference to
     // the key column would trip DetectAmbiguousSelfJoin
-    val tagged = logicalWithFile(name)
+    val tagged = logicalWithFile(name, live)
       .select(col(Catalog.FileCol).as("__f"), col(key).as("__k"))
     val perFileAll = collectBounded("merge", name,
       tagged.as("t").join(keys.as("u"),
@@ -1738,31 +1706,17 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       rollupTotalRow = true)
     val perFile = perFileAll.filter(!_.isNullAt(0))
     if (perFile.isEmpty) { insert(name, updLogical); return (0L, nUpd) }
-    val affected = perFile.map(_.getString(0)).toSeq.sorted
+    val affected = perFile.map(r => relativize(name, r.getString(0))).toSeq.sorted
     val matched = perFile.map(_.getLong(1)).sum
     val matchedKeys = perFileAll.find(_.isNullAt(0)).map(_.getLong(2)).getOrElse(0L)
     // retained non-matched rows of the affected files + ALL update rows
     // (matched replacements and fresh inserts alike) form the staged write
-    val retained = logicalOverFiles(name, affected).join(keys, Seq(key), "left_anti")
+    val retained = toLogical(name, readFiles(name, affected))
+      .join(keys, Seq(key), "left_anti")
       .select(s.fieldNames.map(col).toSeq: _*)
-    val added = stageIn(name, projectToPhysical(name, retained.unionByName(updLogical)))
-    commitVersionAt(name, base, "merge",
-      manifest(name, base).diff(relativize(name, affected)) ++ added)
+    commitRewrite(name, "merge", base, live, affected,
+      projectToPhysical(name, retained.unionByName(updLogical)))
     (matched, nUpd - matchedKeys)
-  }
-
-  /** Update rows in logical terms, schema order, omitted defaulted
-    * columns filled — the source-side projection every merge goes through.
-    */
-  private def alignUpdates(name: String, updates: DataFrame): DataFrame = {
-    val s = schema(name)
-    updates.select(s.fields.map { f =>
-      val c =
-        if (!updates.columns.contains(f.name) && defaultOf(f).isDefined)
-          expr(defaultOf(f).get).cast(f.dataType)
-        else col(f.name).cast(f.dataType)
-      c.as(f.name)
-    }.toSeq: _*)
   }
 
   /** Copy-on-write MERGE with CONDITIONAL, MULTI-ACTION clauses — the full
@@ -1781,9 +1735,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * first not-matched clause whose condition holds inserts it. Matched
     * conditions may reference both sides through `targetAlias`/
     * `sourceAlias` qualifiers (e.g. `s.v > t.v`); not-matched conditions
-    * see only `sourceAlias`. `updates` must be key-unique — multiple
-    * source rows matching one target row is the ambiguity SQL MERGE
-    * rejects at runtime, checked loudly here.
+    * see only `sourceAlias`. `updates` must be key-unique, with the same
+    * single-NULL-key rule as [[merge]] — multiple source rows matching
+    * one target row is the ambiguity SQL MERGE rejects at runtime,
+    * checked loudly here.
     *
     * FILE-granular like [[merge]]: the manifest pass (bounded by
     * `graft.dml.maxAffectedFiles`) finds files containing matched keys;
@@ -1798,6 +1753,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       notMatched: Seq[Option[String]],
       targetAlias: String = "t", sourceAlias: String = "s"): (Long, Long, Long) = {
     val base = currentVersion(name)
+    val live = manifest(name, base)
     val s = schema(name)
     require(s.fieldNames.contains(key), s"merge key $key not in schema of $name")
     require(matched.nonEmpty || notMatched.nonEmpty,
@@ -1809,12 +1765,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         "(an unconditional clause makes later ones unreachable)"))
     notMatched.dropRight(1).foreach(c => require(c.isDefined,
       "only the last WHEN NOT MATCHED clause may omit its AND condition"))
-    val nUpd = updates.count()
+    keyUniqueCount(updates, key)
     val keys = updates.select(col(key)).distinct()
-    require(nUpd == keys.count(),
-      s"merge updates must be key-unique on $key: multiple source rows " +
-        "per key is the multi-match SQL MERGE rejects")
-    val updLogical = alignUpdates(name, updates)
+    val updLogical = alignLogical(name, updates)
     // all NOT MATCHED actions are INSERT *, so first-match reduces to
     // any-match: one OR over the clause conditions
     def inserts(candidates: DataFrame): DataFrame =
@@ -1823,20 +1776,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         val cond = notMatched.map(_.map(expr).getOrElse(lit(true))).reduce(_ || _)
         candidates.alias(sourceAlias).filter(coalesce(cond, lit(false)))
       }
-    if (manifest(name, currentVersion(name)).isEmpty) {
-      val ins = inserts(updLogical)
-      val n = insert(name, ins)
-      return (0L, 0L, n)
-    }
-    val perFile = collectBounded("merge", name,
-      logicalWithFile(name).join(keys, Seq(key), "left_semi")
-        .groupBy(Catalog.FileCol).agg(count(lit(1)).as("n")))
-    if (perFile.isEmpty) {
-      val n = insert(name, inserts(updLogical))
-      return (0L, 0L, n)
-    }
-    val affected = perFile.map(_.getString(0)).toSeq.sorted
-    val affectedRows = logicalOverFiles(name, affected)
+    val hits = affectedFiles("merge", name, live)(_.join(keys, Seq(key), "left_semi"))
+    if (hits.isEmpty) return (0L, 0L, insert(name, inserts(updLogical)))
+    val affected = hits.map(_._1)
+    val affectedRows = toLogical(name, readFiles(name, affected))
     // first applicable clause per pair, as one CASE chain ('keep' = no
     // clause holds, or the target row had no source match at all)
     val joined = affectedRows.alias(targetAlias).join(
@@ -1859,20 +1802,18 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // every matched key by construction)
     val ins = inserts(updLogical.join(affectedRows.select(col(key)), Seq(key), "left_anti"))
     val nIns = ins.count()
-    val added = stageIn(name,
+    commitRewrite(name, "merge", base, live, affected,
       projectToPhysical(name, kept.unionByName(updated).unionByName(ins)))
-    commitVersionAt(name, base, "merge",
-      manifest(name, base).diff(relativize(name, affected)) ++ added)
     (actionCounts.getOrElse("update", 0L), actionCounts.getOrElse("delete", 0L), nIns)
   }
 
-  /** `file:` URIs (as [[logicalWithFile]] tags them) → data-dir-relative
-    * manifest entries.
+  /** A `file:` URI as [[logicalWithFile]] tags it → its data-dir-relative
+    * manifest entry. The data dir is made absolute and normalized the way
+    * Spark qualifies the paths it reads, so a relative warehouse works.
     */
-  private def relativize(name: String, uris: Seq[String]): Seq[String] = {
-    val dir = dataDir(name)
-    uris.map(u => dir.relativize(Paths.get(java.net.URI.create(u))).toString)
-  }
+  private def relativize(name: String, uri: String): String =
+    dataDir(name).toAbsolutePath.normalize
+      .relativize(Paths.get(java.net.URI.create(uri))).toString
 }
 
 object Catalog {

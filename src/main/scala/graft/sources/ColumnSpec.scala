@@ -101,10 +101,4 @@ object ColumnSpec {
     specs.map(parse(_, uint64AsDecimal))
 
   def toSchema(specs: Seq[Spec]): StructType = StructType(specs.map(_.field))
-
-  /** Parquet writer options enabling bloom filters on indexed columns. */
-  def bloomOptions(specs: Seq[Spec]): Map[String, String] =
-    specs.filter(_.indexed)
-      .map(s => s"parquet.bloom.filter.enabled#${s.field.name}" -> "true")
-      .toMap
 }

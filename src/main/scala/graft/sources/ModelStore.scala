@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.Similarity.PqModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Persistence for trained model state — the train-once / serve-everywhere
@@ -67,10 +67,6 @@ object ModelStore {
     spark.read.parquet(dir).select(col("cluster"), col("centroid")).collect()
       .map(r => r.getLong(0) -> (r.getSeq[Double](1).toVector: Seq[Double]))
       .sortBy(_._1).toSeq
-
-  /** Centroid table as a DataFrame (cluster, centroid) for broadcast use. */
-  def centroidsDf(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).select(col("cluster"), col("centroid"))
 
   /** Write a learned BPE merge table (rank, left, right, pair freq) —
     * the tokenizer-model artifact: train once on the vocab table, encode

@@ -86,12 +86,6 @@ object ZOrder {
     graft.plans.HilbertIndex2D.hilbertIndex2d(
       normBucket(x, xLo, xHi, 16), normBucket(y, yLo, yHi, 16))
 
-  /** 2-D form kept for the established call sites. */
-  def zValue2(
-      x: Column, xLo: Double, xHi: Double,
-      y: Column, yLo: Double, yHi: Double): Column =
-    zValue(Seq((x, xLo, xHi), (y, yLo, yHi)))
-
   /** Per-file min/max stats for the z-ordered columns (one entry per
     * dimension, in z-order column order).
     */

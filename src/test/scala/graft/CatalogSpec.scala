@@ -662,6 +662,13 @@ class CatalogSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       cat.merge("docs", nullRow.unionByName(nullRow), "doc_id")
     }
+    // mergeConditional applies the same rule
+    val upsert = (rows: org.apache.spark.sql.DataFrame) => cat.mergeConditional(
+      "docs", rows, "doc_id", Seq(Catalog.MatchedClause(None, delete = false)), Seq(None))
+    assert(upsert(nullRow) == ((0L, 0L, 1L)))
+    assert(cat.table("docs").filter(col("doc_id").isNull).count() == 2)
+    assertThrows[IllegalArgumentException] { upsert(nullRow.unionByName(nullRow)) }
+    assert(cat.table("docs").count() == 52)
   }
 
   test("time travel: every committed version stays readable until vacuumed") {
@@ -1276,5 +1283,105 @@ class CatalogSpec extends SparkSpec {
     // crash-orphan hygiene: vacuum clears any leftover staging dirs
     cat.vacuum("occ", retainLast = 1)
     assert(cat.table("occ").count() === (2 * rounds).toLong)
+  }
+
+  /** A partitioned (id, p, v) table with ids 0 until n, p = id % 4, v = id. */
+  private def idTable(cat: Catalog, name: String, n: Int): Unit = {
+    cat.create(name, StructType(Seq(StructField("id", LongType),
+      StructField("p", IntegerType), StructField("v", LongType))), Some("p"))
+    cat.insert(name, spark.range(n).select(col("id"),
+      (col("id") % 4).cast("int").as("p"), col("id").as("v")).repartition(2))
+  }
+
+  private def idRows(cat: Catalog, name: String): Seq[(Long, Int, Long)] =
+    cat.table(name).orderBy("id").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("p"), r.getAs[Long]("v"))).toSeq
+
+  test("row-level DML works on a warehouse path with a space and a percent sign") {
+    val wh = Files.createDirectories(
+      Files.createTempDirectory("graft_cat_test_").resolve("wh with space%"))
+    // absolute, and relative to the working directory (`..` segments)
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    Seq(wh.toString, cwd.relativize(wh).toString).zipWithIndex.foreach {
+      case (path, i) => dmlRoundTrip(new Catalog(spark, path), s"t$i")
+    }
+  }
+
+  /** Every row-level DML op on a fresh (id, p, v) table, checking each
+    * returned count and the rows read back.
+    */
+  private def dmlRoundTrip(cat: Catalog, t: String): Unit = {
+    import spark.implicits._
+    idTable(cat, t, 40)
+    var want = (0L until 40L).map(i => i -> ((i % 4).toInt, i)).toMap
+    def check(): Unit = assert(idRows(cat, t) ===
+      want.toSeq.sortBy(_._1).map { case (i, (p, v)) => (i, p, v) })
+
+    assert(cat.deleteRows(t, col("v") < 4) === 4L)
+    want = want.filter(_._1 >= 4); check()
+    assert(cat.updateRows(t, col("id") === 10, Seq("v" -> lit(100L))) === 1L)
+    want = want.updated(10L, (2, 100L)); check()
+    val batch = Seq((1001L, 1, 1L)).toDF("id", "p", "v")
+    assert(cat.replaceWhere(t, col("p") === 1, batch) === 9L)
+    want = want.filter(_._2._1 != 1) + (1001L -> ((1, 1L))); check()
+    cat.compactWhere(t, col("p") === 2)
+    check()
+    val upd = Seq((12L, 0, 120L), (2000L, 3, 7L)).toDF("id", "p", "v")
+    assert(cat.merge(t, upd, "id") === ((1L, 1L)))
+    want = want + (12L -> ((0, 120L))) + (2000L -> ((3, 7L))); check()
+    val cond = Seq((14L, 2, 140L), (15L, 3, -1L), (3000L, 0, 5L)).toDF("id", "p", "v")
+    assert(cat.mergeConditional(t, cond, "id",
+      Seq(Catalog.MatchedClause(Some("s.v < 0"), delete = true),
+        Catalog.MatchedClause(None, delete = false)),
+      Seq(None)) === ((1L, 1L, 1L)))
+    want = want - 15L + (14L -> ((2, 140L))) + (3000L -> ((0, 5L))); check()
+    assert(cat.tableChanges(t, 1, cat.currentVersion(t)).count() > 0)
+  }
+
+  test("catalog ops run no more Spark jobs than their pinned counts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(op: => Any): Int = {
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.set(0)
+      op
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.get
+    }
+    val cat = freshCatalog()
+    idTable(cat, "t", 200)
+    val batch = spark.range(200, 260).select(col("id"),
+      (col("id") % 4).cast("int").as("p"), col("id").as("v"))
+    val upd = spark.range(190, 210).select(col("id"),
+      (col("id") % 4).cast("int").as("p"), (col("id") * 10).as("v"))
+    val cond = Seq((20L, 0, -1L), (21L, 1, 210L), (5000L, 0, 5L)).toDF("id", "p", "v")
+    sc.addSparkListener(listener)
+    val counts = try Seq(
+      "insert" -> jobsOf(cat.insert("t", batch)),
+      "merge" -> jobsOf(cat.merge("t", upd, "id")),
+      "deleteRows" -> jobsOf(cat.deleteRows("t", col("v") % 5 === 0)),
+      "updateRows" -> jobsOf(cat.updateRows("t", col("id") < 40, Seq("v" -> lit(-2L)))),
+      "replaceWhere" -> jobsOf(cat.replaceWhere("t", col("p") === 3, batch.filter(col("p") === 3))),
+      "compactWhere" -> jobsOf(cat.compactWhere("t", col("p") === 2)),
+      "mergeConditional" -> jobsOf(cat.mergeConditional("t", cond, "id",
+        Seq(Catalog.MatchedClause(Some("s.v < 0"), delete = true),
+          Catalog.MatchedClause(None, delete = false)), Seq(None))),
+      "compact" -> jobsOf(cat.compact("t")),
+      "read" -> jobsOf(cat.table("t").filter(col("p") === 1).collect()))
+    finally sc.removeSparkListener(listener)
+    info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
+    // one shared key-uniqueness pass (mergeConditional) and one write for
+    // the retained rows plus the incoming batch (replaceWhere)
+    val pinned = Map("insert" -> 1, "merge" -> 8, "deleteRows" -> 5, "updateRows" -> 3,
+      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 17, "compact" -> 2,
+      "read" -> 1)
+    counts.foreach { case (op, n) =>
+      assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at most ${pinned(op)}")
+    }
   }
 }
