@@ -418,70 +418,43 @@ object StressScale {
     * JSON line with the per-batch `numRowsTotal` series for both modes.
     */
   private def stream(spark: SparkSession, dir: String): Unit = {
-    // the feed + checkpoints + per-day leftovers live under one temp tree
-    // deleted on every exit path (same cleanup discipline as StreamingOps)
-    val work = java.nio.file.Files.createTempDirectory("graft_stream_state_")
-    try stream0(spark, dir, work)
-    finally graft.streaming.StreamingOps.deleteRecursively(work)
-  }
-
-  private def stream0(
-      spark: SparkSession, dir: String, work: java.nio.file.Path): Unit = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.OutputMode
+    import graft.streaming.StreamingOps
     val ev = Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "value", "ts_ns")
-    val feed = java.nio.file.Files.createDirectory(work.resolve("feed"))
-    // one file per calendar day, mtimes pinning replay order to event time
-    val days = ev.select(expr("ts_ns div 86400000000000").as("day"))
+    val dayOf = expr("ts_ns div 86400000000000")
+    val days = ev.select(dayOf.as("day"))
       .distinct().orderBy("day").collect().map(_.getLong(0)) // ≤31 values
-    days.zipWithIndex.foreach { case (day, i) =>
-      val tmp = work.resolve(s"w$i")
-      ev.filter(expr(s"ts_ns div 86400000000000 = $day"))
-        .coalesce(1).write.parquet(tmp.toString)
-      // Files.list streams hold an open directory fd until closed
-      val ls = java.nio.file.Files.list(tmp)
-      val part =
-        try ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).next()
-        finally ls.close()
-      val dst = feed.resolve(f"day$i%02d.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    }
-    val schema = ev.schema
-    def run(mode: OutputMode, watermark: Boolean): (Int, Seq[Long]) = {
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", "4")
-      val ckpt = java.nio.file.Files.createTempDirectory(work, "ckpt_").toString
-      val src0 = session.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(feed.toString)
-        .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-      val src = if (watermark) src0.withWatermark("ts", "1 hour") else src0
-      val q = src
-        .groupBy(col("event_type"), window(col("ts"), "2 hours", "30 minutes"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], _: Long) =>
-          df.write.format("noop").mode("overwrite").save()
+    // the feed outlives both replays: one temp tree, deleted on every exit
+    val work = java.nio.file.Files.createTempDirectory("graft_stream_state_")
+    try {
+      // one file per calendar day, replayed in event-time order
+      val feed = StreamingOps.orderedFeed(work, ev.schema,
+        days.toSeq.map(d => ev.filter(dayOf === d)))
+      def run(mode: OutputMode, watermark: Boolean): (Int, Seq[Long]) =
+        StreamingOps.drive(spark, "stream_state") { (session, _) =>
+          val src0 = feed.stream(session)
+            .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+          val src = if (watermark) src0.withWatermark("ts", "1 hour") else src0
+          val counts = src
+            .groupBy(col("event_type"), window(col("ts"), "2 hours", "30 minutes"))
+            .agg(count(lit(1)).as("n"))
+          StreamingOps.Replay(counts, mode,
+            (df, _) => df.write.format("noop").mode("overwrite").save(),
+            q => {
+              val state = q.recentProgress.toSeq
+                .filter(_.stateOperators.nonEmpty)
+                .map(_.stateOperators(0).numRowsTotal)
+              (state.size, state)
+            })
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val state = q.recentProgress.toSeq
-        .filter(_.stateOperators.nonEmpty)
-        .map(_.stateOperators(0).numRowsTotal)
-      (state.size, state)
-    }
-    val (nBatchC, stateC) = run(OutputMode.Complete(), watermark = false)
-    val (nBatchU, stateU) = run(OutputMode.Update(), watermark = true)
-    println(
-      s"""{"dir":"$dir","days":${days.length},""" +
-        s""""complete_batches":$nBatchC,"complete_state_rows":[${stateC.mkString(",")}],""" +
-        s""""update_batches":$nBatchU,"update_state_rows":[${stateU.mkString(",")}]}""")
+      val (nBatchC, stateC) = run(OutputMode.Complete(), watermark = false)
+      val (nBatchU, stateU) = run(OutputMode.Update(), watermark = true)
+      println(
+        s"""{"dir":"$dir","days":${days.length},""" +
+          s""""complete_batches":$nBatchC,"complete_state_rows":[${stateC.mkString(",")}],""" +
+          s""""update_batches":$nBatchU,"update_state_rows":[${stateU.mkString(",")}]}""")
+    } finally graft.LocalFiles.deleteRecursively(work)
   }
 
   /** OCC contention stress: `writers` real threads each commit `rounds`

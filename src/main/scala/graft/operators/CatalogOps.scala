@@ -2,11 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import graft.{Det, Q, Tables}
+import graft.{Det, LocalFiles, Q, Tables}
 import graft.sources.Catalog
 import org.apache.spark.sql.functions._
-
-import scala.jdk.CollectionConverters._
 
 /** Catalog / ingest / partition lifecycle as driver-checkable queries
   * (SURVEY.md §2.1 S4/S6/S8/S9): round-trip the documents fixture through
@@ -24,12 +22,8 @@ object CatalogOps {
     */
   private[graft] def tempWarehouse(): String = {
     val dir = Files.createTempDirectory("graft_wh_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val s = Files.walk(dir)
-      try s.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-      finally s.close()
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try LocalFiles.deleteRecursively(dir) catch { case _: Throwable => () }))
     dir.toString
   }
 

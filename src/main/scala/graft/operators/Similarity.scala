@@ -1183,30 +1183,6 @@ object Similarity {
       pqLookupTables(queries, id, vec, model), k, Some(cand))
   }
 
-  /** Stage a serving index once per (params, fixture identity) under a
-    * stable tmp path and return it — [[graft.streaming.StreamingOps
-    * .stagePublish]]'s multi-process-safe atomic-publish discipline, so
-    * concurrent Verify/Bench JVMs build privately and exactly one wins,
-    * and a regenerated fixture (size/mtime change) gets a fresh index.
-    * Registered serving rows thus time SERVING, with the one-off build
-    * amortized — exactly the deployment cost model.
-    */
-  private[graft] def withStagedIndex(spark: SparkSession, sfDir: String,
-      tag: String, fixture: String = "embeddings.parquet")(
-      build: String => Unit): String = {
-    val src = java.nio.file.Paths.get(s"$sfDir/$fixture")
-    val ident = s"$tag:$sfDir:${java.nio.file.Files.size(src)}:" +
-      java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stage = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      "graft_ann_index_" + graft.streaming.StreamingOps.stageDigest(ident))
-    graft.streaming.StreamingOps.stagePublish(stage, ident) { tmp =>
-      build(tmp)
-      // root marker: parquet writes create per-SUBDIR markers only
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), "")
-    }
-  }
-
   /** DuckDB replay of [[pqTopK]]: per-subspace Lloyd (the subspace is a
     * grouping key, so one unrolled chain trains all m codebooks), codes,
     * micros-quantized ADC tables, integer sums, per-query top-k.
@@ -1782,7 +1758,7 @@ object Similarity {
     // with the rare training cost amortized. Train-inline `pqTopK` stays
     // the public API and is spec-pinned at sf0.001 ----
     Q("ann_topk_pq", pqOracleSql(4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = withStagedIndex(s, d, "pq:4:8:2")(tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "pq:4:8:2")(tmp =>
         buildPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
           m = 4, kc = 8, iters = 2, dir = tmp))
       pqTopKWithModel(Tables.embeddings(s, d), "vec_id", "embedding",
@@ -1801,7 +1777,7 @@ object Similarity {
     // cost with training amortized. Train-inline `ivfPqTopK` stays the
     // public API and is spec-pinned at sf0.001 ----
     Q("ann_topk_ivfpq", ivfPqOracleSql(8, 3, 4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = withStagedIndex(s, d, "ivfpq:v2:8:4:8:2")(tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "ivfpq:v2:8:4:8:2")(tmp =>
         buildIvfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
           nlist = 8, m = 4, kc = 8, iters = 2, dir = tmp))
       ivfPqTopKWithIndex(s, dir, Tables.embeddings(s, d),
@@ -1816,7 +1792,7 @@ object Similarity {
     // never re-read. Same oracles as the inline rows: the served answers
     // are hash-exactly the trained ones ----
     Q("ann_topk_pq_served", pqOracleSql(4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = withStagedIndex(s, d, "pq:4:8:2")(tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "pq:4:8:2")(tmp =>
         buildPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
           m = 4, kc = 8, iters = 2, dir = tmp))
       servePqTopK(s, dir, Tables.embeddings(s, d).filter(col("vec_id") < 20),
@@ -1825,7 +1801,7 @@ object Similarity {
     },
 
     Q("ann_topk_ivfpq_served", ivfPqOracleSql(8, 3, 4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = withStagedIndex(s, d, "ivfpq:v2:8:4:8:2")(tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "ivfpq:v2:8:4:8:2")(tmp =>
         buildIvfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
           nlist = 8, m = 4, kc = 8, iters = 2, dir = tmp))
       serveIvfPqTopK(s, dir,

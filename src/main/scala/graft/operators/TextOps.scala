@@ -1091,8 +1091,7 @@ object TextOps {
     // every later encode loads it — no retraining (the ANN serving
     // discipline applied to tokenization) ----
     Q("bpe_corpus_tokens_served", bpeCorpusOracle) { (s, d) =>
-      val dir = Similarity.withStagedIndex(s, d, "bpe:150:6",
-        fixture = "documents.parquet") { tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "documents.parquet", "bpe:150:6") { tmp =>
         graft.sources.ModelStore.saveMerges(s, tmp,
           bpeTrain(Tables.documents(s, d), topN = 150, rounds = 6)._1)
       }
@@ -1135,8 +1134,8 @@ object TextOps {
     // later encodes load it and never retrain (the bpe_*_served
     // discipline) ----
     Q("unigram_encode_served", unigramEncodeOracle) { (s, d) =>
-      val dir = Similarity.withStagedIndex(s, d, "unigram:150:4:40:24",
-        fixture = "documents.parquet") { tmp =>
+      val dir = graft.LocalFiles.stageFixture(d, "documents.parquet",
+        "unigram:150:4:40:24") { tmp =>
         graft.sources.ModelStore.saveUnigram(s, tmp,
           unigramTrain(Tables.documents(s, d), 150, 4, 40, 24)._1)
       }
@@ -1183,8 +1182,8 @@ object TextOps {
     // (ModelStore, trained once per fixture identity) — the BPE/unigram
     // serving discipline applied to the third tokenizer family ----
     Q("wordpiece_encode_served", wordpieceEncodeOracle) { (s, d) =>
-      val dir = Similarity.withStagedIndex(
-        s, d, "wordpiece:150:6", fixture = "documents.parquet") { tmp =>
+      val dir = graft.LocalFiles.stageFixture(
+        d, "documents.parquet", "wordpiece:150:6") { tmp =>
         graft.sources.ModelStore.saveMerges(s, tmp,
           wordpieceTrain(Tables.documents(s, d), 150, 6)._1
             .map(m => (m._1, m._2, m._3, m._4)))

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import graft.LocalFiles
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -775,7 +776,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // each other's staged files before their commits race for the log
     val staged = Paths.get(dir.toString + ".stage_tmp_" +
       java.util.UUID.randomUUID().toString.take(8))
-    deleteRecursively(staged)
+    LocalFiles.deleteRecursively(staged)
     writeData(name, projected, staged.toString, SaveMode.Overwrite)
     val moved = walkAll(staged)
       .filter(p => Files.isRegularFile(p))
@@ -797,7 +798,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
           .fromMillis(System.currentTimeMillis()))
         rel.toString
       }
-    deleteRecursively(staged)
+    LocalFiles.deleteRecursively(staged)
     moved
   }
 
@@ -857,7 +858,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     listDir(dir.getParent)
       .filter(_.getFileName.toString.startsWith(dir.getFileName.toString + ".stage_tmp"))
       .filter(d => Files.getLastModifiedTime(d).toMillis < orphanCutoff)
-      .foreach(deleteRecursively)
+      .foreach(LocalFiles.deleteRecursively)
   }
 
   /** Age-based retention (`VACUUM t RETAIN <n> HOURS`, the Delta-style
@@ -1184,13 +1185,6 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       .sortWithinPartitions("__graft_z")
       .drop("__graft_z"))
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
 
   /** The one data reader: the given manifest entries as stored —
     * physical column names, no default coalescing; [[toLogical]] over it

@@ -190,48 +190,25 @@ object KafkaOps {
       lit(0).as("timestampType"))
   }
 
-  /** Wire-parquet staging dirs already written this JVM, keyed by sfDir. */
-  private val wireStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage [[wireFromEvents]] once per (JVM, sfDir) under a stable
-    * tmp path and reuse it across calls. The content is deterministic
-    * (fixture rows + deterministic provenance dressing), so reuse is
-    * sound; Spark's `_SUCCESS` marker guards against a stale partial dir
-    * from an interrupted earlier process. Repeated benchmark runs of
-    * [[wireParseFileBacked]] then time only the streaming read + parse —
-    * the work a live Kafka consumer would do — not fixture staging I/O.
-    */
-  private def stagedWireDir(spark: SparkSession, sfDir: String): String = {
-    // key on fixture identity (path + size + mtime), not path alone: a
-    // regenerated fixture at the same path must get a fresh stage
-    val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-    val ident = s"$sfDir:${java.nio.file.Files.size(src)}:" +
-      java.nio.file.Files.getLastModifiedTime(src).toMillis
-    wireStageCache.computeIfAbsent(ident, { _ =>
-      val stage = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        "graft_kafka_wire_" + StreamingOps.stageDigest(ident))
-      StreamingOps.stagePublish(stage, ident) { tmp =>
-        wireFromEvents(spark, sfDir).write.mode("overwrite").parquet(tmp)
-      }
-    })
-  }
-
   /** S5 end-to-end with a file-backed wire source: stage the wire-shaped
-    * records (once per sfDir — see [[stagedWireDir]]), `readStream` them
-    * under [[kafkaWireSchema]], run the same [[parseJsonEvents]] layer a
-    * live Kafka topic would get, and land the typed rows through the
-    * executor-side file sink. Everything except the socket to a broker —
-    * the connector swap is one `format("kafka")`.
+    * records once per fixture identity ([[graft.LocalFiles.stageFixture]];
+    * the content is deterministic, so reuse is sound and repeated runs
+    * time only the streaming read + parse — the work a live Kafka
+    * consumer would do), `readStream` them under [[kafkaWireSchema]], run
+    * the same [[parseJsonEvents]] layer a live Kafka topic would get, and
+    * land the typed rows through the executor-side file sink. Everything
+    * except the socket to a broker — the connector swap is one
+    * `format("kafka")`.
     */
   def wireParseFileBacked(spark: SparkSession, sfDir: String): DataFrame = {
-    val stage = stagedWireDir(spark, sfDir)
-    StreamingOps.runToFiles(spark, "kafka_parse", { session =>
+    val stage = graft.LocalFiles.stageFixture(sfDir, "events.parquet", "kafka_wire") { tmp =>
+      wireFromEvents(spark, sfDir).write.mode("overwrite").parquet(tmp)
+    }
+    StreamingOps.toFiles(spark, "kafka_parse") { session =>
       val stream = session.readStream.schema(kafkaWireSchema).parquet(stage)
       (parseJsonEvents(stream, wireEventSchema),
         org.apache.spark.sql.streaming.OutputMode.Append())
-    })
+    }
   }.orderBy("partition", "offset")
 
   val queries: Seq[graft.Q] = Seq(

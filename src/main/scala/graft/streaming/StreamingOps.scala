@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path}
+
 import graft.{Det, Q}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -20,16 +22,14 @@ import scala.jdk.CollectionConverters._
   * Every result path is executor→disk; nothing is collected through the
   * driver.
   *
-  * Resource discipline: each invocation runs in a `newSession()` (own
-  * SQLConf/catalog sharing the SparkContext — no thread-unsafe set/restore
-  * of session-global `spark.sql.shuffle.partitions`; note newSession
-  * inherits only builder-level confs, not runtime `spark.conf.set` values,
-  * which is fine here because every conf we rely on is builder-level),
-  * materializes the sink, then drops sink/checkpoint state before
-  * returning. The normalized-events staging dir is the one deliberate
-  * residue: stable-pathed and memoized per (JVM, fixture identity), so
-  * repeated bench runs re-use it instead of re-writing it, and driver
-  * memory/tmp usage stays bounded.
+  * Every row runs on one replay skeleton: one stream driver
+  * ([[StreamingOps.drive]]: session, checkpoint, trigger, wait, cleanup),
+  * one source for the staged events as a stream
+  * ([[StreamingOps.replayEvents]]), one ordered file feed
+  * ([[StreamingOps.orderedFeed]]) and one staging helper
+  * ([[graft.LocalFiles.stageFixture]]). Staged inputs are the one
+  * deliberate residue: stable-pathed per fixture identity, so repeated
+  * runs re-use them instead of re-writing them.
   */
 /** Per-user running totals as a `transformWithState` StatefulProcessor —
   * the Spark 4 arbitrary-state API (state store v2): explicit named state
@@ -137,7 +137,7 @@ private[streaming] class TimerSessionProcessor(gapUs: Long)
 
 object StreamingOps {
 
-  /** Schema of the NORMALIZED staged events (what [[withStagedEvents]]
+  /** Schema of the NORMALIZED staged events (what [[stagedEvents]]
     * writes): the canonical shape produced by [[graft.Tables.events]] —
     * `ts` as TIMESTAMP_NTZ plus the exact integer `ts_ns`. The stream tier
     * carries NO copy of the fixture's physical-unit decode logic; all time
@@ -149,209 +149,169 @@ object StreamingOps {
     StructField("value", DoubleType), StructField("props", StringType),
     StructField("ts_ns", LongType)))
 
-  /** Staged normalized-events dirs already written this JVM, keyed by the
-    * fixture identity (path + size + mtime — a regenerated fixture at the
-    * same path gets a fresh stage, never a stale one).
-    */
-  private val eventsStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Stage the events fixture as a normalized parquet directory for the
     * file stream source (the source requires a directory; in production
     * it is a landing directory already). Staging writes
     * [[graft.Tables.events]] output — the ONE shared decode of the
     * fixture's physical ts encoding — so a fixture re-encode (INT64 nanos
     * ↔ TIMESTAMP_NTZ micros) cannot drift streaming results away from
-    * batch. Staged once per (JVM, fixture identity) under a stable tmp
-    * path (same discipline as KafkaOps.stagedWireDir): `_SUCCESS` guards
-    * a stale partial dir from an interrupted earlier process, and
-    * `computeIfAbsent` records the memo only when the write succeeds, so
-    * repeated bench runs time the streaming read, not staging I/O.
+    * batch. Staged once per fixture identity ([[graft.LocalFiles
+    * .stageFixture]]), so repeated runs time the streaming read, not
+    * staging I/O.
     */
-  private def withStagedEvents[T](spark: SparkSession, sfDir: String)(f: String => T): T = {
-    val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-    val ident = s"$sfDir:${java.nio.file.Files.size(src)}:" +
-      java.nio.file.Files.getLastModifiedTime(src).toMillis
-    f(eventsStageCache.computeIfAbsent(ident, { _ =>
-      val stage = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), "graft_stream_events_" + stageDigest(ident))
-      stagePublish(stage, ident) { tmp =>
-        graft.Tables.events(spark, sfDir).write.mode("overwrite").parquet(tmp)
-      }
-    }))
-  }
-
-  /** Collision-proof stage-dir key: a truncated SHA-256 of the full
-    * fixture identity (96 bits — two distinct fixtures can never share a
-    * stage dir, unlike the 32-bit `String.hashCode` this replaces, where
-    * a collision would silently serve another fixture's staged data).
-    */
-  private[graft] def stageDigest(ident: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(ident.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(12).map(b => f"$b%02x").mkString
-
-  /** Multi-process-safe publish of a staged directory: write into a
-    * process-private tmp dir, then atomically rename into the stable
-    * path — two JVMs staging the same fixture concurrently (e.g. a
-    * driver's Verify and Bench) each build privately and exactly one
-    * wins. Publication is serialized on an exclusive cross-process file
-    * lock (`<stage>.lock`), and the published check re-runs UNDER the
-    * lock before any delete, so a just-completed publish by another
-    * process can never be swept as a "stale partial" (the TOCTOU the
-    * unlocked check had). A published stage is valid only when BOTH the
-    * `_SUCCESS` marker and an `_graft_ident` file carrying the full
-    * identity string are present and the identity matches — content is
-    * verified, never assumed from the dir name.
-    */
-  /** Per-stage-path monitors: OS file locks are held per PROCESS, so a
-    * second `FileChannel.lock` on the same file from another thread of
-    * this JVM would throw `OverlappingFileLockException` instead of
-    * blocking — intra-JVM callers serialize on this monitor first.
-    */
-  private val publishMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[graft] def stagePublish(stage: java.nio.file.Path, ident: String)(
-      write: String => Unit): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-    def published: Boolean =
-      Files.exists(stage.resolve("_SUCCESS")) && {
-        val idf = stage.resolve("_graft_ident")
-        Files.exists(idf) && Files.readString(idf) == ident
-      }
-    if (!published) {
-      val mon = publishMonitors.computeIfAbsent(stage.toString, _ => new Object)
-      mon.synchronized {
-        val lockPath = Paths.get(stage.toString + ".lock")
-        val ch = java.nio.channels.FileChannel.open(lockPath,
-          StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-        try {
-          val lock = ch.lock() // blocks until exclusive across processes
-          try {
-            if (!published) { // re-check under the lock — no delete races a publish
-              if (Files.exists(stage)) deleteRecursively(stage)
-              val tmp = Paths.get(
-                stage.toString + ".tmp." + java.lang.ProcessHandle.current().pid())
-              deleteRecursively(tmp)
-              write(tmp.toString)
-              Files.writeString(tmp.resolve("_graft_ident"), ident)
-              Files.move(tmp, stage, StandardCopyOption.ATOMIC_MOVE)
-            }
-          } finally lock.release()
-        } finally ch.close()
-      }
+  private def stagedEvents(spark: SparkSession, sfDir: String): String =
+    graft.LocalFiles.stageFixture(sfDir, "events.parquet", "stream_events") { tmp =>
+      graft.Tables.events(spark, sfDir).write.mode("overwrite").parquet(tmp)
     }
-    stage.toString
+
+  /** The staged events as a stream: [[eventsSchema]], with `ts` replaced
+    * by the instant-typed event time derived from `ts_ns` (watermarks and
+    * windows require an instant TimestampType; rows emit NTZ only at the
+    * output edge so written results are naive like the batch tier's).
+    */
+  private def eventStream(session: SparkSession, stageDir: String): DataFrame =
+    session.readStream.schema(eventsSchema).parquet(stageDir)
+      .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+
+  /** One events stream row: stage the events, replay them through
+    * `build` into the file sink ([[toFiles]]) and read the result back.
+    * `build` gets the replay's session and a reader of the staged events
+    * stream (a stream-stream join reads it once per side).
+    */
+  private def replayEvents(spark: SparkSession, sfDir: String, prefix: String,
+      keys: String*)(
+      build: (SparkSession, () => DataFrame) => (DataFrame, OutputMode)): DataFrame = {
+    val stage = stagedEvents(spark, sfDir)
+    toFiles(spark, prefix, keys: _*)(session => build(session, () => eventStream(session, stage)))
   }
 
-  /** [[runToFiles]] for UPDATE-mode stateful streams: an Update stream
-    * emits the CURRENT value of every key touched in a micro-batch, so
-    * persisting batches to an append-only file sink is an upsert problem.
-    * Without a mutable sink we append each batch tagged with its batch id
-    * and resolve last-writer-wins per key at read time — the standard
-    * `foreachBatch` pattern for idempotent Update-mode file output. In
-    * production the sink would be a key-value store or a MERGE-capable
-    * table format; here the tag-and-resolve keeps the entire result path
-    * executor-side (no driver collect), which is what matters at corpus-
-    * sized state (per-user running totals at 100 TB are data-sized, not
-    * model-sized).
+  /** What one replay runs: the stream and its output mode, the per-batch
+    * sink, and the result reader, which runs after the query terminates
+    * and before the replay's work dir is deleted.
     */
-  private def runToFilesUpsert(
-      spark: SparkSession, prefix: String, keys: Seq[String],
-      build: SparkSession => DataFrame): DataFrame = {
+  private[graft] final case class Replay[T](stream: DataFrame, mode: OutputMode,
+      sink: (Dataset[Row], Long) => Unit, result: StreamingQuery => T)
+
+  /** The one stream driver. Each replay runs in a `newSession()` (own
+    * SQLConf/catalog sharing the SparkContext — no thread-unsafe
+    * set/restore of session-global `spark.sql.shuffle.partitions`; note
+    * newSession inherits only builder-level confs, not runtime
+    * `spark.conf.set` values, which is fine here because every conf we
+    * rely on is builder-level), to completion under
+    * `Trigger.AvailableNow`, with its checkpoint at `ckpt` under a temp
+    * work dir. `plan` gets the session and the work dir (for a feed or
+    * file-sink output); the whole dir is deleted on every exit path.
+    */
+  private[graft] def drive[T](spark: SparkSession, prefix: String)(
+      plan: (SparkSession, Path) => Replay[T]): T = {
     val session = spark.newSession()
     session.conf.set("spark.sql.shuffle.partitions", "4")
-    val work = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
-    val outDir = work.resolve("out").toString
+    val work = Files.createTempDirectory(s"graft_${prefix}_")
     try {
-      val stream = build(session)
-      val query = stream.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
+      val r = plan(session, work)
+      val query = r.stream.writeStream
+        .outputMode(r.mode)
         .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          // per-batch overwrite (writeBatch): a retried micro-batch rewrites
-          // its own `batch=<id>` dir — no duplicate tags under retry
-          writeBatch(df, outDir, complete = false, batchId)
-        }
+        .foreachBatch { (df: Dataset[Row], batchId: Long) => r.sink(df, batchId) }
         .trigger(Trigger.AvailableNow())
         .start()
       query.awaitTermination()
-      // last-writer-wins: a (map|flatMap)GroupsWithState group emits at most
-      // once per batch, so (keys, batch) is unique and rn=1 is total; the
-      // batch id is the partition-dir column writeBatch lays down
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col("batch").desc)
-      spark.read.parquet(outDir)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_rn", "batch")
-        .transform(graft.Tables.pin)
-    } finally deleteRecursively(work)
+      r.result(query)
+    } finally graft.LocalFiles.deleteRecursively(work)
   }
 
   /** Run a streaming query to completion writing a FILE sink — the scale
     * path: results go executor→disk, never through the driver (a memory
     * sink would collect results driver-side, capping at driver memory).
-    * Complete-mode windowed aggs can't use the native file
-    * sink (append-only, and its watermark-gated emission would hold back
-    * the final windows of a bounded replay), so this uses `foreachBatch` +
-    * overwrite — the standard pattern: each micro-batch atomically rewrites
-    * the output with the full current aggregate; the last rewrite IS the
-    * final answer. Checkpoint + output live in a temp dir deleted after the
-    * result is re-read and localCheckpoint'ed to executor blocks (fixture
-    * hygiene — in production the output directory is the product and
-    * stays).
+    * Each micro-batch goes through [[writeBatch]]; the output is re-read
+    * and localCheckpoint'ed to executor blocks before the work dir is
+    * deleted (fixture hygiene — in production the output directory is
+    * the product and stays).
+    *
+    * An UPDATE-mode stream emits the CURRENT value of every key touched
+    * in a micro-batch, so persisting its batches to an append-only file
+    * sink is an upsert problem: each batch lands tagged with its batch
+    * id, and the read resolves last-writer-wins per `keys` — the standard
+    * `foreachBatch` pattern for idempotent Update-mode file output, which
+    * keeps the whole result path executor-side (per-user running totals
+    * at 100 TB are data-sized, not model-sized). In production the sink
+    * would be a key-value store or a MERGE-capable table format.
     */
-  private[streaming] def runToFiles(
-      spark: SparkSession, prefix: String,
-      build: SparkSession => (DataFrame, org.apache.spark.sql.streaming.OutputMode))
-      : DataFrame = {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    val work = java.nio.file.Files.createTempDirectory(s"graft_${prefix}_")
-    val outDir = work.resolve("out").toString
-    try {
+  private[streaming] def toFiles(spark: SparkSession, prefix: String, keys: String*)(
+      build: SparkSession => (DataFrame, OutputMode)): DataFrame =
+    drive(spark, prefix) { (session, work) =>
       val (stream, mode) = build(session)
-      val complete = mode == org.apache.spark.sql.streaming.OutputMode.Complete()
-      val query = stream.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          writeBatch(df, outDir, complete, batchId)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      // drop("batch") strips Append mode's per-batch partition dir column;
-      // no-op for Complete output (no such column)
-      spark.read.parquet(outDir).drop("batch").transform(graft.Tables.pin)
-    } finally deleteRecursively(work)
-  }
+      val out = work.resolve("out").toString
+      Replay(stream, mode, writeBatch(_, out, mode == OutputMode.Complete(), _), _ => {
+        val rows = spark.read.parquet(out)
+        val latest =
+          if (mode != OutputMode.Update()) rows.drop("batch")
+          else {
+            // last-writer-wins: a (map|flatMap)GroupsWithState group emits at
+            // most once per batch, so (keys, batch) is unique and rn=1 is
+            // total; the batch id is the partition-dir column writeBatch
+            // lays down
+            require(keys.nonEmpty, s"$prefix: an Update-mode replay needs its keys")
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(keys.map(col): _*).orderBy(col("batch").desc)
+            rows.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1)
+              .drop("_rn", "batch")
+          }
+        latest.transform(graft.Tables.pin)
+      })
+    }
 
   /** Per-batch sink write, IDEMPOTENT under micro-batch retry. Complete
     * mode re-emits the full result, so each batch atomically rewrites the
-    * whole output dir and the last rewrite is the final answer. Append
-    * mode emits only new rows per batch — but `mode("append")` into one
-    * shared dir would double-write a retried batch, so each batch
-    * overwrites its OWN deterministic subdir (`batch=<id>`): a retry
-    * rewrites exactly its previous output, exactly-once semantics
-    * end-to-end (the same tag-and-resolve discipline runToFilesUpsert
-    * uses for Update mode). Asserted by StreamingSpec's retry spec.
+    * whole output dir and the last rewrite is the final answer (the
+    * native file sink can't serve Complete-mode windowed aggs: it is
+    * append-only, and its watermark-gated emission would hold back the
+    * final windows of a bounded replay). Append and Update mode emit only
+    * new rows per batch — but `mode("append")` into one shared dir would
+    * double-write a retried batch, so each batch overwrites its OWN
+    * deterministic subdir (`batch=<id>`): a retry rewrites exactly its
+    * previous output, exactly-once semantics end-to-end. Asserted by
+    * RobustnessSpec's retry spec.
     */
   private[graft] def writeBatch(
-      df: org.apache.spark.sql.Dataset[Row], outDir: String,
-      complete: Boolean, batchId: Long): Unit = {
+      df: Dataset[Row], outDir: String, complete: Boolean, batchId: Long): Unit = {
     val target = if (complete) outDir else s"$outDir/batch=$batchId"
     df.write.mode("overwrite").parquet(target)
   }
 
-  private[graft] def deleteRecursively(root: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(root)) {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
+  /** A replay input of ordered batches: one parquet file per batch, read
+    * one file per micro-batch.
+    */
+  private[graft] final case class Feed(dir: String, schema: StructType) {
+    def stream(session: SparkSession): DataFrame =
+      session.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  /** The one ordered file feed writer: each batch (projected to `schema`)
+    * becomes one parquet file in `under/feed`, with strictly increasing
+    * mtimes that pin the file source's replay order to batch order. Every
+    * directory listing is closed before the next batch.
+    */
+  private[graft] def orderedFeed(under: Path, schema: StructType,
+      batches: Seq[DataFrame]): Feed = {
+    val feed = Files.createDirectory(under.resolve("feed"))
+    batches.zipWithIndex.foreach { case (b, k) =>
+      val tmp = under.resolve(s"w$k")
+      b.select(schema.fieldNames.toSeq.map(col): _*)
+        .coalesce(1).write.parquet(tmp.toString)
+      val ls = Files.list(tmp)
+      val part =
+        try ls.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).next()
+        finally ls.close()
+      val dst = feed.resolve(s"b$k.parquet")
+      Files.move(part, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
+      graft.LocalFiles.deleteRecursively(tmp)
     }
+    Feed(feed.toString, schema)
+  }
 
   /** Streaming tumbling-window aggregation over the events fixture,
     * executed to completion with AvailableNow and materialized through the
@@ -359,22 +319,15 @@ object StreamingOps {
     * result as a batch DataFrame backed by executor blocks.
     */
   def hourlyCountsStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_hourly", { session =>
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          // watermarks require an instant TimestampType; emit NTZ only at the
-          // output edge so written results are naive like the batch tier's
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("event_type"), window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
-          .select(col("event_type"),
-            col("window.start").cast(TimestampNTZType).as("hour_start"),
-            col("n"), col("sum_value"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-      })
+    replayEvents(spark, sfDir, "stream_hourly") { (_, events) =>
+      (events()
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("event_type"), window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
+        .select(col("event_type"),
+          col("window.start").cast(TimestampNTZType).as("hour_start"),
+          col("n"), col("sum_value")),
+        OutputMode.Complete())
     }.orderBy("event_type", "hour_start")
 
   /** Streaming drift monitor: per event-time hour, the Population
@@ -392,48 +345,44 @@ object StreamingOps {
     * contributions are micros-quantized BEFORE the per-hour integer sum,
     * so the report is order-independent and engine-portable.
     */
-  def streamPsiDrift(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      def bucketOf(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        least(greatest(floor(v / 20).cast("long"), lit(0L)), lit(9L))
-      val perWin = runToFiles(spark, "stream_psi", { session =>
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), bucketOf(col("value")).as("bucket"))
-          .agg(count(lit(1)).as("c"))
-          .select(col("window.start").cast(TimestampNTZType).as("hour_start"),
-            col("bucket"), col("c"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-      })
-      val base = spark.read.schema(eventsSchema).parquet(stageDir)
-        .select(bucketOf(col("value")).as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("cb"))
-      val dom = spark.range(10).select(col("id").as("bucket"))
-      val basef = dom.join(base, Seq("bucket"), "left")
-        .select(col("bucket"), coalesce(col("cb"), lit(0L)).as("cb"))
-      val tot = basef.agg(sum("cb").as("nt"))
-      val full = perWin.select("hour_start").distinct()
-        .crossJoin(broadcast(dom))
-        .join(perWin, Seq("hour_start", "bucket"), "left")
-        .select(col("hour_start"), col("bucket"),
-          coalesce(col("c"), lit(0L)).as("c"))
-      val hn = full.groupBy("hour_start").agg(sum("c").as("n_events"))
-      val psi = full.join(hn, "hour_start")
-        .join(broadcast(basef), "bucket")
-        .crossJoin(broadcast(tot))
-        .withColumn("__p", (col("c") + 1).cast("double") / (col("n_events") + 10))
-        .withColumn("__q", (col("cb") + 1).cast("double") / (col("nt") + 10))
-        .withColumn("__pm",
-          floor((col("__p") - col("__q")) * log(col("__p") / col("__q"))
-            * lit(1000000.0) + lit(0.5)).cast("long"))
-        .groupBy("hour_start").agg(sum("__pm").as("psi_micros"))
-      psi.join(hn, "hour_start")
-        .select(col("hour_start"), col("n_events"), col("psi_micros"))
-        .orderBy("hour_start")
+  def streamPsiDrift(spark: SparkSession, sfDir: String): DataFrame = {
+    def bucketOf(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      least(greatest(floor(v / 20).cast("long"), lit(0L)), lit(9L))
+    val perWin = replayEvents(spark, sfDir, "stream_psi") { (_, events) =>
+      (events()
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), bucketOf(col("value")).as("bucket"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("window.start").cast(TimestampNTZType).as("hour_start"),
+          col("bucket"), col("c")),
+        OutputMode.Complete())
     }
+    val base = spark.read.schema(eventsSchema).parquet(stagedEvents(spark, sfDir))
+      .select(bucketOf(col("value")).as("bucket"))
+      .groupBy("bucket").agg(count(lit(1)).as("cb"))
+    val dom = spark.range(10).select(col("id").as("bucket"))
+    val basef = dom.join(base, Seq("bucket"), "left")
+      .select(col("bucket"), coalesce(col("cb"), lit(0L)).as("cb"))
+    val tot = basef.agg(sum("cb").as("nt"))
+    val full = perWin.select("hour_start").distinct()
+      .crossJoin(broadcast(dom))
+      .join(perWin, Seq("hour_start", "bucket"), "left")
+      .select(col("hour_start"), col("bucket"),
+        coalesce(col("c"), lit(0L)).as("c"))
+    val hn = full.groupBy("hour_start").agg(sum("c").as("n_events"))
+    val psi = full.join(hn, "hour_start")
+      .join(broadcast(basef), "bucket")
+      .crossJoin(broadcast(tot))
+      .withColumn("__p", (col("c") + 1).cast("double") / (col("n_events") + 10))
+      .withColumn("__q", (col("cb") + 1).cast("double") / (col("nt") + 10))
+      .withColumn("__pm",
+        floor((col("__p") - col("__q")) * log(col("__p") / col("__q"))
+          * lit(1000000.0) + lit(0.5)).cast("long"))
+      .groupBy("hour_start").agg(sum("__pm").as("psi_micros"))
+    psi.join(hn, "hour_start")
+      .select(col("hour_start"), col("n_events"), col("psi_micros"))
+      .orderBy("hour_start")
+  }
 
   /** Streaming CUSUM mean-shift monitor: daily per-type counts stream
     * through a watermarked tumbling window (event-volume work); the
@@ -445,35 +394,31 @@ object StreamingOps {
     * uses the full-series mean so it stays batch-equivalent for the
     * oracle (same contract as the batch `events_cusum_changepoint`).
     */
-  def streamCusumAlert(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      val dc = runToFiles(spark, "stream_cusum", { session =>
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("ts", "1 day")
-          .groupBy(window(col("ts"), "1 day"), col("event_type"))
-          .agg(count(lit(1)).as("c"))
-          .select(col("window.start").cast(TimestampNTZType).as("day"),
-            col("event_type"), col("c"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-      })
-      val w = org.apache.spark.sql.expressions.Window
-      val tot = dc.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("t"))
-      val cum = dc.join(tot, "event_type")
-        .select(col("event_type"), col("day"), col("n"),
-          sum(col("c") * col("n") - col("t"))
-            .over(w.partitionBy("event_type").orderBy("day")).as("s_k"))
-      cum
-        .withColumn("rk", row_number().over(
-          w.partitionBy("event_type").orderBy(abs(col("s_k")).desc, col("day"))))
-        .filter(col("rk") === 1)
-        .select(col("event_type"), col("n").as("n_days"),
-          col("day").as("cp_day"), abs(col("s_k")).as("cusum_peak"))
-        .orderBy("event_type")
+  def streamCusumAlert(spark: SparkSession, sfDir: String): DataFrame = {
+    val dc = replayEvents(spark, sfDir, "stream_cusum") { (_, events) =>
+      (events()
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("window.start").cast(TimestampNTZType).as("day"),
+          col("event_type"), col("c")),
+        OutputMode.Complete())
     }
+    val w = org.apache.spark.sql.expressions.Window
+    val tot = dc.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum(col("c")).as("t"))
+    val cum = dc.join(tot, "event_type")
+      .select(col("event_type"), col("day"), col("n"),
+        sum(col("c") * col("n") - col("t"))
+          .over(w.partitionBy("event_type").orderBy("day")).as("s_k"))
+    cum
+      .withColumn("rk", row_number().over(
+        w.partitionBy("event_type").orderBy(abs(col("s_k")).desc, col("day"))))
+      .filter(col("rk") === 1)
+      .select(col("event_type"), col("n").as("n_days"),
+        col("day").as("cp_day"), abs(col("s_k")).as("cusum_peak"))
+      .orderBy("event_type")
+  }
 
   /** Streaming SLIDING-window aggregation (2 h windows every 30 min):
     * each event lands in size/slide = 4 overlapping windows — the window
@@ -488,20 +433,15 @@ object StreamingOps {
     * window and its state IS dropped.
     */
   def slidingCountsStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_sliding", { session =>
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("ts", "1 hour")
-          .groupBy(col("event_type"), window(col("ts"), "2 hours", "30 minutes"))
-          .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
-          .select(col("event_type"),
-            col("window.start").cast(TimestampNTZType).as("win_start"),
-            col("n"), col("sum_value"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-      })
+    replayEvents(spark, sfDir, "stream_sliding") { (_, events) =>
+      (events()
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("event_type"), window(col("ts"), "2 hours", "30 minutes"))
+        .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
+        .select(col("event_type"),
+          col("window.start").cast(TimestampNTZType).as("win_start"),
+          col("n"), col("sum_value")),
+        OutputMode.Complete())
     }.orderBy("event_type", "win_start")
 
   /** Stateful streaming (the §2.8/§2.7 extension surface): per-user
@@ -511,31 +451,27 @@ object StreamingOps {
     * (asserted by StreamingSpec).
     */
   def statefulUserTotals(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFilesUpsert(spark, "stream_state", Seq("user_id"), { session =>
-        import session.implicits._
-        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-        val updated = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          // micros in the STATE (the Det contract applied to streaming):
-          // integer accumulation makes the final state independent of
-          // micro-batch boundaries and arrival order — replayable and
-          // oracle-comparable, where a double fold would drift in ulps
-          .selectExpr("user_id", "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
-              val (n0, s0) = state.getOption.getOrElse((0L, 0L))
-              var n = n0; var s = s0
-              rows.foreach { case (_, v) => n += 1; s += v }
-              state.update((n, s))
-              (user, n, s.toDouble / 1000000.0)
-          }
-          .toDF("user_id", "n_events", "sum_value")
-        updated
-      })
+    replayEvents(spark, sfDir, "stream_state", "user_id") { (session, events) =>
+      import session.implicits._
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+      (events()
+        // micros in the STATE (the Det contract applied to streaming):
+        // integer accumulation makes the final state independent of
+        // micro-batch boundaries and arrival order — replayable and
+        // oracle-comparable, where a double fold would drift in ulps
+        .selectExpr("user_id", "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+          (user: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
+            val (n0, s0) = state.getOption.getOrElse((0L, 0L))
+            var n = n0; var s = s0
+            rows.foreach { case (_, v) => n += 1; s += v }
+            state.update((n, s))
+            (user, n, s.toDouble / 1000000.0)
+        }
+        .toDF("user_id", "n_events", "sum_value"),
+        OutputMode.Update())
     }.orderBy("user_id")
 
   /** Streaming rolling-DAU: per-day HLL sketch STATE maintained
@@ -551,52 +487,50 @@ object StreamingOps {
     * order or batching. Contract: every day's estimate within tolerance
     * of the exact rolling distinct count.
     */
-  def streamRollingDau(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      val perDay = runToFilesUpsert(spark, "stream_dau", Seq("day"), { session =>
-        import session.implicits._
-        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-        session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .selectExpr("ts_ns div 86400000000000 AS day", "user_id")
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-            (day: Long, rows: Iterator[(Long, Long)],
-             state: GroupState[Array[Byte]]) =>
-              import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
-              val u = new Union(12)
-              state.getOption.foreach(b => u.update(HllSketch.heapify(b)))
-              val batch = new HllSketch(12)
-              rows.foreach { case (_, uid) => batch.update(uid) }
-              u.update(batch)
-              val bytes = u.getResult(TgtHllType.HLL_4).toCompactByteArray
-              state.update(bytes)
-              (day, bytes)
-          }
-          .toDF("day", "sk")
-      })
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy("day").rangeBetween(-6, 0)
-      val est = perDay.select(col("day"),
-        hll_sketch_estimate(
-          hll_union_agg(col("sk"), allowDifferentLgConfigK = false).over(w))
-          .as("est"))
-      val du = spark.read.schema(eventsSchema).parquet(stageDir)
-        .selectExpr("ts_ns div 86400000000000 AS day", "user_id").distinct()
-      val days = du.select("day").distinct()
-      val exact = du
-        .select(explode(sequence(col("day"), col("day") + 6)).as("day"),
-          col("user_id"))
-        .join(days, "day")
-        .groupBy("day").agg(countDistinct(col("user_id")).as("n_exact"))
-      exact.join(est, "day")
-        .select(col("day").cast("long").as("day"), col("n_exact"),
-          (abs(col("est") - col("n_exact")).cast("double")
-            / col("n_exact") <= 0.15).as("within_tol"))
-        .orderBy("day")
+  def streamRollingDau(spark: SparkSession, sfDir: String): DataFrame = {
+    val perDay = replayEvents(spark, sfDir, "stream_dau", "day") { (session, events) =>
+      import session.implicits._
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+      (events()
+        .selectExpr("ts_ns div 86400000000000 AS day", "user_id")
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+          (day: Long, rows: Iterator[(Long, Long)],
+           state: GroupState[Array[Byte]]) =>
+            import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
+            val u = new Union(12)
+            state.getOption.foreach(b => u.update(HllSketch.heapify(b)))
+            val batch = new HllSketch(12)
+            rows.foreach { case (_, uid) => batch.update(uid) }
+            u.update(batch)
+            val bytes = u.getResult(TgtHllType.HLL_4).toCompactByteArray
+            state.update(bytes)
+            (day, bytes)
+        }
+        .toDF("day", "sk"),
+        OutputMode.Update())
     }
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy("day").rangeBetween(-6, 0)
+    val est = perDay.select(col("day"),
+      hll_sketch_estimate(
+        hll_union_agg(col("sk"), allowDifferentLgConfigK = false).over(w))
+        .as("est"))
+    val du = spark.read.schema(eventsSchema).parquet(stagedEvents(spark, sfDir))
+      .selectExpr("ts_ns div 86400000000000 AS day", "user_id").distinct()
+    val days = du.select("day").distinct()
+    val exact = du
+      .select(explode(sequence(col("day"), col("day") + 6)).as("day"),
+        col("user_id"))
+      .join(days, "day")
+      .groupBy("day").agg(countDistinct(col("user_id")).as("n_exact"))
+    exact.join(est, "day")
+      .select(col("day").cast("long").as("day"), col("n_exact"),
+        (abs(col("est") - col("n_exact")).cast("double")
+          / col("n_exact") <= 0.15).as("within_tol"))
+      .orderBy("day")
+  }
 
   /** flatMapGroupsWithState (the 1-to-N stateful surface): per-event
     * running sequence numbers per user — emits one enriched record PER
@@ -605,28 +539,24 @@ object StreamingOps {
     * state first would number every event with the final count).
     */
   def runningUserSeq(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      // Append-mode 1-to-N stateful output: every event is emitted exactly
-      // once, so the plain append file path is already upsert-free
-      runToFiles(spark, "stream_seq", { session =>
-        import session.implicits._
-        import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-        val out = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .selectExpr("user_id", "event_id")
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-            (user: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-              var n = state.getOption.getOrElse(0L)
-              val emitted = rows.map { case (_, ev) => n += 1; (user, ev, n) }.toList
-              state.update(n)
-              emitted.iterator
-          }
-          .toDF("user_id", "event_id", "seq")
-        (out, OutputMode.Append())
-      })
+    // Append-mode 1-to-N stateful output: every event is emitted exactly
+    // once, so the plain append file path is already upsert-free
+    replayEvents(spark, sfDir, "stream_seq") { (session, events) =>
+      import session.implicits._
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+      (events()
+        .selectExpr("user_id", "event_id")
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+          (user: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
+            var n = state.getOption.getOrElse(0L)
+            val emitted = rows.map { case (_, ev) => n += 1; (user, ev, n) }.toList
+            state.update(n)
+            emitted.iterator
+        }
+        .toDF("user_id", "event_id", "seq"),
+        OutputMode.Append())
     }.orderBy("user_id", "seq")
 
   /** Same per-user totals through the Spark 4 `transformWithState` API
@@ -635,24 +565,21 @@ object StreamingOps {
     * TB-sized state per executor), set per-session here.
     */
   def statefulUserTotalsTws(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFilesUpsert(spark, "stream_tws", Seq("user_id"), { session =>
-        import session.implicits._
-        session.conf.set(
-          "spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .selectExpr("user_id", "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
-          .as[(Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new UserTotalsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n_events", "sum_value")
-      })
+    replayEvents(spark, sfDir, "stream_tws", "user_id") { (session, events) =>
+      import session.implicits._
+      session.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      (events()
+        .selectExpr("user_id", "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(
+          new UserTotalsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+        .toDF("user_id", "n_events", "sum_value"),
+        OutputMode.Update())
     }.orderBy("user_id")
 
   /** Timer-closed gap sessionization (see [[TimerSessionProcessor]]):
@@ -668,48 +595,33 @@ object StreamingOps {
     * advances the final watermark to the stream's max event time, firing
     * every timer at least `gap` behind it.
     */
-  def sessionWindowTimers(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", "4")
+  def sessionWindowTimers(spark: SparkSession, sfDir: String): DataFrame = {
+    val stage = stagedEvents(spark, sfDir)
+    drive(spark, "stream_timer") { (session, work) =>
+      import session.implicits._
       session.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val work = java.nio.file.Files.createTempDirectory("graft_stream_timer_")
-      val ckpt = work.resolve("ckpt").toString
-      val outDir = work.resolve("out").toString
-      try {
-        import session.implicits._
-        val gapUs = 30L * 60 * 1000000
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("tts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("tts", "0 seconds")
-          .selectExpr("user_id", "ts_ns div 1000 AS ts_us",
-            "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
-          .as[(Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new TimerSessionProcessor(gapUs),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF("user_id", "start_us", "n_events", "sum_value")
-        val query = stream.writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-            writeBatch(df, outDir, complete = false, batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val closed = spark.read.parquet(outDir).drop("batch")
+      val gapUs = 30L * 60 * 1000000
+      val stream = eventStream(session, stage)
+        .withWatermark("ts", "0 seconds")
+        .selectExpr("user_id", "ts_ns div 1000 AS ts_us",
+          "CAST(ROUND(value * 1000000.0, 0) AS LONG) AS vmic")
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(
+          new TimerSessionProcessor(gapUs),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+        .toDF("user_id", "start_us", "n_events", "sum_value")
+      val out = work.resolve("out").toString
+      Replay(stream, OutputMode.Append(), writeBatch(_, out, complete = false, _), _ => {
+        val closed = spark.read.parquet(out).drop("batch")
           .select(col("user_id"), col("start_us"), col("n_events"), col("sum_value"))
         // drain-free readout of the open tail: state as a table
         val open = spark.read.format("statestore")
           .option("stateVarName", "sess")
-          .load(ckpt)
+          .load(work.resolve("ckpt").toString)
           .select(
             col("key.value").as("user_id"),
             col("value._1").as("start_us"),
@@ -721,8 +633,9 @@ object StreamingOps {
             col("n_events"), col("sum_value"))
           .orderBy("user_id", "session_start")
           .transform(graft.Tables.pin)
-      } finally deleteRecursively(work)
+      })
     }
+  }
 
   /** Stream-stream interval join: views joined to same-user clicks within
     * the [view_ts, view_ts + 2 h] window. Both sides carry watermarks and
@@ -734,27 +647,22 @@ object StreamingOps {
     * and the result provably equals the batch join.
     */
   def viewClickJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_join", { session =>
-        def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
-          session.readStream
-            .schema(eventsSchema)
-            .parquet(stageDir)
-            .withColumn("tts", timestamp_micros(expr("ts_ns div 1000")))
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(userAs), col("event_id").as(idAs),
-              col("tts").as(tsAs))
-            .withWatermark(tsAs, "31 days")
-        val views = side("view", "view_id", "view_ts", "user_id")
-        val clicks = side("click", "click_id", "click_ts", "c_user_id")
-        val joined = views.join(
-          clicks,
-          col("user_id") === col("c_user_id") &&
-            col("click_ts") >= col("view_ts") &&
-            col("click_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"))
-          .select(col("user_id"), col("view_id"), col("click_id"))
-        (joined, org.apache.spark.sql.streaming.OutputMode.Append())
-      })
+    replayEvents(spark, sfDir, "stream_join") { (_, events) =>
+      def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
+        events()
+          .filter(col("event_type") === tpe)
+          .select(col("user_id").as(userAs), col("event_id").as(idAs),
+            col("ts").as(tsAs))
+          .withWatermark(tsAs, "31 days")
+      val views = side("view", "view_id", "view_ts", "user_id")
+      val clicks = side("click", "click_id", "click_ts", "c_user_id")
+      (views.join(
+        clicks,
+        col("user_id") === col("c_user_id") &&
+          col("click_ts") >= col("view_ts") &&
+          col("click_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"))
+        .select(col("user_id"), col("view_id"), col("click_id")),
+        OutputMode.Append())
     }.orderBy("view_id", "click_id")
 
   /** Stream-stream LEFT OUTER interval join: views that saw NO click
@@ -798,28 +706,23 @@ object StreamingOps {
     */
   private[graft] def viewClickLeftOuterJoinRaw(
       spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_ljoin", { session =>
-        def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
-          session.readStream
-            .schema(eventsSchema)
-            .parquet(stageDir)
-            .withColumn("tts", timestamp_micros(expr("ts_ns div 1000")))
-            .withWatermark("tts", "0 seconds")
-            .filter(col("event_type") === tpe)
-            .select(col("user_id").as(userAs), col("event_id").as(idAs),
-              col("tts").as(tsAs))
-        val views = side("view", "view_id", "view_ts", "user_id")
-        val clicks = side("click", "click_id", "click_ts", "c_user_id")
-        val joined = views.join(
-          clicks,
-          col("user_id") === col("c_user_id") &&
-            col("click_ts") >= col("view_ts") &&
-            col("click_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"),
-          "leftOuter")
-          .select(col("user_id"), col("view_id"), col("view_ts"), col("click_id"))
-        (joined, org.apache.spark.sql.streaming.OutputMode.Append())
-      })
+    replayEvents(spark, sfDir, "stream_ljoin") { (_, events) =>
+      def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
+        events()
+          .withWatermark("ts", "0 seconds")
+          .filter(col("event_type") === tpe)
+          .select(col("user_id").as(userAs), col("event_id").as(idAs),
+            col("ts").as(tsAs))
+      val views = side("view", "view_id", "view_ts", "user_id")
+      val clicks = side("click", "click_id", "click_ts", "c_user_id")
+      (views.join(
+        clicks,
+        col("user_id") === col("c_user_id") &&
+          col("click_ts") >= col("view_ts") &&
+          col("click_ts") <= col("view_ts") + expr("INTERVAL 2 HOURS"),
+        "leftOuter")
+        .select(col("user_id"), col("view_id"), col("view_ts"), col("click_id")),
+        OutputMode.Append())
     }
 
   /** Streaming SESSION windows: the merging-window aggregation (gap-based
@@ -831,20 +734,15 @@ object StreamingOps {
     * final emission is the fully-merged session set).
     */
   def sessionWindowStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_session", { session =>
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .withWatermark("ts", "31 days")
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
-          .select(col("user_id"),
-            col("session_window.start").cast(TimestampNTZType).as("session_start"),
-            col("n_events"), col("sum_value"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-      })
+    replayEvents(spark, sfDir, "stream_session") { (_, events) =>
+      (events()
+        .withWatermark("ts", "31 days")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
+        .select(col("user_id"),
+          col("session_window.start").cast(TimestampNTZType).as("session_start"),
+          col("n_events"), col("sum_value")),
+        OutputMode.Complete())
     }.orderBy("user_id", "session_start")
 
   /** Stream-static join: enrich a live event stream with a batch dimension
@@ -855,19 +753,15 @@ object StreamingOps {
     * scale, complementing the stateful stream-stream interval join.
     */
   def enrichWithStatic(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_enrich", { session =>
-        val dim = graft.Tables.customer(session, sfDir)
-          .select(col("c_custkey"), col("c_mktsegment"))
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .filter(col("event_type") === "purchase")
-          .join(dim, col("user_id") === col("c_custkey"))
-          .select(col("event_id"), col("user_id"),
-            col("c_mktsegment").as("segment"), col("value"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Append())
-      })
+    replayEvents(spark, sfDir, "stream_enrich") { (session, events) =>
+      val dim = graft.Tables.customer(session, sfDir)
+        .select(col("c_custkey"), col("c_mktsegment"))
+      (events()
+        .filter(col("event_type") === "purchase")
+        .join(dim, col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"),
+          col("c_mktsegment").as("segment"), col("value")),
+        OutputMode.Append())
     }.orderBy("event_id")
 
   /** Streaming POINT-IN-TIME (SCD2) enrichment: each purchase event joins
@@ -881,29 +775,24 @@ object StreamingOps {
     * stream never shuffles on the dim key.
     */
   def enrichScd2Static(spark: SparkSession, sfDir: String): DataFrame =
-    withStagedEvents(spark, sfDir) { stageDir =>
-      runToFiles(spark, "stream_scd2", { session =>
-        val base = graft.Tables.customer(session, sfDir)
-          .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
-        val cut = to_timestamp(lit("2024-01-15 00:00:00"))
-        val lo = to_timestamp(lit("1970-01-01 00:00:00"))
-        val hi = to_timestamp(lit("2100-01-01 00:00:00"))
-        val dim = base.select(col("k"), col("seg"),
-            lo.as("valid_from"), cut.as("valid_to"))
-          .unionByName(base.select(col("k"),
-            concat(col("seg"), lit("#2")).as("seg"),
-            cut.as("valid_from"), hi.as("valid_to")))
-        val stream = session.readStream
-          .schema(eventsSchema)
-          .parquet(stageDir)
-          .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-          .filter(col("event_type") === "purchase")
-          .join(dim, col("user_id") === col("k") &&
-            col("ts") >= col("valid_from") && col("ts") < col("valid_to"))
-          .select(col("event_id"), col("user_id"),
-            col("seg").as("segment_pit"), col("value"))
-        (stream, org.apache.spark.sql.streaming.OutputMode.Append())
-      })
+    replayEvents(spark, sfDir, "stream_scd2") { (session, events) =>
+      val base = graft.Tables.customer(session, sfDir)
+        .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
+      val cut = to_timestamp(lit("2024-01-15 00:00:00"))
+      val lo = to_timestamp(lit("1970-01-01 00:00:00"))
+      val hi = to_timestamp(lit("2100-01-01 00:00:00"))
+      val dim = base.select(col("k"), col("seg"),
+          lo.as("valid_from"), cut.as("valid_to"))
+        .unionByName(base.select(col("k"),
+          concat(col("seg"), lit("#2")).as("seg"),
+          cut.as("valid_from"), hi.as("valid_to")))
+      (events()
+        .filter(col("event_type") === "purchase")
+        .join(dim, col("user_id") === col("k") &&
+          col("ts") >= col("valid_from") && col("ts") < col("valid_to"))
+        .select(col("event_id"), col("user_id"),
+          col("seg").as("segment_pit"), col("value")),
+        OutputMode.Append())
     }.orderBy("event_id")
 
   val queries: Seq[Q] = Seq(
@@ -1149,15 +1038,8 @@ object StreamingOps {
       "stream_distinct_users",
       "SELECT DISTINCT user_id FROM events ORDER BY user_id",
     ) { (spark, sfDir) =>
-      withStagedEvents(spark, sfDir) { stageDir =>
-        runToFiles(spark, "stream_distinct", { session =>
-          val stream = session.readStream
-            .schema(eventsSchema)
-            .parquet(stageDir)
-            .select("user_id")
-            .dropDuplicates("user_id")
-          (stream, org.apache.spark.sql.streaming.OutputMode.Append())
-        })
+      replayEvents(spark, sfDir, "stream_distinct") { (_, events) =>
+        (events().select("user_id").dropDuplicates("user_id"), OutputMode.Append())
       }.orderBy("user_id")
     },
 
@@ -1172,17 +1054,12 @@ object StreamingOps {
       "stream_distinct_users_wm",
       "SELECT DISTINCT user_id FROM events ORDER BY user_id",
     ) { (spark, sfDir) =>
-      withStagedEvents(spark, sfDir) { stageDir =>
-        runToFiles(spark, "stream_distinct_wm", { session =>
-          val stream = session.readStream
-            .schema(eventsSchema)
-            .parquet(stageDir)
-            .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-            .withWatermark("ts", "365 days")
-            .dropDuplicatesWithinWatermark("user_id")
-            .select("user_id")
-          (stream, org.apache.spark.sql.streaming.OutputMode.Append())
-        })
+      replayEvents(spark, sfDir, "stream_distinct_wm") { (_, events) =>
+        (events()
+          .withWatermark("ts", "365 days")
+          .dropDuplicatesWithinWatermark("user_id")
+          .select("user_id"),
+          OutputMode.Append())
       }.orderBy("user_id")
     },
 
@@ -1251,38 +1128,12 @@ object StreamingOps {
           .withColumn("doc_id", col("doc_id") + 10000000L))
         .withColumn("source", lit("b2"))
         .withColumn("n_chars", col("n_chars") + 3L)
-      val work = java.nio.file.Files.createTempDirectory("graft_cdc_")
-      try {
-        val feed = java.nio.file.Files.createDirectory(work.resolve("feed"))
-        // one parquet FILE per CDC batch; strictly increasing mtimes pin
-        // the file source's replay order to commit order
-        Seq(b0, b1, b2).zipWithIndex.foreach { case (b, k) =>
-          val tmp = work.resolve(s"w$k")
-          b.select(docs.columns.map(col).toSeq: _*)
-            .coalesce(1).write.parquet(tmp.toString)
-          val part = java.nio.file.Files.list(tmp).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).next()
-          val dst = feed.resolve(s"b$k.parquet")
-          java.nio.file.Files.move(part, dst)
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-          deleteRecursively(tmp)
-        }
-        val session = s.newSession()
-        session.conf.set("spark.sql.shuffle.partitions", "4")
-        val query = session.readStream
-          .schema(docs.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(feed.toString)
-          .writeStream
-          .option("checkpointLocation", work.resolve("ckpt").toString)
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], _: Long) =>
-            cat.merge("docs_cdc", df, "doc_id"); ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      } finally deleteRecursively(work)
+      // one parquet FILE per CDC batch, replayed in commit order
+      drive(s, "cdc") { (session, work) =>
+        Replay(orderedFeed(work, docs.schema, Seq(b0, b1, b2)).stream(session),
+          OutputMode.Append(), (df, _) => { cat.merge("docs_cdc", df, "doc_id"); () },
+          _ => ())
+      }
       cat.table("docs_cdc")
         .groupBy("lang", "source")
         .agg(
@@ -1323,16 +1174,12 @@ object StreamingOps {
         |ORDER BY n_exact DESC, token""".stripMargin,
     ) { (s, d) =>
       import graft.functions.CountMinSketch
-      val sketch = withStagedEvents(s, d) { stageDir =>
-        runToFiles(s, "stream_hh", { session =>
-          val stream = session.readStream
-            .schema(eventsSchema)
-            .parquet(stageDir)
-            .select(col("user_id").cast("string").as("token"))
-            .agg(CountMinSketch.sketchAgg(
-              CountMinSketch.buckets(col("token"))).as("cms"))
-          (stream, org.apache.spark.sql.streaming.OutputMode.Complete())
-        })
+      val sketch = replayEvents(s, d, "stream_hh") { (_, events) =>
+        (events()
+          .select(col("user_id").cast("string").as("token"))
+          .agg(CountMinSketch.sketchAgg(
+            CountMinSketch.buckets(col("token"))).as("cms")),
+          OutputMode.Complete())
       }
       val toks = graft.Tables.events(s, d)
         .select(col("user_id").cast("string").as("token"))
@@ -1400,60 +1247,37 @@ object StreamingOps {
       StructField("vec_a", LongType), StructField("vec_b", LongType),
       StructField("sim", DoubleType), StructField("batch_id", LongType))),
       partitionBy = Some("batch_id"))
-    val work = java.nio.file.Files.createTempDirectory("graft_semb_")
-    try {
-      val feed = java.nio.file.Files.createDirectory(work.resolve("feed"))
-      (0 until 4).foreach { k =>
-        val tmp = work.resolve(s"w$k")
-        emb.filter(col("vec_id") % 4 === k)
-          .coalesce(1).write.parquet(tmp.toString)
-        val part = java.nio.file.Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).next()
-        val dst = feed.resolve(s"b$k.parquet")
-        java.nio.file.Files.move(part, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + k * 60000L))
-        deleteRecursively(tmp)
+    drive(s, "semb") { (session, work) =>
+      val feed = orderedFeed(work, emb.schema,
+        (0 until 4).map(k => emb.filter(col("vec_id") % 4 === k)))
+      def sink(df: Dataset[Row], batchId: Long): Unit = {
+        // idempotent replay: drop any partial rows a failed earlier
+        // attempt of THIS batch left behind before re-inserting
+        cat.deletePartition("emb_pairs", String.valueOf(batchId))
+        cat.deletePartition("emb_idx", String.valueOf(batchId))
+        val blocks = Similarity
+          .srpBlockRows(df, "vec_id", "embedding", dim, 32)
+          .transform(graft.Tables.pin) // consumed by probe AND index insert
+        val probe = blocks.select(col("vec_id").as("__b_id"),
+          col("embedding").as("__b_vec"), col("blk"), col("key"))
+        val cross = cat.table("emb_idx")
+          .join(broadcast(probe), Seq("blk", "key"))
+          .select(col("vec_id").as("__i_id"), col("embedding").as("__i_vec"),
+            col("__b_id"), col("__b_vec"))
+          .distinct()
+          .withColumn("sim",
+            graft.functions.VectorFunctions.cosine(col("__i_vec"), col("__b_vec")))
+          .filter(col("sim") >= threshold)
+          .select(least(col("__i_id"), col("__b_id")).as("vec_a"),
+            greatest(col("__i_id"), col("__b_id")).as("vec_b"), col("sim"))
+        val within = Similarity
+          .srpNearDupPairs(df, "vec_id", "embedding", threshold, dim = dim)
+        cat.insert("emb_pairs",
+          cross.unionByName(within).withColumn("batch_id", lit(batchId)))
+        cat.insert("emb_idx", blocks.withColumn("batch_id", lit(batchId)))
       }
-      val session = s.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", "4")
-      val query = session.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-          // idempotent replay: drop any partial rows a failed earlier
-          // attempt of THIS batch left behind before re-inserting
-          cat.deletePartition("emb_pairs", String.valueOf(batchId))
-          cat.deletePartition("emb_idx", String.valueOf(batchId))
-          val blocks = Similarity
-            .srpBlockRows(df, "vec_id", "embedding", dim, 32)
-            .transform(graft.Tables.pin) // consumed by probe AND index insert
-          val probe = blocks.select(col("vec_id").as("__b_id"),
-            col("embedding").as("__b_vec"), col("blk"), col("key"))
-          val cross = cat.table("emb_idx")
-            .join(broadcast(probe), Seq("blk", "key"))
-            .select(col("vec_id").as("__i_id"), col("embedding").as("__i_vec"),
-              col("__b_id"), col("__b_vec"))
-            .distinct()
-            .withColumn("sim",
-              graft.functions.VectorFunctions.cosine(col("__i_vec"), col("__b_vec")))
-            .filter(col("sim") >= threshold)
-            .select(least(col("__i_id"), col("__b_id")).as("vec_a"),
-              greatest(col("__i_id"), col("__b_id")).as("vec_b"), col("sim"))
-          val within = Similarity
-            .srpNearDupPairs(df, "vec_id", "embedding", threshold, dim = dim)
-          cat.insert("emb_pairs",
-            cross.unionByName(within).withColumn("batch_id", lit(batchId)))
-          cat.insert("emb_idx", blocks.withColumn("batch_id", lit(batchId)))
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    } finally deleteRecursively(work)
+      Replay(feed.stream(session), OutputMode.Append(), sink, _ => ())
+    }
     cat.table("emb_pairs").drop("batch_id")
   }
 }

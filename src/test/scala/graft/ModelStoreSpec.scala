@@ -136,7 +136,7 @@ class ModelStoreSpec extends SparkSpec {
   test("staged index builds once per fixture identity and is reused") {
     var builds = 0
     def dir(): String =
-      Similarity.withStagedIndex(spark, sf0001, "spec:pq:reuse") { tmp =>
+      LocalFiles.stageFixture(sf0001, "embeddings.parquet", "spec:pq:reuse") { tmp =>
         builds += 1
         Similarity.buildPqIndex(emb, "vec_id", "embedding",
           m = 4, kc = 8, iters = 2, dir = tmp)

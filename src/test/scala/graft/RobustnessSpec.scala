@@ -38,7 +38,7 @@ class RobustnessSpec extends SparkSpec {
       .resolve("stage")
     var builds = 0
     def publish(ident: String, payload: String): String =
-      streaming.StreamingOps.stagePublish(stage, ident) { tmp =>
+      LocalFiles.stagePublish(stage, ident) { tmp =>
         builds += 1
         val d = java.nio.file.Paths.get(tmp)
         java.nio.file.Files.createDirectories(d)
@@ -51,9 +51,8 @@ class RobustnessSpec extends SparkSpec {
     publish("identA", "A2")
     assert(builds == 1)
     assert(java.nio.file.Files.readString(stage.resolve("data.txt")) == "A")
-    // DIFFERENT identity mapped to the same stage path (the hashCode-
-    // collision scenario): content identity is verified, so the stale
-    // stage is rebuilt instead of silently served
+    // DIFFERENT identity mapped to the same stage path: content identity
+    // is verified, so the stale stage is rebuilt instead of silently served
     publish("identB", "B")
     assert(builds == 2)
     assert(java.nio.file.Files.readString(stage.resolve("data.txt")) == "B")
@@ -68,7 +67,7 @@ class RobustnessSpec extends SparkSpec {
       val futs = (1 to 4).map { _ =>
         pool.submit(new java.util.concurrent.Callable[String] {
           override def call(): String =
-            streaming.StreamingOps.stagePublish(stage, "same-ident") { tmp =>
+            LocalFiles.stagePublish(stage, "same-ident") { tmp =>
               builds.incrementAndGet()
               Thread.sleep(50) // widen the race window
               val d = java.nio.file.Paths.get(tmp)
@@ -96,6 +95,21 @@ class RobustnessSpec extends SparkSpec {
     val got = spark.read.parquet(out).drop("batch")
     assert(got.count() == 150)
     assert(got.select(countDistinct(col("id"))).collect()(0).getLong(0) == 150)
+  }
+
+  test("streamSrpDedup leaves no open file descriptor under its work dir") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val emb = (1L to 8L).map { id =>
+      (id, Array.tabulate(64)(i => ((id * 31 + i * 7) % 13).toFloat))
+    }.toDF("vec_id", "embedding")
+    streaming.StreamingOps.streamSrpDedup(spark, emb, threshold = 0.9, dim = 64).collect()
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get("/proc/self/fd"))
+    val open = try ls.iterator().asScala.toList
+      .flatMap(fd => scala.util.Try(java.nio.file.Files.readSymbolicLink(fd).toString).toOption)
+      .filter(_.contains("graft_semb_"))
+    finally ls.close()
+    assert(open.isEmpty, s"fds still open under the work dir: $open")
   }
 
   test("curation operators degrade cleanly on empty inputs") {

@@ -141,7 +141,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expect) // integer-micros state ⇒ exact equality across the restart
     assert(expect.nonEmpty)
-    StreamingOps.deleteRecursively(work)
+    LocalFiles.deleteRecursively(work)
   }
 
   test("streaming session windows equal the batch session_window aggregation") {
@@ -387,5 +387,35 @@ class StreamingSpec extends SparkSpec {
       assert(df.filter(col("segment_pit").endsWith("#2")).count() > 0L)
       assert(df.filter(!col("segment_pit").endsWith("#2")).count() > 0L)
     } finally df.unpersist()
+  }
+
+  test("streaming rows run no more Spark jobs than their pinned counts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val rows = Seq("stream_user_totals", "stream_hourly_agg", "stream_session_timers",
+      "kafka_wire_parse")
+    def run(row: String): Unit = SparkEntry.queries(row)(spark, sf0001).collect()
+    // a first run stages each row's fixture; the counts cover the replay
+    // from a published stage, which is what every later run does
+    rows.foreach(run)
+    def jobsOf(row: String): Int = {
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.set(0)
+      run(row)
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    val counts = try rows.map(r => r -> jobsOf(r)) finally sc.removeSparkListener(listener)
+    info(counts.map { case (r, n) => s"$r=$n" }.mkString(" "))
+    val pinned = Map("stream_user_totals" -> 7, "stream_hourly_agg" -> 6,
+      "stream_session_timers" -> 8, "kafka_wire_parse" -> 6)
+    counts.foreach { case (r, n) =>
+      assert(n <= pinned(r), s"$r ran $n Spark jobs, pinned at most ${pinned(r)}")
+    }
   }
 }
