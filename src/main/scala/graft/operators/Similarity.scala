@@ -8,6 +8,13 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (SURVEY.md §2.9).
   *
+  * One skeleton serves every index: one Lloyd trainer (`lloyd`; k-means
+  * is PQ with one subspace) fed by one seed reader, one centroid probe
+  * (`probe`), one per-query top-k tail (`topPerQuery`) and one IVF-PQ
+  * ranking path (`ivfPqRank`); the DuckDB oracles are built from one
+  * Lloyd CTE-round generator, one SRP signature/block prefix and one
+  * probe CTE chain.
+  *
   * Two tiers:
   *  - [[bruteForceTopK]]: exact cosine top-k. The query set is broadcast
   *    against a single linear scan of the corpus (never a shuffled
@@ -29,14 +36,18 @@ object Similarity {
       k: Int): DataFrame = {
     val q = queries.select(col(id).as("query_id"), col(vec).as("qv"))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topPerQuery(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv"))), k, col("sim").desc)
       .select("query_id", "neighbor_id", "rank", "sim")
   }
+
+  /** The one per-query top-k tail: number each query's rows by `by`
+    * (ties → smaller neighbor_id) as `rank` and keep the first `k`.
+    */
+  private def topPerQuery(df: DataFrame, k: Int, by: Column): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(by, col("neighbor_id"))).cast("long"))
+      .filter(col("rank") <= k)
 
   /** Contrastive hard-negative mining: per query vector, the top-k most
     * similar corpus vectors whose LABEL DIFFERS from the query's — the
@@ -54,13 +65,9 @@ object Similarity {
       col(label).as("qlab"))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
       col(label).as("clab"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(broadcast(q),
+    topPerQuery(c.join(broadcast(q),
         col("query_id") =!= col("neighbor_id") && col("qlab") =!= col("clab"))
-      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv"))), k, col("sim").desc)
       .select(col("query_id"), col("neighbor_id"),
         col("clab").cast("long").as("neg_label"), col("rank"), col("sim"))
   }
@@ -102,27 +109,30 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, id: String, vec: String,
       bucket: String, k: Int, nprobe: Int,
       probeBatchRows: Option[Long] = None): DataFrame = {
-    val cents = centroids(corpus, bucket, vec)
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col(bucket))
-    val probed = q.join(broadcast(cents))
-      .withColumn("csim", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(probeW))
-      .filter(col("crank") <= nprobe)
+    val probed = probe(queries.select(col(id).as("query_id"), col(vec).as("qv")),
+        "query_id", "qv", centroids(corpus, bucket, vec), bucket, nprobe)
       .select(col("query_id"), col("qv"), col(bucket))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"), col(bucket))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
     val smallBatch = probeBatchRows.forall(_ * nprobe <= BroadcastProbeLimit)
     val probeSide = if (smallBatch) broadcast(probed) else probed
-    c.join(probeSide, Seq(bucket))
+    topPerQuery(c.join(probeSide, Seq(bucket))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .withColumn("sim", VectorFunctions.cosine(col("qv"), col("cv"))), k, col("sim").desc)
       .select("query_id", "neighbor_id", "rank", "sim")
   }
+
+  /** The one centroid probe: each query's `nprobe` nearest centroids by
+    * cosine (ties → smaller `bucket`), the queries (`qid`, vector `qv`)
+    * joined against the broadcast centroid table `(bucket, centroid)` —
+    * model-sized, so the query side is never shuffled for the join.
+    */
+  private def probe(queries: DataFrame, qid: String, qv: String,
+      cents: DataFrame, bucket: String, nprobe: Int): DataFrame =
+    queries.join(broadcast(cents))
+      .withColumn("csim", VectorFunctions.cosine(col(qv), col("centroid")))
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(qid).orderBy(col("csim").desc, col(bucket))))
+      .filter(col("crank") <= nprobe)
 
   /** Per-vector symmetric int8 scalar quantization: scale = max|x|/127
     * (floored to avoid zero-vectors dividing by zero), q_i = round(x_i /
@@ -228,21 +238,12 @@ object Similarity {
   def srpNearDupPairs(
       corpus: DataFrame, id: String, vec: String, threshold: Double,
       dim: Int, bits: Int = 32): DataFrame = {
-    val blockBits = bits / 4
-    val mask = (1L << blockBits) - 1
-    // eagerly checkpointed: BOTH sides of the block-bucket self-join read
-    // the signature table, and without the checkpoint each side recomputes
+    // signatures pinned: BOTH sides of the block-bucket self-join read the
+    // signature table, and without the checkpoint each side recomputes
     // every signature (the same multi-consumer discipline as the dedup
     // pipelines' hashedShingleArr)
-    val sig = Tables.fanOut(corpus).select(col(id), col(vec),
-      srpSignature(col(vec), dim, bits).as("__sig"))
-      .transform(graft.Tables.pin)
-    val blocks = (0 until 4).map { j =>
-      struct(lit(j).as("blk"),
-        shiftrightunsigned(col("__sig"), j * blockBits).bitwiseAND(lit(mask)).as("key"))
-    }
-    val exploded = sig.select(col(id), col(vec), explode(array(blocks: _*)).as("bk"))
-      .select(col(id), col(vec), col("bk.blk"), col("bk.key"))
+    val exploded = srpBlocks(
+      srpSigs(corpus, id, vec, dim, bits).transform(Tables.pin), id, vec, bits)
     val cand = exploded.as("x").join(exploded.as("y"), Seq("blk", "key"))
       .filter(col(s"x.$id") < col(s"y.$id"))
       .select(col(s"x.$id").as("vec_a"), col(s"x.$vec").as("va"),
@@ -254,25 +255,22 @@ object Similarity {
       .select("vec_a", "vec_b", "sim")
   }
 
-  /** Cross-corpus SRP-LSH near matches, exact-verified: (train_id,
-    * bench_id, sim) for every training vector whose cosine against some
-    * benchmark vector reaches `threshold`; candidates are pairs agreeing
-    * on at least one signature block. The benchmark block table is
-    * BROADCAST (eval suites are tiny next to a training corpus), so the
-    * training side is scanned once and never shuffled or self-joined —
-    * the embedding-space analog of [[Dedup.minHashCrossPairs]].
-    */
   /** Exploded SRP block-key rows (id, vec, blk, key) — the 4-block
     * bucketing shared by the self-join, cross-corpus, and streaming
     * near-dup tiers (pair recall: near-identical vectors agree on at
     * least one signature quarter with high probability).
     */
   private[graft] def srpBlockRows(df: DataFrame, id: String, vec: String,
-      dim: Int, bits: Int): DataFrame = {
+      dim: Int, bits: Int): DataFrame =
+    srpBlocks(srpSigs(df, id, vec, dim, bits), id, vec, bits)
+
+  private def srpSigs(df: DataFrame, id: String, vec: String, dim: Int, bits: Int): DataFrame =
+    Tables.fanOut(df).select(col(id), col(vec), srpSignature(col(vec), dim, bits).as("__sig"))
+
+  /** The one SRP block-key builder: each `__sig` split into 4 blocks. */
+  private def srpBlocks(sig: DataFrame, id: String, vec: String, bits: Int): DataFrame = {
     val blockBits = bits / 4
     val mask = (1L << blockBits) - 1
-    val sig = Tables.fanOut(df).select(col(id), col(vec),
-      srpSignature(col(vec), dim, bits).as("__sig"))
     val bs = (0 until 4).map { j =>
       struct(lit(j).as("blk"),
         shiftrightunsigned(col("__sig"), j * blockBits).bitwiseAND(lit(mask)).as("key"))
@@ -281,6 +279,14 @@ object Similarity {
       .select(col(id), col(vec), col("bk.blk"), col("bk.key"))
   }
 
+  /** Cross-corpus SRP-LSH near matches, exact-verified: (train_id,
+    * bench_id, sim) for every training vector whose cosine against some
+    * benchmark vector reaches `threshold`; candidates are pairs agreeing
+    * on at least one signature block. The benchmark block table is
+    * BROADCAST (eval suites are tiny next to a training corpus), so the
+    * training side is scanned once and never shuffled or self-joined —
+    * the embedding-space analog of [[Dedup.minHashCrossPairs]].
+    */
   def srpCrossPairs(
       train: DataFrame, trainId: String, bench: DataFrame, benchId: String,
       vec: String, threshold: Double, dim: Int, bits: Int = 32): DataFrame = {
@@ -301,7 +307,9 @@ object Similarity {
     * [[ivfTopK]]'s fixture queries).
     *
     * Determinism contract (what makes it oracle-replayable):
-    *  - seeds = the `k` smallest-id vectors, cluster label = seed id;
+    *  - seeds = the vectors whose id is below `k` (at most k of them),
+    *    cluster label = seed id — the oracle's `WHERE vec_id < k`; a
+    *    non-empty corpus with no id below k is rejected;
     *  - FIXED `iters` Lloyd rounds, no convergence test;
     *  - assignment = argmin of the squared-L2 distance ROUNDED to 6dp,
     *    ties to the smallest cluster label (sub-ulp cross-engine
@@ -323,47 +331,84 @@ object Similarity {
   /** The trained Lloyd centroids behind [[kMeansAssign]] (same seeds,
     * same rounds — the model state a frozen quantizer persists), without
     * the final assignment pass. [[assignToCentroids]] over these yields
-    * exactly [[kMeansAssign]]'s output.
+    * exactly [[kMeansAssign]]'s output. An empty corpus trains none.
     */
   def kMeansCentroids(
       corpus: DataFrame, id: String, vec: String, k: Int,
-      iters: Int): Seq[(Long, Seq[Double])] = {
-    val vd = VectorFunctions.asDouble(col(vec))
-    val init: Seq[(Long, Seq[Double])] = corpus.filter(col(id) < k)
-      .select(col(id).cast("long"), vd.as("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toVector).sortBy(_._1).toSeq
-    lloydRounds(corpus, vec, init, iters)
+      iters: Int): Seq[(Long, Seq[Double])] =
+    lloyd(corpus, vec, idSeeds(corpus, id, vec, k), m = 1, iters).head
+
+  /** The one seed reader: `rows`' (id, vector) pairs sorted by id —
+    * model-sized state, the sanctioned driver round-trip.
+    */
+  private def readSeeds(rows: DataFrame, id: String, vec: String): Seq[(Long, Seq[Double])] =
+    rows.select(col(id).cast("long"), VectorFunctions.asDouble(col(vec))).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Double](1).toVector: Seq[Double]))
+      .sortBy(_._1).toSeq
+
+  /** The seed contract of [[kMeansCentroids]] and [[pqTrain]]: the
+    * vectors whose id is below `k`. An empty corpus has none; a non-empty
+    * one without any is rejected rather than trained on nothing.
+    */
+  private def idSeeds(corpus: DataFrame, id: String, vec: String,
+      k: Int): Seq[(Long, Seq[Double])] = {
+    val seeds = readSeeds(corpus.filter(col(id) < k), id, vec)
+    require(seeds.nonEmpty || corpus.isEmpty,
+      s"k-means seeds are the vectors whose $id is below k = $k (the seed " +
+        "contract), and this corpus has none: number the ids from 0")
+    seeds
   }
 
-  /** The Lloyd update loop shared by [[kMeansCentroids]] (full-corpus
-    * training) and [[sampledKMeansCentroids]] (sample training): per
-    * round, one codegen'd argmin pass over `train` against the current
-    * centroid literals — see plans.L2ArgMin for why this beats the
-    * least(round(aggregate(zip_with(...)))) functional form it replaced
-    * (k interpreted lambda chains per row, outside whole-stage codegen)
-    * — then the micros-exact per-dimension mean (Det contract). Cluster
-    * label stays the SEED id throughout; a cluster that loses all its
-    * members simply drops out of the next round (same on the oracle
-    * side, whose c_i CTE only has clusters present in a_i).
+  /** The one Lloyd trainer, over `m` equal subspaces of `vec`: m = 1 is
+    * plain k-means, m > 1 trains [[pqTrain]]'s m codebooks at once. Per
+    * round, one linear pass of the codegen'd argmin kernel per subspace
+    * against the current centroid literals — see plans.L2ArgMin for why
+    * this beats the least(round(aggregate(zip_with(...)))) functional
+    * form (k interpreted lambda chains per row, outside whole-stage
+    * codegen) — then one micros-exact mean per (subspace, label,
+    * position) (Det contract), collected as model state. Labels stay the
+    * SEED ids throughout; a label that loses all its members simply drops
+    * out of the next round (same on the oracle side, whose c_i CTE only
+    * has clusters present in a_i). No seeds train no centroids.
     */
-  private def lloydRounds(train: DataFrame, vec: String,
-      init: Seq[(Long, Seq[Double])], iters: Int): Seq[(Long, Seq[Double])] = {
-    val vd = VectorFunctions.asDouble(col(vec))
-    var cents = init
-    for (_ <- 1 to iters) {
-      val assigned = train.select(vd.as("v"),
-        graft.plans.VectorKernels.l2ArgMin(col(vec), cents).as("cl"))
-      cents = assigned
-        .select(col("cl"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cl", "pos").agg(graft.Det.davg(col("x")).as("m"))
-        .groupBy("cl")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cl"), transform(col("pm"), s => s.getField("m")).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toVector)
-        .sortBy(_._1).toSeq
+  private def lloyd(train: DataFrame, vec: String, seeds: Seq[(Long, Seq[Double])],
+      m: Int, iters: Int): IndexedSeq[Seq[(Long, Seq[Double])]] = {
+    val subLen = seeds.headOption.fold(1)(_._2.length / m)
+    val subIdx = (col("pos") / lit(subLen)).cast("int")
+    var cents = (0 until m).map(j =>
+      seeds.map { case (cl, v) => cl -> v.slice(j * subLen, (j + 1) * subLen) })
+    for (_ <- 1 to iters if seeds.nonEmpty) {
+      val updated = train
+        .select(subCodes(vec, subLen, cents).as("codes"),
+          posexplode(VectorFunctions.asDouble(col(vec))).as(Seq("pos", "x")))
+        .select(subIdx.as("sub"), element_at(col("codes"), subIdx + 1).as("cl"),
+          (col("pos") % subLen).as("spos"), col("x"))
+        .groupBy("sub", "cl", "spos").agg(graft.Det.davg(col("x")).as("m"))
+        .collect()
+      cents = (0 until m).map { j =>
+        updated.filter(_.getInt(0) == j)
+          .groupBy(_.getLong(1)).map { case (cl, rows) =>
+            cl -> (rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toVector: Seq[Double])
+          }.toSeq.sortBy(_._1)
+      }
     }
     cents
   }
+
+  /** Per-subspace nearest-centroid codes of `vec`: the argmin kernel on
+    * each `subLen`-wide slice against that subspace's centroids.
+    */
+  private def subCodes(vec: String, subLen: Int,
+      cents: IndexedSeq[Seq[(Long, Seq[Double])]]): Column =
+    array(cents.indices.map(j =>
+      nearest(slice(col(vec), j * subLen + 1, subLen), cents(j))): _*)
+
+  /** The argmin kernel over `cents`; a model trained on an empty corpus
+    * has no centroid, and its label is null.
+    */
+  private def nearest(v: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    if (cents.isEmpty) lit(null).cast("long")
+    else graft.plans.VectorKernels.l2ArgMin(v, cents)
 
   /** Sampled-centroid Lloyd training (the FAISS / k-means‖ practice —
     * codebooks are trained on a sample, never on the corpus): train the
@@ -394,17 +439,13 @@ object Similarity {
     val h = graft.functions.TextFunctions.tokenHash60(
       concat(lit("ksamp:"), col(id).cast("string")))
     val samp = corpus.filter(pmod(h, lit(1000000L)) < lit(ppm))
-    val vd = VectorFunctions.asDouble(col(vec))
     // seeds: first k sample rows by id — a top-k (TakeOrdered), not a
-    // global sort; k×dim doubles of model state, the sanctioned driver
-    // round-trip
-    val init: Seq[(Long, Seq[Double])] = samp.orderBy(col(id)).limit(k)
-      .select(col(id).cast("long"), vd.as("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toVector).sortBy(_._1).toSeq
-    require(init.nonEmpty,
-      s"deterministic hash sample selected 0 of $n rows (ppm=$ppm) — " +
-        "corpus too small for sampled training; use kMeansCentroids")
-    lloydRounds(samp, vec, init, iters)
+    // global sort
+    val seeds = readSeeds(samp.orderBy(col(id)).limit(k), id, vec)
+    require(seeds.nonEmpty || n == 0,
+      s"deterministic hash sample selected 0 of $n rows (ppm=$ppm): raise " +
+        f"sampleC to at least √(n/k) = ${math.sqrt(n.toDouble / k)}%.3f to sample every row")
+    lloyd(samp, vec, seeds, m = 1, iters).head
   }
 
   /** One linear argmin pass: assign every vector to its nearest (squared
@@ -412,8 +453,7 @@ object Similarity {
     */
   def assignToCentroids(corpus: DataFrame, id: String, vec: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame =
-    corpus.select(col(id),
-      graft.plans.VectorKernels.l2ArgMin(col(vec), cents).as("cluster"))
+    corpus.select(col(id), nearest(col(vec), cents).as("cluster"))
 
   /** Greedy k-center coreset (farthest-point traversal, the 2-approx
     * k-center heuristic; the diverse-subset-selection stage of
@@ -444,21 +484,18 @@ object Similarity {
       round(aggregate(
         zip_with(vd, array(center.map(lit): _*), (x, m) => (x - m) * (x - m)),
         lit(0.0), (acc, x) => acc + x), 6)
-    val seed = corpus.orderBy(col(id)).limit(1)
-      .select(col(id).cast("long"), vd).collect()(0)
-    var centers = Vector(seed.getLong(0) -> seed.getSeq[Double](1).toVector)
-    for (_ <- 2 to k) {
+    // an empty corpus reads no seed, and then no round adds a center
+    var centers = readSeeds(corpus.orderBy(col(id)).limit(1), id, vec)
+    for (_ <- 2 to k if centers.nonEmpty) {
       val mind = centers.map(c => distTo(c._2)).reduce(least(_, _))
-      val next = corpus
-        .select(col(id).cast("long").as("__i"), vd.as("__v"), mind.as("__mind"))
-        .orderBy(col("__mind").desc, col("__i")).limit(1).collect()(0)
-      centers = centers :+ (next.getLong(0) -> next.getSeq[Double](1).toVector)
+      centers ++= readSeeds(corpus.orderBy(mind.desc, col(id)).limit(1), id, vec)
     }
-    val byCenter = centers.map { case (cid, cv) =>
-      struct(distTo(cv).as("d"), lit(cid).as("c"))
-    }
+    val best =
+      if (centers.isEmpty) lit(null).cast("struct<d:double,c:bigint>")
+      else element_at(array_sort(array(centers.map { case (cid, cv) =>
+        struct(distTo(cv).as("d"), lit(cid).as("c")) }: _*)), 1)
     corpus
-      .select(col(id), element_at(array_sort(array(byCenter: _*)), 1).as("__best"))
+      .select(col(id), best.as("__best"))
       .select(col(id),
         col("__best.c").as("nearest_center"), col("__best.d").as("dist_r"),
         col(id).isin(centers.map(_._1): _*).as("is_center"))
@@ -470,29 +507,10 @@ object Similarity {
     * for the scale-parameterized row — the Lloyd unrolling is per
     * ITERATION, so the chain itself is k-independent).
     */
-  private def kMeansCtes(k: String, iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""d$i AS (SELECT ev.vec_id, c.cl, ROUND(SUM((ev.x - c.m)*(ev.x - c.m)), 6) AS dist
-         |        FROM ev JOIN c${i - 1} c ON c.pos = ev.pos GROUP BY 1, 2),
-         |a$i AS (SELECT vec_id, cl FROM (
-         |    SELECT vec_id, cl,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
-         |    FROM d$i) WHERE rn = 1),
-         |c$i AS (SELECT a.cl, ev.pos,
-         |          CAST(SUM(CAST(ROUND((ev.x)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0/COUNT(*) AS m
-         |        FROM a$i a JOIN ev ON ev.vec_id = a.vec_id GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-       |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
+  private def kMeansCtes(k: String, iters: Int): String =
+    s"""$EvCte,
        |c0 AS (SELECT vec_id AS cl, pos, x AS m FROM ev WHERE vec_id < $k),
-       |$rounds,
-       |final_d AS (SELECT ev.vec_id, c.cl, ROUND(SUM((ev.x - c.m)*(ev.x - c.m)), 6) AS dist
-       |            FROM ev JOIN c$iters c ON c.pos = ev.pos GROUP BY 1, 2),
-       |kassign AS (SELECT vec_id, cl AS cluster FROM (
-       |  SELECT vec_id, cl,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
-       |  FROM final_d) WHERE rn = 1)""".stripMargin
-  }
+       |${kMeansRoundCtes("ev", iters)}""".stripMargin
 
   /** The sampled-training twin of [[kMeansCtes]] — DuckDB replay of
     * [[sampledKMeansCentroids]] + one full-corpus assignment: the sample
@@ -506,20 +524,8 @@ object Similarity {
     * `CEIL(SQRT(COUNT(*)))` or `CEIL(COUNT(*) / 64.0)`.
     */
   private def kMeansSampledCtes(
-      kAgg: String, iters: Int, sampleC: Double): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""d$i AS (SELECT ev.vec_id, c.cl, ROUND(SUM((ev.x - c.m)*(ev.x - c.m)), 6) AS dist
-         |        FROM evs ev JOIN c${i - 1} c ON c.pos = ev.pos GROUP BY 1, 2),
-         |a$i AS (SELECT vec_id, cl FROM (
-         |    SELECT vec_id, cl,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
-         |    FROM d$i) WHERE rn = 1),
-         |c$i AS (SELECT a.cl, ev.pos,
-         |          CAST(SUM(CAST(ROUND((ev.x)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0/COUNT(*) AS m
-         |        FROM a$i a JOIN evs ev ON ev.vec_id = a.vec_id GROUP BY 1, 2)""".stripMargin
-    }.mkString(",\n")
-    s"""ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-       |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
+      kAgg: String, iters: Int, sampleC: Double): String =
+    s"""$EvCte,
        |prm AS (SELECT COUNT(*) AS n, CAST($kAgg AS BIGINT) AS k FROM embeddings),
        |prm2 AS (SELECT n, k,
        |           CAST(CEIL(1000000.0 * CEIL($sampleC * SQRT(CAST(n AS DOUBLE) * k)) / n) AS BIGINT) AS ppm
@@ -532,14 +538,52 @@ object Similarity {
        |  WHERE rn <= (SELECT k FROM prm2)),
        |c0 AS (SELECT e.vec_id AS cl, e.pos, e.x AS m FROM evs e
        |       JOIN seeds s ON s.vec_id = e.vec_id),
-       |$rounds,
-       |final_d AS (SELECT ev.vec_id, c.cl, ROUND(SUM((ev.x - c.m)*(ev.x - c.m)), 6) AS dist
-       |            FROM ev JOIN c$iters c ON c.pos = ev.pos GROUP BY 1, 2),
-       |kassign AS (SELECT vec_id, cl AS cluster FROM (
-       |  SELECT vec_id, cl,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cl) AS rn
-       |  FROM final_d) WHERE rn = 1)""".stripMargin
+       |${kMeansRoundCtes("evs ev", iters)}""".stripMargin
+
+  /** The k-means rounds over `train` (all of `ev`, or the sample `evs`)
+    * from `c0`, then the full-corpus assignment `kassign(vec_id, cluster)`.
+    */
+  private def kMeansRoundCtes(train: String, iters: Int): String =
+    s"""${lloydCtes("", train, Nil, iters)},
+       |${argMinCtes("final_d", 12, "kassign", 2, "ev", Nil, s"c$iters", " AS cluster")}""".stripMargin
+
+  /** The one Lloyd CTE-round generator: `iters` unrolled rounds over the
+    * exploded vectors `train` (`relation [alias]`) from `${p}c0`, each a
+    * distance table `${p}d_i`, an argmin `${p}a_i` and the micros-exact
+    * mean `${p}c_i` (Det contract). `keys` are extra grouping keys (PQ's
+    * `sub`); `p` prefixes the CTE names.
+    */
+  private def lloydCtes(p: String, train: String, keys: Seq[String], iters: Int): String = {
+    val al = train.split(' ').last
+    val pad = " " * (p.length + 8)
+    val groupSep = if (keys.isEmpty) " " else "\n" + pad
+    (1 to iters).map { i =>
+      s"""${argMinCtes(s"${p}d$i", pad.length, s"${p}a$i", 4, train, keys, s"${p}c${i - 1}", "")},
+         |${p}c$i AS (SELECT a.cl, ${keys.map(k => s"$al.$k, ").mkString}$al.pos,
+         |$pad  CAST(SUM(CAST(ROUND(($al.x)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0/COUNT(*) AS m
+         |${pad}FROM ${p}a$i a JOIN $train ON $al.vec_id = a.vec_id${keys.map(k => s" AND $al.$k = a.$k").mkString}${groupSep}GROUP BY ${groupByOrdinals(keys)})""".stripMargin
+    }.mkString(",\n")
   }
+
+  /** One Lloyd assignment step in SQL: the rounded squared-L2 distance
+    * table `d` of `src` against the centroids `cents`, then its argmin `a`
+    * (ties → smaller label) per vector and `keys`. The pads are the
+    * generated text's indentation.
+    */
+  private def argMinCtes(d: String, dPad: Int, a: String, aPad: Int, src: String,
+      keys: Seq[String], cents: String, clAs: String): String = {
+    val al = src.split(' ').last
+    val ks = keys.map(_ + ", ").mkString
+    val sp = " " * aPad
+    s"""$d AS (SELECT $al.vec_id, ${keys.map(k => s"$al.$k, ").mkString}c.cl, ROUND(SUM(($al.x - c.m)*($al.x - c.m)), 6) AS dist
+       |${" " * dPad}FROM $src JOIN $cents c ON c.pos = $al.pos GROUP BY ${groupByOrdinals(keys)}),
+       |$a AS (SELECT vec_id, ${ks}cl$clAs FROM (
+       |${sp}SELECT vec_id, ${ks}cl,
+       |$sp  ROW_NUMBER() OVER (PARTITION BY vec_id${keys.map(", " + _).mkString} ORDER BY dist, cl) AS rn
+       |${sp}FROM $d) WHERE rn = 1)""".stripMargin
+  }
+
+  private def groupByOrdinals(keys: Seq[String]): String = (1 to keys.size + 2).mkString(", ")
 
   /** Oracle for [[semanticNearDupPairsSampled]]: the sampled Lloyd chain
     * ([[kMeansSampledCtes]]), then the same exact intra-cluster pairwise
@@ -570,8 +614,7 @@ object Similarity {
       s"SELECT vec_id, (SELECT cid FROM s$i) AS cid, dist FROM d$i")
       .mkString("\n  UNION ALL ")
     val centIds = (0 until k).map(i => s"SELECT cid FROM s$i").mkString(" UNION ALL ")
-    s"""WITH ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-       |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
+    s"""WITH $EvCte,
        |s0 AS (SELECT MIN(vec_id) AS cid FROM embeddings),
        |c0 AS (SELECT pos, x FROM ev WHERE vec_id = (SELECT cid FROM s0)),
        |d0 AS (SELECT ev.vec_id, ROUND(SUM((ev.x - c.x)*(ev.x - c.x)), 6) AS dist
@@ -623,9 +666,8 @@ object Similarity {
         "(clusters grow with the corpus; intra-cluster pairs with its " +
         "square). Use semanticNearDupPairsScaled(targetClusterSize) — " +
         "k ∝ n — or opt in explicitly with fixedK = true.")
-    val assign = kMeansAssign(corpus, id, vec, k, iters)
-      .select(col(id), col("cluster"))
-    sameClusterPairs(corpus, id, vec, assign, threshold)
+    sameClusterPairs(corpus, id, vec,
+      assignToCentroids(corpus, id, vec, kMeansCentroids(corpus, id, vec, k, iters)), threshold)
   }
 
   /** The SemDeDup candidate stage shared by every clustering regime: a
@@ -668,9 +710,8 @@ object Similarity {
       s"negMargin ($negMargin) must sit below posThreshold ($posThreshold)")
     val k = math.max(
       math.ceil(corpus.count() / targetClusterSize.toDouble).toInt, 1)
-    val assign = kMeansAssign(corpus, id, vec, k, iters)
-      .select(col(id), col("cluster"))
-    val v = corpus.join(assign, id)
+    val v = corpus.join(
+      assignToCentroids(corpus, id, vec, kMeansCentroids(corpus, id, vec, k, iters)), id)
     val sims = v.as("a").join(v.as("b"),
         col("a.cluster") === col("b.cluster") && col(s"a.$id") =!= col(s"b.$id"))
       .select(col(s"a.$id").as("anchor"), col(s"b.$id").as("other"),
@@ -696,9 +737,7 @@ object Similarity {
     */
   private[graft] def contrastiveOracleSql(
       targetClusterSize: Int, iters: Int, pos: Double, neg: Double): String =
-    s"""WITH ${kMeansCtes(
-         s"(SELECT CAST(CEIL(COUNT(*) / $targetClusterSize.0) AS BIGINT) FROM embeddings)",
-         iters)},
+    s"""WITH ${kMeansCtes(kPerCluster(targetClusterSize), iters)},
        |vn AS (SELECT vec_id, SUM(x*x) AS n2 FROM ev GROUP BY 1),
        |cp AS (SELECT a.vec_id AS anchor, b.vec_id AS other, a.cluster AS cl
        |       FROM kassign a JOIN kassign b
@@ -794,31 +833,23 @@ object Similarity {
       corpus: DataFrame, id: String, vec: String, k: Int, iters: Int,
       threshold: Double, sampleC: Double = 2.0): DataFrame = {
     val cents = sampledKMeansCentroids(corpus, id, vec, k, iters, sampleC)
-    val assign = assignToCentroids(corpus, id, vec, cents)
-      .select(col(id), col("cluster"))
-    sameClusterPairs(corpus, id, vec, assign, threshold)
+    sameClusterPairs(corpus, id, vec, assignToCentroids(corpus, id, vec, cents), threshold)
   }
 
-  /** DuckDB replay of [[semanticNearDupPairs]]: the Lloyd CTE chain, then
-    * exact intra-cluster pairwise cosine.
+  /** DuckDB replay of [[semanticNearDupPairs]]: the Lloyd CTE chain with
+    * seed cutoff `k` (a SQL expression), then exact intra-cluster pairwise
+    * cosine. With [[kPerCluster]] the cutoff is computed from COUNT(*)
+    * INSIDE the SQL — one static string that tracks the corpus size at
+    * whatever scale it runs, proving the k ∝ n contract of
+    * [[semanticNearDupPairsScaled]] end-to-end at every scale tier.
     */
-  private[graft] def semanticOracleSql(k: Int, iters: Int, threshold: Double): String =
-    semanticOracleSqlFor(k.toString, iters, threshold)
-
-  /** Oracle for [[semanticNearDupPairsScaled]]: the SAME chain with the
-    * seed cutoff k computed from COUNT(*) INSIDE the SQL — one static
-    * string that tracks the corpus size at whatever scale the driver runs
-    * it, proving the k ∝ n contract end-to-end at every scale tier.
-    */
-  private[graft] def semanticOracleSqlScaled(
-      targetClusterSize: Int, iters: Int, threshold: Double): String =
-    semanticOracleSqlFor(
-      s"(SELECT CAST(CEIL(COUNT(*) / $targetClusterSize.0) AS BIGINT) FROM embeddings)",
-      iters, threshold)
-
   private[graft] def semanticOracleSqlFor(k: String, iters: Int, threshold: Double): String =
     s"""WITH ${kMeansCtes(k, iters)},
        |${semanticPairsSqlTail(threshold)}""".stripMargin
+
+  /** The k ∝ n seed cutoff k = ⌈n / targetClusterSize⌉ as SQL. */
+  private def kPerCluster(targetClusterSize: Int): String =
+    s"(SELECT CAST(CEIL(COUNT(*) / $targetClusterSize.0) AS BIGINT) FROM embeddings)"
 
   /** The intra-cluster pairwise-cosine tail shared by every SemDeDup
     * oracle: expects `ev` (exploded vectors) and `kassign`
@@ -850,25 +881,20 @@ object Similarity {
     * with k-means clusters instead of fixture labels).
     */
   private[graft] def ivfKMeansOracleSql(k: Int, iters: Int, nprobe: Int, topK: Int): String =
-    s"""WITH ${kMeansCtes(k.toString, iters)},
-       |cent AS (SELECT ka.cluster AS bucket, ev.pos, AVG(ev.x) AS m
-       |         FROM ev JOIN kassign ka ON ka.vec_id = ev.vec_id GROUP BY 1, 2),
-       |cnorm AS (SELECT bucket, SUM(m*m) AS n2 FROM cent GROUP BY 1),
-       |vnorm AS (SELECT vec_id, SUM(x*x) AS n2 FROM ev GROUP BY 1),
-       |qdots AS (SELECT ev.vec_id AS query_id, c.bucket, SUM(ev.x * c.m) AS dot
-       |          FROM ev JOIN cent c ON c.pos = ev.pos
-       |          WHERE ev.vec_id < 20 GROUP BY 1, 2),
-       |csims AS (SELECT q.query_id, q.bucket,
-       |            q.dot / (sqrt(vn.n2) * sqrt(cn.n2)) AS csim
-       |          FROM qdots q JOIN vnorm vn ON vn.vec_id = q.query_id
-       |                       JOIN cnorm cn ON cn.bucket = q.bucket),
-       |probed AS (SELECT query_id, bucket FROM (
-       |    SELECT query_id, bucket,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY csim DESC, bucket) AS crank
-       |    FROM csims) WHERE crank <= $nprobe),
-       |pairs AS (SELECT p.query_id, ka.vec_id AS neighbor_id
-       |          FROM probed p JOIN kassign ka ON ka.cluster = p.bucket
-       |          WHERE ka.vec_id <> p.query_id),
+    ivfOracleSql(kMeansCtes(k.toString, iters), KMeansCent,
+      """pairs AS (SELECT p.query_id, ka.vec_id AS neighbor_id
+        |          FROM probed p JOIN kassign ka ON ka.cluster = p.bucket
+        |          WHERE ka.vec_id <> p.query_id)""".stripMargin, nprobe, topK)
+
+  /** DuckDB replay of [[ivfTopK]]: `prefix` defines `ev` and the buckets,
+    * `cent` their mean centroids; after the probe chain, `pairs(query_id,
+    * neighbor_id)` holds the probed buckets' members, ranked exactly.
+    */
+  private def ivfOracleSql(prefix: String, cent: String, pairs: String,
+      nprobe: Int, topK: Int): String =
+    s"""WITH $prefix,
+       |${probeCtes(cent, nprobe, 20)},
+       |$pairs,
        |pdots AS (SELECT pr.query_id, pr.neighbor_id, SUM(eq.x * en.x) AS dot
        |          FROM pairs pr
        |          JOIN ev eq ON eq.vec_id = pr.query_id
@@ -878,7 +904,39 @@ object Similarity {
        |           pd.dot / (sqrt(nq.n2) * sqrt(nn.n2)) AS sim
        |         FROM pdots pd JOIN vnorm nq ON nq.vec_id = pd.query_id
        |                       JOIN vnorm nn ON nn.vec_id = pd.neighbor_id),
-       |ranked AS (SELECT query_id, neighbor_id,
+       |${simTopKSql(topK)}""".stripMargin
+
+  /** Mean centroids of the k-means clusters in `kassign`. */
+  private val KMeansCent: String =
+    """cent AS (SELECT ka.cluster AS bucket, ev.pos, AVG(ev.x) AS m
+      |         FROM ev JOIN kassign ka ON ka.vec_id = ev.vec_id GROUP BY 1, 2)""".stripMargin
+
+  /** The one probe CTE chain: the bucket centroids `cent(bucket, pos, m)`,
+    * then each query's (vec_id < `queryCut`) `nprobe` nearest buckets by
+    * cosine, ties → smaller bucket: `probed(query_id, bucket)`. Also
+    * defines `vnorm(vec_id, n2)`.
+    */
+  private def probeCtes(cent: String, nprobe: Int, queryCut: Int): String =
+    s"""$cent,
+       |cnorm AS (SELECT bucket, SUM(m*m) AS n2 FROM cent GROUP BY 1),
+       |vnorm AS (SELECT vec_id, SUM(x*x) AS n2 FROM ev GROUP BY 1),
+       |qdots AS (SELECT ev.vec_id AS query_id, c.bucket, SUM(ev.x * c.m) AS dot
+       |          FROM ev JOIN cent c ON c.pos = ev.pos
+       |          WHERE ev.vec_id < $queryCut GROUP BY 1, 2),
+       |csims AS (SELECT q.query_id, q.bucket,
+       |            q.dot / (sqrt(vn.n2) * sqrt(cn.n2)) AS csim
+       |          FROM qdots q JOIN vnorm vn ON vn.vec_id = q.query_id
+       |                       JOIN cnorm cn ON cn.bucket = q.bucket),
+       |probed AS (SELECT query_id, bucket FROM (
+       |    SELECT query_id, bucket,
+       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY csim DESC, bucket) AS crank
+       |    FROM csims) WHERE crank <= $nprobe)""".stripMargin
+
+  /** The cosine top-k tail of the exact-ranking oracles: each query's
+    * `topK` most similar rows of `sims(query_id, neighbor_id, sim)`.
+    */
+  private def simTopKSql(topK: Int): String =
+    s"""ranked AS (SELECT query_id, neighbor_id,
        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank,
        |             ROUND(sim, 6) AS sim_r
        |           FROM sims)
@@ -896,7 +954,7 @@ object Similarity {
     * candidate's approximate distance is the sum of its m table entries.
     *
     * Determinism contract (the [[kMeansAssign]] discipline, per
-    * subspace): shared seeds = the `kc` smallest-id vectors, fixed
+    * subspace): shared seeds = the vectors whose id is below `kc`, fixed
     * `iters` rounds, 6dp-rounded argmin with ties to the smallest code,
     * Det-micros centroid means. ADC table entries are micros-quantized
     * BIGINTs, so each candidate's m-term sum is integer-exact and
@@ -940,17 +998,13 @@ object Similarity {
   private def adcTopK(codeRows: DataFrame, qd: DataFrame, k: Int,
       cand: Option[DataFrame]): DataFrame = {
     val q = qd.withColumnRenamed("cl", "code")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist_u").asc, col("neighbor_id"))
     val pairs = cand match {
       case Some(c) => c.join(codeRows, Seq("neighbor_id"))
         .join(broadcast(q), Seq("query_id", "sub", "code"))
       case None => codeRows.join(broadcast(q), Seq("sub", "code"))
     }
-    pairs.groupBy("query_id", "neighbor_id").agg(sum("du").as("adist_u"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topPerQuery(pairs.groupBy("query_id", "neighbor_id").agg(sum("du").as("adist_u"))
+      .filter(col("neighbor_id") =!= col("query_id")), k, col("adist_u").asc)
       .select("query_id", "neighbor_id", "rank", "adist_u")
   }
 
@@ -958,53 +1012,23 @@ object Similarity {
   private[graft] final case class PqModel(
       m: Int, subLen: Int, cents: IndexedSeq[Seq[(Long, Seq[Double])]])
 
-  private def pqSubCol(vec: String, model: PqModel, j: Int): Column =
-    slice(VectorFunctions.asDouble(col(vec)), j * model.subLen + 1, model.subLen)
-
-  /** Train the m per-subspace Lloyd codebooks (seeds = the kc smallest-id
-    * vectors' subvectors; fixed `iters` rounds; one linear kernel pass +
-    * one Det-micros mean aggregation per round).
+  /** Train the m per-subspace Lloyd codebooks with the one trainer
+    * (seeds = the subvectors of the vectors whose id is below `kc`; fixed
+    * `iters` rounds). An empty corpus trains empty codebooks.
     */
   private[graft] def pqTrain(corpus: DataFrame, id: String, vec: String,
       m: Int, kc: Int, iters: Int): PqModel = {
-    val vd = VectorFunctions.asDouble(col(vec))
-    val dim = corpus.select(size(col(vec)).as("d")).head.getInt(0)
+    val seeds = idSeeds(corpus, id, vec, kc)
+    val dim = seeds.headOption.fold(m)(_._2.length)
     require(m > 0 && dim % m == 0, s"pq: dim $dim not divisible into m=$m subspaces")
-    val subLen = dim / m
-    val subIdx = (col("pos") / lit(subLen)).cast("int")
-    var model = PqModel(m, subLen, {
-      val seeds = corpus.filter(col(id) < kc)
-        .select(col(id).cast("long"), vd).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toVector).sortBy(_._1).toSeq
-      (0 until m).map(j => seeds.map { case (cl, v) =>
-        cl -> (v.slice(j * subLen, (j + 1) * subLen): Seq[Double]) })
-    })
-    for (_ <- 1 to iters) {
-      val codes = array((0 until m).map(j =>
-        graft.plans.VectorKernels.l2ArgMin(pqSubCol(vec, model, j), model.cents(j))): _*)
-      val updated = corpus
-        .select(codes.as("codes"), posexplode(vd).as(Seq("pos", "x")))
-        .select(subIdx.as("sub"), element_at(col("codes"), subIdx + 1).as("cl"),
-          (col("pos") % subLen).as("spos"), col("x"))
-        .groupBy("sub", "cl", "spos").agg(graft.Det.davg(col("x")).as("m"))
-        .collect()
-      model = model.copy(cents = (0 until m).map { j =>
-        updated.filter(_.getInt(0) == j)
-          .groupBy(_.getLong(1)).map { case (cl, rows) =>
-            cl -> (rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toVector: Seq[Double])
-          }.toSeq.sortBy(_._1)
-      })
-    }
-    model
+    PqModel(m, dim / m, lloyd(corpus, vec, seeds, m, iters))
   }
 
   /** Encode: one pass, n·m (neighbor_id, sub, code) rows — the PQ index. */
   private[graft] def pqCodeRows(corpus: DataFrame, id: String, vec: String,
-      model: PqModel): DataFrame = {
-    val codeCol = array((0 until model.m).map(j =>
-      graft.plans.VectorKernels.l2ArgMin(pqSubCol(vec, model, j), model.cents(j))): _*)
-    corpus.select(col(id).as("neighbor_id"), posexplode(codeCol).as(Seq("sub", "code")))
-  }
+      model: PqModel): DataFrame =
+    corpus.select(col(id).as("neighbor_id"),
+      posexplode(subCodes(vec, model.subLen, model.cents)).as(Seq("sub", "code")))
 
   /** Query-side ADC lookup tables: (query_id, sub, cl, du) with du the
     * micros-quantized exact query-subvector ↔ codeword squared-L2
@@ -1032,10 +1056,11 @@ object Similarity {
     * `IVFPQ`, non-residual variant): a coarse k-means quantizer of
     * `nlist` clusters routes each query to its `nprobe`
     * nearest-by-cosine clusters, and ONLY vectors in the probed clusters
-    * are ranked, by PQ asymmetric distance over their m codes. Combines
-    * [[kMeansAssign]] (coarse index build), the [[ivfTopK]] probe chain,
-    * and the [[pqTopK]] ADC machinery — both determinism contracts
-    * compose, so the whole index is still hash-exactly replayable.
+    * are ranked, by PQ asymmetric distance over their m codes. Trains
+    * the coarse quantizer ([[kMeansCentroids]]) and the codebooks in
+    * memory, then runs the same probe → candidates → ADC path as the
+    * frozen and served forms — both determinism contracts compose, so
+    * the whole index is still hash-exactly replayable.
     *
     * Scale shape: scan cost drops from O(n·m) table lookups per query to
     * O(n·m·nprobe/nlist); memory stays the m-codes table. The probed
@@ -1047,27 +1072,29 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, id: String, vec: String,
       nlist: Int, nprobe: Int, m: Int, kc: Int, iters: Int, k: Int,
       queryPred: Column): DataFrame = {
-    val assign = kMeansAssign(corpus, id, vec, nlist, iters)
-      .select(col(id), col("cluster"))
-    val indexed = corpus.join(assign, id)
-    // probe: rank the coarse clusters' mean centroids by cosine per query
-    val cents = centroids(indexed, "cluster", vec)
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("cluster"))
-    val probed = corpus.filter(queryPred)
-      .select(col(id).as("query_id"), col(vec).as("qv"))
-      .join(broadcast(cents))
-      .withColumn("csim", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(probeW))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("cluster"))
+    val assign = assignToCentroids(corpus, id, vec,
+      kMeansCentroids(corpus, id, vec, nlist, iters))
     val model = pqTrain(corpus, id, vec, m, kc, iters)
-    val codeRows = pqCodeRows(corpus, id, vec, model)
-    val qd = pqLookupTables(corpus.filter(queryPred), id, vec, model)
-    val cand = assign.select(col(id).as("neighbor_id"), col("cluster"))
-      .join(broadcast(probed), Seq("cluster"))
+    ivfPqRank(corpus.filter(queryPred), id, vec,
+      centroids(corpus.join(assign, id), "cluster", vec),
+      assign.withColumnRenamed(id, "neighbor_id"), pqCodeRows(corpus, id, vec, model),
+      model, nprobe, k)
+  }
+
+  /** The one IVF-PQ ranking path: probe the coarse centroids
+    * `cents(cluster, centroid)` per query, keep the corpus vectors whose
+    * coarse assignment `assign(neighbor_id, cluster)` was probed, and
+    * ADC-rank only their codes.
+    */
+  private def ivfPqRank(queries: DataFrame, id: String, vec: String,
+      cents: DataFrame, assign: DataFrame, codeRows: DataFrame, model: PqModel,
+      nprobe: Int, k: Int): DataFrame = {
+    val probed = probe(queries.select(col(id).as("query_id"), col(vec).as("qv")),
+        "query_id", "qv", cents, "cluster", nprobe)
+      .select(col("query_id"), col("cluster"))
+    val cand = assign.join(broadcast(probed), Seq("cluster"))
       .select("query_id", "neighbor_id")
-    adcTopK(codeRows, qd, k, Some(cand))
+    adcTopK(codeRows, pqLookupTables(queries, id, vec, model), k, Some(cand))
   }
 
   // ------------------------------------------------- persisted-index serving
@@ -1133,29 +1160,15 @@ object Similarity {
   def ivfPqTopKWithIndex(spark: SparkSession, dir: String,
       corpus: DataFrame, id: String, vec: String,
       nprobe: Int, k: Int, queryPred: Column): DataFrame = {
-    val model = graft.sources.ModelStore.loadPq(spark, dir)
-    val cents = spark.read.parquet(s"$dir/cents")
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("cluster"))
-    val probed = corpus.filter(queryPred)
-      .select(col(id).as("query_id"), col(vec).as("qv"))
-      .join(broadcast(cents))
-      .withColumn("csim", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(probeW))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("cluster"))
     // the CURRENT corpus is re-assigned against the frozen Lloyd
     // quantizer — NOT read from the persisted build-time assignment,
     // which only covers the build corpus and would silently exclude any
     // vector added since from every result
     val lloyd = graft.sources.ModelStore.loadCentroids(spark, s"$dir/lloyd")
-    val cand = assignToCentroids(corpus, id, vec, lloyd)
-      .select(col(id).as("neighbor_id"), col("cluster"))
-      .join(broadcast(probed), Seq("cluster"))
-      .select("query_id", "neighbor_id")
-    val codeRows = pqCodeRows(corpus, id, vec, model)
-    val qd = pqLookupTables(corpus.filter(queryPred), id, vec, model)
-    adcTopK(codeRows, qd, k, Some(cand))
+    val model = graft.sources.ModelStore.loadPq(spark, dir)
+    ivfPqRank(corpus.filter(queryPred), id, vec, spark.read.parquet(s"$dir/cents"),
+      assignToCentroids(corpus, id, vec, lloyd).withColumnRenamed(id, "neighbor_id"),
+      pqCodeRows(corpus, id, vec, model), model, nprobe, k)
   }
 
   /** Serve from a [[buildIvfPqIndex]] index: probe the broadcast coarse
@@ -1166,64 +1179,34 @@ object Similarity {
     */
   def serveIvfPqTopK(spark: SparkSession, dir: String, queries: DataFrame,
       id: String, vec: String, nprobe: Int, k: Int): DataFrame = {
-    val model = graft.sources.ModelStore.loadPq(spark, dir)
-    val cents = spark.read.parquet(s"$dir/cents")
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("csim").desc, col("cluster"))
-    val probed = queries.select(col(id).as("query_id"), col(vec).as("qv"))
-      .join(broadcast(cents))
-      .withColumn("csim", VectorFunctions.cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(probeW))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("cluster"))
-    val cand = spark.read.parquet(s"$dir/assign")
-      .join(broadcast(probed), Seq("cluster"))
-      .select("query_id", "neighbor_id")
-    adcTopK(spark.read.parquet(s"$dir/codes"),
-      pqLookupTables(queries, id, vec, model), k, Some(cand))
+    ivfPqRank(queries, id, vec, spark.read.parquet(s"$dir/cents"),
+      spark.read.parquet(s"$dir/assign"), spark.read.parquet(s"$dir/codes"),
+      graft.sources.ModelStore.loadPq(spark, dir), nprobe, k)
   }
 
-  /** DuckDB replay of [[pqTopK]]: per-subspace Lloyd (the subspace is a
-    * grouping key, so one unrolled chain trains all m codebooks), codes,
-    * micros-quantized ADC tables, integer sums, per-query top-k.
-    */
   /** PQ CTE chain (assumes `ev(vec_id, x, pos)` is already defined):
-    * subspace Lloyd rounds → `codes(vec_id, sub, code)` and the
-    * query-side lookup tables `qd(query_id, sub, cl, du)`.
+    * per-subspace Lloyd rounds from the one round generator (the subspace
+    * is a grouping key, so one unrolled chain trains all m codebooks) →
+    * `codes(vec_id, sub, code)` and the query-side micros-quantized
+    * lookup tables `qd(query_id, sub, cl, du)`.
     */
-  private def pqCtes(m: Int, kc: Int, iters: Int, queryCut: Int, dim: Int): String = {
-    val subLen = dim / m
-    val rounds = (1 to iters).map { i =>
-      s"""pd$i AS (SELECT s.vec_id, s.sub, c.cl, ROUND(SUM((s.x - c.m)*(s.x - c.m)), 6) AS dist
-         |         FROM sv s JOIN pc${i - 1} c ON c.pos = s.pos GROUP BY 1, 2, 3),
-         |pa$i AS (SELECT vec_id, sub, cl FROM (
-         |    SELECT vec_id, sub, cl,
-         |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cl) AS rn
-         |    FROM pd$i) WHERE rn = 1),
-         |pc$i AS (SELECT a.cl, s.sub, s.pos,
-         |           CAST(SUM(CAST(ROUND((s.x)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0/COUNT(*) AS m
-         |         FROM pa$i a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-         |         GROUP BY 1, 2, 3)""".stripMargin
-    }.mkString(",\n")
-    s"""sv AS (SELECT vec_id, CAST(FLOOR((pos - 1) / $subLen.0) AS INTEGER) AS sub, pos, x FROM ev),
+  private def pqCtes(m: Int, kc: Int, iters: Int, queryCut: Int, dim: Int): String =
+    s"""sv AS (SELECT vec_id, CAST(FLOOR((pos - 1) / ${dim / m}.0) AS INTEGER) AS sub, pos, x FROM ev),
        |pc0 AS (SELECT vec_id AS cl, sub, pos, x AS m FROM sv WHERE vec_id < $kc),
-       |$rounds,
-       |fd AS (SELECT s.vec_id, s.sub, c.cl, ROUND(SUM((s.x - c.m)*(s.x - c.m)), 6) AS dist
-       |       FROM sv s JOIN pc$iters c ON c.pos = s.pos GROUP BY 1, 2, 3),
-       |codes AS (SELECT vec_id, sub, cl AS code FROM (
-       |    SELECT vec_id, sub, cl,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cl) AS rn
-       |    FROM fd) WHERE rn = 1),
+       |${lloydCtes("p", "sv s", Seq("sub"), iters)},
+       |${argMinCtes("fd", 7, "codes", 4, "sv s", Seq("sub"), s"pc$iters", " AS code")},
        |qd AS (SELECT s.vec_id AS query_id, s.sub, c.cl,
        |         CAST(ROUND(SUM((s.x - c.m)*(s.x - c.m)) * 1000000.0, 0) AS BIGINT) AS du
        |       FROM sv s JOIN pc$iters c ON c.pos = s.pos
        |       WHERE s.vec_id < $queryCut GROUP BY 1, 2, 3)""".stripMargin
-  }
 
   private val EvCte: String =
     """ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
       |              generate_subscripts(embedding, 1) AS pos FROM embeddings)""".stripMargin
 
+  /** DuckDB replay of [[pqTopK]]: codebooks, codes, ADC tables, integer
+    * sums over every candidate, per-query top-k.
+    */
   private[graft] def pqOracleSql(m: Int, kc: Int, iters: Int, topK: Int,
       queryCut: Int, dim: Int = 64): String =
     s"""WITH $EvCte,
@@ -1232,36 +1215,18 @@ object Similarity {
        |          CAST(SUM(q.du) AS BIGINT) AS adist_u
        |        FROM codes co JOIN qd q ON q.sub = co.sub AND q.cl = co.code
        |        WHERE co.vec_id <> q.query_id GROUP BY 1, 2),
-       |ranked AS (SELECT query_id, neighbor_id, adist_u,
-       |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist_u, neighbor_id) AS BIGINT) AS rank
-       |           FROM adc)
-       |SELECT query_id, neighbor_id, rank, adist_u FROM ranked
-       |WHERE rank <= $topK ORDER BY query_id, rank""".stripMargin
+       |${adcTopKSql(topK)}""".stripMargin
 
   /** DuckDB replay of [[ivfPqTopK]]: coarse Lloyd chain ([[kMeansCtes]],
     * which defines `ev` and `kassign`), the PQ chain over the same `ev`,
-    * the cosine probe over per-cluster mean centroids, then ADC
+    * the probe chain over per-cluster mean centroids, then ADC
     * restricted to probed clusters.
     */
   private[graft] def ivfPqOracleSql(nlist: Int, nprobe: Int, m: Int, kc: Int,
       iters: Int, topK: Int, queryCut: Int, dim: Int = 64): String =
     s"""WITH ${kMeansCtes(nlist.toString, iters)},
        |${pqCtes(m, kc, iters, queryCut, dim)},
-       |cent AS (SELECT ka.cluster AS bucket, ev.pos, AVG(ev.x) AS m
-       |         FROM ev JOIN kassign ka ON ka.vec_id = ev.vec_id GROUP BY 1, 2),
-       |cnorm AS (SELECT bucket, SUM(m*m) AS n2 FROM cent GROUP BY 1),
-       |vnorm AS (SELECT vec_id, SUM(x*x) AS n2 FROM ev GROUP BY 1),
-       |qdots AS (SELECT ev.vec_id AS query_id, c.bucket, SUM(ev.x * c.m) AS dot
-       |          FROM ev JOIN cent c ON c.pos = ev.pos
-       |          WHERE ev.vec_id < $queryCut GROUP BY 1, 2),
-       |csims AS (SELECT q.query_id, q.bucket,
-       |            q.dot / (sqrt(vn.n2) * sqrt(cn.n2)) AS csim
-       |          FROM qdots q JOIN vnorm vn ON vn.vec_id = q.query_id
-       |                       JOIN cnorm cn ON cn.bucket = q.bucket),
-       |probed AS (SELECT query_id, bucket FROM (
-       |    SELECT query_id, bucket,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY csim DESC, bucket) AS crank
-       |    FROM csims) WHERE crank <= $nprobe),
+       |${probeCtes(KMeansCent, nprobe, queryCut)},
        |cand AS (SELECT p.query_id, ka.vec_id AS neighbor_id
        |         FROM probed p JOIN kassign ka ON ka.cluster = p.bucket
        |         WHERE ka.vec_id <> p.query_id),
@@ -1270,39 +1235,52 @@ object Similarity {
        |                    JOIN qd q ON q.query_id = c.query_id
        |                             AND q.sub = co.sub AND q.cl = co.code
        |        GROUP BY 1, 2),
-       |ranked AS (SELECT query_id, neighbor_id, adist_u,
+       |${adcTopKSql(topK)}""".stripMargin
+
+  /** The ADC top-k tail: each query's `topK` nearest rows of
+    * `adc(query_id, neighbor_id, adist_u)`.
+    */
+  private def adcTopKSql(topK: Int): String =
+    s"""ranked AS (SELECT query_id, neighbor_id, adist_u,
        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist_u, neighbor_id) AS BIGINT) AS rank
        |           FROM adc)
        |SELECT query_id, neighbor_id, rank, adist_u FROM ranked
        |WHERE rank <= $topK ORDER BY query_id, rank""".stripMargin
 
-  /** DuckDB replay of the full SRP pipeline: the ±1 planes are fixed-seed
-    * literals, so signatures, block keys, candidates, and the exact-cosine
-    * verify are all reproducible in SQL — the LSH path gets a hash-exact
-    * oracle, not a rows-only waiver. (Sign of the projection is the only
-    * float comparison; |proj| is O(1) while cross-engine summation skew is
-    * ~1 ulp, so the bit never flips in practice.)
+  /** The SRP signature/block CTE prefix shared by the SRP oracles: the ±1
+    * planes are fixed-seed literals, so projections, packed signatures
+    * `sig(vec_id, s)` and the 4 block keys `blk(vec_id, blk, key)` are
+    * reproducible in SQL. (Sign of the projection is the only float
+    * comparison; |proj| is O(1) while cross-engine summation skew is ~1
+    * ulp, so the bit never flips in practice.)
     */
-  private[graft] def srpOracleSql(threshold: Double, dim: Int, bits: Int): String = {
+  private def srpBlockCtes(dim: Int, bits: Int): String = {
     val blockBits = bits / 4
     val mask = (1L << blockBits) - 1
     val planeRows = srpPlanes(bits, dim).zipWithIndex.map { case (plane, j) =>
       plane.map(v => if (v > 0) "1.0" else "-1.0").mkString(s"($j, [", ",", "])")
     }.mkString(",\n")
-    s"""WITH planes AS (
+    s"""planes AS (
        |  SELECT j, generate_subscripts(r, 1) AS pos, unnest(r) AS r
        |  FROM (VALUES
        |$planeRows
        |  ) pl(j, r)),
-       |ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-       |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
+       |$EvCte,
        |proj AS (SELECT vec_id, j, SUM(x * r) AS p
        |         FROM ev JOIN planes USING (pos) GROUP BY 1, 2),
        |sig AS (SELECT vec_id,
        |          CAST(SUM(CASE WHEN p >= 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS s
        |        FROM proj GROUP BY 1),
        |blk AS (SELECT vec_id, b AS blk, (s >> CAST(b * $blockBits AS INTEGER)) & $mask AS key
-       |        FROM sig, (SELECT unnest(range(0, 4)) AS b)),
+       |        FROM sig, (SELECT unnest(range(0, 4)) AS b))""".stripMargin
+  }
+
+  /** DuckDB replay of the full SRP pipeline: signatures, block keys,
+    * candidates, and the exact-cosine verify — the LSH path gets a
+    * hash-exact oracle, not a rows-only waiver.
+    */
+  private[graft] def srpOracleSql(threshold: Double, dim: Int, bits: Int): String =
+    s"""WITH ${srpBlockCtes(dim, bits)},
        |cand AS (SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
        |         FROM blk x JOIN blk y
        |           ON x.blk = y.blk AND x.key = y.key AND x.vec_id < y.vec_id),
@@ -1317,36 +1295,17 @@ object Similarity {
        |                   JOIN vnorm nb ON nb.vec_id = vec_b)
        |SELECT vec_a, vec_b, ROUND(sim, 6) AS sim_r FROM sims
        |WHERE sim >= $threshold ORDER BY vec_a, vec_b""".stripMargin
-  }
 
   /** DuckDB replay of the CROSS-corpus SRP pipeline (benchmark = rows of
-    * `embeddings` with `vec_id % mod = r`, training = the rest): same
-    * plane literals / signature / block-key candidates as
-    * [[srpOracleSql]], restricted to train×bench pairs, then the per-
-    * train-vector contamination rollup — hash-exact against
+    * `embeddings` with `vec_id % mod = r`, training = the rest): the same
+    * signature/block prefix as [[srpOracleSql]], candidates restricted to
+    * train×bench pairs, then the per-train-vector contamination rollup —
+    * hash-exact against
     * [[graft.operators.TrainingData.decontaminateSemantic]].
     */
   private[graft] def srpCrossOracleSql(
-      threshold: Double, dim: Int, bits: Int, mod: Int, r: Int): String = {
-    val blockBits = bits / 4
-    val mask = (1L << blockBits) - 1
-    val planeRows = srpPlanes(bits, dim).zipWithIndex.map { case (plane, j) =>
-      plane.map(v => if (v > 0) "1.0" else "-1.0").mkString(s"($j, [", ",", "])")
-    }.mkString(",\n")
-    s"""WITH planes AS (
-       |  SELECT j, generate_subscripts(r, 1) AS pos, unnest(r) AS r
-       |  FROM (VALUES
-       |$planeRows
-       |  ) pl(j, r)),
-       |ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-       |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
-       |proj AS (SELECT vec_id, j, SUM(x * r) AS p
-       |         FROM ev JOIN planes USING (pos) GROUP BY 1, 2),
-       |sig AS (SELECT vec_id,
-       |          CAST(SUM(CASE WHEN p >= 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS s
-       |        FROM proj GROUP BY 1),
-       |blk AS (SELECT vec_id, b AS blk, (s >> CAST(b * $blockBits AS INTEGER)) & $mask AS key
-       |        FROM sig, (SELECT unnest(range(0, 4)) AS b)),
+      threshold: Double, dim: Int, bits: Int, mod: Int, r: Int): String =
+    s"""WITH ${srpBlockCtes(dim, bits)},
        |cand AS (SELECT DISTINCT t.vec_id AS train_id, e.vec_id AS bench_id
        |         FROM blk t JOIN blk e ON t.blk = e.blk AND t.key = e.key
        |         WHERE t.vec_id % $mod <> $r AND e.vec_id % $mod = $r),
@@ -1365,7 +1324,52 @@ object Similarity {
        |  COALESCE(h.n_matches, 0) > 0 AS contaminated
        |FROM embeddings e LEFT JOIN hits h ON h.train_id = e.vec_id
        |WHERE e.vec_id % $mod <> $r ORDER BY e.vec_id""".stripMargin
-  }
+
+  /** DuckDB replay of [[bruteForceTopK]] for the 20 queries vec_id < 20
+    * against the corpus CTE `c(neighbor_id, v)`: every pair's cosine,
+    * then the cosine top-5.
+    */
+  private def bruteForceOracleSql(c: String): String =
+    s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) v
+       |           FROM embeddings WHERE vec_id < 20),
+       |$c,
+       |px AS (SELECT query_id, neighbor_id, unnest(q.v) x, unnest(c.v) y
+       |       FROM q, c WHERE query_id <> neighbor_id),
+       |dots AS (SELECT query_id, neighbor_id, SUM(x*y) AS dot
+       |         FROM px GROUP BY 1, 2),
+       |norms AS (SELECT vec_id, SUM(x*x) AS n2
+       |          FROM (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) x FROM embeddings)
+       |          GROUP BY 1),
+       |sims AS (SELECT query_id, neighbor_id,
+       |           dot / (sqrt(nq.n2) * sqrt(nc.n2)) AS sim
+       |         FROM dots JOIN norms nq ON nq.vec_id = query_id
+       |                   JOIN norms nc ON nc.vec_id = neighbor_id),
+       |${simTopKSql(5)}""".stripMargin
+
+  /** The registered cosine top-k rows' output: sim rounded to 6dp (the
+    * ann determinism contract), ordered by query and rank.
+    */
+  private def simRows(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("neighbor_id"), col("rank"),
+      round(col("sim"), 6).as("sim_r")).orderBy("query_id", "rank")
+
+  /** The registered SemDeDup rows' output: pairs with their cluster. */
+  private def clusterPairRows(df: DataFrame): DataFrame =
+    df.select(col("vec_a"), col("vec_b"), col("cluster"),
+      round(col("sim"), 6).as("sim_r")).orderBy("vec_a", "vec_b")
+
+  /** The PQ and IVF-PQ indexes the `ann_topk_pq*` / `ann_topk_ivfpq*`
+    * rows share, built once per fixture identity.
+    */
+  private def pqIndexDir(s: SparkSession, d: String): String =
+    graft.LocalFiles.stageFixture(d, "embeddings.parquet", "pq:4:8:2")(tmp =>
+      buildPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
+        m = 4, kc = 8, iters = 2, dir = tmp))
+
+  private def ivfPqIndexDir(s: SparkSession, d: String): String =
+    graft.LocalFiles.stageFixture(d, "embeddings.parquet", "ivfpq:v2:8:4:8:2")(tmp =>
+      buildIvfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
+        nlist = 8, m = 4, kc = 8, iters = 2, dir = tmp))
 
   // ---------------------------------------------------------------- queries
 
@@ -1375,32 +1379,12 @@ object Similarity {
     // both sides to absorb sub-ulp summation-order differences ----
     Q(
       "ann_topk_bruteforce",
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) v
-        |           FROM embeddings WHERE vec_id < 20),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) v FROM embeddings),
-        |px AS (SELECT query_id, neighbor_id, unnest(q.v) x, unnest(c.v) y
-        |       FROM q, c WHERE query_id <> neighbor_id),
-        |dots AS (SELECT query_id, neighbor_id, SUM(x*y) AS dot
-        |         FROM px GROUP BY 1, 2),
-        |norms AS (SELECT vec_id, SUM(x*x) AS n2
-        |          FROM (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) x FROM embeddings)
-        |          GROUP BY 1),
-        |sims AS (SELECT query_id, neighbor_id,
-        |           dot / (sqrt(nq.n2) * sqrt(nc.n2)) AS sim
-        |         FROM dots JOIN norms nq ON nq.vec_id = query_id
-        |                   JOIN norms nc ON nc.vec_id = neighbor_id),
-        |ranked AS (SELECT query_id, neighbor_id,
-        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank,
-        |             ROUND(sim, 6) AS sim_r
-        |           FROM sims)
-        |SELECT query_id, neighbor_id, rank, sim_r FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+      bruteForceOracleSql(
+        "c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) v FROM embeddings)"),
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       bruteForceTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("query_id", "rank")
+        .transform(simRows)
     },
 
     // ---- MATRYOSHKA retrieval (Kusupati et al. 2022): rank by cosine on
@@ -1481,34 +1465,14 @@ object Similarity {
     // bucket lists. Same determinism contract as ann_topk_bruteforce ----
     Q(
       "ann_topk_filtered",
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) v
-        |           FROM embeddings WHERE vec_id < 20),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) v
-        |      FROM embeddings WHERE label % 2 = 0),
-        |px AS (SELECT query_id, neighbor_id, unnest(q.v) x, unnest(c.v) y
-        |       FROM q, c WHERE query_id <> neighbor_id),
-        |dots AS (SELECT query_id, neighbor_id, SUM(x*y) AS dot
-        |         FROM px GROUP BY 1, 2),
-        |norms AS (SELECT vec_id, SUM(x*x) AS n2
-        |          FROM (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) x FROM embeddings)
-        |          GROUP BY 1),
-        |sims AS (SELECT query_id, neighbor_id,
-        |           dot / (sqrt(nq.n2) * sqrt(nc.n2)) AS sim
-        |         FROM dots JOIN norms nq ON nq.vec_id = query_id
-        |                   JOIN norms nc ON nc.vec_id = neighbor_id),
-        |ranked AS (SELECT query_id, neighbor_id,
-        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank,
-        |             ROUND(sim, 6) AS sim_r
-        |           FROM sims)
-        |SELECT query_id, neighbor_id, rank, sim_r FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+      bruteForceOracleSql(
+        """c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) v
+          |      FROM embeddings WHERE label % 2 = 0)""".stripMargin),
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       bruteForceTopK(emb.filter(col("vec_id") < 20),
           emb.filter(col("label") % 2 === 0), "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("query_id", "rank")
+        .transform(simRows)
     },
 
     // ---- contrastive HARD-NEGATIVE mining: per query, the top-5 most
@@ -1557,48 +1521,19 @@ object Similarity {
     // bucket-restricted ranking pipeline in SQL ----
     Q(
       "ann_topk_ivf",
-      """WITH ev AS (SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS x,
-        |                   generate_subscripts(embedding, 1) AS pos
-        |            FROM embeddings),
-        |cent AS (SELECT label AS bucket, pos, AVG(x) AS m FROM ev GROUP BY 1, 2),
-        |cnorm AS (SELECT bucket, SUM(m*m) AS n2 FROM cent GROUP BY 1),
-        |vnorm AS (SELECT vec_id, SUM(x*x) AS n2 FROM ev GROUP BY 1),
-        |qdots AS (SELECT ev.vec_id AS query_id, c.bucket, SUM(ev.x * c.m) AS dot
-        |          FROM ev JOIN cent c ON c.pos = ev.pos
-        |          WHERE ev.vec_id < 20 GROUP BY 1, 2),
-        |csims AS (SELECT q.query_id, q.bucket,
-        |            q.dot / (sqrt(vn.n2) * sqrt(cn.n2)) AS csim
-        |          FROM qdots q JOIN vnorm vn ON vn.vec_id = q.query_id
-        |                       JOIN cnorm cn ON cn.bucket = q.bucket),
-        |probed AS (SELECT query_id, bucket FROM (
-        |    SELECT query_id, bucket,
-        |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY csim DESC, bucket) AS crank
-        |    FROM csims) WHERE crank <= 3),
-        |pairs AS (SELECT p.query_id, e2.vec_id AS neighbor_id
-        |          FROM probed p JOIN embeddings e2 ON e2.label = p.bucket
-        |          WHERE e2.vec_id <> p.query_id),
-        |pdots AS (SELECT pr.query_id, pr.neighbor_id, SUM(eq.x * en.x) AS dot
-        |          FROM pairs pr
-        |          JOIN ev eq ON eq.vec_id = pr.query_id
-        |          JOIN ev en ON en.vec_id = pr.neighbor_id AND en.pos = eq.pos
-        |          GROUP BY 1, 2),
-        |sims AS (SELECT pd.query_id, pd.neighbor_id,
-        |           pd.dot / (sqrt(nq.n2) * sqrt(nn.n2)) AS sim
-        |         FROM pdots pd JOIN vnorm nq ON nq.vec_id = pd.query_id
-        |                       JOIN vnorm nn ON nn.vec_id = pd.neighbor_id),
-        |ranked AS (SELECT query_id, neighbor_id,
-        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank,
-        |             ROUND(sim, 6) AS sim_r
-        |           FROM sims)
-        |SELECT query_id, neighbor_id, rank, sim_r FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+      ivfOracleSql(
+        """ev AS (SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS x,
+          |                   generate_subscripts(embedding, 1) AS pos
+          |            FROM embeddings)""".stripMargin,
+        "cent AS (SELECT label AS bucket, pos, AVG(x) AS m FROM ev GROUP BY 1, 2)",
+        """pairs AS (SELECT p.query_id, e2.vec_id AS neighbor_id
+          |          FROM probed p JOIN embeddings e2 ON e2.label = p.bucket
+          |          WHERE e2.vec_id <> p.query_id)""".stripMargin, nprobe = 3, topK = 5),
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       ivfTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
         "label", 5, 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("query_id", "rank")
+        .transform(simRows)
     },
 
     // ---- per-vector array stats (array function surface over the
@@ -1653,12 +1588,10 @@ object Similarity {
     // cosine only within clusters. 0.4 is this fixture's near-dup regime
     // (its max pairwise cosine is ~0.6); the oracle replays cluster →
     // pairwise → threshold exactly ----
-    Q("dedup_semantic", semanticOracleSql(8, 2, 0.4)) { (s, d) =>
+    Q("dedup_semantic", semanticOracleSqlFor("8", 2, 0.4)) { (s, d) =>
       semanticNearDupPairs(
         Tables.embeddings(s, d), "vec_id", "embedding", 8, 2, 0.4, fixedK = true)
-        .select(col("vec_a"), col("vec_b"), col("cluster"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("vec_a", "vec_b")
+        .transform(clusterPairRows)
     },
 
     // ---- SemDeDup with the k ∝ n SCALE contract registered end-to-end:
@@ -1666,12 +1599,10 @@ object Similarity {
     // oracle's seed cutoff is a COUNT(*) scalar subquery), so the same
     // static SQL checks k=1 at sf0.001, k=8 at sf0.01, k=79 at sf0.1 —
     // constant expected cluster size, bounded per-cluster quadratic ----
-    Q("dedup_semantic_scaled", semanticOracleSqlScaled(64, 2, 0.4)) { (s, d) =>
+    Q("dedup_semantic_scaled", semanticOracleSqlFor(kPerCluster(64), 2, 0.4)) { (s, d) =>
       semanticNearDupPairsScaled(
         Tables.embeddings(s, d), "vec_id", "embedding", 64, 2, 0.4)
-        .select(col("vec_a"), col("vec_b"), col("cluster"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("vec_a", "vec_b")
+        .transform(clusterPairRows)
     },
 
     // ---- SemDeDup at the paper's k = ⌈√n⌉ operating point: balances
@@ -1687,9 +1618,7 @@ object Similarity {
       2, 0.4)) { (s, d) =>
       semanticNearDupPairsSqrtK(
         Tables.embeddings(s, d), "vec_id", "embedding", 2, 0.4)
-        .select(col("vec_a"), col("vec_b"), col("cluster"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("vec_a", "vec_b")
+        .transform(clusterPairRows)
     },
 
     // ---- SemDeDup with SAMPLED-centroid training at k ∝ n: the Lloyd
@@ -1705,9 +1634,7 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
       val k = math.max(math.ceil(emb.count() / 64.0).toInt, 1)
       semanticNearDupPairsSampled(emb, "vec_id", "embedding", k, 2, 0.4, 2.0)
-        .select(col("vec_a"), col("vec_b"), col("cluster"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("vec_a", "vec_b")
+        .transform(clusterPairRows)
     },
 
     // ---- SemDeDup as the paper actually runs it: k = ⌈√n⌉ AND sampled
@@ -1719,9 +1646,7 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
       val k = math.max(math.ceil(math.sqrt(emb.count().toDouble)).toInt, 1)
       semanticNearDupPairsSampled(emb, "vec_id", "embedding", k, 2, 0.4, 2.0)
-        .select(col("vec_a"), col("vec_b"), col("cluster"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("vec_a", "vec_b")
+        .transform(clusterPairRows)
     },
 
     // ---- contrastive triplet mining: anchors with a near-dup positive
@@ -1738,14 +1663,11 @@ object Similarity {
     // k-means clusters built above instead of the fixture's labels ----
     Q("ann_topk_ivf_kmeans", ivfKMeansOracleSql(8, 2, 3, 5)) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val indexed = emb.join(
-        kMeansAssign(emb, "vec_id", "embedding", 8, 2)
-          .select(col("vec_id"), col("cluster")), "vec_id")
+      val indexed = emb.join(assignToCentroids(emb, "vec_id", "embedding",
+        kMeansCentroids(emb, "vec_id", "embedding", 8, 2)), "vec_id")
       ivfTopK(emb.filter(col("vec_id") < 20), indexed, "vec_id", "embedding",
         "cluster", 5, 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("query_id", "rank")
+        .transform(simRows)
     },
 
     // ---- product quantization: m=4 subspace codebooks of kc=8 codewords
@@ -1758,11 +1680,8 @@ object Similarity {
     // with the rare training cost amortized. Train-inline `pqTopK` stays
     // the public API and is spec-pinned at sf0.001 ----
     Q("ann_topk_pq", pqOracleSql(4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "pq:4:8:2")(tmp =>
-        buildPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-          m = 4, kc = 8, iters = 2, dir = tmp))
-      pqTopKWithModel(Tables.embeddings(s, d), "vec_id", "embedding",
-        graft.sources.ModelStore.loadPq(s, dir), k = 5,
+      val model = graft.sources.ModelStore.loadPq(s, pqIndexDir(s, d))
+      pqTopKWithModel(Tables.embeddings(s, d), "vec_id", "embedding", model, k = 5,
         queryPred = col("vec_id") < 20)
         .orderBy("query_id", "rank")
     },
@@ -1777,10 +1696,7 @@ object Similarity {
     // cost with training amortized. Train-inline `ivfPqTopK` stays the
     // public API and is spec-pinned at sf0.001 ----
     Q("ann_topk_ivfpq", ivfPqOracleSql(8, 3, 4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "ivfpq:v2:8:4:8:2")(tmp =>
-        buildIvfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-          nlist = 8, m = 4, kc = 8, iters = 2, dir = tmp))
-      ivfPqTopKWithIndex(s, dir, Tables.embeddings(s, d),
+      ivfPqTopKWithIndex(s, ivfPqIndexDir(s, d), Tables.embeddings(s, d),
         "vec_id", "embedding", nprobe = 3, k = 5,
         queryPred = col("vec_id") < 20)
         .orderBy("query_id", "rank")
@@ -1792,19 +1708,13 @@ object Similarity {
     // never re-read. Same oracles as the inline rows: the served answers
     // are hash-exactly the trained ones ----
     Q("ann_topk_pq_served", pqOracleSql(4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "pq:4:8:2")(tmp =>
-        buildPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-          m = 4, kc = 8, iters = 2, dir = tmp))
-      servePqTopK(s, dir, Tables.embeddings(s, d).filter(col("vec_id") < 20),
+      servePqTopK(s, pqIndexDir(s, d), Tables.embeddings(s, d).filter(col("vec_id") < 20),
         "vec_id", "embedding", k = 5)
         .orderBy("query_id", "rank")
     },
 
     Q("ann_topk_ivfpq_served", ivfPqOracleSql(8, 3, 4, 8, 2, 5, 20)) { (s, d) =>
-      val dir = graft.LocalFiles.stageFixture(d, "embeddings.parquet", "ivfpq:v2:8:4:8:2")(tmp =>
-        buildIvfPqIndex(Tables.embeddings(s, d), "vec_id", "embedding",
-          nlist = 8, m = 4, kc = 8, iters = 2, dir = tmp))
-      serveIvfPqTopK(s, dir,
+      serveIvfPqTopK(s, ivfPqIndexDir(s, d),
         Tables.embeddings(s, d).filter(col("vec_id") < 20),
         "vec_id", "embedding", nprobe = 3, k = 5)
         .orderBy("query_id", "rank")
@@ -1817,8 +1727,7 @@ object Similarity {
     // double arithmetic ----
     Q(
       "ann_topk_int8",
-      """WITH ev AS (SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS x,
-        |              generate_subscripts(embedding, 1) AS pos FROM embeddings),
+      s"""WITH $EvCte,
         |sc AS (SELECT vec_id, GREATEST(MAX(ABS(x)) / 127.0, 1e-30) AS s FROM ev GROUP BY 1),
         |qv AS (SELECT ev.vec_id, ev.pos, ROUND(ev.x / sc.s) AS q
         |       FROM ev JOIN sc ON sc.vec_id = ev.vec_id),
@@ -1830,18 +1739,11 @@ object Similarity {
         |           d.dot / (sqrt(na.n2) * sqrt(nb.n2)) AS sim
         |         FROM dots d JOIN nrm na ON na.vec_id = d.query_id
         |                     JOIN nrm nb ON nb.vec_id = d.neighbor_id),
-        |ranked AS (SELECT query_id, neighbor_id,
-        |             CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank,
-        |             ROUND(sim, 6) AS sim_r
-        |           FROM sims)
-        |SELECT query_id, neighbor_id, rank, sim_r FROM ranked
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |${simTopKSql(5)}""".stripMargin,
     ) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       int8QuantizedTopK(emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank"),
-          round(col("sim"), 6).as("sim_r"))
-        .orderBy("query_id", "rank")
+        .transform(simRows)
     },
 
     // ---- nearest-centroid classification of every vector. Deterministic
@@ -1874,12 +1776,7 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
       val cents = centroids(emb, "label", "embedding")
         .select(col("label").as("centroid_label"), col("centroid"))
-      val w = Window.partitionBy("vec_id")
-        .orderBy(col("sim").desc, col("centroid_label"))
-      emb.join(broadcast(cents))
-        .withColumn("sim", VectorFunctions.cosine(col("embedding"), col("centroid")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      probe(emb, "vec_id", "embedding", cents, "centroid_label", nprobe = 1)
         .select(col("vec_id"), col("label").cast("long").as("label"),
           col("centroid_label").cast("long").as("centroid_label"),
           (col("label") === col("centroid_label")).as("correct"))

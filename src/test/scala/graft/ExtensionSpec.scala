@@ -326,6 +326,53 @@ class ExtensionSpec extends SparkSpec {
     }
   }
 
+  test("pqTrain with m = 1 trains exactly kMeansCentroids' centroids") {
+    // plain k-means is PQ with one subspace: the identity the one Lloyd
+    // trainer rests on
+    val emb = Tables.embeddings(spark, sf0001)
+    val sim = graft.operators.Similarity
+    val pq = sim.pqTrain(emb, "vec_id", "embedding", m = 1, kc = 8, iters = 2)
+    val km = sim.kMeansCentroids(emb, "vec_id", "embedding", k = 8, iters = 2)
+    assert(km.nonEmpty && pq.m == 1 && pq.subLen == 64)
+    assert(pq.cents == IndexedSeq(km))
+  }
+
+  test("an empty corpus yields an empty result with the usual schema") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val sim = graft.operators.Similarity
+    def shape(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      sim.kMeansAssign(_, "vec_id", "embedding", k = 8, iters = 2),
+      sim.semanticNearDupPairsScaled(_, "vec_id", "embedding",
+        targetClusterSize = 64, iters = 2, threshold = 0.4),
+      sim.pqTopK(_, "vec_id", "embedding", m = 4, kc = 8, iters = 2, k = 5,
+        queryPred = col("vec_id") < 20),
+      sim.kCenterCoreset(_, "vec_id", "embedding", 8),
+    ).foreach { op =>
+      val empty = op(emb.filter(lit(false)))
+      assert(empty.collect().isEmpty)
+      assert(shape(empty) == shape(op(emb)))
+    }
+  }
+
+  test("Lloyd training rejects a corpus with no id below k, naming the seed contract") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val sim = graft.operators.Similarity
+    val shifted = emb.withColumn("vec_id", col("vec_id") + 1000L)
+    Seq[() => Any](
+      () => sim.kMeansAssign(shifted, "vec_id", "embedding", k = 8, iters = 2),
+      () => sim.pqTopK(shifted, "vec_id", "embedding", m = 4, kc = 8, iters = 2, k = 5,
+        queryPred = col("vec_id") < 1020),
+    ).foreach { run =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("vec_id is below k = 8"), e.getMessage)
+    }
+    // an empty hash sample names the sampled trainer's own knob
+    val e = intercept[IllegalArgumentException](sim.sampledKMeansCentroids(
+      emb, "vec_id", "embedding", k = 4, iters = 2, sampleC = 0.0))
+    assert(e.getMessage.contains("raise sampleC"), e.getMessage)
+  }
+
   test("srpSignature raises on a dim mismatch instead of degenerating") {
     val df = Seq((1L, Seq(1.0f, 2.0f, 3.0f))).toDF("id", "v")
     assertThrows[Exception] {

@@ -387,6 +387,28 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("similarity rows plan no more Exchanges than their pinned counts") {
+    // measured at sf0.001 before the vector tier shared one trainer, probe
+    // and top-k tail (pre-execution AQE plan, broadcast exchanges counted)
+    val pinned = Map(
+      "ann_topk_bruteforce" -> 3, "ann_topk_matryoshka" -> 5,
+      "ann_topk_filtered" -> 3, "ann_hard_negatives" -> 3,
+      "ann_topk_ivf" -> 7, "q_vector_stats" -> 1,
+      "dedup_embedding_srp" -> 3, "kmeans_assign" -> 1,
+      "coreset_kcenter" -> 1, "dedup_semantic" -> 5,
+      "dedup_semantic_scaled" -> 5, "dedup_semantic_sqrtk" -> 5,
+      "dedup_semantic_sampled" -> 5, "dedup_semantic_sampled_sqrtk" -> 5,
+      "contrastive_triplets" -> 11, "ann_topk_ivf_kmeans" -> 9,
+      "ann_topk_pq" -> 6, "ann_topk_ivfpq" -> 10,
+      "ann_topk_pq_served" -> 6, "ann_topk_ivfpq_served" -> 10,
+      "ann_topk_int8" -> 3, "knn_centroid_assign" -> 5)
+    assert(pinned.keySet == graft.operators.Similarity.queries.map(_.name).toSet)
+    pinned.foreach { case (name, maxEx) =>
+      val (ex, _) = exchangesAndGenerates(SparkEntry.queries(name)(spark, sf0001))
+      assert(ex <= maxEx, s"$name plans $ex Exchanges (pinned $maxEx)")
+    }
+  }
+
   test("tokenizer plans do not grow with the model: 10 vs 30,000 merges") {
     import spark.implicits._
     val docs = Seq((1L, "the lower lowest"), (2L, "newer wider"), (3L, "aaaa b"))
