@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   *
   * All driver fixtures are single parquet files `<dir>/<name>.parquet`
   * (see TESTDATA.md / FIXTURES.md). Loading goes through `spark.read.parquet`
-  * so Catalyst column pruning + filter pushdown apply automatically.
+  * so Catalyst column pruning + filter pushdown apply automatically; each
+  * fixture's schema is inferred once per session and file identity.
   *
   * `events.parquet` has shipped with two physical encodings of `ts` across
   * driver rounds: INT64 TIMESTAMP(NANOS) — which Spark 4.x reads as
@@ -26,8 +27,34 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fileSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+  }
+
+  /** Per session, each fixture's schema by file identity (absolute path,
+    * size, mtime): a read without a schema runs one schema-inference job,
+    * so the first [[load]] of a fixture in a session infers it and every
+    * later one reads with `.schema(...)`. The sessions are held weakly, and
+    * a session whose reader settings differ (say
+    * `spark.sql.legacy.parquet.nanosAsLong`) infers its own. A missing
+    * path gets no schema, so the read fails as Spark reports it.
+    */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    scala.collection.concurrent.TrieMap[(String, Long, Long), StructType]]()
+
+  private def fileSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+    if (!java.nio.file.Files.exists(p)) None
+    else {
+      val a = java.nio.file.Files.readAttributes(
+        p, classOf[java.nio.file.attribute.BasicFileAttributes])
+      val known = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty))
+      Some(known.getOrElseUpdate((p.toString, a.size, a.lastModifiedTime.toMillis),
+        spark.read.parquet(path).schema))
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -1123,7 +1123,7 @@ object Similarity {
   def servePqTopK(spark: SparkSession, dir: String, queries: DataFrame,
       id: String, vec: String, k: Int): DataFrame = {
     val model = graft.sources.ModelStore.loadPq(spark, dir)
-    adcTopK(spark.read.parquet(s"$dir/codes"),
+    adcTopK(readIndex(spark, dir, "codes", queries, id),
       pqLookupTables(queries, id, vec, model), k, cand = None)
   }
 
@@ -1166,7 +1166,7 @@ object Similarity {
     // vector added since from every result
     val lloyd = graft.sources.ModelStore.loadCentroids(spark, s"$dir/lloyd")
     val model = graft.sources.ModelStore.loadPq(spark, dir)
-    ivfPqRank(corpus.filter(queryPred), id, vec, spark.read.parquet(s"$dir/cents"),
+    ivfPqRank(corpus.filter(queryPred), id, vec, readIndex(spark, dir, "cents", corpus, id),
       assignToCentroids(corpus, id, vec, lloyd).withColumnRenamed(id, "neighbor_id"),
       pqCodeRows(corpus, id, vec, model), model, nprobe, k)
   }
@@ -1179,9 +1179,24 @@ object Similarity {
     */
   def serveIvfPqTopK(spark: SparkSession, dir: String, queries: DataFrame,
       id: String, vec: String, nprobe: Int, k: Int): DataFrame = {
-    ivfPqRank(queries, id, vec, spark.read.parquet(s"$dir/cents"),
-      spark.read.parquet(s"$dir/assign"), spark.read.parquet(s"$dir/codes"),
+    def read(table: String) = readIndex(spark, dir, table, queries, id)
+    ivfPqRank(queries, id, vec, read("cents"), read("assign"), read("codes"),
       graft.sources.ModelStore.loadPq(spark, dir), nprobe, k)
+  }
+
+  /** A persisted index table under `dir` read with its known schema, so
+    * no read runs a schema-inference job: the coarse centroids `cents`,
+    * and the `assign` and `codes` tables keyed by the corpus id, whose
+    * type the query batch `queries(id)` shares.
+    */
+  private def readIndex(spark: SparkSession, dir: String, table: String,
+      queries: DataFrame, id: String): DataFrame = {
+    val idType = queries.schema(id).dataType.sql
+    spark.read.schema(table match {
+      case "cents" => "cluster BIGINT, centroid ARRAY<DOUBLE>"
+      case "assign" => s"neighbor_id $idType, cluster BIGINT"
+      case "codes" => s"neighbor_id $idType, sub INT, code BIGINT"
+    }).parquet(s"$dir/$table")
   }
 
   /** PQ CTE chain (assumes `ev(vec_id, x, pos)` is already defined):

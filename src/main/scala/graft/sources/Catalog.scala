@@ -4,8 +4,10 @@ import java.nio.file.{Files, Paths}
 
 import graft.LocalFiles
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -413,22 +415,15 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     statsOf(name).getOrElse(out)
   }
 
-  /** Persisted [[analyze]] output, if the table has been analyzed. */
+  /** Persisted [[analyze]] output, if the table has been analyzed — read
+    * with its known schema (no inference job; an all-null column, such as
+    * a map column's bounds, reads as null).
+    */
   def statsOf(name: String): Option[DataFrame] =
     if (!Files.exists(metaDir(name).resolve("stats"))) None
-    else {
-      val raw = spark.read.json(metaDir(name).resolve("stats").toString)
-      // a column whose values were ALL null (e.g. min_v of a map column)
-      // is absent from the inferred JSON schema — reinstate it as null
-      def c(n: String, tpe: String) =
-        (if (raw.columns.contains(n)) col(n) else lit(null)).cast(tpe).as(n)
-      Some(raw.select(c("column", "string"), c("n_rows", "long"),
-        c("n_nulls", "long"), c("ndv_approx", "long"),
-        c("min_v", "string"), c("max_v", "string"),
-        c("avg_width", "double"),
-        c("analyzed_version", "int"))
-        .orderBy("column"))
-    }
+    else Some(spark.read.schema("`column` STRING, n_rows BIGINT, n_nulls BIGINT, " +
+        "ndv_approx BIGINT, min_v STRING, max_v STRING, avg_width DOUBLE, analyzed_version INT")
+      .json(metaDir(name).resolve("stats").toString).orderBy("column"))
 
   /** Append-only insert: validates + casts to the declared schema, writes
     * Hive-partitioned parquet. The cast is strict column-name matching
@@ -443,8 +438,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // appends commute: commit under OCC retry so concurrent writers both
     // land (serializable — the log stays linear, content order-free)
     commitAppend(name, "insert", added)
-    if (added.isEmpty) 0L
-    else parquetRowCount(added.map(rel => dataDir(name).resolve(rel)))
+    parquetRowCount(name, added)
   }
 
   /** Two-phase seam for the cross-process vacuum-race spec: [[stageOnly]]
@@ -460,24 +454,23 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private[graft] def commitStaged(name: String, files: Seq[String]): Unit =
     commitAppend(name, "insert", files)
 
-  /** Exact row count of freshly written parquet files from their footer
-    * metadata — a driver-side footer read per file, NO Spark job.
-    * O(added files) small reads, the same order as the manifest commit
-    * itself; falls back to the distributed count if any footer is
-    * unreadable.
+  /** Exact row count of `name`'s freshly written data files (manifest
+    * entries) from their footer metadata — a driver-side footer read per
+    * file, NO Spark job. O(added files) small reads, the same order as
+    * the manifest commit itself; falls back to the distributed count over
+    * [[readFiles]] if any footer is unreadable.
     */
-  private def parquetRowCount(paths: Seq[java.nio.file.Path]): Long =
+  private def parquetRowCount(name: String, files: Seq[String]): Long =
     try {
       val conf = spark.sessionState.newHadoopConf()
-      paths.map { p =>
+      files.map { rel =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf)
+          .fromPath(new org.apache.hadoop.fs.Path(dataDir(name).resolve(rel).toUri), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
     } catch {
-      case _: Exception =>
-        spark.read.parquet(paths.map(_.toString): _*).count()
+      case _: Exception => readFiles(name, files).count()
     }
 
   // ------------------------------------------------ version manifests
@@ -1188,25 +1181,33 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   /** The one data reader: the given manifest entries as stored —
     * physical column names, no default coalescing; [[toLogical]] over it
-    * is the logical view. `basePath` keeps Hive partition columns
-    * resolvable, and each entry resolves to a plain filesystem path under
-    * the data dir (a `file:` URI string would be percent-encoded a second
-    * time by `spark.read`). No entries is the empty table.
+    * is the logical view. The entries become a [[ManifestFileIndex]]
+    * under a plain parquet `HadoopFsRelation`, so the read stats each
+    * entry once and never globs, lists or runs a listing job; the Hive
+    * partition column is parsed from the entry paths under its declared
+    * type, and a filter on it prunes files before the scan. The data
+    * columns read nullable, as Spark's own parquet read makes them (a
+    * file written before an [[addColumn]] supplies nulls). No entries is
+    * the empty table.
     */
   private def readFiles(name: String, files: Seq[String]): DataFrame = {
-    val dir = dataDir(name)
-    val physical = StructType(schema(name).fields.map(f => f.copy(name = physicalName(f))))
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], physical)
-    else spark.read.option("basePath", dir.toString).schema(physical)
-      .parquet(files.map(rel => dir.resolve(rel).toString): _*)
+    val physical = schema(name).fields.map(f => f.copy(name = physicalName(f)))
+    val part = partitionColumn(name).toSet
+    val partSchema = StructType(physical.filter(f => part(f.name)).map(_.copy(nullable = true)))
+    val dataSchema = StructType(physical.filterNot(f => part(f.name)).map(f =>
+      f.copy(dataType = Catalog.nullable(f.dataType), nullable = true)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(spark, dataDir(name), files, partSchema),
+      partSchema, dataSchema, bucketSpec = None, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Read a table back. Partition pruning applies when filtering on the
-    * partition column (`basePath` keeps the partition column in the
-    * schema). Physical storage names map back to logical ones, and files
-    * written before an addColumn read their nulls coalesced to the
-    * declared default (per-read, no physical backfill).
+  /** Read a table back: the head snapshot's manifest entries through
+    * [[readFiles]]. Partition pruning applies when filtering on the
+    * partition column, whose values come from the entries' Hive paths.
+    * Physical storage names map back to logical ones, and files written
+    * before an addColumn read their nulls coalesced to the declared
+    * default (per-read, no physical backfill). Two reads of one snapshot
+    * plan the same relation, so a cached read serves both.
     */
   def table(name: String): DataFrame = {
     val df = tableAt(name, currentVersion(name))
@@ -1738,8 +1739,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * `graft.dml.maxAffectedFiles`) finds files containing matched keys;
     * only those are rewritten under the clause logic, every other file is
     * untouched bytes. The clause decision itself is a single codegen'd
-    * CASE column over the affected-files ⋈ updates join — no per-clause
-    * passes. Returns (updatedRows, deletedRows, insertedRows).
+    * CASE column over one full outer join of the affected files' rows
+    * with the updates — update, delete and insert alike, no per-clause
+    * passes — and one action pass over it counts all three. Returns
+    * (updatedRows, deletedRows, insertedRows).
     */
   def mergeConditional(
       name: String, updates: DataFrame, key: String,
@@ -1761,44 +1764,48 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       "only the last WHEN NOT MATCHED clause may omit its AND condition"))
     keyUniqueCount(updates, key)
     val keys = updates.select(col(key)).distinct()
-    val updLogical = alignLogical(name, updates)
-    // all NOT MATCHED actions are INSERT *, so first-match reduces to
-    // any-match: one OR over the clause conditions
-    def inserts(candidates: DataFrame): DataFrame =
-      if (notMatched.isEmpty) candidates.limit(0)
-      else {
-        val cond = notMatched.map(_.map(expr).getOrElse(lit(true))).reduce(_ || _)
-        candidates.alias(sourceAlias).filter(coalesce(cond, lit(false)))
-      }
+    // the source rows, each flagged with whether a NOT MATCHED clause
+    // would insert it (all NOT MATCHED actions are INSERT *, so first-match
+    // reduces to any-match: one OR over the clause conditions), evaluated
+    // on the source alone so the conditions see only `sourceAlias`
+    val insertable = coalesce(
+      notMatched.map(_.map(expr).getOrElse(lit(true))).foldLeft(lit(false))(_ || _), lit(false))
+    val src = alignLogical(name, updates).alias(sourceAlias)
+      .withColumn(Catalog.InsertCol, insertable).withColumn(Catalog.SourceCol, lit(true))
+      .alias(sourceAlias)
     val hits = affectedFiles("merge", name, live)(_.join(keys, Seq(key), "left_semi"))
-    if (hits.isEmpty) return (0L, 0L, insert(name, inserts(updLogical)))
+    if (hits.isEmpty) return (0L, 0L, insert(name, src.filter(col(Catalog.InsertCol))))
     val affected = hits.map(_._1)
-    val affectedRows = toLogical(name, readFiles(name, affected))
-    // first applicable clause per pair, as one CASE chain ('keep' = no
-    // clause holds, or the target row had no source match at all)
-    val joined = affectedRows.alias(targetAlias).join(
-      updLogical.alias(sourceAlias),
-      col(s"$targetAlias.$key") === col(s"$sourceAlias.$key"), "left_outer")
+    // one full outer join of the affected files' rows with the source
+    // decides every row: a matched pair takes the first applicable
+    // matched clause ('keep' when none holds), a target row without a
+    // source match is kept, and a source row without a target match (the
+    // affected files hold every matched key by construction) is inserted
+    // or skipped. A NULL key matches nothing on either side.
+    val target = toLogical(name, readFiles(name, affected))
+      .withColumn(Catalog.TargetCol, lit(true)).alias(targetAlias)
+    val joined = target.join(src,
+      col(s"$targetAlias.$key") === col(s"$sourceAlias.$key"), "full_outer")
     val clauseChain = matched.foldRight(lit("keep"): org.apache.spark.sql.Column) { (c, els) =>
       when(coalesce(c.cond.map(expr).getOrElse(lit(true)), lit(false)),
         lit(if (c.delete) "delete" else "update")).otherwise(els)
     }
-    val act = when(col(s"$sourceAlias.$key").isNotNull, clauseChain)
-      .otherwise(lit("keep"))
+    val act =
+      when(col(s"$sourceAlias.${Catalog.SourceCol}").isNull, lit("keep"))
+        .when(col(s"$targetAlias.${Catalog.TargetCol}").isNull,
+          when(col(s"$sourceAlias.${Catalog.InsertCol}"), lit("insert")).otherwise(lit("skip")))
+        .otherwise(clauseChain)
     val decided = joined.withColumn(Catalog.ActionCol, act)
-    val actionCounts = decided.groupBy(Catalog.ActionCol).agg(count(lit(1)))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val kept = decided.filter(col(Catalog.ActionCol) === "keep")
-      .select(s.fieldNames.map(n => col(s"$targetAlias.$n")).toSeq: _*)
-    val updated = decided.filter(col(Catalog.ActionCol) === "update")
-      .select(s.fieldNames.map(n => col(s"$sourceAlias.$n").as(n)).toSeq: _*)
-    // source rows whose key matched NO target row (affected files contain
-    // every matched key by construction)
-    val ins = inserts(updLogical.join(affectedRows.select(col(key)), Seq(key), "left_anti"))
-    val nIns = ins.count()
-    commitRewrite(name, "merge", base, live, affected,
-      projectToPhysical(name, kept.unionByName(updated).unionByName(ins)))
-    (actionCounts.getOrElse("update", 0L), actionCounts.getOrElse("delete", 0L), nIns)
+      .filter(col(Catalog.ActionCol) =!= "skip")
+    // the one action pass: every decision's count
+    val counts = decided.groupBy(Catalog.ActionCol).agg(count(lit(1)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    // kept rows are the target's, updated and inserted rows the source's
+    val fromTarget = col(Catalog.ActionCol) === "keep"
+    commitRewrite(name, "merge", base, live, affected, projectToPhysical(name,
+      decided.filter(col(Catalog.ActionCol) =!= "delete").select(s.fieldNames.map(n =>
+        when(fromTarget, col(s"$targetAlias.$n")).otherwise(col(s"$sourceAlias.$n")).as(n)).toSeq: _*)))
+    (counts("update"), counts("delete"), counts("insert"))
   }
 
   /** A `file:` URI as [[logicalWithFile]] tags it → its data-dir-relative
@@ -1837,8 +1844,26 @@ object Catalog {
   /** Change-type column ('insert' | 'delete') appended by [[Catalog.tableChanges]]. */
   val ChangeCol = "_change"
 
-  /** Per-pair decision column of [[Catalog.mergeConditional]]'s CASE chain. */
+  /** `dt` with every nested field, element and map value nullable — the
+    * shape Spark's parquet read gives a user-specified data schema.
+    */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Per-row decision column of [[Catalog.mergeConditional]]'s CASE chain. */
   private[sources] val ActionCol = "__graft_merge_action"
+
+  /** [[Catalog.mergeConditional]]'s marks: a row's target side, its source
+    * side, and whether a NOT MATCHED clause would insert the source row.
+    */
+  private[sources] val TargetCol = "__graft_merge_target"
+  private[sources] val SourceCol = "__graft_merge_source"
+  private[sources] val InsertCol = "__graft_merge_insertable"
 
   /** One `WHEN MATCHED [AND cond] THEN UPDATE SET * | DELETE` clause. */
   final case class MatchedClause(cond: Option[String], delete: Boolean)

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.operators.Similarity.PqModel
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Persistence for trained model state — the train-once / serve-everywhere
   * discipline a 100 TB pipeline actually runs. An ANN index (PQ codebooks,
@@ -22,6 +21,8 @@ import org.apache.spark.sql.functions._
   * sanctioned MLlib-style driver hop — into local `Seq`s, which the
   * tokenizers bind into plans as typed literals or run driver-local;
   * data-sized artifacts (codes, assignment) stay distributed end to end.
+  * Every load reads its layout's known schema, so none runs a
+  * schema-inference job.
   */
 object ModelStore {
 
@@ -43,10 +44,10 @@ object ModelStore {
 
   /** Load [[savePq]]'s layout back into a [[PqModel]] (model-sized). */
   def loadPq(spark: SparkSession, dir: String): PqModel = {
-    val meta = spark.read.parquet(s"$dir/meta").head
+    val meta = spark.read.schema("m INT, sub_len INT").parquet(s"$dir/meta").head()
     val (m, subLen) = (meta.getInt(0), meta.getInt(1))
-    val rows = spark.read.parquet(s"$dir/codebooks")
-      .select(col("sub"), col("cl"), col("spos"), col("cm")).collect()
+    val rows = spark.read.schema("sub INT, cl BIGINT, spos INT, cm DOUBLE")
+      .parquet(s"$dir/codebooks").collect()
     val cents = (0 until m).map { j =>
       rows.filter(_.getInt(0) == j)
         .groupBy(_.getLong(1)).map { case (cl, rs) =>
@@ -64,7 +65,7 @@ object ModelStore {
 
   /** Load [[saveCentroids]]'s table back (model-sized). */
   def loadCentroids(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(dir).select(col("cluster"), col("centroid")).collect()
+    spark.read.schema("cluster BIGINT, centroid ARRAY<DOUBLE>").parquet(dir).collect()
       .map(r => r.getLong(0) -> (r.getSeq[Double](1).toVector: Seq[Double]))
       .sortBy(_._1).toSeq
 
@@ -81,9 +82,8 @@ object ModelStore {
 
   /** Load [[saveMerges]]'s table back in rank order (model-sized). */
   def loadMerges(spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    spark.read.parquet(s"$dir/merges")
-      .select(col("merge_rank"), col("lhs"), col("rhs"), col("pair_freq"))
-      .collect()
+    spark.read.schema("merge_rank INT, lhs STRING, rhs STRING, pair_freq BIGINT")
+      .parquet(s"$dir/merges").collect()
       .map { r =>
         // trust boundary: the trainers only ever learn [a-z]+ symbols
         // (the tokenizers' word alphabet) — enforce it HERE so a foreign
@@ -107,7 +107,7 @@ object ModelStore {
 
   /** Load [[saveUnigram]]'s piece table back by piece (model-sized). */
   def loadUnigram(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
-    spark.read.parquet(s"$dir/unigram").select("piece", "usage", "lp").collect()
+    spark.read.schema("piece STRING, usage BIGINT, lp BIGINT").parquet(s"$dir/unigram").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
 }

@@ -243,7 +243,8 @@ object StreamingOps {
       val (stream, mode) = build(session)
       val out = work.resolve("out").toString
       Replay(stream, mode, writeBatch(_, out, mode == OutputMode.Complete(), _), _ => {
-        val rows = spark.read.parquet(out)
+        // the batches carry the stream's own schema: no inference job
+        val rows = spark.read.schema(stream.schema).parquet(out)
         val latest =
           if (mode != OutputMode.Update()) rows.drop("batch")
           else {
@@ -616,8 +617,7 @@ object StreamingOps {
         .toDF("user_id", "start_us", "n_events", "sum_value")
       val out = work.resolve("out").toString
       Replay(stream, OutputMode.Append(), writeBatch(_, out, complete = false, _), _ => {
-        val closed = spark.read.parquet(out).drop("batch")
-          .select(col("user_id"), col("start_us"), col("n_events"), col("sum_value"))
+        val closed = spark.read.schema(stream.schema).parquet(out).drop("batch")
         // drain-free readout of the open tail: state as a table
         val open = spark.read.format("statestore")
           .option("stateVarName", "sess")

@@ -1338,21 +1338,30 @@ class CatalogSpec extends SparkSpec {
     assert(cat.tableChanges(t, 1, cat.currentVersion(t)).count() > 0)
   }
 
-  test("catalog ops run no more Spark jobs than their pinned counts") {
+  /** The descriptions of the Spark jobs `op` starts, in start order. */
+  private def jobsRunBy(op: => Any): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import spark.implicits._
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
     }
-    def jobsOf(op: => Any): Int = {
-      org.apache.spark.SpecAccess.drainListenerBus(sc)
-      jobs.set(0)
+    org.apache.spark.SpecAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
       op
       org.apache.spark.SpecAccess.drainListenerBus(sc)
-      jobs.get
-    }
+    } finally sc.removeSparkListener(listener)
+    descs.asScala.toSeq
+  }
+
+  test("catalog ops run no more Spark jobs than their pinned counts") {
+    import spark.implicits._
+    def jobsOf(op: => Any): Int = jobsRunBy(op).size
     val cat = freshCatalog()
     idTable(cat, "t", 200)
     val batch = spark.range(200, 260).select(col("id"),
@@ -1360,8 +1369,7 @@ class CatalogSpec extends SparkSpec {
     val upd = spark.range(190, 210).select(col("id"),
       (col("id") % 4).cast("int").as("p"), (col("id") * 10).as("v"))
     val cond = Seq((20L, 0, -1L), (21L, 1, 210L), (5000L, 0, 5L)).toDF("id", "p", "v")
-    sc.addSparkListener(listener)
-    val counts = try Seq(
+    val counts = Seq(
       "insert" -> jobsOf(cat.insert("t", batch)),
       "merge" -> jobsOf(cat.merge("t", upd, "id")),
       "deleteRows" -> jobsOf(cat.deleteRows("t", col("v") % 5 === 0)),
@@ -1373,15 +1381,128 @@ class CatalogSpec extends SparkSpec {
           Catalog.MatchedClause(None, delete = false)), Seq(None))),
       "compact" -> jobsOf(cat.compact("t")),
       "read" -> jobsOf(cat.table("t").filter(col("p") === 1).collect()))
-    finally sc.removeSparkListener(listener)
     info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
-    // one shared key-uniqueness pass (mergeConditional) and one write for
-    // the retained rows plus the incoming batch (replaceWhere)
-    val pinned = Map("insert" -> 1, "merge" -> 8, "deleteRows" -> 5, "updateRows" -> 3,
-      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 17, "compact" -> 2,
+    // one shared key-uniqueness pass and one full outer join whose one
+    // action pass counts every decision (mergeConditional), and one write
+    // for the retained rows plus the incoming batch (replaceWhere)
+    val pinned = Map("insert" -> 1, "merge" -> 8, "deleteRows" -> 3, "updateRows" -> 3,
+      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 14, "compact" -> 2,
       "read" -> 1)
     counts.foreach { case (op, n) =>
       assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at most ${pinned(op)}")
     }
+  }
+
+  /** An (id, day, v) table partitioned by `day` over 40 live files: ten
+    * single-task inserts of 40 rows, each writing one file per day.
+    */
+  private def fortyFileTable(cat: Catalog, t: String): Unit = {
+    cat.create(t, StructType(Seq(StructField("id", LongType),
+      StructField("day", StringType), StructField("v", LongType))), Some("day"))
+    (0 until 10).foreach { k =>
+      cat.insert(t, spark.range(k * 40L, (k + 1) * 40L).select(col("id"),
+        concat(lit("d"), (col("id") % 4).cast("string")).as("day"),
+        col("id").as("v")).coalesce(1))
+    }
+  }
+
+  test("reads and rewrites of a 40-file table plan from the manifest: no listing job") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32
+    // paths) a path-list read runs a "Listing leaf files" job per read
+    val cat = freshCatalog()
+    fortyFileTable(cat, "t")
+    assert(cat.history("t").last._3 == 40)
+    val upd = spark.range(30, 50).select(col("id"),
+      concat(lit("d"), (col("id") % 4).cast("string")).as("day"), (col("id") * 10).as("v"))
+    val runs = Seq(
+      "filtered read" -> jobsRunBy(cat.table("t").filter(col("day") === "d1").collect()),
+      "count" -> jobsRunBy(assert(cat.table("t").count() == 400)),
+      "tableAt" -> jobsRunBy(assert(cat.tableAt("t", 10).count() == 400)),
+      "deleteRows" -> jobsRunBy(assert(cat.deleteRows("t", col("v") === 7L) == 1)),
+      "merge" -> jobsRunBy(assert(cat.merge("t", upd, "id") == ((20L, 0L)))))
+    info(runs.map { case (op, d) => s"$op=${d.size}" }.mkString(" "))
+    runs.foreach { case (op, descs) =>
+      assert(!descs.exists(_.startsWith("Listing leaf files")),
+        s"$op ran a listing job: ${descs.mkString(" | ")}")
+    }
+    val pinned = Map("filtered read" -> 1, "count" -> 2, "tableAt" -> 2,
+      "deleteRows" -> 3, "merge" -> 8)
+    runs.foreach { case (op, descs) =>
+      assert(descs.size <= pinned(op), s"$op ran ${descs.size} Spark jobs, pinned at most ${pinned(op)}")
+    }
+    assert(cat.table("t").count() == 399)
+  }
+
+  test("a filter on the partition column scans only that partition's manifest files") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val cat = freshCatalog()
+    fortyFileTable(cat, "t")
+    def filesScanned(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      df.queryExecution.executedPlan.collectLeaves()
+        .collect { case s: FileSourceScanExec => s.metrics("numFiles").value }.sum
+    }
+    assert(filesScanned(cat.table("t").select("id")) == 40)
+    val d1 = cat.table("t").filter(col("day") === "d1").select("id")
+    assert(filesScanned(d1) == 10)
+    assert(d1.collect().map(_.getLong(0)).sorted.toSeq == (1L until 400L by 4))
+    assert(filesScanned(cat.tableAt("t", 3).filter(col("day") === "d2").select("id")) == 3)
+  }
+
+  test("a cached table(t) serves a second table(t) of the same snapshot, not the next one") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.withCachedData.collectFirst { case r: InMemoryRelation => r }.isDefined
+    val cat = freshCatalog()
+    idTable(cat, "t", 40)
+    val first = cat.table("t").cache()
+    try {
+      assert(first.count() == 40)
+      assert(cached(cat.table("t")))
+      assert(cached(cat.tableAt("t", cat.currentVersion("t"))))
+      cat.insert("t", spark.range(40, 44).select(col("id"),
+        (col("id") % 4).cast("int").as("p"), col("id").as("v")))
+      assert(!cached(cat.table("t")))
+      assert(cat.table("t").count() == 44)
+    } finally first.unpersist()
+  }
+
+  test("table, tableAt and tableChanges read back on a warehouse path with a space and a percent sign") {
+    val wh = Files.createDirectories(
+      Files.createTempDirectory("graft_cat_test_").resolve("wh with space%"))
+    val cat = new Catalog(spark, wh.toString)
+    idTable(cat, "t", 20)
+    cat.insert("t", spark.range(20, 30).select(col("id"),
+      (col("id") % 4).cast("int").as("p"), col("id").as("v")))
+    assert(idRows(cat, "t") === (0L until 30L).map(i => (i, (i % 4).toInt, i)))
+    assert(cat.tableAt("t", 1).orderBy("id").collect().map(_.getLong(0)).toSeq ===
+      (0L until 20L))
+    val changes = cat.tableChanges("t", 1, 2).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(3))).toSeq
+    assert(changes === (20L until 30L).map(_ -> "insert"))
+    assert(cat.table("t").filter(col("p") === 2).count() == 7)
+  }
+
+  test("empty snapshots and NULL partitions read through the manifest index") {
+    val cat = freshCatalog()
+    val s = StructType(Seq(StructField("id", LongType), StructField("day", StringType)))
+    cat.create("part", s, Some("day"))
+    cat.create("flat", s)
+    Seq("part", "flat").foreach { t =>
+      val empty = cat.table(t)
+      assert(empty.columns.toSeq == Seq("id", "day") && empty.count() == 0)
+      assert(cat.tableAt(t, 0).count() == 0)
+    }
+    // a NULL partition value lands in __HIVE_DEFAULT_PARTITION__ and
+    // reads back as NULL, prunable by IS NULL
+    cat.insert("part", spark.range(6).select(col("id"),
+      when(col("id") % 3 === 0, lit(null)).otherwise(concat(lit("d"), col("id") % 3))
+        .cast("string").as("day")))
+    assert(cat.partitions("part").contains("__HIVE_DEFAULT_PARTITION__"))
+    assert(cat.table("part").filter(col("day").isNull).orderBy("id")
+      .collect().map(_.getLong(0)).toSeq == Seq(0L, 3L))
+    assert(cat.table("part").filter(col("day") === "d1").count() == 2)
+    cat.truncate("part")
+    assert(cat.table("part").count() == 0)
   }
 }

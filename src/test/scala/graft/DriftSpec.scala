@@ -85,4 +85,34 @@ class DriftSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unsupported physical type"))
   }
+
+  test("a fixture's schema is inferred once per session and file identity") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(op: => Any): Int = {
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.set(0)
+      op
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+      jobs.get
+    }
+    Seq(sf0001, nanosDir).foreach(Tables.events(spark, _))
+    sc.addSparkListener(listener)
+    try {
+      // later loads read with the known schema, and the ts dispatch still
+      // sees each file's own encoding
+      assert(jobsOf {
+        assert(Tables.load(spark, sf0001, "events").schema("ts").dataType == TimestampNTZType)
+        assert(Tables.load(spark, nanosDir, "events").schema("ts").dataType == LongType)
+        Seq(sf0001, nanosDir).foreach(d =>
+          assert(Tables.events(spark, d).schema("ts").dataType == TimestampNTZType))
+      } == 0)
+      // another session infers its own
+      assert(jobsOf(Tables.load(spark.newSession(), sf0001, "events")) > 0)
+    } finally sc.removeSparkListener(listener)
+  }
 }
