@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.plans.SmallSortStrategy
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -14,13 +15,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * injects every graft SQL function into each new session's registry at
   * construction time (works with spark-submit, the thrift server, and
   * Connect servers alike — anywhere the session is built from conf rather
-  * than code). The per-session `register(spark)` helpers on the companion
-  * objects remain for programmatic use; this class is the zero-code-change
-  * route.
+  * than code), and adds the planner's [[graft.plans.SmallSortStrategy]].
+  * The per-session `register(spark)` helpers on the companion objects
+  * remain for programmatic use; this class is the zero-code-change route.
+  * A session built without it gets the strategy from
+  * [[GraftExtensions.install]], which graft calls on every session it
+  * builds or reads through.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => SmallSortStrategy)
+
     // arity-checked at resolution so a wrong-arity call surfaces as an
     // analysis error, not an IndexOutOfBoundsException from the builder
     def fn(name: String, arity: Int, usage: String)
@@ -57,6 +63,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         functions.TextFunctions.PiiPatterns.foldLeft(exprs.head) {
           case (e, (re, tag)) => RegExpReplace(e, Literal(re), Literal(tag))
         }
+    }
+  }
+}
+
+object GraftExtensions {
+  /** Append graft's planner strategy to `spark`'s extra strategies once;
+    * a second call changes nothing. `GraftSession.local`, `Tables.load`,
+    * the `Catalog` constructor and `Hustle.select` call it, so a session
+    * graft did not build plans graft's reads the same way from their
+    * first use.
+    */
+  def install(spark: SparkSession): Unit = {
+    val methods = spark.experimental
+    methods.synchronized {
+      if (!methods.extraStrategies.contains(SmallSortStrategy))
+        methods.extraStrategies = methods.extraStrategies :+ SmallSortStrategy
     }
   }
 }

@@ -37,6 +37,7 @@ object GraftSession {
     Seq("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
       "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution")
       .foreach(Configurator.setLevel(_, Level.ERROR))
+    GraftExtensions.install(spark)
     spark
   }
 }

@@ -28,6 +28,7 @@ object Tables {
   val all: Seq[String] = tpch ++ Seq("events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    GraftExtensions.install(spark)
     val path = s"$dir/$name.parquet"
     fileSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
   }

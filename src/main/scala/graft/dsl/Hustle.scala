@@ -77,7 +77,8 @@ object Hustle {
     * `join` is the two-table equi-join on a column pair; implicit GROUP BY
     * kicks in when aggregates are present; `distinct`, `order_by`+`desc`,
     * `limit` map to their DataFrame counterparts (sort+limit compiles to
-    * TakeOrderedAndProject — true distributed top-k).
+    * TakeOrderedAndProject — true distributed top-k; a sort of a small
+    * aggregated result runs in one task, [[graft.plans.SmallSortStrategy]]).
     */
   def select(projections: Proj*)(
       where: Seq[Pred] = Seq.empty,
@@ -123,6 +124,7 @@ object Hustle {
           s"${tables.size} tables referenced but no join given")
         filtered(tables.head.name)
     }
+    graft.GraftExtensions.install(base.sparkSession)
 
     // 4. implicit GROUP BY
     val aggs = projections.collect { case a: AggCol => a }

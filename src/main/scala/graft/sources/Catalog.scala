@@ -24,6 +24,7 @@ import scala.jdk.CollectionConverters._
   * at write time, not code).
   */
 final class Catalog(spark: SparkSession, val warehouse: String) {
+  graft.GraftExtensions.install(spark)
 
   private def tableDir(name: String) = Paths.get(warehouse, name)
   private def metaDir(name: String) = tableDir(name).resolve("_meta")
@@ -407,7 +408,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       .toDF("column", "n_rows", "n_nulls", "ndv_approx", "min_v", "max_v",
         "avg_width")
       .withColumn("analyzed_version", lit(currentVersion(name)))
-    out.coalesce(1).write.mode(SaveMode.Overwrite)
+    out.coalesce(1).write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.writeOptions)
       .json(metaDir(name).resolve("stats").toString)
     // a pre-ANALYZE read may have memoized "no fresh stats" for this
     // snapshot — drop it so planning sees the new stats immediately
@@ -951,9 +952,14 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** The one writer of table data: insert, every copy-on-write rewrite,
+    * `merge`, `compact` and `nest` stage their files through it. Its
+    * local files and directories get their permissions without a forked
+    * `chmod` ([[NioLocalFileSystem]]).
+    */
   private def writeData(name: String, projected: DataFrame,
       target: String, mode: SaveMode): Unit = {
-    var writer = projected.write.mode(mode)
+    var writer = projected.write.mode(mode).options(NioLocalFileSystem.writeOptions)
     // bloom filters for index-marked columns (reference's bitmap-index analog)
     indexedColumns(name).foreach { c =>
       writer = writer.option(s"parquet.bloom.filter.enabled#$c", "true")
@@ -1682,7 +1688,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val s = schema(name)
     require(s.fieldNames.contains(key), s"merge key $key not in schema of $name")
     val nUpd = keyUniqueCount(updates, key)
-    val keys = updates.select(col(key)).distinct()
+    // the semi and anti joins below ignore duplicate keys (and
+    // keyUniqueCount has rejected them), so the keys need no distinct
+    val keys = updates.select(col(key))
     val updLogical = alignLogical(name, updates)
     if (live.isEmpty) { insert(name, updLogical); return (0L, nUpd) }
     // one rollup pass: the per-file rows are the rewrite set, the
@@ -1763,7 +1771,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     notMatched.dropRight(1).foreach(c => require(c.isDefined,
       "only the last WHEN NOT MATCHED clause may omit its AND condition"))
     keyUniqueCount(updates, key)
-    val keys = updates.select(col(key)).distinct()
+    // the semi and anti joins below ignore duplicate keys (and
+    // keyUniqueCount has rejected them), so the keys need no distinct
+    val keys = updates.select(col(key))
     // the source rows, each flagged with whether a NOT MATCHED clause
     // would insert it (all NOT MATCHED actions are INSERT *, so first-match
     // reduces to any-match: one OR over the clause conditions), evaluated

@@ -27,6 +27,14 @@ object Bridge {
       spark: org.apache.spark.sql.SparkSession): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
 
+  /** The planner strategies a built-up `SparkSessionExtensions` injects
+    * (`buildPlannerStrategies` is `private[sql]`).
+    */
+  def plannerStrategies(
+      ext: org.apache.spark.sql.SparkSessionExtensions,
+      spark: org.apache.spark.sql.SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    ext.buildPlannerStrategies(spark)
+
   /** Deconstruct a `col === literal` (either operand order) Column into
     * (columnName, literalValue) — used by predicate-form DDL (partition
     * delete) to validate conditions WITHOUT an analyzer pass. Returns None

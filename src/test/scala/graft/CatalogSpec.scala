@@ -1338,27 +1338,6 @@ class CatalogSpec extends SparkSpec {
     assert(cat.tableChanges(t, 1, cat.currentVersion(t)).count() > 0)
   }
 
-  /** The descriptions of the Spark jobs `op` starts, in start order. */
-  private def jobsRunBy(op: => Any): Seq[String] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    org.apache.spark.SpecAccess.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      op
-      org.apache.spark.SpecAccess.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    descs.asScala.toSeq
-  }
-
   test("catalog ops run no more Spark jobs than their pinned counts") {
     import spark.implicits._
     def jobsOf(op: => Any): Int = jobsRunBy(op).size
@@ -1383,13 +1362,73 @@ class CatalogSpec extends SparkSpec {
       "read" -> jobsOf(cat.table("t").filter(col("p") === 1).collect()))
     info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
     // one shared key-uniqueness pass and one full outer join whose one
-    // action pass counts every decision (mergeConditional), and one write
-    // for the retained rows plus the incoming batch (replaceWhere)
+    // action pass counts every decision, with no distinct pass over the
+    // source keys (mergeConditional), and one write for the retained rows
+    // plus the incoming batch (replaceWhere)
     val pinned = Map("insert" -> 1, "merge" -> 8, "deleteRows" -> 3, "updateRows" -> 3,
-      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 14, "compact" -> 2,
+      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 13, "compact" -> 2,
       "read" -> 1)
     counts.foreach { case (op, n) =>
       assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at most ${pinned(op)}")
+    }
+  }
+
+  test("a Hustle.select groupBy + orderBy over Catalog.table runs 2 Spark jobs") {
+    import graft.dsl.Hustle
+    import graft.dsl.Hustle._
+    val cat = freshCatalog()
+    idTable(cat, "t", 200)
+    val tb = GTable("t", cat.table("t"))
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = jobsRunBy {
+      rows = Hustle.select(tb("p"), h_count(), h_sum(tb("v")))(
+        where = Seq(tb("v") >= 20L), orderBy = Seq(tb("p"))).collect().toSeq
+    }
+    // the aggregation stage, then one task sorts its 4 rows: no sampling
+    // job and no range shuffle
+    assert(jobs.size <= 2, jobs.mkString(" | "))
+    assert(rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))) ==
+      (0 until 4).map(p => (p, 45L, (20L until 200L).filter(_ % 4 == p).sum)))
+  }
+
+  private def posixOf(p: java.nio.file.Path): String =
+    java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  test("catalog data files and partition directories get the stock local-write permissions") {
+    val cat = freshCatalog()
+    idTable(cat, "t", 40)
+    val stock = Files.createTempDirectory("graft_stock_write_").resolve("out")
+    spark.range(40).select(col("id"), (col("id") % 4).cast("int").as("p"), col("id").as("v"))
+      .repartition(2).write.partitionBy("p").parquet(stock.toString)
+    def perms(root: java.nio.file.Path): (Set[String], Set[String]) = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(root)
+      val all = try s.iterator().asScala.toSeq finally s.close()
+      (all.filter(_.getFileName.toString.endsWith(".parquet")).map(posixOf).toSet,
+        all.filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("p="))
+          .map(posixOf).toSet)
+    }
+    val (files, dirs) = perms(java.nio.file.Paths.get(cat.warehouse, "t", "data"))
+    assert(files.nonEmpty && dirs.size == 1)
+    assert((files, dirs) == perms(stock))
+    info(s"files ${files.mkString} dirs ${dirs.mkString}")
+  }
+
+  test("NioLocalFileSystem sets the same permission bits as RawLocalFileSystem") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = Files.createTempDirectory("graft_nio_perm_")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    def fs(raw: RawLocalFileSystem) = { raw.initialize(java.net.URI.create("file:///"), conf); raw }
+    val (stock, nio) = (fs(new RawLocalFileSystem), fs(new graft.sources.NioLocalFileSystem.Raw))
+    Seq("644", "755", "600").foreach { mode =>
+      val perm = new FsPermission(Integer.parseInt(mode, 8).toShort)
+      val (a, b) = (dir.resolve(s"stock_$mode"), dir.resolve(s"nio_$mode"))
+      Files.createFile(a); Files.createFile(b)
+      stock.setPermission(new Path(a.toUri), perm)
+      nio.setPermission(new Path(b.toUri), perm)
+      assert(posixOf(b) == posixOf(a), mode)
+      assert(posixOf(b) == perm.toString, mode)
     }
   }
 

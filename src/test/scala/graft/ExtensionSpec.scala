@@ -47,6 +47,13 @@ class ExtensionSpec extends SparkSpec {
     assert(e.getMessage.contains("cosine_similarity"))
   }
 
+  test("GraftExtensions injects the small-sort planner strategy") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions()(ext)
+    assert(org.apache.spark.sql.graft.Bridge.plannerStrategies(ext, spark) ===
+      Seq(graft.plans.SmallSortStrategy))
+  }
+
   test("native cosine registers as a SQL function") {
     CosineSimilarity.register(spark)
     Tables.embeddings(spark, sf0001).limit(5).createOrReplaceTempView("emb_t")

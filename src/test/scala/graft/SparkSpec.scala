@@ -9,6 +9,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** The descriptions of the Spark jobs `op` starts, in start order. */
+  def jobsRunBy(op: => Any): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    org.apache.spark.SpecAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      op
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    descs.asScala.toSeq
+  }
 }
 
 object SparkSpec {

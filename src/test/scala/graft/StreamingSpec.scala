@@ -390,27 +390,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming rows run no more Spark jobs than their pinned counts") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val rows = Seq("stream_user_totals", "stream_hourly_agg", "stream_session_timers",
       "kafka_wire_parse")
     def run(row: String): Unit = SparkEntry.queries(row)(spark, sf0001).collect()
     // a first run stages each row's fixture; the counts cover the replay
     // from a published stage, which is what every later run does
     rows.foreach(run)
-    def jobsOf(row: String): Int = {
-      org.apache.spark.SpecAccess.drainListenerBus(sc)
-      jobs.set(0)
-      run(row)
-      org.apache.spark.SpecAccess.drainListenerBus(sc)
-      jobs.get
-    }
-    sc.addSparkListener(listener)
-    val counts = try rows.map(r => r -> jobsOf(r)) finally sc.removeSparkListener(listener)
+    val counts = rows.map(r => r -> jobsRunBy(run(r)).size)
     info(counts.map { case (r, n) => s"$r=$n" }.mkString(" "))
     // the sink output is re-read with the stream's schema: no inference job
     val pinned = Map("stream_user_totals" -> 6, "stream_hourly_agg" -> 5,
