@@ -212,7 +212,8 @@ object StressScale {
     val counts = Seq(
       "docs" -> docs.count(),
       "vecs" -> emb.count(),
-      // LSH band-bucket candidates vs verified J>=0.8 pairs
+      // LSH band-bucket candidates (the set minHashNearDupPairs verifies)
+      // vs verified J>=0.8 pairs
       "minhash_candidates" ->
         Dedup.lshCandidatePairs(docs, "doc_id", sh3, 32, 2).count(),
       "minhash_pairs" ->

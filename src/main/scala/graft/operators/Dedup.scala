@@ -115,46 +115,41 @@ object Dedup {
       .select(col(id), xxhash64(col("sh")).as("sh"))
       .transform(graft.Tables.pin))
 
-  /** Exact pairwise Jaccard over a shingle set, computed distributively:
-    * explode → self-equi-join on the shingle → intersection counts → join
-    * per-doc set sizes. `maxDocFreq` (None = keep all) drops shingles
-    * appearing in more than that many docs before the self-join — the
-    * scale guard against quadratic hot keys.
+  /** Exact pairwise Jaccard over a shingle set, computed distributively
+    * by [[overlapPairs]]: |A∩B| / (|A| + |B| − |A∩B|). `maxDocFreq`
+    * (None = keep all) drops shingles appearing in more than that many
+    * docs before the self-join — the scale guard against quadratic hot
+    * keys.
     */
   def exactJaccardPairs(
       docs: DataFrame, id: String, shingles: Column,
       threshold: Double, maxDocFreq: Option[Long] = None): DataFrame =
-      withShingleCache(docs, id, shingles) { sh0 =>
-    val sh = maxDocFreq match {
-      case Some(cap) =>
-        val hot = sh0.groupBy("sh").count().filter(col("count") > cap).select("sh")
-        sh0.join(broadcast(hot), Seq("sh"), "left_anti")
-      case None => sh0
-    }
-    val sz = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val a = sh.select(col(id).as("doc_a"), col("sh"))
-    val b = sh.select(col(id).as("doc_b"), col("sh"))
-    val inter = a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sz.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(sz.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-  }
+    overlapPairs(docs, id, shingles, threshold, maxDocFreq, "jaccard")(
+      (inter, na, nb) => inter.cast("double") / (na + nb - inter))
 
   /** Exact pairwise CONTAINMENT — |A∩B| / min(|A|,|B|) — over a shingle
     * set: the quote/subset detector (a short document fully contained in
     * a long one scores 1.0 while its Jaccard can be arbitrarily low, so
-    * a Jaccard gate never finds it). Same distributive skeleton and
+    * a Jaccard gate never finds it). Same [[overlapPairs]] skeleton and
     * hot-shingle cap as [[exactJaccardPairs]]; only the denominator
     * differs.
     */
   def containmentPairs(
       docs: DataFrame, id: String, shingles: Column,
       threshold: Double, maxDocFreq: Option[Long] = None): DataFrame =
+    overlapPairs(docs, id, shingles, threshold, maxDocFreq, "containment")(
+      (inter, na, nb) => inter.cast("double") / least(na, nb))
+
+  /** The overlap pair join behind [[exactJaccardPairs]] and
+    * [[containmentPairs]]: explode → drop shingles above `maxDocFreq` →
+    * self-equi-join on the shingle → intersection counts → join per-doc
+    * set sizes, then keep the pairs whose `score(n_inter, n_a, n_b)`
+    * reaches `threshold`. Output (doc_a < doc_b, `scoreName`).
+    */
+  private def overlapPairs(
+      docs: DataFrame, id: String, shingles: Column, threshold: Double,
+      maxDocFreq: Option[Long], scoreName: String)(
+      score: (Column, Column, Column) => Column): DataFrame =
       withShingleCache(docs, id, shingles) { sh0 =>
     val sh = maxDocFreq match {
       case Some(cap) =>
@@ -170,18 +165,27 @@ object Dedup {
     inter
       .join(sz.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
       .join(sz.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .withColumn("containment",
-        col("n_inter").cast("double") / least(col("n_a"), col("n_b")))
-      .filter(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "containment")
+      .withColumn(scoreName, score(col("n_inter"), col("n_a"), col("n_b")))
+      .filter(col(scoreName) >= threshold)
+      .select("doc_a", "doc_b", scoreName)
   }
+
+  /** (id, sh, h) exploded shingles with `h` = xxhash64(shingle) mod P, the
+    * per-shingle input of both aggregate signature formulations.
+    */
+  private def hashedShingles(docs: DataFrame, id: String, shingles: Column): DataFrame =
+    explodedShingles(docs, id, shingles).withColumn("h", pmod(xxhash64(col("sh")), lit(P)))
 
   /** MinHash signatures: one row per doc, `numHashes` min-hash values.
     * Column names m0..m{n-1}. Linear scan + one groupBy(id).
     */
   def minHashSignatures(
-      docs: DataFrame, id: String, shingles: Column, numHashes: Int): DataFrame =
-    minHashSignaturesOn(explodedShingles(docs, id, shingles), id, numHashes)
+      docs: DataFrame, id: String, shingles: Column, numHashes: Int): DataFrame = {
+    val mins = permConstants(numHashes).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(col("h") * lit(a) + lit(b), lit(P))).as(s"m$i")
+    }
+    hashedShingles(docs, id, shingles).groupBy(col(id)).agg(mins.head, mins.tail: _*)
+  }
 
   /** Same signatures via the custom typed [[graft.functions.MinHashAggregator]]
     * (one buffer per group instead of N planned min() aggregates) —
@@ -190,62 +194,31 @@ object Dedup {
     */
   def minHashSignaturesViaAggregator(
       docs: DataFrame, id: String, shingles: Column, numHashes: Int): DataFrame = {
-    val sh = explodedShingles(docs, id, shingles)
-      .withColumn("h", pmod(xxhash64(col("sh")), lit(P)))
     val agg = udaf(new graft.functions.MinHashAggregator(numHashes, permConstants(numHashes)))
-    sh.groupBy(col(id)).agg(agg(col("h")).as("sig"))
+    hashedShingles(docs, id, shingles).groupBy(col(id)).agg(agg(col("h")).as("sig"))
   }
 
-  private def minHashSignaturesOn(
-      sh: DataFrame, id: String, numHashes: Int): DataFrame = {
-    val hashed = sh.withColumn("h", pmod(xxhash64(col("sh")), lit(P)))
-    val mins = permConstants(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(P))).as(s"m$i")
-    }
-    hashed.groupBy(col(id)).agg(mins.head, mins.tail: _*)
-  }
-
-  /** The explode + min() aggregate signature formulation over a per-doc
-    * hashed-shingle ARRAY column named `arr` — retained as the spec
-    * witness for the fused [[graft.plans.MinHashSig]] kernel, sharing
-    * THIS object's P and permutation family so the two paths cannot
-    * silently diverge. Output columns m0..m{n-1}.
+  /** The explode + min() aggregate signature formulation
+    * ([[minHashSignatures]]) over a per-doc hashed-shingle ARRAY column
+    * named `arr` — retained as the spec witness for the fused
+    * [[graft.plans.MinHashSig]] kernel, sharing THIS object's P and
+    * permutation family so the two paths cannot silently diverge. Output
+    * columns m0..m{n-1}.
     */
-  private[graft] def minHashSigAgg(arr: DataFrame, id: String, numHashes: Int): DataFrame = {
-    val mins = permConstants(numHashes).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * lit(a) + lit(b), lit(P))).as(s"m$i")
-    }
-    arr.select(col(id), explode(col("arr")).as("e"))
-      .withColumn("h", pmod(xxhash64(col("e")), lit(P)))
-      .groupBy(col(id)).agg(mins.head, mins.tail: _*)
-  }
+  private[graft] def minHashSigAgg(arr: DataFrame, id: String, numHashes: Int): DataFrame =
+    minHashSignatures(arr, id, col("arr"), numHashes)
 
-  /** LSH candidate pairs from banded MinHash signatures (bands of `r`
-    * rows): docs sharing any band bucket. P(candidate) = 1-(1-J^r)^b —
-    * with 32 hashes and r=2 (16 bands), recall at J≥0.8 is 1 − 0.36^16 ≈
-    * 1 − 8e-8; more hashes only add signature cost AND more sub-threshold
-    * junk candidates for the verify step (both scale with b).
+  /** LSH candidate pairs (doc_a < doc_b) from banded MinHash signatures
+    * (bands of `bandRows` rows): docs sharing any band bucket — exactly
+    * the candidate set [[minHashNearDupPairs]] verifies. P(candidate) =
+    * 1-(1-J^r)^b — with 32 hashes and r=2 (16 bands), recall at J≥0.8 is
+    * 1 − 0.36^16 ≈ 1 − 8e-8; more hashes only add signature cost AND more
+    * sub-threshold junk candidates for the verify step (both scale with b).
     */
   def lshCandidatePairs(
       docs: DataFrame, id: String, shingles: Column,
       numHashes: Int, bandRows: Int): DataFrame =
-    lshCandidatePairsOn(explodedShingles(docs, id, shingles), id, numHashes, bandRows)
-
-  private def lshCandidatePairsOn(
-      sh: DataFrame, id: String, numHashes: Int, bandRows: Int): DataFrame = {
-    val sig = minHashSignaturesOn(sh, id, numHashes)
-    val numBands = numHashes / bandRows
-    val bands = (0 until numBands).map { j =>
-      val cols = (0 until bandRows).map(k => col(s"m${j * bandRows + k}"))
-      struct(lit(j).as("band"), hash(cols: _*).as("key"))
-    }
-    val exploded = sig.select(col(id), explode(array(bands: _*)).as("bk"))
-      .select(col(id), col("bk.band"), col("bk.key"))
-    exploded.as("x").join(exploded.as("y"), Seq("band", "key"))
-      .filter(col(s"x.$id") < col(s"y.$id"))
-      .select(col(s"x.$id").as("doc_a"), col(s"y.$id").as("doc_b"))
-      .distinct()
-  }
+    selfCandidates(hashedShingleArr(docs, id, shingles), id, numHashes, bandRows)
 
   /** Exact threshold-Jaccard with PPJoin-style filtering: order each doc's
     * shingles by global document frequency (rarest first); a pair with
@@ -326,45 +299,25 @@ object Dedup {
         col("ub").cast("double")
           >= lit(threshold / (1 + threshold)) * (col("na") + col("nb")) - lit(eps))
       .select("doc_a", "doc_b")
-    verifyJaccardArr(cand, arr, id, threshold)
+    verifyJaccardArr(cand, arr, id, arr, id, threshold)
   }
 
-  /** Exact Jaccard for a given candidate-pair set only: the shingle join
-    * fans out per candidate pair, never across the whole corpus — this is
-    * what makes LSH + verify linear-ish at 100 TB.
-    */
-  def verifyJaccard(
-      candidates: DataFrame, docs: DataFrame, id: String, shingles: Column,
-      threshold: Double): DataFrame =
-    withShingleCache(docs, id, shingles)(
-      verifyJaccardOn(candidates, _, id, threshold))
-
-  private def verifyJaccardOn(
-      candidates: DataFrame, sh: DataFrame, id: String,
-      threshold: Double): DataFrame =
-    verifyJaccardArr(
-      candidates,
-      // collect_set, not collect_list: [[verifyJaccardArr]] sizes the union
-      // from size(arr) but intersects with array_intersect (which dedups) —
-      // duplicate shingles from a caller would inflate denominators only.
-      // Internal callers pass distinct shingles already; this keeps the
-      // public verifyJaccard exact for any input.
-      sh.groupBy(col(id)).agg(collect_set(col("sh")).as("arr")),
-      id, threshold)
-
-  /** Exact Jaccard over candidate pairs given a per-doc (distinct) shingle
-    * ARRAY table: two equi-joins + an `array_intersect` per pair, instead
-    * of the r3 explode-join-groupBy (3 shuffles → 2, and the pair-side
-    * shuffle carries one row per pair, not one per shared shingle). The
-    * per-doc array is bounded by document length, so carrying it through
-    * the join is safe at 100 TB.
+  /** Exact Jaccard over candidate pairs given per-doc (distinct) shingle
+    * ARRAY tables for each side (`arrA` keyed by `idA` for doc_a, `arrB`
+    * by `idB` for doc_b): two equi-joins + an `array_intersect` per pair,
+    * instead of the r3 explode-join-groupBy (3 shuffles → 2, and the
+    * pair-side shuffle carries one row per pair, not one per shared
+    * shingle). The per-doc array is bounded by document length, so
+    * carrying it through the join is safe at 100 TB. This is what makes
+    * LSH + verify linear-ish: the shingle join fans out per candidate
+    * pair, never across the whole corpus.
     */
   private def verifyJaccardArr(
-      candidates: DataFrame, arr: DataFrame, id: String,
-      threshold: Double): DataFrame =
+      candidates: DataFrame, arrA: DataFrame, idA: String,
+      arrB: DataFrame, idB: String, threshold: Double): DataFrame =
     candidates
-      .join(arr.select(col(id).as("doc_a"), col("arr").as("arr_a")), "doc_a")
-      .join(arr.select(col(id).as("doc_b"), col("arr").as("arr_b")), "doc_b")
+      .join(arrA.select(col(idA).as("doc_a"), col("arr").as("arr_a")), "doc_a")
+      .join(arrB.select(col(idB).as("doc_b"), col("arr").as("arr_b")), "doc_b")
       .withColumn("n_inter",
         size(array_intersect(col("arr_a"), col("arr_b"))).cast("long"))
       .withColumn("jaccard",
@@ -389,12 +342,7 @@ object Dedup {
       numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
     // reused: signatures + both verification sides
     val arr = hashedShingleArr(docs, id, shingles)
-    val exploded = bandKeys(arr, id, numHashes, bandRows)
-    val cand = exploded.as("x").join(exploded.as("y"), Seq("band", "key"))
-      .filter(col(s"x.$id") < col(s"y.$id"))
-      .select(col(s"x.$id").as("doc_a"), col(s"y.$id").as("doc_b"))
-      .distinct()
-    verifyJaccardArr(cand, arr, id, threshold)
+    verifyJaccardArr(selfCandidates(arr, id, numHashes, bandRows), arr, id, arr, id, threshold)
   }
 
   /** Per-doc distinct hashed-shingle arrays, eagerly checkpointed (each
@@ -407,10 +355,15 @@ object Dedup {
       .transform(graft.Tables.pin)
 
   /** (id, band, key) LSH bucket keys from banded per-row MinHash
-    * signatures over a hashed-shingle array table.
+    * signatures over a hashed-shingle array table: `numHashes / bandRows`
+    * bands of `bandRows` signature components each, so `bandRows` must
+    * divide `numHashes` (a remainder would silently drop components).
     */
   private def bandKeys(
       arr: DataFrame, id: String, numHashes: Int, bandRows: Int): DataFrame = {
+    require(bandRows >= 1 && bandRows <= numHashes && numHashes % bandRows == 0,
+      s"bandRows must be in [1, numHashes] and divide numHashes, " +
+        s"got bandRows = $bandRows, numHashes = $numHashes")
     val sig = arr.select(col(id),
       graft.plans.MinHashSig.minHashSig(col("arr"), permConstants(numHashes)).as("sig"))
     val bands = (0 until numHashes / bandRows).map { j =>
@@ -419,6 +372,25 @@ object Dedup {
     }
     sig.select(col(id), explode(array(bands: _*)).as("bk"))
       .select(col(id), col("bk.band"), col("bk.key"))
+  }
+
+  /** The band-bucket candidate join over two [[bandKeys]] tables: (x's id
+    * as doc_a, y's id as doc_b) for every pair of rows sharing a (band,
+    * key) bucket, distinct — quadratic only inside a bucket.
+    */
+  private def bandCandidates(
+      x: DataFrame, xId: String, y: DataFrame, yId: String): DataFrame =
+    x.as("x").join(y.as("y"), Seq("band", "key"))
+      .select(col(s"x.$xId").as("doc_a"), col(s"y.$yId").as("doc_b"))
+      .distinct()
+
+  /** One corpus's band-bucket candidates, each unordered pair once
+    * (doc_a < doc_b).
+    */
+  private def selfCandidates(
+      arr: DataFrame, id: String, numHashes: Int, bandRows: Int): DataFrame = {
+    val keys = bandKeys(arr, id, numHashes, bandRows)
+    bandCandidates(keys, id, keys, id).filter(col("doc_a") < col("doc_b"))
   }
 
   /** Near-dup pairs ACROSS two corpora: (left id as doc_a, right id as
@@ -435,20 +407,10 @@ object Dedup {
       threshold: Double, numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
     val arrL = hashedShingleArr(left, leftId, leftShingles)
     val arrR = hashedShingleArr(right, rightId, rightShingles)
-    val cand = bandKeys(arrL, leftId, numHashes, bandRows).as("x")
-      .join(bandKeys(arrR, rightId, numHashes, bandRows).as("y"), Seq("band", "key"))
-      .select(col(s"x.$leftId").as("doc_a"), col(s"y.$rightId").as("doc_b"))
-      .distinct()
-    cand
-      .join(arrL.select(col(leftId).as("doc_a"), col("arr").as("arr_a")), "doc_a")
-      .join(arrR.select(col(rightId).as("doc_b"), col("arr").as("arr_b")), "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("arr_a"), col("arr_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double")
-          / (size(col("arr_a")) + size(col("arr_b")) - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    val cand = bandCandidates(
+      bandKeys(arrL, leftId, numHashes, bandRows), leftId,
+      bandKeys(arrR, rightId, numHashes, bandRows), rightId)
+    verifyJaccardArr(cand, arrL, leftId, arrR, rightId, threshold)
   }
 
   /** Persist a MinHash LSH index over a corpus: the banded bucket keys
@@ -487,21 +449,9 @@ object Dedup {
       batch: DataFrame, id: String, shingles: Column, threshold: Double,
       numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
     val arrB = hashedShingleArr(batch, id, shingles)
-    val cand = cat.table(s"${name}_bands").as("x")
-      .join(bandKeys(arrB, id, numHashes, bandRows).as("y"), Seq("band", "key"))
-      .select(col(s"x.$id").as("doc_a"), col(s"y.$id").as("doc_b"))
-      .distinct()
-    cand
-      .join(cat.table(s"${name}_arr")
-        .select(col(id).as("doc_a"), col("arr").as("arr_a")), "doc_a")
-      .join(arrB.select(col(id).as("doc_b"), col("arr").as("arr_b")), "doc_b")
-      .withColumn("n_inter",
-        size(array_intersect(col("arr_a"), col("arr_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double")
-          / (size(col("arr_a")) + size(col("arr_b")) - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    val cand = bandCandidates(
+      cat.table(s"${name}_bands"), id, bandKeys(arrB, id, numHashes, bandRows), id)
+    verifyJaccardArr(cand, cat.table(s"${name}_arr"), id, arrB, id, threshold)
   }
 
   /** 60-bit SimHash of the token multiset: per-bit majority vote of
@@ -730,6 +680,22 @@ object Dedup {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
+  /** Oracle CTE chain of the doc-frequency-capped rows (the same cap 5
+    * as [[exactJaccardPairs]]' `maxDocFreq`): distinct 3-word shingles
+    * `sh0`, the stop shingles `hot` dropped into `sh`, per-doc sizes `sz`
+    * and pair intersection counts `inter` (da < db).
+    */
+  private val cappedOverlapCte =
+    """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+      |sh0 AS (SELECT doc_id, unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+      |                                             FOR i IN range(1, len(ws)-1)])) AS s
+      |        FROM w WHERE len(ws) >= 3),
+      |hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > 5),
+      |sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
+      |sz AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
+      |inter AS (SELECT a.doc_id da, b.doc_id db, count(*) i
+      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)""".stripMargin
+
   val queries: Seq[Q] = Seq(
     // ---- exact dedup: keeper per identical text ----
     Q(
@@ -791,15 +757,7 @@ object Dedup {
     // sf0.01, ~25k at sf0.1) while keeping the join sparse ----
     Q(
       "dedup_jaccard_capped",
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |sh0 AS (SELECT doc_id, unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-        |                                             FOR i IN range(1, len(ws)-1)])) AS s
-        |        FROM w WHERE len(ws) >= 3),
-        |hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > 5),
-        |sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-        |sz AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id da, b.doc_id db, count(*) i
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
+      s"""$cappedOverlapCte
         |SELECT da AS doc_a, db AS doc_b,
         |  i*1.0/(sa.n + sb.n - i) AS jaccard
         |FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
@@ -823,15 +781,7 @@ object Dedup {
     // are integer-division of exact micros sums ----
     Q(
       "dedup_minhash_calibration",
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |sh0 AS (SELECT doc_id, unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-        |                                             FOR i IN range(1, len(ws)-1)])) AS s
-        |        FROM w WHERE len(ws) >= 3),
-        |hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > 5),
-        |sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-        |sz AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id da, b.doc_id db, count(*) i
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2),
+      s"""$cappedOverlapCte,
         |pairs AS (SELECT da, db,
         |    CAST(FLOOR(i*1000000.0/(sa.n + sb.n - i) + 0.5) AS BIGINT) AS jac_mic
         |  FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
@@ -899,15 +849,7 @@ object Dedup {
     // prefix-join cost profile as the capped Jaccard row ----
     Q(
       "dedup_containment",
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-        |sh0 AS (SELECT doc_id, unnest(list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-        |                                             FOR i IN range(1, len(ws)-1)])) AS s
-        |        FROM w WHERE len(ws) >= 3),
-        |hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > 5),
-        |sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-        |sz AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id da, b.doc_id db, count(*) i
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1,2)
+      s"""$cappedOverlapCte
         |SELECT da AS doc_a, db AS doc_b,
         |  i*1.0/LEAST(sa.n, sb.n) AS containment
         |FROM inter JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db

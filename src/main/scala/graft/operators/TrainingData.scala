@@ -199,9 +199,15 @@ object TrainingData {
     * in a pair, its component id (min doc id in the cluster), cluster
     * size, and whether it is the cluster's keeper.
     */
-  def dupClusters(pairs: DataFrame, a: String, b: String): DataFrame = {
+  def dupClusters(pairs: DataFrame, a: String, b: String): DataFrame =
+    clustersOf(connectedComponents(pairs, a, b))
+
+  /** [[dupClusters]]' table over a (node, component) table from either
+    * components formulation.
+    */
+  private def clustersOf(components: DataFrame): DataFrame = {
     val w = Window.partitionBy("component")
-    connectedComponents(pairs, a, b)
+    components
       .select(col("node").as("doc_id"), col("component"),
         count(lit(1)).over(w).as("n_members"))
       .withColumn("is_keeper", col("doc_id") === col("component"))
@@ -294,14 +300,6 @@ object TrainingData {
           .otherwise(lit(0.0)) + lit(0.5)).cast("long").as("overlap_micros"))
   }
 
-  /** Fuzzy decontamination: flag training documents whose shingle-set
-    * Jaccard against ANY benchmark document reaches `threshold` — the
-    * near-duplicate form of [[decontaminate]], catching lightly
-    * paraphrased eval material that exact n-gram overlap misses.
-    * Candidates come from the two-sided MinHash band join
-    * ([[Dedup.minHashCrossPairs]]), so the training corpus is scanned
-    * once and never crossed against the benchmark.
-    */
   /** Semantic decontamination: flag training rows whose EMBEDDING is
     * near-identical (cosine ≥ `threshold`) to any benchmark embedding —
     * the representation-space member of the decontamination family
@@ -313,24 +311,32 @@ object TrainingData {
     */
   def decontaminateSemantic(
       docs: DataFrame, benchmark: DataFrame, id: String, vec: String,
-      threshold: Double, dim: Int, bits: Int = 32): DataFrame = {
-    val matches = Similarity
-      .srpCrossPairs(docs, id, benchmark, id, vec, threshold, dim, bits)
-      .groupBy("train_id").agg(count(lit(1)).as("n_matches"))
-      .withColumnRenamed("train_id", id)
-    docs.select(col(id))
-      .join(matches, Seq(id), "left")
-      .select(col(id), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        (coalesce(col("n_matches"), lit(0L)) > 0).as("contaminated"))
-  }
+      threshold: Double, dim: Int, bits: Int = 32): DataFrame =
+    flagMatched(docs, id,
+      Similarity.srpCrossPairs(docs, id, benchmark, id, vec, threshold, dim, bits), "train_id")
 
+  /** Fuzzy decontamination: flag training documents whose shingle-set
+    * Jaccard against ANY benchmark document reaches `threshold` — the
+    * near-duplicate form of [[decontaminate]], catching lightly
+    * paraphrased eval material that exact n-gram overlap misses.
+    * Candidates come from the two-sided MinHash band join
+    * ([[Dedup.minHashCrossPairs]]), so the training corpus is scanned
+    * once and never crossed against the benchmark.
+    */
   def decontaminateFuzzy(
       docs: DataFrame, benchmark: DataFrame, id: String, shingles: Column,
-      threshold: Double): DataFrame = {
-    val matches = Dedup
-      .minHashCrossPairs(docs, id, shingles, benchmark, id, shingles, threshold)
-      .groupBy("doc_a").agg(count(lit(1)).as("n_matches"))
-      .withColumnRenamed("doc_a", id)
+      threshold: Double): DataFrame =
+    flagMatched(docs, id,
+      Dedup.minHashCrossPairs(docs, id, shingles, benchmark, id, shingles, threshold), "doc_a")
+
+  /** The decontamination flag tail: every training doc with its count of
+    * benchmark matches (`pairs` rows whose `trainCol` is the doc's id) and
+    * whether it has any.
+    */
+  private def flagMatched(
+      docs: DataFrame, id: String, pairs: DataFrame, trainCol: String): DataFrame = {
+    val matches = pairs.groupBy(trainCol).agg(count(lit(1)).as("n_matches"))
+      .withColumnRenamed(trainCol, id)
     docs.select(col(id))
       .join(matches, Seq(id), "left")
       .select(col(id), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
@@ -763,26 +769,36 @@ object TrainingData {
       |  JOIN sz sa ON sa.doc_id = da JOIN sz sb ON sb.doc_id = db
       |  WHERE i*1.0/(sa.n + sb.n - i) >= 0.8)""".stripMargin
 
+  /** Oracle component chain over [[jaccardPairsCte]]'s edge set:
+    * undirected `edges`, their `nodes`, recursive reachability `reach`
+    * and each node's min-id component `comp` (doc_id, component).
+    */
+  private val componentsCte =
+    s"""WITH RECURSIVE $jaccardPairsCte,
+       |edges AS (SELECT doc_a AS ea, doc_b AS eb FROM pairs
+       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+       |nodes AS (SELECT DISTINCT ea AS node FROM edges),
+       |reach(node, r) AS (
+       |  SELECT node, node FROM nodes
+       |  UNION
+       |  SELECT reach.node, e.eb FROM reach JOIN edges e ON e.ea = reach.r),
+       |comp AS (SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node)""".stripMargin
+
+  /** Oracle of [[dupClusters]] over the near-dup pairs: min-id component,
+    * cluster size and keeper flag per clustered doc.
+    */
+  private val dupClustersOracle =
+    s"""$componentsCte
+       |SELECT doc_id, component,
+       |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS n_members,
+       |  doc_id = component AS is_keeper
+       |FROM comp ORDER BY doc_id""".stripMargin
+
   val queries: Seq[Q] = Seq(
     // ---- duplicate-cluster resolution: connected components over MinHash
     // near-dup pairs, min-id canonical per cluster. Oracle replays
     // reachability with a recursive CTE over the exact-Jaccard edge set ----
-    Q(
-      "dedup_components",
-      s"""WITH RECURSIVE $jaccardPairsCte,
-         |edges AS (SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT ea AS node FROM edges),
-         |reach(node, r) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT reach.node, e.eb FROM reach JOIN edges e ON e.ea = reach.r),
-         |comp AS (SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node)
-         |SELECT doc_id, component,
-         |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS n_members,
-         |  doc_id = component AS is_keeper
-         |FROM comp ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
+    Q("dedup_components", dupClustersOracle) { (s, d) =>
       val pairs = Dedup.minHashNearDupPairs(
         Tables.documents(s, d), "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
       dupClusters(pairs, "doc_a", "doc_b").orderBy("doc_id")
@@ -795,30 +811,10 @@ object TrainingData {
     // Weekly tier: algorithm-variant twin of dedup_components — Verify
     // oracle-checks it every round; the per-round bench times the
     // min-label formulation that shares its plan prefix ----
-    Q.weekly(
-      "dedup_components_star",
-      s"""WITH RECURSIVE $jaccardPairsCte,
-         |edges AS (SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT ea AS node FROM edges),
-         |reach(node, r) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT reach.node, e.eb FROM reach JOIN edges e ON e.ea = reach.r),
-         |comp AS (SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node)
-         |SELECT doc_id, component,
-         |  CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS n_members,
-         |  doc_id = component AS is_keeper
-         |FROM comp ORDER BY doc_id""".stripMargin,
-    ) { (s, d) =>
+    Q.weekly("dedup_components_star", dupClustersOracle) { (s, d) =>
       val pairs = Dedup.minHashNearDupPairs(
         Tables.documents(s, d), "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
-      val w = Window.partitionBy("component")
-      connectedComponentsStar(pairs, "doc_a", "doc_b")
-        .select(col("node").as("doc_id"), col("component"),
-          count(lit(1)).over(w).as("n_members"))
-        .withColumn("is_keeper", col("doc_id") === col("component"))
-        .orderBy("doc_id")
+      clustersOf(connectedComponentsStar(pairs, "doc_a", "doc_b")).orderBy("doc_id")
     },
 
     // ---- quality-aware cluster resolution: keep the highest-n_chars
@@ -827,15 +823,7 @@ object TrainingData {
     // Oracle = recursive-CTE components + the same argmax window ----
     Q(
       "dedup_cluster_keep_best",
-      s"""WITH RECURSIVE $jaccardPairsCte,
-         |edges AS (SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT ea AS node FROM edges),
-         |reach(node, r) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT reach.node, e.eb FROM reach JOIN edges e ON e.ea = reach.r),
-         |comp AS (SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node),
+      s"""$componentsCte,
          |ranked AS (SELECT d.doc_id, c.component,
          |    CAST(COUNT(*) OVER (PARTITION BY c.component) AS BIGINT) AS n_members,
          |    ROW_NUMBER() OVER (PARTITION BY c.component
@@ -861,15 +849,7 @@ object TrainingData {
     // next to its output; pure composition of keepBestPerCluster ----
     Q(
       "dedup_report_by_source",
-      s"""WITH RECURSIVE $jaccardPairsCte,
-         |edges AS (SELECT doc_a AS ea, doc_b AS eb FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT ea AS node FROM edges),
-         |reach(node, r) AS (
-         |  SELECT node, node FROM nodes
-         |  UNION
-         |  SELECT reach.node, e.eb FROM reach JOIN edges e ON e.ea = reach.r),
-         |comp AS (SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node),
+      s"""$componentsCte,
          |ranked AS (SELECT d.doc_id, c.component,
          |    ROW_NUMBER() OVER (PARTITION BY c.component
          |                       ORDER BY d.n_chars DESC, d.doc_id) AS rk

@@ -259,6 +259,41 @@ class FunctionsSpec extends SparkSpec {
     assert(exact.nonEmpty) // fixture plants near-dups
   }
 
+  test("lshCandidatePairs is the candidate set minHashNearDupPairs verifies (sf0.001)") {
+    val docs = Tables.documents(spark, sf0001)
+    val sh = TextFunctions.wordShingles(col("text"), 3)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cands = pairs(Dedup.lshCandidatePairs(docs, "doc_id", sh, 32, 2))
+    val verified = pairs(Dedup.minHashNearDupPairs(docs, "doc_id", sh, 0.8))
+    val exact = pairs(Dedup.exactJaccardPairs(docs, "doc_id", sh, 0.8))
+    assert(cands.forall { case (a, b) => a < b })
+    assert(verified == exact.intersect(cands))
+    assert(verified.nonEmpty && cands.size > verified.size)
+  }
+
+  test("MinHash banding needs 1 <= bandRows <= numHashes with bandRows dividing numHashes") {
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "v w x y z"))
+      .toDF("doc_id", "text")
+    val sh = TextFunctions.wordShingles(col("text"), 2)
+    // no row per band, more rows per band than hashes, and 32 % 3 = 2
+    // hashes that no band would cover
+    for (bandRows <- Seq(0, 33, 3)) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.minHashNearDupPairs(docs, "doc_id", sh, 0.8, 32, bandRows))
+      assert(e.getMessage.contains(s"bandRows = $bandRows") &&
+        e.getMessage.contains("numHashes = 32"), e.getMessage)
+      intercept[IllegalArgumentException](
+        Dedup.lshCandidatePairs(docs, "doc_id", sh, 32, bandRows))
+    }
+    // the extremes that divide: 32 one-row bands, one 32-row band
+    for (bandRows <- Seq(1, 32)) {
+      val got = Dedup.minHashNearDupPairs(docs, "doc_id", sh, 0.8, 32, bandRows)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(got == Seq((1L, 2L, 1.0)), s"bandRows $bandRows")
+    }
+  }
+
   test("prefix-filtered jaccard equals naive exact jaccard (sf0.001)") {
     val docs = Tables.documents(spark, sf0001)
     val sh = TextFunctions.wordShingles(col("text"), 2)

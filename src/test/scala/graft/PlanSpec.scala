@@ -410,6 +410,28 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("dedup-tier rows plan no more Exchanges than their pinned counts") {
+    // measured at sf0.001 before the dedup tier shared one overlap join,
+    // one band-bucket candidate join and one verify tail (pre-execution
+    // AQE plan, broadcast exchanges counted)
+    val rows = Map(
+      "dedup_exact" -> 2, "dedup_exact_canonical" -> 2,
+      "dedup_minhash" -> 5, "dedup_ngram_jaccard" -> 15,
+      "dedup_jaccard_capped" -> 15, "dedup_minhash_calibration" -> 14,
+      "dedup_containment" -> 15, "dedup_simhash" -> 3,
+      "dedup_substring" -> 11, "dedup_substring_strip" -> 8,
+      "dedup_bloom_shingles" -> 6, "dedup_minhash_index" -> 5)
+    assert(rows.keySet == graft.operators.Dedup.queries.map(_.name).toSet)
+    val pinned = rows ++ Map(
+      "dedup_components" -> 2, "dedup_components_star" -> 4,
+      "dedup_cluster_keep_best" -> 5, "dedup_report_by_source" -> 7,
+      "decontaminate_fuzzy" -> 7)
+    pinned.foreach { case (name, maxEx) =>
+      val (ex, _) = exchangesAndGenerates(SparkEntry.queries(name)(spark, sf0001))
+      assert(ex <= maxEx, s"$name plans $ex Exchanges (pinned $maxEx)")
+    }
+  }
+
   test("tokenizer plans do not grow with the model: 10 vs 30,000 merges") {
     import spark.implicits._
     val docs = Seq((1L, "the lower lowest"), (2L, "newer wider"), (3L, "aaaa b"))
