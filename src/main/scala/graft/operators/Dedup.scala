@@ -217,8 +217,10 @@ object Dedup {
     */
   def lshCandidatePairs(
       docs: DataFrame, id: String, shingles: Column,
-      numHashes: Int, bandRows: Int): DataFrame =
+      numHashes: Int, bandRows: Int): DataFrame = {
+    requireBanding(numHashes, bandRows)
     selfCandidates(hashedShingleArr(docs, id, shingles), id, numHashes, bandRows)
+  }
 
   /** Exact threshold-Jaccard with PPJoin-style filtering: order each doc's
     * shingles by global document frequency (rarest first); a pair with
@@ -340,6 +342,7 @@ object Dedup {
   def minHashNearDupPairs(
       docs: DataFrame, id: String, shingles: Column, threshold: Double,
       numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
+    requireBanding(numHashes, bandRows)
     // reused: signatures + both verification sides
     val arr = hashedShingleArr(docs, id, shingles)
     verifyJaccardArr(selfCandidates(arr, id, numHashes, bandRows), arr, id, arr, id, threshold)
@@ -354,16 +357,22 @@ object Dedup {
       .filter(size(col("arr")) > 0)
       .transform(graft.Tables.pin)
 
-  /** (id, band, key) LSH bucket keys from banded per-row MinHash
-    * signatures over a hashed-shingle array table: `numHashes / bandRows`
-    * bands of `bandRows` signature components each, so `bandRows` must
-    * divide `numHashes` (a remainder would silently drop components).
+  /** `numHashes / bandRows` bands of `bandRows` signature components each
+    * need `bandRows` in [1, numHashes] dividing `numHashes` (a remainder
+    * would silently drop components). Every banding entry point checks
+    * this first, before [[hashedShingleArr]]'s checkpoint job runs.
     */
-  private def bandKeys(
-      arr: DataFrame, id: String, numHashes: Int, bandRows: Int): DataFrame = {
+  private def requireBanding(numHashes: Int, bandRows: Int): Unit =
     require(bandRows >= 1 && bandRows <= numHashes && numHashes % bandRows == 0,
       s"bandRows must be in [1, numHashes] and divide numHashes, " +
         s"got bandRows = $bandRows, numHashes = $numHashes")
+
+  /** (id, band, key) LSH bucket keys from banded per-row MinHash
+    * signatures over a hashed-shingle array table: `numHashes / bandRows`
+    * bands of `bandRows` signature components each ([[requireBanding]]).
+    */
+  private def bandKeys(
+      arr: DataFrame, id: String, numHashes: Int, bandRows: Int): DataFrame = {
     val sig = arr.select(col(id),
       graft.plans.MinHashSig.minHashSig(col("arr"), permConstants(numHashes)).as("sig"))
     val bands = (0 until numHashes / bandRows).map { j =>
@@ -405,6 +414,7 @@ object Dedup {
       left: DataFrame, leftId: String, leftShingles: Column,
       right: DataFrame, rightId: String, rightShingles: Column,
       threshold: Double, numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
+    requireBanding(numHashes, bandRows)
     val arrL = hashedShingleArr(left, leftId, leftShingles)
     val arrR = hashedShingleArr(right, rightId, rightShingles)
     val cand = bandCandidates(
@@ -429,6 +439,7 @@ object Dedup {
       cat: graft.sources.Catalog, name: String,
       docs: DataFrame, id: String, shingles: Column,
       numHashes: Int = 32, bandRows: Int = 2): Unit = {
+    requireBanding(numHashes, bandRows)
     val arr = hashedShingleArr(docs, id, shingles)
     val bands = bandKeys(arr, id, numHashes, bandRows)
     cat.create(s"${name}_arr", arr.schema)
@@ -448,6 +459,7 @@ object Dedup {
       cat: graft.sources.Catalog, name: String,
       batch: DataFrame, id: String, shingles: Column, threshold: Double,
       numHashes: Int = 32, bandRows: Int = 2): DataFrame = {
+    requireBanding(numHashes, bandRows)
     val arrB = hashedShingleArr(batch, id, shingles)
     val cand = bandCandidates(
       cat.table(s"${name}_bands"), id, bandKeys(arrB, id, numHashes, bandRows), id)

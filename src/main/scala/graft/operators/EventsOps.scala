@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, Q, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -14,6 +15,53 @@ import org.apache.spark.sql.expressions.Window
   * distinct; `distinct_approx` is the HLL path that replaces it at 100 TB.
   */
 object EventsOps {
+
+  /** `events` with `session_id`: per user, in (ts, event_id) order, the
+    * running count of 30-minute-gap session starts (a user's first event,
+    * or one more than 30 minutes after the previous).
+    */
+  private def withGapSessions(events: DataFrame): DataFrame = {
+    val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    val gapUs = expr("ts_ns div 1000") -
+      lag(expr("ts_ns div 1000"), 1).over(order)
+    events
+      .withColumn("new_session",
+        when(gapUs > 1800000000L || lag(col("ts"), 1).over(order).isNull, 1).otherwise(0))
+      .withColumn("session_id",
+        sum(col("new_session")).over(
+          order.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
+  /** The as-of rows: every purchase (user_id, purchase_id) with the view
+    * [[AsOfJoin.asOf]] matches in `direction` within `tolerance`, and
+    * `gap_us`, computed from the purchase's `ts_us` and the view's `v.ts`.
+    * All times are integer microseconds; views are pre-aggregated to one
+    * row per (user_id, ts_us) with the max view_id, so ties resolve
+    * identically on both engines.
+    */
+  private def purchaseAsOfView(
+      events: DataFrame, direction: String, tolerance: Option[Column],
+      gapUs: Column): DataFrame = {
+    val ev = events.withColumn("ts_us", expr("ts_ns div 1000"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"), col("ts_us"))
+    val views = ev.filter(col("event_type") === "view")
+      .groupBy("user_id", "ts_us").agg(max("event_id").as("view_id"))
+    AsOfJoin.asOf(purchases, views, "user_id", "ts_us", "ts_us", Seq("view_id"), "v",
+        direction, tolerance)
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        col("v.view_id").as("view_id"), gapUs.as("gap_us"))
+      .orderBy("user_id", "purchase_id")
+  }
+
+  /** Oracle `v` and `p` of the as-of rows: [[purchaseAsOfView]]'s views
+    * and purchases.
+    */
+  private val asOfInputsCte =
+    """WITH v AS (SELECT user_id, epoch_us(ts) AS vts, CAST(MAX(event_id) AS BIGINT) AS view_id
+      |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+      |p AS (SELECT user_id, event_id, epoch_us(ts) AS pts
+      |      FROM events WHERE event_type = 'purchase')""".stripMargin
 
   val queries: Seq[Q] = Seq(
     // ---- exact COUNT(DISTINCT) — bench headline ----
@@ -462,16 +510,7 @@ object EventsOps {
         |FROM sessions GROUP BY user_id, session_id
         |ORDER BY user_id, session_id""".stripMargin,
     ) { (s, d) =>
-      val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gapUs = expr("ts_ns div 1000") -
-        lag(expr("ts_ns div 1000"), 1).over(order)
-      val marked = Tables.events(s, d)
-        .withColumn("new_session",
-          when(gapUs > 1800000000L || lag(col("ts"), 1).over(order).isNull, 1).otherwise(0))
-      marked
-        .withColumn("session_id",
-          sum(col("new_session")).over(
-            order.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      withGapSessions(Tables.events(s, d))
         .groupBy(col("user_id"), col("session_id").cast("long").as("session_id"))
         .agg(count(lit(1)).as("n_events"), Det.dsum(col("value")).as("sum_value"))
         .orderBy("user_id", "session_id")
@@ -669,27 +708,14 @@ object EventsOps {
     // uses DuckDB's native ASOF LEFT JOIN ----
     Q(
       "q_asof_join",
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS vts, CAST(MAX(event_id) AS BIGINT) AS view_id
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT user_id, event_id, epoch_us(ts) AS pts
-        |      FROM events WHERE event_type = 'purchase')
+      s"""$asOfInputsCte
         |SELECT p.user_id, p.event_id AS purchase_id, v.view_id,
         |  p.pts - v.vts AS gap_us
         |FROM p ASOF LEFT JOIN v
         |  ON p.user_id = v.user_id AND p.pts >= v.vts
         |ORDER BY p.user_id, purchase_id""".stripMargin,
     ) { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_us").agg(max("event_id").as("view_id"))
-      graft.operators.AsOfJoin
-        .asOf(purchases, views, "user_id", "ts_us", "ts_us", Seq("view_id"), "v")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("v.view_id").as("view_id"),
-          (col("ts_us") - col("v.ts")).as("gap_us"))
-        .orderBy("user_id", "purchase_id")
+      purchaseAsOfView(Tables.events(s, d), "backward", None, col("ts_us") - col("v.ts"))
     },
 
     // ---- FORWARD as-of join: each purchase gets the EARLIEST view at or
@@ -698,10 +724,7 @@ object EventsOps {
     // oracle is the explicit rank-1-candidate formulation ----
     Q(
       "q_asof_join_forward",
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS vts, CAST(MAX(event_id) AS BIGINT) AS view_id
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT user_id, event_id, epoch_us(ts) AS pts
-        |      FROM events WHERE event_type = 'purchase'),
+      s"""$asOfInputsCte,
         |j AS (SELECT p.user_id, p.event_id, v.view_id, v.vts,
         |        ROW_NUMBER() OVER (PARTITION BY p.user_id, p.event_id
         |          ORDER BY v.vts) AS rn
@@ -712,18 +735,7 @@ object EventsOps {
         |  AND j.event_id = p.event_id AND j.rn = 1
         |ORDER BY p.user_id, purchase_id""".stripMargin,
     ) { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_us").agg(max("event_id").as("view_id"))
-      graft.operators.AsOfJoin
-        .asOf(purchases, views, "user_id", "ts_us", "ts_us", Seq("view_id"), "v",
-          direction = "forward")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("v.view_id").as("view_id"),
-          (col("v.ts") - col("ts_us")).as("gap_us"))
-        .orderBy("user_id", "purchase_id")
+      purchaseAsOfView(Tables.events(s, d), "forward", None, col("v.ts") - col("ts_us"))
     },
 
     // ---- NEAREST as-of join with a 6-hour tolerance: each purchase gets
@@ -732,10 +744,7 @@ object EventsOps {
     // ranks the in-tolerance candidates by (|gap|, backward-first) ----
     Q(
       "q_asof_join_nearest",
-      """WITH v AS (SELECT user_id, epoch_us(ts) AS vts, CAST(MAX(event_id) AS BIGINT) AS view_id
-        |           FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |p AS (SELECT user_id, event_id, epoch_us(ts) AS pts
-        |      FROM events WHERE event_type = 'purchase'),
+      s"""$asOfInputsCte,
         |j AS (SELECT p.user_id, p.event_id, v.view_id, v.vts,
         |        ROW_NUMBER() OVER (PARTITION BY p.user_id, p.event_id
         |          ORDER BY abs(v.vts - p.pts),
@@ -748,18 +757,8 @@ object EventsOps {
         |  AND j.event_id = p.event_id AND j.rn = 1
         |ORDER BY p.user_id, purchase_id""".stripMargin,
     ) { (s, d) =>
-      val ev = Tables.events(s, d).withColumn("ts_us", expr("ts_ns div 1000"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts_us"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts_us").agg(max("event_id").as("view_id"))
-      graft.operators.AsOfJoin
-        .asOf(purchases, views, "user_id", "ts_us", "ts_us", Seq("view_id"), "v",
-          direction = "nearest", tolerance = Some(lit(21600000000L)))
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          col("v.view_id").as("view_id"),
-          (col("v.ts") - col("ts_us")).as("gap_us"))
-        .orderBy("user_id", "purchase_id")
+      purchaseAsOfView(Tables.events(s, d), "nearest", Some(lit(21600000000L)),
+        col("v.ts") - col("ts_us"))
     },
 
     // ---- value-distribution stats per event type ----
@@ -1100,19 +1099,10 @@ object EventsOps {
         .select(col("user_id"), col("event_id"), col("ts"),
           round(col("value") * lit(1000000.0)).cast("long").as("m"),
           date_trunc("hour", col("ts")).as("b"))
-      val wIn = Window.partitionBy("b").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val within = ev.withColumn("within", sum(col("m")).over(wIn))
-      val wOff = Window.orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = ev.groupBy("b").agg(sum(col("m")).as("btot"))
-        .withColumn("offset", coalesce(sum(col("btot")).over(wOff), lit(0L)))
-        .select(col("b"), col("offset"))
-      within.join(broadcast(offsets), Seq("b"))
+      BoundedWindows.runningSum(ev, Seq(), "b", Seq(col("ts"), col("event_id")), "m", "rm")
         .filter(col("user_id") < 20)
         .select(col("event_id"),
-          ((col("within") + col("offset")).cast("double") / lit(1000000.0))
-            .as("running_value"))
+          (col("rm").cast("double") / lit(1000000.0)).as("running_value"))
         .orderBy("event_id")
     },
 
@@ -1154,19 +1144,9 @@ object EventsOps {
           (col("ts") + expr("INTERVAL 30 MINUTES")).as("t"),
           lit(-1L).as("delta"), col("event_id")))
         .withColumn("b", date_trunc("hour", col("t")))
-      val wIn = Window.partitionBy("event_type", "b")
-        .orderBy(col("t"), col("delta"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val within = deltas.withColumn("within", sum(col("delta")).over(wIn))
-      val wOff = Window.partitionBy("event_type").orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = deltas.groupBy("event_type", "b")
-        .agg(sum(col("delta")).as("btot"))
-        .withColumn("offset", coalesce(sum(col("btot")).over(wOff), lit(0L)))
-        .select(col("event_type"), col("b"), col("offset"))
-      val conc = within.join(broadcast(offsets), Seq("event_type", "b"))
-        .select(col("event_type"), col("t"),
-          (col("within") + col("offset")).as("c"))
+      val conc = BoundedWindows.runningSum(deltas, Seq("event_type"), "b",
+        Seq(col("t"), col("delta"), col("event_id")), "delta", "c")
+        .select(col("event_type"), col("t"), col("c"))
       val maxes = conc.groupBy("event_type")
         .agg(max(col("c")).as("max_concurrency"))
       conc.join(broadcast(maxes), Seq("event_type"))
@@ -1245,16 +1225,7 @@ object EventsOps {
         |FROM paths GROUP BY path
         |ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
     ) { (s, d) =>
-      val order = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gapUs = expr("ts_ns div 1000") -
-        lag(expr("ts_ns div 1000"), 1).over(order)
-      Tables.events(s, d)
-        .withColumn("new_session",
-          when(gapUs > 1800000000L || lag(col("ts"), 1).over(order).isNull, 1)
-            .otherwise(0))
-        .withColumn("session_id",
-          sum(col("new_session")).over(
-            order.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      withGapSessions(Tables.events(s, d))
         .groupBy("user_id", "session_id")
         .agg(array_join(
           transform(

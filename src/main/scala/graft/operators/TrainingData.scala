@@ -16,18 +16,33 @@ import org.apache.spark.sql.functions._
   *    edge set — O(component diameter) joins, each a key-partitioned
   *    shuffle of the EDGE table only (never the corpus). Dup graphs in
   *    practice are unions of tiny cliques (diameter ≤ ~3), so convergence
-  *    is a handful of rounds; for adversarially long chains switch the
-  *    inner step to large-star/small-star (same join shape, O(log n)
-  *    rounds). Each round localCheckpoints the label table — mandatory in
-  *    iterative Spark, otherwise the lineage (and thus the plan) doubles
-  *    per round; on a cluster this would be a reliable checkpoint.
+  *    is a handful of rounds; an adversarially long chain makes
+  *    [[connectedComponents]] escalate to large-star/small-star on its own
+  *    (same join shape, O(log n) rounds). Each round localCheckpoints the
+  *    label table — mandatory in iterative Spark, otherwise the lineage
+  *    (and thus the plan) doubles per round; on a cluster this would be a
+  *    reliable checkpoint.
   *  - split/sample: pure per-row codegen'd hash expressions (md5-derived,
-  *    engine-portable) — no shuffle for the split, one row_number window
-  *    per stratum for the sample. Hash-of-id splitting is the standard
-  *    trick that keeps assignment stable under corpus growth: a document's
-  *    split never depends on what else is in the corpus.
+  *    engine-portable) — no shuffle for the split; the samples, mixtures
+  *    and packers keep every window bounded to a hash bucket or shard
+  *    ([[BoundedWindows]]), so no stratum or source is sorted in one task.
+  *    Hash-of-id splitting is the standard trick that keeps assignment
+  *    stable under corpus growth: a document's split never depends on
+  *    what else is in the corpus.
   */
 object TrainingData {
+
+  /** Hash buckets of the bounded two-level windows of the samples and
+    * mixtures. A mixture admits documents in (h % HashBuckets, h, id)
+    * order, so for the mixtures the count is part of the output (their
+    * oracles order by it too); for the samples it only bounds the window.
+    */
+  private val HashBuckets = 4096
+
+  /** Unconverged min-label rounds after which [[connectedComponents]]
+    * switches to large-star/small-star.
+    */
+  private val EscalateAfter = 8
 
   /** Connected components of an undirected edge list: (node, component)
     * where component = min node id reachable. Nodes = every endpoint.
@@ -36,7 +51,7 @@ object TrainingData {
     * ONE join+groupBy per round, the cheapest shape for dup graphs, which
     * are unions of tiny cliques (diameter ≤ ~3) — and if the graph turns
     * out adversarially DEEP (a long near-dup chain with transitive
-    * drift), ESCALATES after `escalateAfter` unconverged rounds to
+    * drift), ESCALATES after [[EscalateAfter]] unconverged rounds to
     * [[connectedComponentsStar]]'s O(log n) large-star/small-star
     * contraction (~2× the per-round cost) instead of failing or paying a
     * round per chain link. Property-tested equal on chain/clique/random
@@ -44,9 +59,8 @@ object TrainingData {
     * chain in TrainingDataSpec.
     */
   def connectedComponents(
-      edges: DataFrame, a: String, b: String, maxIter: Int = 20,
-      escalateAfter: Int = 8): DataFrame =
-    minLabelBounded(edges, a, b, math.min(escalateAfter, maxIter))
+      edges: DataFrame, a: String, b: String, maxIter: Int = 20): DataFrame =
+    minLabelBounded(edges, a, b, math.min(EscalateAfter, maxIter))
       .getOrElse(connectedComponentsStar(edges, a, b, maxIter))
 
   /** Alternating large-star/small-star contraction (Kiveris et al.,
@@ -80,11 +94,7 @@ object TrainingData {
     var (e0, m0) = checkpointObserving(
       canonical(edges.select(col(a).as("src"), col(b).as("dst"))),
       "ccs_round_0", probeMetrics)
-    // edge-count-sized partitioning, as in the min-label variant; coalesce
-    // is narrow (lazy view over the checkpointed blocks), no extra job
-    val parts = math.max(1, math.min(e0.rdd.getNumPartitions,
-      (probeOf(m0)._1 / 1000000L).toInt + 1))
-    var e = e0.coalesce(parts)
+    var e = coalesceToEdges(e0, probeOf(m0)._1)
     def largeStar(cur: DataFrame): DataFrame = {
       val bidir = cur.union(cur.select(col("dst").as("src"), col("src").as("dst")))
       val mins = bidir.groupBy("src").agg(min("dst").as("mn"))
@@ -134,6 +144,17 @@ object TrainingData {
     (cp, observed.queryExecution.observedMetrics(name))
   }
 
+  /** `edges` coalesced to its EDGE count, not the session default — a dup
+    * graph is far smaller than its corpus, and per-round fixed task
+    * overhead dominates when 32 shuffle tasks carry 50 edges (~1M edges
+    * per partition; billions of edges at 100 TB keep the session's full
+    * parallelism). coalesce is narrow (a lazy view over the checkpointed
+    * blocks): no extra shuffle or job.
+    */
+  private def coalesceToEdges(edges: DataFrame, n: Long): DataFrame =
+    edges.coalesce(math.max(1, math.min(edges.rdd.getNumPartitions,
+      (n / 1000000L).toInt + 1)))
+
   /** Min-label propagation formulation (O(diameter) rounds, ONE job each);
     * throws when `maxIter` rounds don't reach the fixpoint.
     */
@@ -156,14 +177,7 @@ object TrainingData {
       edges.select(col(a).as("src"), col(b).as("dst"))
         .union(edges.select(col(b).as("src"), col(a).as("dst"))),
       "cc_edges", Seq(count(lit(1)).as("n")))
-    // size the iteration's partitioning to the EDGE count, not the session
-    // default — a dup graph is far smaller than its corpus, and per-round
-    // fixed task overhead dominates when 32 shuffle tasks carry 50 edges.
-    // (~1M edges per partition; billions of edges at 100 TB keep the
-    // session's full parallelism.) coalesce = no extra shuffle.
-    val parts = math.max(1, math.min(adj0.rdd.getNumPartitions,
-      (adjMeta.getLong(0) / 1000000L).toInt + 1))
-    val adj = adj0.coalesce(parts)
+    val adj = coalesceToEdges(adj0, adjMeta.getLong(0))
     // labels only ever decrease, so sum(labels) strictly decreases until
     // the fixpoint — an O(1)-result convergence probe observed DURING each
     // round's own checkpoint job (decimal: overflow-proof at any node count)
@@ -254,18 +268,10 @@ object TrainingData {
   def decontaminate(
       docs: DataFrame, benchmark: DataFrame, id: String, text: Column,
       n: Int): DataFrame = {
-    def grams(df: DataFrame) = df.select(
-      col(id),
-      explode(TextFunctions.wordShingles(text, n)).as("g"))
-      .select(col(id), TextFunctions.tokenHash60(col("g")).as("h"))
-    val benchGrams = grams(benchmark).select("h").distinct()
-    val hits = grams(docs)
-      .join(broadcast(benchGrams), "h")
-      .groupBy(col(id)).agg(count(lit(1)).as("n_hits")) // per-doc grams distinct
-    docs.select(col(id))
-      .join(hits, Seq(id), "left")
-      .select(col(id), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
+    // per-doc grams are distinct, so each hit row is one shared gram
+    flagMatched(docs, id,
+      grams(docs, id, text, n).join(broadcast(benchGrams(benchmark, id, text, n)), "h"),
+      id, "n_hits")
   }
 
   /** Graded form of [[decontaminate]]: per-document contamination REPORT —
@@ -280,13 +286,9 @@ object TrainingData {
   def contaminationOverlap(
       docs: DataFrame, benchmark: DataFrame, id: String, text: Column,
       n: Int): DataFrame = {
-    def grams(df: DataFrame) = df.select(
-      col(id),
-      explode(TextFunctions.wordShingles(text, n)).as("g"))
-      .select(col(id), TextFunctions.tokenHash60(col("g")).as("h"))
-    val benchGrams = grams(benchmark).select("h").distinct()
-    val per = grams(docs)
-      .join(broadcast(benchGrams.withColumn("__hit", lit(1L))), Seq("h"), "left")
+    val per = grams(docs, id, text, n)
+      .join(broadcast(benchGrams(benchmark, id, text, n).withColumn("__hit", lit(1L))),
+        Seq("h"), "left")
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("__hit"), lit(0L))).as("n_hits"))
@@ -299,6 +301,19 @@ object TrainingData {
           coalesce(col("n_hits"), lit(0L)) * lit(1000000.0) / col("n_grams"))
           .otherwise(lit(0.0)) + lit(0.5)).cast("long").as("overlap_micros"))
   }
+
+  /** (id, h): one row per distinct word `n`-gram of each document, `h` its
+    * 60-bit hash.
+    */
+  private def grams(df: DataFrame, id: String, text: Column, n: Int): DataFrame =
+    df.select(col(id), explode(TextFunctions.wordShingles(text, n)).as("g"))
+      .select(col(id), TextFunctions.tokenHash60(col("g")).as("h"))
+
+  /** The benchmark's distinct gram hashes (h) — eval-suite-sized, so the
+    * decontamination joins broadcast it.
+    */
+  private def benchGrams(benchmark: DataFrame, id: String, text: Column, n: Int): DataFrame =
+    grams(benchmark, id, text, n).select("h").distinct()
 
   /** Semantic decontamination: flag training rows whose EMBEDDING is
     * near-identical (cosine ≥ `threshold`) to any benchmark embedding —
@@ -313,7 +328,8 @@ object TrainingData {
       docs: DataFrame, benchmark: DataFrame, id: String, vec: String,
       threshold: Double, dim: Int, bits: Int = 32): DataFrame =
     flagMatched(docs, id,
-      Similarity.srpCrossPairs(docs, id, benchmark, id, vec, threshold, dim, bits), "train_id")
+      Similarity.srpCrossPairs(docs, id, benchmark, id, vec, threshold, dim, bits), "train_id",
+      "n_matches")
 
   /** Fuzzy decontamination: flag training documents whose shingle-set
     * Jaccard against ANY benchmark document reaches `threshold` — the
@@ -327,20 +343,22 @@ object TrainingData {
       docs: DataFrame, benchmark: DataFrame, id: String, shingles: Column,
       threshold: Double): DataFrame =
     flagMatched(docs, id,
-      Dedup.minHashCrossPairs(docs, id, shingles, benchmark, id, shingles, threshold), "doc_a")
+      Dedup.minHashCrossPairs(docs, id, shingles, benchmark, id, shingles, threshold), "doc_a",
+      "n_matches")
 
   /** The decontamination flag tail: every training doc with its count of
-    * benchmark matches (`pairs` rows whose `trainCol` is the doc's id) and
-    * whether it has any.
+    * benchmark matches `counted` (`matches` rows whose `trainCol` is the
+    * doc's id) and whether it has any.
     */
   private def flagMatched(
-      docs: DataFrame, id: String, pairs: DataFrame, trainCol: String): DataFrame = {
-    val matches = pairs.groupBy(trainCol).agg(count(lit(1)).as("n_matches"))
+      docs: DataFrame, id: String, matches: DataFrame, trainCol: String,
+      counted: String): DataFrame = {
+    val perDoc = matches.groupBy(trainCol).agg(count(lit(1)).as(counted))
       .withColumnRenamed(trainCol, id)
     docs.select(col(id))
-      .join(matches, Seq(id), "left")
-      .select(col(id), coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        (coalesce(col("n_matches"), lit(0L)) > 0).as("contaminated"))
+      .join(perDoc, Seq(id), "left")
+      .select(col(id), coalesce(col(counted), lit(0L)).as(counted),
+        (coalesce(col(counted), lit(0L)) > 0).as("contaminated"))
   }
 
   /** Deterministic hash split: 'train' for trainPct% of rows, 'test'
@@ -368,22 +386,15 @@ object TrainingData {
     * stratum in one task. Since the stratum top-k is contained in the
     * union of per-hash-bucket top-k's, the sample is computed as
     * per-(stratum, bucket) top-k (bounded windows) followed by top-k
-    * over the ≤ k·`buckets` survivors per stratum — the final window's
-    * input is sample-sized, not corpus-sized. Row numbers of the kept
-    * rows are identical to the naive formulation's.
+    * over the ≤ k·[[HashBuckets]] survivors per stratum — the final
+    * window's input is sample-sized, not corpus-sized. Row numbers of the
+    * kept rows are identical to the naive formulation's.
     */
-  def stratifiedSample(
-      df: DataFrame, stratum: String, id: String, k: Int,
-      buckets: Int = 4096): DataFrame = {
-    val h = TextFunctions.tokenHash60(col(id).cast("string"))
-    val wIn = Window.partitionBy(col(stratum), col("__b"))
-      .orderBy(col("__h"), col(id))
-    val w = Window.partitionBy(stratum).orderBy(col("__h"), col(id))
-    df.withColumn("__h", h).withColumn("__b", pmod(col("__h"), lit(buckets)))
-      .withColumn("__rn0", row_number().over(wIn)).filter(col("__rn0") <= k)
-      .withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= k)
-      .drop("__h", "__b", "__rn0")
-  }
+  def stratifiedSample(df: DataFrame, stratum: String, id: String, k: Int): DataFrame =
+    BoundedWindows.topK(
+      df.withColumn("__h", TextFunctions.tokenHash60(col(id).cast("string"))),
+      stratum, pmod(col("__h"), lit(HashBuckets)), Seq(col("__h"), col(id)), k)
+      .drop("__h")
 
   /** Deterministic weighted sampling without replacement (Efraimidis &
     * Spirakis, IPL 2006): each row gets key ln(u)/w for a uniform u and
@@ -393,8 +404,8 @@ object TrainingData {
     * engine-portable; ln is bit-identical cross-engine), so the "random"
     * sample is replayable and oracle-checkable. Same bounded-window
     * decomposition as [[stratifiedSample]]: per-(group, hash-bucket)
-    * top-k, then top-k over the ≤ k·buckets survivors — no corpus-sized
-    * sort task anywhere.
+    * top-k, then top-k over the ≤ k·[[HashBuckets]] survivors — no
+    * corpus-sized sort task anywhere.
     *
     * Weights must be > 0 and is enforced per row: w = 0 would silently
     * exclude the row (key −∞) and w < 0 would INVERT inclusion
@@ -402,35 +413,19 @@ object TrainingData {
     * silent-bias modes, so misuse fails the job loudly instead.
     */
   def weightedSample(
-      df: DataFrame, group: String, id: String, weight: Column, k: Int,
-      buckets: Int = 4096): DataFrame = {
+      df: DataFrame, group: String, id: String, weight: Column, k: Int): DataFrame = {
     val u = (TextFunctions.tokenHash60(concat(lit("ws:"), col(id).cast("string")))
       % 1000003L + 1L).cast("double") / 1000004.0
     val checked = when(weight > 0, weight).otherwise(raise_error(concat(
       lit("weightedSample: weight must be > 0, got "), weight.cast("string"),
       lit(" at "), lit(id), lit("="), col(id).cast("string"))))
-    val wIn = Window.partitionBy(col(group), col("__b"))
-      .orderBy(col("__k").desc, col(id))
-    val w = Window.partitionBy(group).orderBy(col("__k").desc, col(id))
-    df.withColumn("__k", log(u) / checked)
-      .withColumn("__b",
-        pmod(TextFunctions.tokenHash60(col(id).cast("string")), lit(buckets)))
-      .withColumn("__rn0", row_number().over(wIn)).filter(col("__rn0") <= k)
-      .withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= k)
-      .drop("__k", "__b", "__rn0")
+    BoundedWindows.topK(
+      df.withColumn("__k", log(u) / checked), group,
+      pmod(TextFunctions.tokenHash60(col(id).cast("string")), lit(HashBuckets)),
+      Seq(col("__k").desc, col(id)), k)
+      .drop("__k")
   }
 
-  /** Deterministic sequence packing: assign each document a training-
-    * sequence id such that consecutive documents (in stable hash order)
-    * fill a fixed token budget — the batch-assembly step between a
-    * filtered corpus and a trainer. `shards` bounds every window to a
-    * hash shard (at 100 TB, raise shards so a shard's documents fit one
-    * task; the global total-order window a naive cumsum needs does NOT
-    * scale, which is why the shard key is part of the output identity).
-    * A document belongs to the sequence its START offset falls in, so
-    * every sequence except a shard's last holds ≥ budget tokens.
-    * Output: (id, shard, n_tok, seq_id).
-    */
   /** Context-window chunking: split each document's token stream into
     * `chunkSize`-token windows starting every `stride` tokens (overlap =
     * chunkSize − stride) — how long documents become model-context-sized
@@ -457,14 +452,33 @@ object TrainingData {
         TextFunctions.tokenHash60(array_join(col("__ctoks"), " ")).as("chunk_hash"))
   }
 
-  def packSequences(
-      df: DataFrame, id: String, tokens: Column, budget: Int,
-      shards: Int): DataFrame = {
+  /** (id, shard, __h, n_tok): each document's id hash, its hash shard and
+    * its token count — the layout every packing and batching window is
+    * bounded by.
+    */
+  private def shardLayout(df: DataFrame, id: String, tokens: Column, shards: Int): DataFrame = {
     val h = TextFunctions.tokenHash60(col(id).cast("string"))
-    val w = Window.partitionBy("shard").orderBy(col("__h"), col(id))
     df.select(col(id), tokens.as("__toks"), h.as("__h"))
       .select(col(id), pmod(col("__h"), lit(shards)).as("shard"),
         col("__h"), size(col("__toks")).cast("long").as("n_tok"))
+  }
+
+  /** Deterministic sequence packing: assign each document a training-
+    * sequence id such that consecutive documents (in stable hash order)
+    * fill a fixed token budget — the batch-assembly step between a
+    * filtered corpus and a trainer. `shards` bounds every window to a
+    * hash shard (at 100 TB, raise shards so a shard's documents fit one
+    * task; the global total-order window a naive cumsum needs does NOT
+    * scale, which is why the shard key is part of the output identity).
+    * A document belongs to the sequence its START offset falls in, so
+    * every sequence except a shard's last holds ≥ budget tokens.
+    * Output: (id, shard, n_tok, seq_id).
+    */
+  def packSequences(
+      df: DataFrame, id: String, tokens: Column, budget: Int,
+      shards: Int): DataFrame = {
+    val w = Window.partitionBy("shard").orderBy(col("__h"), col(id))
+    shardLayout(df, id, tokens, shards)
       .withColumn("seq_id",
         ((sum(col("n_tok")).over(w) - col("n_tok")) / lit(budget))
           .cast("long"))
@@ -491,11 +505,8 @@ object TrainingData {
       shards: Int): DataFrame = {
     require(seqLen >= 1 && shards >= 1,
       s"seqLen and shards must be >= 1, got $seqLen, $shards")
-    val h = TextFunctions.tokenHash60(col(id).cast("string"))
     val w = Window.partitionBy("shard").orderBy(col("__h"), col(id))
-    df.select(col(id), tokens.as("__toks"), h.as("__h"))
-      .select(col(id), pmod(col("__h"), lit(shards)).as("shard"),
-        col("__h"), size(col("__toks")).cast("long").as("n_tok"))
+    shardLayout(df, id, tokens, shards)
       .filter(col("n_tok") > 0)
       .withColumn("__end", sum(col("n_tok")).over(w))
       .withColumn("__start", col("__end") - col("n_tok"))
@@ -529,13 +540,11 @@ object TrainingData {
       batchSize: Int, shards: Int): DataFrame = {
     require(batchSize >= 1 && shards >= 1,
       s"batchSize and shards must be >= 1, got $batchSize, $shards")
-    val h = TextFunctions.tokenHash60(col(id).cast("string"))
     val w = Window.partitionBy("bucket", "shard").orderBy(col("n_tok"), col(id))
-    df.select(col(id), size(tokens).cast("long").as("n_tok"), h.as("__h"))
+    shardLayout(df, id, tokens, shards)
       .filter(col("n_tok") > 0)
       .select(col(id), col("n_tok"),
-        expr("CAST(length(bin(n_tok)) - 1 AS BIGINT)").as("bucket"),
-        pmod(col("__h"), lit(shards)).as("shard"))
+        expr("CAST(length(bin(n_tok)) - 1 AS BIGINT)").as("bucket"), col("shard"))
       .withColumn("__rn", row_number().over(w))
       .withColumn("batch_id", expr(s"CAST((__rn - 1) DIV $batchSize AS BIGINT)"))
       .groupBy("bucket", "shard", "batch_id")
@@ -556,23 +565,22 @@ object TrainingData {
     * Scale shape: the naive formulation is one window per source — but a
     * dominant source (60% of a 100 TB crawl) would make that a single
     * sort task. The cumulative sum over the per-source total order
-    * (bucket, hash, id) with bucket = hash % `buckets` decomposes
+    * (bucket, hash, id) with bucket = hash % [[HashBuckets]] decomposes
     * associatively, so it is computed as (a) per-(source, bucket) token
-    * sums cumulated across buckets — a `buckets`-row window per source —
-    * plus (b) a within-bucket window bounded to ~1/`buckets` of the
-    * source. No unbounded window exists; the weight table is model-sized
-    * and broadcast.
+    * sums cumulated across buckets — a [[HashBuckets]]-row window per
+    * source — plus (b) a within-bucket window bounded to ~1/[[HashBuckets]]
+    * of the source ([[BoundedWindows.runningSum]]). No unbounded window
+    * exists; the weight table is model-sized and broadcast.
     */
   def mixtureSample(
       df: DataFrame, source: String, id: String, tokens: Column,
-      weights: Map[String, Double], totalTokenBudget: Long,
-      buckets: Int = 4096): DataFrame = {
+      weights: Map[String, Double], totalTokenBudget: Long): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val wtab = broadcast(
       weights.toSeq.toDF(source, "__w")
         .select(col(source), (col("__w") * totalTokenBudget).as("__quota")))
-    admitByQuota(df, source, id, tokens, wtab, buckets)
+    admitByQuota(mixtureBase(df, source, id, tokens), source, id, wtab, col("__quota"))
       .select(col(id), col(source), col("n_tok"))
   }
 
@@ -590,7 +598,7 @@ object TrainingData {
     */
   def mixtureTemperatureSample(
       df: DataFrame, source: String, id: String, tokens: Column,
-      totalTokenBudget: Long, buckets: Int = 4096): DataFrame = {
+      totalTokenBudget: Long): DataFrame = {
     val sizes = df
       .select(col(source), size(tokens).cast("long").as("__nt"))
       .groupBy(source).agg(sum("__nt").as("__n"))
@@ -600,39 +608,36 @@ object TrainingData {
     val wtab = broadcast(sizes.crossJoin(broadcast(stot))
       .select(col(source),
         expr(s"__s * ${totalTokenBudget}L DIV __stot").as("__quota")))
-    admitByQuota(df, source, id, tokens, wtab, buckets)
+    admitByQuota(mixtureBase(df, source, id, tokens), source, id, wtab, col("__quota"))
       .select(col(id), col(source), col("n_tok"),
         col("__quota").as("src_quota"))
   }
 
-  /** The shared admission core of the mixture samplers: keep, per
-    * source, documents in stable hash order while their START token
-    * offset is inside the source's quota (`quotas(source, __quota)` —
-    * model-sized, broadcast by the callers). Carries `__quota` through
-    * for callers that publish it.
+  /** (id, source, n_tok, __h, __b): each document's token count, id hash
+    * and hash bucket — the mixtures admit a source's documents in
+    * (__b, __h, id) order.
+    */
+  private def mixtureBase(
+      df: DataFrame, source: String, id: String, tokens: Column): DataFrame = {
+    val h = TextFunctions.tokenHash60(col(id).cast("string"))
+    df.select(col(id), col(source), tokens.as("__toks"), h.as("__h"))
+      .select(col(id), col(source), size(col("__toks")).cast("long").as("n_tok"),
+        col("__h"), pmod(col("__h"), lit(HashBuckets)).as("__b"))
+  }
+
+  /** The shared admission core of the mixture samplers: keep, per source,
+    * the [[mixtureBase]] rows whose START token offset is below `quota`, a
+    * column of `quotas` (one row per source — model-sized, broadcast by
+    * the callers). Carries the `quotas` columns through for callers that
+    * publish them.
     */
   private def admitByQuota(
-      df: DataFrame, source: String, id: String, tokens: Column,
-      quotas: DataFrame, buckets: Int): DataFrame = {
-    val h = TextFunctions.tokenHash60(col(id).cast("string"))
-    val base = df
-      .select(col(id), col(source), tokens.as("__toks"), h.as("__h"))
-      .select(col(id), col(source), size(col("__toks")).cast("long").as("n_tok"),
-        col("__h"), pmod(col("__h"), lit(buckets)).as("__b"))
-    // (a) tokens in the source's buckets BEFORE this one
-    val wB = Window.partitionBy(source).orderBy("__b")
-    val offsets = base.groupBy(col(source), col("__b"))
-      .agg(sum("n_tok").as("__bt"))
-      .withColumn("__off", sum(col("__bt")).over(wB) - col("__bt"))
-      .drop("__bt")
-    // (b) start offset within the bucket; both windows are bounded
-    val wIn = Window.partitionBy(source, "__b").orderBy(col("__h"), col(id))
-    base.join(offsets, Seq(source, "__b"))
-      .withColumn("__start",
-        col("__off") + sum(col("n_tok")).over(wIn) - col("n_tok"))
+      base: DataFrame, source: String, id: String, quotas: DataFrame,
+      quota: Column): DataFrame =
+    BoundedWindows.runningSum(
+      base, Seq(source), "__b", Seq(col("__h"), col(id)), "n_tok", "__end")
       .join(quotas, source)
-      .filter(col("__start") < col("__quota"))
-  }
+      .filter(col("__end") - col("n_tok") < quota)
 
   /** Repetition-aware corpus mixture — the data-constrained-LM recipe
     * (Muennighoff et al., "Scaling Data-Constrained Language Models"):
@@ -646,13 +651,14 @@ object TrainingData {
     * Scale shape: per-source totals are a 1-row-per-source aggregate
     * joined back as a broadcast; full epochs are a codegen'd
     * `explode(sequence(...))` — linear in OUTPUT size, no shuffle; the
-    * partial epoch reuses the bounded two-level cumsum (bucket offsets
-    * window over ≤`buckets` rows per source, in-bucket window over one
-    * bucket's rows) — never a corpus-wide total-order sort.
+    * partial epoch is [[mixtureSample]]'s admission with the fractional
+    * remainder as the quota (bucket offsets window over ≤[[HashBuckets]]
+    * rows per source, in-bucket window over one bucket's rows) — never a
+    * corpus-wide total-order sort.
     */
   def mixtureWithEpochs(
       df: DataFrame, source: String, id: String, tokens: Column,
-      repetition: Map[String, Double], buckets: Int = 4096): DataFrame = {
+      repetition: Map[String, Double]): DataFrame = {
     require(repetition.values.forall(m => m >= 0 && !m.isNaN && !m.isInfinite),
       s"repetition factors must be finite and >= 0, got ${repetition.filterNot {
         case (_, m) => m >= 0 && !m.isNaN && !m.isInfinite
@@ -660,11 +666,7 @@ object TrainingData {
     val spark = df.sparkSession
     import spark.implicits._
     val rtab = repetition.toSeq.toDF(source, "__mult")
-    val h = TextFunctions.tokenHash60(col(id).cast("string"))
-    val base = df
-      .select(col(id), col(source), tokens.as("__toks"), h.as("__h"))
-      .select(col(id), col(source), size(col("__toks")).cast("long").as("n_tok"),
-        col("__h"), pmod(col("__h"), lit(buckets)).as("__b"))
+    val base = mixtureBase(df, source, id, tokens)
     val totals = base.groupBy(source).agg(sum("n_tok").as("__tot"))
     // repetition factors restricted to exact binary fractions (quarters in
     // the registered query) keep __rem float-exact on both engines.
@@ -687,17 +689,7 @@ object TrainingData {
       .filter(col("__full") > 0)
       .select(col(id), col(source), col("n_tok"),
         explode(sequence(lit(0L), col("__full") - 1)).as("epoch"))
-    val wB = Window.partitionBy(source).orderBy("__b")
-    val offsets = base.groupBy(col(source), col("__b"))
-      .agg(sum("n_tok").as("__bt"))
-      .withColumn("__off", sum(col("__bt")).over(wB) - col("__bt"))
-      .drop("__bt")
-    val wIn = Window.partitionBy(source, "__b").orderBy(col("__h"), col(id))
-    val partial = base.join(offsets, Seq(source, "__b"))
-      .withColumn("__start",
-        col("__off") + sum(col("n_tok")).over(wIn) - col("n_tok"))
-      .join(quota, source)
-      .filter(col("__start") < col("__rem"))
+    val partial = admitByQuota(base, source, id, quota, col("__rem"))
       .select(col(id), col(source), col("n_tok"), col("__full").as("epoch"))
     fullRows.unionByName(partial)
   }
@@ -794,14 +786,63 @@ object TrainingData {
        |  doc_id = component AS is_keeper
        |FROM comp ORDER BY doc_id""".stripMargin
 
+  /** Oracle `b`: each document's 60-bit id hash `h` and token count — the
+    * packing and batching rows' shard layout ([[shardLayout]]).
+    */
+  private val shardTokensCte =
+    """b AS (SELECT doc_id,
+      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+      |  FROM documents)""".stripMargin
+
+  /** Oracle `t` of the mixture rows: [[shardTokensCte]]'s columns plus the
+    * source.
+    */
+  private val mixtureTokensCte =
+    """t AS (SELECT doc_id, source,
+      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+      |  FROM documents)""".stripMargin
+
+  /** Oracle `c` of the mixture rows: each document's START token offset
+    * `strt` in its source's admission order — ONE window over the
+    * (bucket, hash, id) total order, the semantics [[admitByQuota]]
+    * computes through bounded windows.
+    */
+  private val mixtureStartCte =
+    s"""c AS (SELECT doc_id, source, n_tok,
+       |    SUM(n_tok) OVER (PARTITION BY source ORDER BY h % $HashBuckets, h, doc_id) - n_tok AS strt
+       |  FROM t)""".stripMargin
+
+  /** Spark side of [[jaccardPairsCte]]: the MinHash-LSH near-dup pairs
+    * (doc_a, doc_b) at 3-shingle Jaccard ≥ 0.8 that the component rows
+    * cluster.
+    */
+  private def nearDupPairs(docs: DataFrame): DataFrame =
+    Dedup.minHashNearDupPairs(docs, "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
+
+  /** The decontamination rows' split: every 50th document plays the
+    * benchmark, the rest the training corpus — (train, bench).
+    */
+  private def benchSplit(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.filter(pmod(col("doc_id"), lit(50)) =!= 0), docs.filter(pmod(col("doc_id"), lit(50)) === 0))
+
+  /** The corpus-assembly rows' tail: quality gate at 0.5, then the 90/10
+    * hash split — (doc_id, lang, quality_r, split) by doc_id.
+    */
+  private def qualityGateAndSplit(kept: DataFrame): DataFrame =
+    kept.withColumn("quality", TextFunctions.qualityScore(col("text"), TextOps.Stopwords))
+      .filter(col("quality") >= 0.5)
+      .select(col("doc_id"), col("lang"), round(col("quality"), 6).as("quality_r"),
+        hashSplit(col("doc_id"), 90).as("split"))
+      .orderBy("doc_id")
+
   val queries: Seq[Q] = Seq(
     // ---- duplicate-cluster resolution: connected components over MinHash
     // near-dup pairs, min-id canonical per cluster. Oracle replays
     // reachability with a recursive CTE over the exact-Jaccard edge set ----
     Q("dedup_components", dupClustersOracle) { (s, d) =>
-      val pairs = Dedup.minHashNearDupPairs(
-        Tables.documents(s, d), "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
-      dupClusters(pairs, "doc_a", "doc_b").orderBy("doc_id")
+      dupClusters(nearDupPairs(Tables.documents(s, d)), "doc_a", "doc_b").orderBy("doc_id")
     },
 
     // ---- the same cluster resolution through the O(log n) large-star/
@@ -812,9 +853,8 @@ object TrainingData {
     // oracle-checks it every round; the per-round bench times the
     // min-label formulation that shares its plan prefix ----
     Q.weekly("dedup_components_star", dupClustersOracle) { (s, d) =>
-      val pairs = Dedup.minHashNearDupPairs(
-        Tables.documents(s, d), "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
-      clustersOf(connectedComponentsStar(pairs, "doc_a", "doc_b")).orderBy("doc_id")
+      clustersOf(connectedComponentsStar(nearDupPairs(Tables.documents(s, d)), "doc_a", "doc_b"))
+        .orderBy("doc_id")
     },
 
     // ---- quality-aware cluster resolution: keep the highest-n_chars
@@ -837,9 +877,7 @@ object TrainingData {
          |ORDER BY doc_id""".stripMargin,
     ) { (s, d) =>
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.minHashNearDupPairs(
-        docs, "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
-      keepBestPerCluster(docs, "doc_id", col("n_chars"), pairs, "doc_a", "doc_b")
+      keepBestPerCluster(docs, "doc_id", col("n_chars"), nearDupPairs(docs), "doc_a", "doc_b")
         .orderBy("doc_id")
     },
 
@@ -866,9 +904,7 @@ object TrainingData {
          |GROUP BY d.source ORDER BY d.source""".stripMargin,
     ) { (s, d) =>
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.minHashNearDupPairs(
-        docs, "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
-      val kept = keepBestPerCluster(docs, "doc_id", col("n_chars"), pairs,
+      val kept = keepBestPerCluster(docs, "doc_id", col("n_chars"), nearDupPairs(docs),
         "doc_a", "doc_b")
         .select(col("doc_id"), col("is_kept"))
       docs.join(kept, "doc_id")
@@ -901,11 +937,9 @@ object TrainingData {
         |FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
         |WHERE d.doc_id % 50 <> 0 ORDER BY d.doc_id""".stripMargin,
     ) { (s, d) =>
-      val docs = Tables.documents(s, d)
+      val (train, bench) = benchSplit(Tables.documents(s, d))
       decontaminate(
-        docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-        "doc_id", col("text"), 5)
+        train, bench, "doc_id", col("text"), 5)
         .orderBy("doc_id")
     },
 
@@ -934,11 +968,9 @@ object TrainingData {
         |FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
         |WHERE d.doc_id % 50 <> 0 ORDER BY d.doc_id""".stripMargin,
     ) { (s, d) =>
-      val docs = Tables.documents(s, d)
+      val (train, bench) = benchSplit(Tables.documents(s, d))
       contaminationOverlap(
-        docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-        "doc_id", col("text"), 5)
+        train, bench, "doc_id", col("text"), 5)
         .orderBy("doc_id")
     },
 
@@ -964,11 +996,9 @@ object TrainingData {
         |FROM documents d LEFT JOIN m USING (doc_id)
         |WHERE d.doc_id % 50 <> 0 ORDER BY d.doc_id""".stripMargin,
     ) { (s, d) =>
-      val docs = Tables.documents(s, d)
+      val (train, bench) = benchSplit(Tables.documents(s, d))
       decontaminateFuzzy(
-        docs.filter(pmod(col("doc_id"), lit(50)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(50)) === 0),
-        "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
+        train, bench, "doc_id", TextFunctions.wordShingles(col("text"), 3), 0.8)
         .orderBy("doc_id")
     },
 
@@ -1158,14 +1188,7 @@ object TrainingData {
     ) { (s, d) =>
       val docs = Tables.documents(s, d)
       val keep = docs.groupBy("text").agg(min("doc_id").as("doc_id")).select("doc_id")
-      docs.join(keep, "doc_id")
-        .withColumn("quality",
-          TextFunctions.qualityScore(col("text"), TextOps.Stopwords))
-        .filter(col("quality") >= 0.5)
-        .select(col("doc_id"), col("lang"),
-          round(col("quality"), 6).as("quality_r"),
-          hashSplit(col("doc_id"), 90).as("split"))
-        .orderBy("doc_id")
+      qualityGateAndSplit(docs.join(keep, "doc_id"))
     },
 
     // ---- the FULL modern assembly: exact dedup → benchmark
@@ -1211,9 +1234,7 @@ object TrainingData {
          |    THEN 'train' ELSE 'test' END AS split
          |FROM scored WHERE quality >= 0.5 ORDER BY doc_id""".stripMargin,
     ) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val train = docs.filter(pmod(col("doc_id"), lit(50)) =!= 0)
-      val bench = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
+      val (train, bench) = benchSplit(Tables.documents(s, d))
       val keep = train.groupBy("text").agg(min("doc_id").as("doc_id")).select("doc_id")
       val kept = train.join(keep, "doc_id")
       val clean = decontaminate(kept, bench, "doc_id", col("text"), 5)
@@ -1227,12 +1248,8 @@ object TrainingData {
         .groupBy("doc_id").agg(sum("c").as("n"), count(lit(1)).as("nd"))
         .filter((col("n") - col("nd")).cast("double") / col("n") > 0.06)
         .select("doc_id")
-      kept.join(clean, "doc_id").join(highRep, Seq("doc_id"), "left_anti")
-        .withColumn("quality", TextFunctions.qualityScore(col("text"), TextOps.Stopwords))
-        .filter(col("quality") >= 0.5)
-        .select(col("doc_id"), col("lang"), round(col("quality"), 6).as("quality_r"),
-          hashSplit(col("doc_id"), 90).as("split"))
-        .orderBy("doc_id")
+      qualityGateAndSplit(
+        kept.join(clean, "doc_id").join(highRep, Seq("doc_id"), "left_anti"))
     },
 
     // ---- context-window chunking: 64-token windows every 48 tokens
@@ -1285,10 +1302,7 @@ object TrainingData {
     // local; buckets via integer bit-length on both engines ----
     Q(
       "batch_by_length",
-      """WITH b AS (SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
+      s"""WITH $shardTokensCte,
         |f AS (SELECT doc_id, n_tok,
         |    CAST(length(bin(n_tok)) - 1 AS BIGINT) AS bucket,
         |    h % 8 AS shard
@@ -1318,10 +1332,7 @@ object TrainingData {
     // discipline; the boundary explode is ≤ total_tokens/256 extra rows ----
     Q(
       "seq_pack_concat",
-      """WITH b AS (SELECT doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
+      s"""WITH $shardTokensCte,
         |o AS (SELECT doc_id, h % 8 AS shard, n_tok,
         |    CAST(SUM(n_tok) OVER (PARTITION BY h % 8 ORDER BY h, doc_id)
         |      AS BIGINT) AS e
@@ -1348,13 +1359,8 @@ object TrainingData {
     // the bounded two-level decomposition (see mixtureSample) ----
     Q(
       "corpus_mixture",
-      """WITH t AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (SELECT doc_id, source, n_tok,
-        |    SUM(n_tok) OVER (PARTITION BY source ORDER BY h % 4096, h, doc_id) - n_tok AS strt
-        |  FROM t)
+      s"""WITH $mixtureTokensCte,
+        |$mixtureStartCte
         |SELECT doc_id, source, n_tok FROM c
         |WHERE strt < (CAST(substr(source, 4) AS INTEGER) % 4 + 1) / 50.0 * 3000
         |ORDER BY doc_id""".stripMargin,
@@ -1373,19 +1379,14 @@ object TrainingData {
     // quota arithmetic is all-BIGINT and the oracle replays it exactly ----
     Q(
       "corpus_mixture_temperature",
-      """WITH t AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
+      s"""WITH $mixtureTokensCte,
         |sz AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS n FROM t GROUP BY 1),
         |sq AS (SELECT source,
         |    CAST(FLOOR(sqrt(CAST(n AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT) AS s
         |  FROM sz),
         |st AS (SELECT CAST(SUM(s) AS BIGINT) AS stot FROM sq),
         |qt AS (SELECT source, (s * 3000) // stot AS quota FROM sq CROSS JOIN st),
-        |c AS (SELECT doc_id, source, n_tok,
-        |    SUM(n_tok) OVER (PARTITION BY source ORDER BY h % 4096, h, doc_id) - n_tok AS strt
-        |  FROM t)
+        |$mixtureStartCte
         |SELECT c.doc_id, c.source, c.n_tok, qt.quota AS src_quota
         |FROM c JOIN qt USING (source) WHERE c.strt < qt.quota
         |ORDER BY doc_id""".stripMargin,
@@ -1403,10 +1404,7 @@ object TrainingData {
     // hash-ordered prefix under the same cumsum as corpus_mixture ----
     Q(
       "corpus_mixture_epochs",
-      """WITH t AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
+      s"""WITH $mixtureTokensCte,
         |q AS (SELECT source, SUM(n_tok) AS tot,
         |    (CAST(substr(source, 4) AS INTEGER) % 4) * 0.75 + 0.5 AS mult
         |  FROM t GROUP BY source),
@@ -1415,9 +1413,7 @@ object TrainingData {
         |full_rows AS (SELECT t.doc_id, t.source, t.n_tok,
         |    unnest(range(qq.nfull)) AS epoch
         |  FROM t JOIN qq USING (source)),
-        |c AS (SELECT doc_id, source, n_tok,
-        |    SUM(n_tok) OVER (PARTITION BY source ORDER BY h % 4096, h, doc_id) - n_tok AS strt
-        |  FROM t),
+        |$mixtureStartCte,
         |part_rows AS (SELECT c.doc_id, c.source, c.n_tok, qq.nfull AS epoch
         |  FROM c JOIN qq USING (source) WHERE c.strt < qq.rem)
         |SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch, n_tok

@@ -235,7 +235,35 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   // ------------------------------------------------------------------ views
 
   private def viewsDir = Paths.get(warehouse, "_views")
-  private def viewPath(name: String) = viewsDir.resolve(s"$name.sql")
+
+  /** Named SQL definitions of one `kind`, stored as TEXT in
+    * `_views/<name>.<ext>`, one file per definition; `kind` names it in
+    * the not-found message.
+    */
+  private final class SqlDefs(ext: String, kind: String) {
+    private def path(name: String) = viewsDir.resolve(s"$name.$ext")
+    def exists(name: String): Boolean = Files.exists(path(name))
+    def names(): Seq[String] =
+      if (!Files.exists(viewsDir)) Seq.empty
+      else listDir(viewsDir).map(_.getFileName.toString)
+        .filter(_.endsWith(s".$ext")).map(_.stripSuffix(s".$ext")).sorted
+    def write(name: String, text: String): Unit = {
+      Files.createDirectories(viewsDir)
+      Files.writeString(path(name), text)
+    }
+    def read(name: String): String = {
+      require(exists(name), s"$kind $name does not exist")
+      Files.readString(path(name))
+    }
+    def drop(name: String): Unit = {
+      require(exists(name), s"$kind $name does not exist")
+      Files.delete(path(name))
+    }
+  }
+
+  private val viewDefs = new SqlDefs("sql", "view")
+  private val functionDefs = new SqlDefs("fnsql", "function")
+  private val mviewDefs = new SqlDefs("msql", "materialized view")
 
   /** Persist a named view: the SQL TEXT is the stored artifact (resolved
     * against the catalog at every read, like any SQL-engine view — a view
@@ -247,30 +275,18 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     require(!exists(name), s"$name is a table; views and tables share a namespace")
     require(!materializedViewExists(name), s"$name is a materialized view")
     require(orReplace || !viewExists(name), s"view $name already exists")
-    Files.createDirectories(viewsDir)
-    Files.writeString(viewPath(name), sql)
+    viewDefs.write(name, sql)
   }
 
-  def viewExists(name: String): Boolean = Files.exists(viewPath(name))
+  def viewExists(name: String): Boolean = viewDefs.exists(name)
 
-  def views(): Seq[String] =
-    if (!Files.exists(viewsDir)) Seq.empty
-    else listDir(viewsDir).map(_.getFileName.toString)
-      .filter(_.endsWith(".sql")).map(_.stripSuffix(".sql")).sorted
+  def views(): Seq[String] = viewDefs.names()
 
-  def viewSql(name: String): String = {
-    require(viewExists(name), s"view $name does not exist")
-    Files.readString(viewPath(name))
-  }
+  def viewSql(name: String): String = viewDefs.read(name)
 
-  def dropView(name: String): Unit = {
-    require(viewExists(name), s"view $name does not exist")
-    Files.delete(viewPath(name))
-  }
+  def dropView(name: String): Unit = viewDefs.drop(name)
 
   // ------------------------------------------------------------- functions
-
-  private def fnPath(name: String) = viewsDir.resolve(s"$name.fnsql")
 
   /** Persist a SQL function definition (the text after `CREATE FUNCTION
     * <name>` — parameter list, RETURNS clause, RETURN body). Spark's
@@ -282,30 +298,18 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     */
   def defineFunction(name: String, defText: String, orReplace: Boolean = false): Unit = {
     require(orReplace || !functionExists(name), s"function $name already exists")
-    Files.createDirectories(viewsDir)
-    Files.writeString(fnPath(name), defText)
+    functionDefs.write(name, defText)
   }
 
-  def functionExists(name: String): Boolean = Files.exists(fnPath(name))
+  def functionExists(name: String): Boolean = functionDefs.exists(name)
 
-  def functions(): Seq[String] =
-    if (!Files.exists(viewsDir)) Seq.empty
-    else listDir(viewsDir).map(_.getFileName.toString)
-      .filter(_.endsWith(".fnsql")).map(_.stripSuffix(".fnsql")).sorted
+  def functions(): Seq[String] = functionDefs.names()
 
-  def functionSql(name: String): String = {
-    require(functionExists(name), s"function $name does not exist")
-    Files.readString(fnPath(name))
-  }
+  def functionSql(name: String): String = functionDefs.read(name)
 
-  def dropFunction(name: String): Unit = {
-    require(functionExists(name), s"function $name does not exist")
-    Files.delete(fnPath(name))
-  }
+  def dropFunction(name: String): Unit = functionDefs.drop(name)
 
   // ------------------------------------------------------ materialized views
-
-  private def mviewPath(name: String) = viewsDir.resolve(s"$name.msql")
 
   /** Record a materialized view's definition. The caller (the SQL router)
     * owns the backing TABLE named `name` — a materialized view is exactly
@@ -318,26 +322,16 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   def defineMaterializedView(name: String, sql: String): Unit = {
     require(exists(name), s"materialized view $name needs its backing table first")
     require(!viewExists(name), s"$name is already a plain view")
-    Files.createDirectories(viewsDir)
-    Files.writeString(mviewPath(name), sql)
+    mviewDefs.write(name, sql)
   }
 
-  def materializedViewExists(name: String): Boolean = Files.exists(mviewPath(name))
+  def materializedViewExists(name: String): Boolean = mviewDefs.exists(name)
 
-  def materializedViews(): Seq[String] =
-    if (!Files.exists(viewsDir)) Seq.empty
-    else listDir(viewsDir).map(_.getFileName.toString)
-      .filter(_.endsWith(".msql")).map(_.stripSuffix(".msql")).sorted
+  def materializedViews(): Seq[String] = mviewDefs.names()
 
-  def materializedViewSql(name: String): String = {
-    require(materializedViewExists(name), s"materialized view $name does not exist")
-    Files.readString(mviewPath(name))
-  }
+  def materializedViewSql(name: String): String = mviewDefs.read(name)
 
-  def dropMaterializedViewDef(name: String): Unit = {
-    require(materializedViewExists(name), s"materialized view $name does not exist")
-    Files.delete(mviewPath(name))
-  }
+  def dropMaterializedViewDef(name: String): Unit = mviewDefs.drop(name)
 
   // ------------------------------------------------------------- statistics
 

@@ -276,15 +276,27 @@ class FunctionsSpec extends SparkSpec {
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "v w x y z"))
       .toDF("doc_id", "text")
     val sh = TextFunctions.wordShingles(col("text"), 2)
+    val cat = new graft.sources.Catalog(spark, graft.operators.CatalogOps.tempWarehouse())
     // no row per band, more rows per band than hashes, and 32 % 3 = 2
     // hashes that no band would cover
     for (bandRows <- Seq(0, 33, 3)) {
-      val e = intercept[IllegalArgumentException](
-        Dedup.minHashNearDupPairs(docs, "doc_id", sh, 0.8, 32, bandRows))
-      assert(e.getMessage.contains(s"bandRows = $bandRows") &&
-        e.getMessage.contains("numHashes = 32"), e.getMessage)
-      intercept[IllegalArgumentException](
-        Dedup.lshCandidatePairs(docs, "doc_id", sh, 32, bandRows))
+      val entryPoints: Seq[(String, () => Any)] = Seq(
+        "minHashNearDupPairs" -> (() => Dedup.minHashNearDupPairs(docs, "doc_id", sh, 0.8, 32, bandRows)),
+        "lshCandidatePairs" -> (() => Dedup.lshCandidatePairs(docs, "doc_id", sh, 32, bandRows)),
+        "minHashCrossPairs" -> (() =>
+          Dedup.minHashCrossPairs(docs, "doc_id", sh, docs, "doc_id", sh, 0.8, 32, bandRows)),
+        "buildMinHashIndex" -> (() =>
+          Dedup.buildMinHashIndex(cat, "mh_bad", docs, "doc_id", sh, 32, bandRows)),
+        "probeMinHashIndex" -> (() =>
+          Dedup.probeMinHashIndex(cat, "mh_bad", docs, "doc_id", sh, 0.8, 32, bandRows)))
+      entryPoints.foreach { case (name, call) =>
+        var e: IllegalArgumentException = null
+        val jobs = jobsRunBy { e = intercept[IllegalArgumentException](call()) }
+        assert(e.getMessage.contains(s"bandRows = $bandRows") &&
+          e.getMessage.contains("numHashes = 32"), s"$name: ${e.getMessage}")
+        // rejected before the hashed-shingle checkpoint runs over the corpus
+        assert(jobs.isEmpty, s"$name with bandRows = $bandRows ran ${jobs.size} jobs")
+      }
     }
     // the extremes that divide: 32 one-row bands, one 32-row band
     for (bandRows <- Seq(1, 32)) {

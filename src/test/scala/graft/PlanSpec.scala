@@ -432,6 +432,37 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("training-data tier rows plan no more Exchanges than their pinned counts") {
+    // measured at sf0.001 before the training-data tier shared one bucketed
+    // running sum, one bucketed top-k and one shard layout (pre-execution
+    // AQE plan, broadcast exchanges counted)
+    val rows = Map(
+      "decontaminate_benchmark" -> 5, "decontaminate_overlap" -> 5,
+      "decontaminate_semantic" -> 7, "stratified_split" -> 1,
+      "kfold_assign" -> 2, "corpus_budget_select" -> 13,
+      "kfold_group_assign" -> 3, "training_corpus" -> 3,
+      "training_corpus_v2" -> 16, "doc_chunk" -> 1, "seq_pack" -> 2,
+      "batch_by_length" -> 2, "seq_pack_concat" -> 2, "corpus_mixture" -> 6,
+      "corpus_mixture_temperature" -> 10, "corpus_mixture_epochs" -> 11,
+      "dsir_importance" -> 16, "pii_redact" -> 1, "q_stratified_sample" -> 3,
+      "q_weighted_sample" -> 3, "corpus_lang_balance" -> 11)
+    // pinned by the dedup-tier test
+    val dedupPinned = Set("dedup_components", "dedup_components_star",
+      "dedup_cluster_keep_best", "dedup_report_by_source", "decontaminate_fuzzy")
+    assert(rows.keySet ++ dedupPinned ==
+      graft.operators.TrainingData.queries.map(_.name).toSet)
+    // the events rows built on the same bucketed running sum, 30-minute
+    // sessions and as-of inputs
+    val pinned = rows ++ Map(
+      "q_global_running_sum" -> 5, "events_max_concurrency" -> 12,
+      "q_sessionize_gap" -> 2, "events_top_paths" -> 2, "q_asof_join" -> 3,
+      "q_asof_join_forward" -> 3, "q_asof_join_nearest" -> 3)
+    pinned.foreach { case (name, maxEx) =>
+      val (ex, _) = exchangesAndGenerates(SparkEntry.queries(name)(spark, sf0001))
+      assert(ex <= maxEx, s"$name plans $ex Exchanges (pinned $maxEx)")
+    }
+  }
+
   test("tokenizer plans do not grow with the model: 10 vs 30,000 merges") {
     import spark.implicits._
     val docs = Seq((1L, "the lower lowest"), (2L, "newer wider"), (3L, "aaaa b"))

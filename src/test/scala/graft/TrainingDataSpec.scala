@@ -328,20 +328,28 @@ class TrainingDataSpec extends SparkSpec {
   test("weightedSample's bounded windows reproduce the naive single-window sample") {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sf0001)
-    val got = TrainingData.weightedSample(docs, "source", "doc_id", col("n_chars"), 5)
-      .select("source", "doc_id", "rn")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def rows(df: org.apache.spark.sql.DataFrame, group: String) =
+      df.select(group, "doc_id", "rn")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // naive formulation: ONE window over each whole group
+    def naive(group: String, order: org.apache.spark.sql.Column*) = rows(docs
+      .withColumn("rn", row_number().over(Window.partitionBy(group).orderBy(order: _*))
+        .cast("long")).filter(col("rn") <= 5), group)
     val u = (graft.functions.TextFunctions
       .tokenHash60(concat(lit("ws:"), col("doc_id").cast("string")))
       % 1000003L + 1L).cast("double") / 1000004.0
-    val w = Window.partitionBy("source").orderBy((log(u) / col("n_chars")).desc, col("doc_id"))
-    val naive = docs
-      .withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= 5)
-      .select("source", "doc_id", "rn")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == naive)
-    assert(got.nonEmpty)
+    val h = graft.functions.TextFunctions.tokenHash60(col("doc_id").cast("string"))
+    // the weighted sample, and the stratified sample (same bounded top-k,
+    // hash order instead of the weighted key)
+    val cases = Seq(
+      rows(TrainingData.weightedSample(docs, "source", "doc_id", col("n_chars"), 5), "source") ->
+        naive("source", (log(u) / col("n_chars")).desc, col("doc_id")),
+      rows(TrainingData.stratifiedSample(docs, "lang", "doc_id", 5), "lang") ->
+        naive("lang", h, col("doc_id")))
+    cases.foreach { case (got, want) =>
+      assert(got == want)
+      assert(got.nonEmpty)
+    }
   }
 
   test("weightedSample is biased toward heavy rows (weight = n_chars)") {
