@@ -3,15 +3,21 @@ package graft.operators
 import java.nio.file.Files
 
 import graft.{Det, LocalFiles, Q, Tables}
-import graft.sources.Catalog
+import graft.functions.TextFunctions
+import graft.sources.{Catalog, CatalogSql, GraftSql}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Catalog / ingest / partition lifecycle as driver-checkable queries
-  * (SURVEY.md §2.1 S4/S6/S8/S9): round-trip the documents fixture through
-  * a warehouse table partitioned by `lang`, then query it back — results
-  * must equal querying the original fixture directly (which is what the
-  * DuckDB oracle does). Exercises create → insert (Hive-partitioned
-  * parquet) → partition-pruned read → nest.
+/** The catalog tier as oracle-checked queries (SURVEY.md §2.1
+  * S4/S6/S8/S9): each row stages a fixture in its own warehouse, runs one
+  * storage lifecycle on it and queries the result back, and the DuckDB
+  * oracle replays the same lifecycle relationally over the fixture. The
+  * rows cover hustle's create → append-only insert → partition-pruned
+  * read → partition delete → nest, the row-level DML on top of it
+  * (delete, merge, update, replace-where, erase), time travel, restore,
+  * clone, export/import and the CDC feed, the SQL-text surface
+  * ([[graft.sources.CatalogSql]]), the CSV/ORC/Avro ingest decoders and
+  * the clustered layouts (bucketing, Z-order, Hilbert, compaction).
   */
 object CatalogOps {
 
@@ -25,6 +31,172 @@ object CatalogOps {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       try LocalFiles.deleteRecursively(dir) catch { case _: Throwable => () }))
     dir.toString
+  }
+
+  /** A fresh warehouse: its catalog, the documents fixture and the
+    * warehouse path (rows stage their input files under it).
+    */
+  private def docsWarehouse(s: SparkSession, d: String): (Catalog, DataFrame, String) = {
+    val wh = tempWarehouse()
+    (new Catalog(s, wh), Tables.documents(s, d), wh)
+  }
+
+  /** [[docsWarehouse]] with the documents fixture inserted as `table`,
+    * partitioned by `lang` (version 1).
+    */
+  private def stagedDocs(s: SparkSession, d: String,
+      table: String): (Catalog, DataFrame, String) = {
+    val staged @ (cat, docs, _) = docsWarehouse(s, d)
+    cat.create(table, docs.schema, partitionBy = Some("lang"))
+    cat.insert(table, docs)
+    staged
+  }
+
+  /** A SQL-text session over a fresh warehouse, fixtures registered as
+    * views: the statement runner, its catalog and the warehouse path.
+    */
+  private def sqlSession(s: SparkSession,
+      d: String): (String => DataFrame, Catalog, String) = {
+    GraftSql.registerFixtures(s, d)
+    val wh = tempWarehouse()
+    val cat = new Catalog(s, wh)
+    ((q: String) => CatalogSql.exec(s, cat, q), cat, wh)
+  }
+
+  /** Per-language document count and char total; `chars` is the summed
+    * column (rows that widen it pass the cast).
+    */
+  private def langProfile(df: DataFrame, chars: Column = col("n_chars")): DataFrame =
+    df.groupBy("lang").agg(count(lit(1)).as("n_docs"), sum(chars).as("total_chars"))
+
+  /** [[langProfile]] of each named snapshot, tagged `snap`, in one result
+    * ordered by (snap, lang).
+    */
+  private def snapProfiles(chars: Column, snaps: (String, DataFrame)*): DataFrame =
+    snaps.map { case (snap, df) =>
+      langProfile(df, chars)
+        .select(lit(snap).as("snap"), col("lang"), col("n_docs"), col("total_chars"))
+    }.reduce(_ unionByName _).orderBy("snap", "lang")
+
+  /** Oracle of [[langProfile]] over the fixture, ordered by language. */
+  private val LangProfileOracle =
+    """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
+      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
+
+  /** [[langProfile]] plus the md5-top-60 text fingerprint sum, which
+    * proves the text column survived an encode/parse cycle byte-exactly,
+    * ordered by language.
+    */
+  private def langTextProfile(df: DataFrame): DataFrame =
+    df.groupBy("lang")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("total_chars"),
+        sum(TextFunctions.tokenHash60(col("text")) % 1000003L).as("text_fp"))
+      .orderBy("lang")
+
+  /** Oracle of [[langTextProfile]] over the fixture. */
+  private val LangTextProfileOracle =
+    """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+      |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
+      |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
+      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
+
+  /** The MERGE batch's matched half: doc_id % 7 = 3 rows re-sourced
+    * 'merged' with n_chars + 1000.
+    */
+  private def mergedRows(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 7 === 3)
+      .withColumn("source", lit("merged"))
+      .withColumn("n_chars", col("n_chars") + 1000)
+
+  /** The upsert batch: [[mergedRows]] plus doc_id + 10000000 clones of
+    * the doc_id % 11 = 5 rows sourced 'fresh' (unmatched, so inserted).
+    */
+  private def upsertBatch(docs: DataFrame): DataFrame =
+    mergedRows(docs).unionByName(docs.filter(col("doc_id") % 11 === 5)
+      .withColumn("doc_id", col("doc_id") + 10000000L)
+      .withColumn("source", lit("fresh")))
+
+  /** The delete-then-merge lifecycle on a [[stagedDocs]] `docs_wh`: v2
+    * deletes the src0 rows and the n_chars % 17 = 3 rows, v3 merges
+    * `batch` on doc_id.
+    */
+  private def deleteThenMerge(cat: Catalog, batch: DataFrame): Unit = {
+    cat.deleteRows("docs_wh", col("source") === "src0" || col("n_chars") % 17 === 3)
+    cat.merge("docs_wh", batch, "doc_id")
+  }
+
+  /** Oracle CTE `del`: the fixture after [[deleteThenMerge]]'s delete. */
+  private val DelCte =
+    """del AS (
+      |  SELECT * FROM documents
+      |  WHERE NOT COALESCE(source = 'src0' OR n_chars % 17 = 3, FALSE))""".stripMargin
+
+  /** Oracle rows of [[mergedRows]]. */
+  private val MergedRowsSql =
+    """  SELECT doc_id, text, lang, 'merged' AS source,
+      |         CAST(n_chars + 1000 AS BIGINT) AS n_chars
+      |  FROM documents WHERE doc_id % 7 = 3""".stripMargin
+
+  /** Oracle CTE `upd`: the rows of [[upsertBatch]]. */
+  private val UpsertCte =
+    s"""upd AS (
+       |$MergedRowsSql
+       |  UNION ALL
+       |  SELECT CAST(doc_id + 10000000 AS BIGINT), text, lang,
+       |         'fresh' AS source, n_chars
+       |  FROM documents WHERE doc_id % 11 = 5)""".stripMargin
+
+  /** Oracle CTE `name`: MERGE on doc_id of `upd` into `base`, replayed as
+    * upd ∪ (base ∖ keys).
+    */
+  private def mergeCte(name: String, base: String): String =
+    s"""$name AS (
+       |  SELECT * FROM upd
+       |  UNION ALL
+       |  SELECT d.* FROM $base d
+       |  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.doc_id = d.doc_id))""".stripMargin
+
+  /** Oracle CTEs `del`, `upd` and `head` of the rows whose v3 merges the
+    * [[upsertBatch]].
+    */
+  private val UpsertLifecycleCtes = s"WITH $DelCte,\n$UpsertCte,\n${mergeCte("head", "del")}"
+
+  /** Oracle of the two SQL time-travel rows: per language, the v1 count,
+    * the head count after the doc_id % 4 = 1 delete, and their difference.
+    */
+  private val SqlTimeTravelOracle =
+    """WITH v1 AS (
+      |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
+      |  FROM documents),
+      |head AS (SELECT * FROM v1 WHERE NOT (doc_id % 4 = 1)),
+      |a1 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1 FROM v1 GROUP BY lang),
+      |a2 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2 FROM head GROUP BY lang)
+      |SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
+      |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
+      |FROM a1 JOIN a2 ON a1.lang = a2.lang ORDER BY a1.lang""".stripMargin
+
+  /** The SQL time-travel rows' body: `table` created from the fixture
+    * (v1), doc_id % 4 = 1 deleted (v2), then v1 — named by the clause
+    * `asOf` builds from the catalog — and head counted per language in one
+    * statement.
+    */
+  private def sqlTimeTravel(table: String)(asOf: Catalog => String)(
+      s: SparkSession, d: String): DataFrame = {
+    val (x, cat, _) = sqlSession(s, d)
+    x(s"""CREATE TABLE $table AS
+        |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
+        |FROM documents""".stripMargin)
+    x(s"DELETE FROM $table WHERE doc_id % 4 = 1") // v2
+    x(s"""SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
+        |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
+        |FROM (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1
+        |      FROM $table ${asOf(cat)} GROUP BY lang) a1
+        |JOIN (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2
+        |      FROM $table GROUP BY lang) a2 ON a1.lang = a2.lang
+        |ORDER BY a1.lang""".stripMargin)
   }
 
   /** Incremental view maintenance over the CDC feed: roll a materialized
@@ -64,20 +236,10 @@ object CatalogOps {
     // write/read cycle bit-for-bit ----
     Q(
       "catalog_roundtrip",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs)
-      cat.table("docs_wh")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))
-        .orderBy("lang")
+      val (cat, _, _) = stagedDocs(s, d, "docs_wh")
+      langProfile(cat.table("docs_wh")).orderBy("lang")
     },
 
     // ---- OCC multi-writer commit: four writers insert disjoint slices
@@ -87,12 +249,9 @@ object CatalogOps {
     // computes; the linear version log is asserted in-query. ----
     Q(
       "catalog_concurrent_commit",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangProfileOracle,
     ) { (s, d) =>
-      val cat = new Catalog(s, tempWarehouse())
-      val docs = Tables.documents(s, d)
+      val (cat, docs, _) = docsWarehouse(s, d)
       cat.create("docs_occ", docs.schema)
       val writers = (0 until 4).map { i =>
         new Thread(() =>
@@ -101,11 +260,7 @@ object CatalogOps {
       writers.foreach(_.start()); writers.foreach(_.join())
       require(cat.versions("docs_occ") == (1 to 4),
         s"OCC log must be linear 1..4, got ${cat.versions("docs_occ")}")
-      cat.table("docs_occ")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))
-        .orderBy("lang")
+      langProfile(cat.table("docs_occ")).orderBy("lang")
     },
 
     // ---- deep EXPORT → IMPORT round-trip (cross-warehouse replication,
@@ -121,21 +276,12 @@ object CatalogOps {
         |FROM documents WHERE NOT COALESCE(source = 'src0', FALSE)
         |GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      val cat = new Catalog(s, tempWarehouse())
-      val docs = Tables.documents(s, d)
-      cat.create("exp_src", docs.schema, partitionBy = Some("lang"))
-      cat.insert("exp_src", docs)
+      val (cat, _, wh) = stagedDocs(s, d, "exp_src")
       cat.deleteRows("exp_src", col("source") === "src0")
-      val dest = java.nio.file.Files
-        .createTempDirectory("graft_exp_").toString
-      cat.exportTable("exp_src", dest)
+      cat.exportTable("exp_src", s"$wh/exported")
       val cat2 = new Catalog(s, tempWarehouse())
-      cat2.importTable("exp_dst", dest)
-      cat2.table("exp_dst")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"))
-        .orderBy("lang")
+      cat2.importTable("exp_dst", s"$wh/exported")
+      langProfile(cat2.table("exp_dst")).orderBy("lang")
     },
 
     // ---- the SQL-TEXT surface over the warehouse (CatalogSql): CTAS →
@@ -172,9 +318,7 @@ object CatalogOps {
         |  CAST(MAX(doc_id) AS BIGINT) AS max_id
         |FROM fin GROUP BY lang, tag ORDER BY lang, tag""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_sql AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -233,9 +377,7 @@ object CatalogOps {
         |  CAST(MAX(doc_id) AS BIGINT) AS max_id
         |FROM merged GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_cm AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -272,9 +414,7 @@ object CatalogOps {
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
         |FROM up GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_up AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -301,9 +441,7 @@ object CatalogOps {
         |v_big AS (SELECT * FROM v_lang WHERE n_docs > 10)
         |SELECT lang, n_docs, total_chars FROM v_big ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_v AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -331,9 +469,7 @@ object CatalogOps {
         |  CAST(SUM(doc_id) AS BIGINT) AS id_sum
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_zo AS
           |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -368,9 +504,7 @@ object CatalogOps {
         |  CAST(SUM(COALESCE(score, -1)) AS BIGINT) AS score_sum
         |FROM m GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_me AS
           |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -407,9 +541,7 @@ object CatalogOps {
         |  CAST(SUM(density) AS BIGINT) AS total_density
         |FROM s GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE FUNCTION toks(t STRING) RETURNS BIGINT
           |RETURN CAST(length(t) - length(replace(t, ' ', '')) + 1 AS BIGINT)""".stripMargin)
       x("""CREATE FUNCTION density(c BIGINT, tk BIGINT) RETURNS BIGINT
@@ -433,15 +565,9 @@ object CatalogOps {
     // survived the encode/parse cycle byte-exactly ----
     Q(
       "catalog_sql_copy",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, wh) = sqlSession(s, d)
       x("""CREATE TABLE docs_exp AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -461,31 +587,8 @@ object CatalogOps {
     // version-over-version delta join. Oracle replays both states ----
     Q(
       "catalog_sql_time_travel",
-      """WITH v1 AS (
-        |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        |  FROM documents),
-        |head AS (SELECT * FROM v1 WHERE NOT (doc_id % 4 = 1)),
-        |a1 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1 FROM v1 GROUP BY lang),
-        |a2 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2 FROM head GROUP BY lang)
-        |SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
-        |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
-        |FROM a1 JOIN a2 ON a1.lang = a2.lang ORDER BY a1.lang""".stripMargin,
-    ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
-      x("""CREATE TABLE docs_tt AS
-          |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
-      x("DELETE FROM docs_tt WHERE doc_id % 4 = 1") // v2
-      x("""SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
-          |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
-          |FROM (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1
-          |      FROM docs_tt VERSION AS OF 1 GROUP BY lang) a1
-          |JOIN (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2
-          |      FROM docs_tt GROUP BY lang) a2 ON a1.lang = a2.lang
-          |ORDER BY a1.lang""".stripMargin)
-    },
+      SqlTimeTravelOracle,
+    )(sqlTimeTravel("docs_tt")(_ => "VERSION AS OF 1")),
 
     // ---- TIMESTAMP-form time travel: the same v1-vs-head comparison
     // resolved by COMMIT TIME (manifest mtime — the atomic rename that IS
@@ -494,23 +597,8 @@ object CatalogOps {
     // the rewrite must map it to v1 ----
     Q(
       "catalog_sql_time_travel_ts",
-      """WITH v1 AS (
-        |  SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        |  FROM documents),
-        |head AS (SELECT * FROM v1 WHERE NOT (doc_id % 4 = 1)),
-        |a1 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1 FROM v1 GROUP BY lang),
-        |a2 AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2 FROM head GROUP BY lang)
-        |SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
-        |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
-        |FROM a1 JOIN a2 ON a1.lang = a2.lang ORDER BY a1.lang""".stripMargin,
-    ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
-      x("""CREATE TABLE docs_tts AS
-          |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
-      x("DELETE FROM docs_tts WHERE doc_id % 4 = 1") // v2
+      SqlTimeTravelOracle,
+    )(sqlTimeTravel("docs_tts") { cat =>
       // Boundary = v1's OWN commit time. versionAt resolves "latest
       // commit ≤ ts", and the catalog guarantees strictly increasing
       // manifest mtimes (commitVersion's monotonicity nudge), so this
@@ -519,14 +607,8 @@ object CatalogOps {
       val boundary = cat.historyWithTime("docs_tts")
         .find(_._1 == 1).map(_._4)
         .getOrElse(throw new IllegalStateException("docs_tts v1 missing"))
-      x(s"""SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
-          |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
-          |FROM (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n1
-          |      FROM docs_tts TIMESTAMP AS OF '$boundary' GROUP BY lang) a1
-          |JOIN (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n2
-          |      FROM docs_tts GROUP BY lang) a2 ON a1.lang = a2.lang
-          |ORDER BY a1.lang""".stripMargin)
-    },
+      s"TIMESTAMP AS OF '$boundary'"
+    }),
 
     // ---- constraints: NOT NULL + CHECK declared in DDL, enforced INSIDE
     // the write pass (a when/raise_error guard in the projection — no
@@ -541,9 +623,7 @@ object CatalogOps {
         |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       def mustFail(q: String): Unit = {
         // the constraint probe ABORTS a Spark job by design; silence the
         // scheduler's job-abort ERROR stack for just this window so bench
@@ -598,9 +678,7 @@ object CatalogOps {
         |FROM (SELECT * FROM stale UNION ALL SELECT * FROM fresh)
         |ORDER BY phase, lang""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_mb AS
           |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -644,9 +722,7 @@ object CatalogOps {
         |SELECT col_name, n_rows, n_nulls, min_v, max_v FROM s
         |ORDER BY col_name""".stripMargin,
     ) { (s, d) =>
-      graft.sources.GraftSql.registerFixtures(s, d)
-      val cat = new Catalog(s, tempWarehouse())
-      def x(q: String) = graft.sources.CatalogSql.exec(s, cat, q)
+      val (x, _, _) = sqlSession(s, d)
       x("""CREATE TABLE docs_an AS
           |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
           |FROM documents""".stripMargin)
@@ -665,11 +741,7 @@ object CatalogOps {
         |  CAST(SUM(CAST(ROUND((n_chars)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0/COUNT(*) AS avg_chars
         |FROM documents WHERE lang = 'en' GROUP BY source ORDER BY source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs)
+      val (cat, _, _) = stagedDocs(s, d, "docs_wh")
       cat.table("docs_wh")
         .filter(col("lang") === "en")
         .groupBy("source")
@@ -684,11 +756,7 @@ object CatalogOps {
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs
         |FROM documents WHERE lang <> 'en' GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs)
+      val (cat, _, _) = stagedDocs(s, d, "docs_wh")
       cat.delete("docs_wh", col("lang") === "en") // predicate form (hustle surface)
       cat.table("docs_wh")
         .groupBy("lang").agg(count(lit(1)).as("n_docs"))
@@ -708,11 +776,7 @@ object CatalogOps {
         |WHERE NOT COALESCE(source = 'src0' OR n_chars % 17 = 3, FALSE)
         |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs)
+      val (cat, _, _) = stagedDocs(s, d, "docs_wh")
       cat.deleteRows("docs_wh", col("source") === "src0" || col("n_chars") % 17 === 3)
       cat.table("docs_wh")
         .groupBy("lang", "source")
@@ -728,37 +792,16 @@ object CatalogOps {
     // key range landed; oracle replays MERGE as upd ∪ (target ∖ keys) ----
     Q(
       "catalog_merge",
-      """WITH upd AS (
-        |  SELECT doc_id, text, lang, 'merged' AS source,
-        |         CAST(n_chars + 1000 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 7 = 3
-        |  UNION ALL
-        |  SELECT CAST(doc_id + 10000000 AS BIGINT), text, lang,
-        |         'fresh' AS source, n_chars
-        |  FROM documents WHERE doc_id % 11 = 5),
-        |merged AS (
-        |  SELECT * FROM upd
-        |  UNION ALL
-        |  SELECT d.* FROM documents d
-        |  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.doc_id = d.doc_id))
+      s"""WITH $UpsertCte,
+        |${mergeCte("merged", "documents")}
         |SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
         |  CAST(MIN(doc_id) AS BIGINT) AS min_id,
         |  CAST(MAX(doc_id) AS BIGINT) AS max_id
         |FROM merged GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs)
-      val upd = docs.filter(col("doc_id") % 7 === 3)
-        .withColumn("source", lit("merged"))
-        .withColumn("n_chars", col("n_chars") + 1000)
-        .unionByName(docs.filter(col("doc_id") % 11 === 5)
-          .withColumn("doc_id", col("doc_id") + 10000000L)
-          .withColumn("source", lit("fresh")))
-      cat.merge("docs_wh", upd, "doc_id")
+      val (cat, docs, _) = stagedDocs(s, d, "docs_wh")
+      cat.merge("docs_wh", upsertBatch(docs), "doc_id")
       cat.table("docs_wh")
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
@@ -773,18 +816,10 @@ object CatalogOps {
     // readable after mutations (manifest log, not physical rewrite) ----
     Q(
       "catalog_time_travel",
-      """WITH del AS (
-        |  SELECT * FROM documents
-        |  WHERE NOT COALESCE(source = 'src0' OR n_chars % 17 = 3, FALSE)),
+      s"""WITH $DelCte,
         |upd AS (
-        |  SELECT doc_id, text, lang, 'merged' AS source,
-        |         CAST(n_chars + 1000 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 7 = 3),
-        |head AS (
-        |  SELECT * FROM upd
-        |  UNION ALL
-        |  SELECT d.* FROM del d
-        |  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.doc_id = d.doc_id)),
+        |$MergedRowsSql),
+        |${mergeCte("head", "del")},
         |prof AS (
         |  SELECT 'v1' AS snap, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |         CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
@@ -796,23 +831,10 @@ object CatalogOps {
         |SELECT snap, lang, n_docs, total_chars FROM prof
         |ORDER BY snap, lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs) // v1
-      cat.deleteRows("docs_wh",
-        col("source") === "src0" || col("n_chars") % 17 === 3) // v2
-      cat.merge("docs_wh", docs.filter(col("doc_id") % 7 === 3)
-        .withColumn("source", lit("merged"))
-        .withColumn("n_chars", col("n_chars") + 1000), "doc_id") // v3
-      def prof(df: org.apache.spark.sql.DataFrame, snap: String) =
-        df.groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-          .select(lit(snap).as("snap"), col("lang"), col("n_docs"), col("total_chars"))
-      prof(cat.tableAt("docs_wh", 1), "v1")
-        .unionByName(prof(cat.table("docs_wh"), "head"))
-        .orderBy("snap", "lang")
+      val (cat, docs, _) = stagedDocs(s, d, "docs_wh") // v1
+      deleteThenMerge(cat, mergedRows(docs)) // v2, v3
+      snapProfiles(col("n_chars"),
+        "v1" -> cat.tableAt("docs_wh", 1), "head" -> cat.table("docs_wh"))
     },
 
     // ---- right-to-be-forgotten erasure: COW-delete of the target rows
@@ -832,11 +854,7 @@ object CatalogOps {
         |FROM documents WHERE source <> 'src3'
         |GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_erase", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_erase", docs) // v1
+      val (cat, _, _) = stagedDocs(s, d, "docs_erase") // v1
       cat.eraseWhere("docs_erase", col("source") === "src3") // v2, log purged
       cat.table("docs_erase")
         .groupBy("lang")
@@ -871,24 +889,13 @@ object CatalogOps {
         |SELECT snap, lang, n_docs, total_chars FROM prof
         |ORDER BY snap, lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_src", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_src", docs)
+      val (cat, docs, _) = stagedDocs(s, d, "docs_src")
       cat.cloneTable("docs_src", "docs_clone")
       cat.insert("docs_clone", docs.filter(col("doc_id") % 10 === 0)
         .withColumn("source", lit("extra"))
         .withColumn("n_chars", col("n_chars") + 7))
-      def prof(df: org.apache.spark.sql.DataFrame, snap: String) =
-        df.groupBy("lang")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_chars").cast("long")).as("total_chars"))
-          .select(lit(snap).as("snap"), col("lang"),
-            col("n_docs"), col("total_chars"))
-      prof(cat.table("docs_src"), "src")
-        .unionByName(prof(cat.table("docs_clone"), "clone"))
-        .orderBy("snap", "lang")
+      snapProfiles(col("n_chars").cast("long"),
+        "src" -> cat.table("docs_src"), "clone" -> cat.table("docs_clone"))
     },
 
     // ---- bucketed co-located join: both sides written bucketed by the
@@ -924,22 +931,7 @@ object CatalogOps {
     // EXCEPT ALL over the fixture ----
     Q(
       "catalog_changes",
-      """WITH del AS (
-        |  SELECT * FROM documents
-        |  WHERE NOT COALESCE(source = 'src0' OR n_chars % 17 = 3, FALSE)),
-        |upd AS (
-        |  SELECT doc_id, text, lang, 'merged' AS source,
-        |         CAST(n_chars + 1000 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 7 = 3
-        |  UNION ALL
-        |  SELECT CAST(doc_id + 10000000 AS BIGINT), text, lang,
-        |         'fresh' AS source, n_chars
-        |  FROM documents WHERE doc_id % 11 = 5),
-        |head AS (
-        |  SELECT * FROM upd
-        |  UNION ALL
-        |  SELECT d.* FROM del d
-        |  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.doc_id = d.doc_id)),
+      s"""$UpsertLifecycleCtes,
         |ins AS (SELECT * FROM head EXCEPT ALL SELECT * FROM documents),
         |dels AS (SELECT * FROM documents EXCEPT ALL SELECT * FROM head)
         |SELECT change_type, doc_id, lang, source, n_chars FROM (
@@ -948,19 +940,8 @@ object CatalogOps {
         |  SELECT 'delete', doc_id, lang, source, n_chars FROM dels)
         |ORDER BY change_type, doc_id""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs) // v1
-      cat.deleteRows("docs_wh",
-        col("source") === "src0" || col("n_chars") % 17 === 3) // v2
-      cat.merge("docs_wh", docs.filter(col("doc_id") % 7 === 3)
-        .withColumn("source", lit("merged"))
-        .withColumn("n_chars", col("n_chars") + 1000)
-        .unionByName(docs.filter(col("doc_id") % 11 === 5)
-          .withColumn("doc_id", col("doc_id") + 10000000L)
-          .withColumn("source", lit("fresh"))), "doc_id") // v3
+      val (cat, docs, _) = stagedDocs(s, d, "docs_wh") // v1
+      deleteThenMerge(cat, upsertBatch(docs)) // v2, v3
       cat.tableChanges("docs_wh", 1, 3)
         .select(col(Catalog.ChangeCol).as("change_type"),
           col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -982,11 +963,7 @@ object CatalogOps {
         |WHERE NOT COALESCE(n_chars % 13 = 7, FALSE)
         |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs) // v1
+      val (cat, _, _) = stagedDocs(s, d, "docs_wh") // v1
       cat.deleteRows("docs_wh", col("source") === "src0") // v2
       cat.restoreVersion("docs_wh", 1) // v3: src0 rows live again
       cat.deleteRows("docs_wh", col("n_chars") % 13 === 7) // v4
@@ -1004,42 +981,16 @@ object CatalogOps {
     // delta-add/delta-subtract/group-birth/group-death all land exactly ----
     Q.weekly(
       "catalog_incremental_agg",
-      """WITH del AS (
-        |  SELECT * FROM documents
-        |  WHERE NOT COALESCE(source = 'src0' OR n_chars % 17 = 3, FALSE)),
-        |upd AS (
-        |  SELECT doc_id, text, lang, 'merged' AS source,
-        |         CAST(n_chars + 1000 AS BIGINT) AS n_chars
-        |  FROM documents WHERE doc_id % 7 = 3
-        |  UNION ALL
-        |  SELECT CAST(doc_id + 10000000 AS BIGINT), text, lang,
-        |         'fresh' AS source, n_chars
-        |  FROM documents WHERE doc_id % 11 = 5),
-        |head AS (
-        |  SELECT * FROM upd
-        |  UNION ALL
-        |  SELECT d.* FROM del d
-        |  WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.doc_id = d.doc_id))
+      s"""$UpsertLifecycleCtes
         |SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
         |FROM head GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_wh", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_wh", docs) // v1
+      val (cat, docs, _) = stagedDocs(s, d, "docs_wh") // v1
       val prior = cat.tableAt("docs_wh", 1) // the materialized view build
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-      cat.deleteRows("docs_wh",
-        col("source") === "src0" || col("n_chars") % 17 === 3) // v2
-      cat.merge("docs_wh", docs.filter(col("doc_id") % 7 === 3)
-        .withColumn("source", lit("merged"))
-        .withColumn("n_chars", col("n_chars") + 1000)
-        .unionByName(docs.filter(col("doc_id") % 11 === 5)
-          .withColumn("doc_id", col("doc_id") + 10000000L)
-          .withColumn("source", lit("fresh"))), "doc_id") // v3
+      deleteThenMerge(cat, upsertBatch(docs)) // v2, v3
       rollForward(cat, "docs_wh", 1, 3, prior, Seq("lang", "source"),
         "n_docs", Map("total_chars" -> "n_chars"))
         .orderBy("lang", "source")
@@ -1051,26 +1002,14 @@ object CatalogOps {
     // not just row counts ----
     Q(
       "catalog_csv_roundtrip",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, wh) = docsWarehouse(s, d)
       val csvDir = s"$wh/csv_stage"
       docs.write.option("header", "true").option("escape", "\"").csv(csvDir)
       cat.create("docs_csv", docs.schema)
       cat.insertCsv("docs_csv", csvDir)
-      cat.table("docs_csv")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(cat.table("docs_csv"))
     },
 
     // ---- dead-letter ingest: every 10th doc's n_chars is corrupted to a
@@ -1086,9 +1025,7 @@ object CatalogOps {
         |      lang, n_chars FROM documents)
         |GROUP BY status, lang ORDER BY status, lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, wh) = docsWarehouse(s, d)
       val dirty = docs.withColumn("n_chars",
         when(pmod(col("doc_id"), lit(10)) === 7,
           concat(lit("bad"), col("doc_id").cast("string")))
@@ -1120,26 +1057,14 @@ object CatalogOps {
     // ORC maps columns by name (self-describing footer schema) ----
     Q(
       "catalog_orc_roundtrip",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, wh) = docsWarehouse(s, d)
       val orcDir = s"$wh/orc_stage"
       docs.write.orc(orcDir)
       cat.create("docs_orc", docs.schema)
       cat.insertOrc("docs_orc", orcDir)
-      cat.table("docs_orc")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(cat.table("docs_orc"))
     },
 
     // ---- Avro ingest round-trip: export the fixture as Avro container
@@ -1149,26 +1074,14 @@ object CatalogOps {
     // fingerprint as the CSV/ORC twins ----
     Q(
       "catalog_avro_roundtrip",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, wh) = docsWarehouse(s, d)
       val avroDir = s"$wh/avro_stage"
       graft.sources.AvroCodec.writeAvro(docs, avroDir)
       cat.create("docs_avro", docs.schema)
       cat.insertAvro("docs_avro", avroDir)
-      cat.table("docs_avro")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(cat.table("docs_avro"))
     },
 
     // ---- Avro WIRE parse (the kafka_wire_parse sibling for binary
@@ -1181,22 +1094,12 @@ object CatalogOps {
     // hop) — the exact kernel a `from_avro`-style Kafka consumer runs ----
     Q(
       "avro_wire_parse",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
       val docs = Tables.documents(s, d)
       val schemaJson = graft.sources.AvroCodec.writerSchemaJson(docs.schema)
       val wire = graft.sources.AvroCodec.encodeDatum(docs)
-      graft.sources.AvroCodec.decodeDatum(wire, schemaJson, docs.schema)
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(graft.sources.AvroCodec.decodeDatum(wire, schemaJson, docs.schema))
     },
 
     // ---- Z-order clustering + stats-based file pruning: rewrite events
@@ -1282,25 +1185,13 @@ object CatalogOps {
     // reduction itself is asserted by CatalogSpec ----
     Q(
       "catalog_compact",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, _) = docsWarehouse(s, d)
       cat.create("docs_frag", docs.schema)
       cat.insert("docs_frag", docs.repartition(16))
       cat.compact("docs_frag", targetFiles = 2)
-      cat.table("docs_frag")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(cat.table("docs_frag"))
     },
 
     // ---- atomic REPLACE WHERE (idempotent backfill): re-materialize the
@@ -1324,11 +1215,7 @@ object CatalogOps {
         |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars
         |FROM final GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
-      cat.create("docs_rw", docs.schema, partitionBy = Some("lang"))
-      cat.insert("docs_rw", docs)
+      val (cat, docs, _) = stagedDocs(s, d, "docs_rw")
       val corrected = docs.filter(col("lang") === "en")
         .withColumn("source", lit("backfill"))
         .withColumn("n_chars", col("n_chars") + 1000)
@@ -1348,25 +1235,13 @@ object CatalogOps {
     // FILES are byte-identical survivors in the new manifest ----
     Q(
       "catalog_compact_where",
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS total_chars,
-        |  CAST(SUM(('0x' || substr(md5(text), 1, 15))::BIGINT % 1000003) AS BIGINT) AS text_fp
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
+      LangTextProfileOracle,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, _) = docsWarehouse(s, d)
       cat.create("docs_pw", docs.schema, partitionBy = Some("lang"))
       cat.insert("docs_pw", docs.repartition(16))
       cat.compactWhere("docs_pw", col("lang") === "en", targetFiles = 1)
-      cat.table("docs_pw")
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("total_chars"),
-          sum(graft.functions.TextFunctions.tokenHash60(col("text")) % 1000003L)
-            .as("text_fp"))
-        .orderBy("lang")
+      langTextProfile(cat.table("docs_pw"))
     },
 
     // ---- schema evolution: ALTER TABLE ADD COLUMN with default — batch A
@@ -1380,9 +1255,7 @@ object CatalogOps {
         |  CAST(CASE WHEN doc_id % 2 = 0 THEN -1 ELSE n_chars % 7 END AS BIGINT) AS score
         |FROM documents ORDER BY doc_id""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, docs, _) = docsWarehouse(s, d)
       cat.create("docs_ev", docs.schema)
       cat.insert("docs_ev", docs.filter(pmod(col("doc_id"), lit(2)) === 0))
       cat.addColumn("docs_ev", "score",
@@ -1402,9 +1275,8 @@ object CatalogOps {
       """SELECT doc_id, CAST(n_chars AS BIGINT) AS len_chars
         |FROM documents ORDER BY doc_id""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d).select("doc_id", "n_chars")
+      val (cat, fixture, _) = docsWarehouse(s, d)
+      val docs = fixture.select("doc_id", "n_chars")
       cat.create("docs_rn", docs.schema)
       cat.insert("docs_rn", docs.filter(pmod(col("doc_id"), lit(2)) === 0))
       cat.renameColumn("docs_rn", "n_chars", "len_chars")
@@ -1422,9 +1294,8 @@ object CatalogOps {
       """SELECT doc_id, CAST(n_chars % 7 AS BIGINT) AS score
         |FROM documents ORDER BY doc_id""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val docs = Tables.documents(s, d)
+      val (cat, fixture, _) = docsWarehouse(s, d)
+      val docs = fixture
         .select(col("doc_id"), pmod(col("n_chars"), lit(7)).cast("int").as("score"))
       cat.create("docs_wd", docs.schema)
       cat.insert("docs_wd", docs.filter(pmod(col("doc_id"), lit(2)) === 0))
@@ -1441,10 +1312,8 @@ object CatalogOps {
       """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_long_docs
         |FROM documents WHERE n_chars > 200 GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
-      val wh = tempWarehouse()
-      val cat = new Catalog(s, wh)
-      val longDocs = Tables.documents(s, d).filter(col("n_chars") > 200)
-      val nested = cat.nest("long_docs", longDocs)
+      val (cat, docs, _) = docsWarehouse(s, d)
+      val nested = cat.nest("long_docs", docs.filter(col("n_chars") > 200))
       nested.groupBy("lang").agg(count(lit(1)).as("n_long_docs")).orderBy("lang")
     },
   )

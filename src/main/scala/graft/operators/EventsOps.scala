@@ -63,6 +63,76 @@ object EventsOps {
       |p AS (SELECT user_id, event_id, epoch_us(ts) AS pts
       |      FROM events WHERE event_type = 'purchase')""".stripMargin
 
+  /** Oracle of `q_session_window` and its stream twins: 30-minute gap
+    * sessions (a gap of exactly 30 minutes starts a new one) replayed with
+    * LAG and a running sum.
+    */
+  private[graft] val GapSessionOracle =
+    """WITH marked AS (
+      |  SELECT user_id, ts, value, event_id,
+      |    CASE WHEN epoch_us(ts) -
+      |        LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
+      |      OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+      |    THEN 1 ELSE 0 END AS new_session
+      |  FROM events),
+      |sessions AS (
+      |  SELECT user_id, ts, value,
+      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+      |  FROM marked)
+      |SELECT user_id, MIN(ts) AS session_start,
+      |  CAST(COUNT(*) AS BIGINT) AS n_events,
+      |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
+      |FROM sessions GROUP BY user_id, sid
+      |ORDER BY user_id, session_start""".stripMargin
+
+  /** Oracle of `events_cusum_changepoint` and its stream twin: the
+    * earliest peak of the division-cleared CUSUM per type.
+    */
+  private[graft] val CusumOracle =
+    """WITH dc AS (
+      |  SELECT event_type, DATE_TRUNC('day', ts) AS day,
+      |    CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM events GROUP BY 1, 2),
+      |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(c) AS BIGINT) AS t FROM dc GROUP BY 1),
+      |cum AS (
+      |  SELECT dc.event_type, dc.day,
+      |    CAST(SUM(dc.c * tot.n - tot.t) OVER (PARTITION BY dc.event_type
+      |      ORDER BY dc.day) AS BIGINT) AS s_k,
+      |    tot.n
+      |  FROM dc JOIN tot ON tot.event_type = dc.event_type),
+      |pk AS (
+      |  SELECT event_type, day, s_k, n,
+      |    ROW_NUMBER() OVER (PARTITION BY event_type
+      |      ORDER BY ABS(s_k) DESC, day) AS rk
+      |  FROM cum)
+      |SELECT event_type, CAST(n AS BIGINT) AS n_days, day AS cp_day,
+      |  CAST(ABS(s_k) AS BIGINT) AS cusum_peak
+      |FROM pk WHERE rk = 1 ORDER BY event_type""".stripMargin
+
+  /** Oracle of `rolling_active_users_check` and its stream twin: exact
+    * rolling 7-day distinct users per day, every estimate within tolerance.
+    */
+  private[graft] val RollingDauOracle =
+    """WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
+      |  FROM events),
+      |cover AS (SELECT unnest(range(day, day + 7)) AS day, user_id FROM du),
+      |days AS (SELECT DISTINCT day FROM du),
+      |ex AS (SELECT c.day, CAST(COUNT(DISTINCT c.user_id) AS BIGINT) AS n_exact
+      |  FROM cover c JOIN days d ON d.day = c.day GROUP BY 1)
+      |SELECT CAST(day AS BIGINT) AS day, n_exact, TRUE AS within_tol
+      |FROM ex ORDER BY day""".stripMargin
+
+  /** Oracle of `events_sessionize_agg` and its stream twin: per type and
+    * hour, the event count and micros-exact value sum.
+    */
+  private[graft] val HourlyAggOracle =
+    """SELECT event_type, DATE_TRUNC('hour', ts) AS hour_start,
+      |  CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
+      |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin
+
   val queries: Seq[Q] = Seq(
     // ---- exact COUNT(DISTINCT) — bench headline ----
     Q(
@@ -160,14 +230,7 @@ object EventsOps {
     // day-coverage trick (equi joins only, 7× linear) ----
     Q(
       "rolling_active_users_check",
-      """WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
-        |  FROM events),
-        |cover AS (SELECT unnest(range(day, day + 7)) AS day, user_id FROM du),
-        |days AS (SELECT DISTINCT day FROM du),
-        |ex AS (SELECT c.day, CAST(COUNT(DISTINCT c.user_id) AS BIGINT) AS n_exact
-        |  FROM cover c JOIN days d ON d.day = c.day GROUP BY 1)
-        |SELECT CAST(day AS BIGINT) AS day, n_exact, TRUE AS within_tol
-        |FROM ex ORDER BY day""".stripMargin,
+      RollingDauOracle,
     ) { (s, d) =>
       val ev = Tables.events(s, d)
       val du = ev.select(expr("ts_ns div 86400000000000").as("day"),
@@ -383,10 +446,7 @@ object EventsOps {
     // ---- §2.7: tumbling 1-hour aggregation — bench headline ----
     Q(
       "events_sessionize_agg",
-      """SELECT event_type, DATE_TRUNC('hour', ts) AS hour_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
+      HourlyAggOracle,
     ) { (s, d) =>
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour_start"))
@@ -522,23 +582,7 @@ object EventsOps {
     // configured 30 min starts a new session, hence `>=` in the oracle ----
     Q(
       "q_session_window",
-      """WITH marked AS (
-        |  SELECT user_id, ts, value, event_id,
-        |    CASE WHEN epoch_us(ts) -
-        |        LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
-        |      OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |    THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM marked)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+      GapSessionOracle,
     ) { (s, d) =>
       Tables.events(s, d)
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -1375,26 +1419,7 @@ object EventsOps {
     // window runs over that tiny series, never over raw events ----
     Q(
       "events_cusum_changepoint",
-      """WITH dc AS (
-        |  SELECT event_type, DATE_TRUNC('day', ts) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(c) AS BIGINT) AS t FROM dc GROUP BY 1),
-        |cum AS (
-        |  SELECT dc.event_type, dc.day,
-        |    CAST(SUM(dc.c * tot.n - tot.t) OVER (PARTITION BY dc.event_type
-        |      ORDER BY dc.day) AS BIGINT) AS s_k,
-        |    tot.n
-        |  FROM dc JOIN tot ON tot.event_type = dc.event_type),
-        |pk AS (
-        |  SELECT event_type, day, s_k, n,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ABS(s_k) DESC, day) AS rk
-        |  FROM cum)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_days, day AS cp_day,
-        |  CAST(ABS(s_k) AS BIGINT) AS cusum_peak
-        |FROM pk WHERE rk = 1 ORDER BY event_type""".stripMargin,
+      CusumOracle,
     ) { (s, d) =>
       cusumChangepoint(Tables.events(s, d))
     },
@@ -1501,10 +1526,17 @@ object EventsOps {
     * needs `event_type` and `ts` columns. Cost: one event-level
     * aggregate, then windows over the day×type-bounded series only.
     */
-  def cusumChangepoint(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val dc = events
+  def cusumChangepoint(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cusumPeaks(events
       .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("c"))
+      .agg(count(lit(1)).as("c")))
+
+  /** [[cusumChangepoint]]'s scan over a daily count series `dc`
+    * (`event_type`, `day`, `c`), however it was counted — the streaming
+    * monitor counts it from a stream.
+    */
+  private[graft] def cusumPeaks(
+      dc: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val tot = dc.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("c")).as("t"))
     val cum = dc.join(tot, "event_type")

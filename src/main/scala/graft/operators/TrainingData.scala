@@ -44,6 +44,12 @@ object TrainingData {
     */
   private val EscalateAfter = 8
 
+  /** Rounds the components functions run before giving up unconverged. */
+  private val MaxRounds = 20
+
+  /** Hash buckets of [[dsirImportance]]'s unigram features. */
+  private val DsirBuckets = 256
+
   /** Connected components of an undirected edge list: (node, component)
     * where component = min node id reachable. Nodes = every endpoint.
     *
@@ -58,10 +64,9 @@ object TrainingData {
     * graphs; the escalation path is pinned by a planted length-1000
     * chain in TrainingDataSpec.
     */
-  def connectedComponents(
-      edges: DataFrame, a: String, b: String, maxIter: Int = 20): DataFrame =
-    minLabelBounded(edges, a, b, math.min(EscalateAfter, maxIter))
-      .getOrElse(connectedComponentsStar(edges, a, b, maxIter))
+  def connectedComponents(edges: DataFrame, a: String, b: String): DataFrame =
+    minLabelBounded(edges, a, b, EscalateAfter)
+      .getOrElse(connectedComponentsStar(edges, a, b))
 
   /** Alternating large-star/small-star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14): each round
@@ -72,7 +77,7 @@ object TrainingData {
     * chain converges in 3 star rounds vs 63 label rounds).
     */
   def connectedComponentsStar(
-      edges: DataFrame, a: String, b: String, maxIter: Int = 20): DataFrame = {
+      edges: DataFrame, a: String, b: String, maxIter: Int = MaxRounds): DataFrame = {
     val nodes = edges.select(col(a).as("node"))
       .union(edges.select(col(b).as("node"))).distinct().transform(graft.Tables.pin)
     def canonical(e: DataFrame): DataFrame = e
@@ -159,7 +164,7 @@ object TrainingData {
     * throws when `maxIter` rounds don't reach the fixpoint.
     */
   private[graft] def connectedComponentsMinLabel(
-      edges: DataFrame, a: String, b: String, maxIter: Int = 20): DataFrame = {
+      edges: DataFrame, a: String, b: String, maxIter: Int = MaxRounds): DataFrame = {
     val r = minLabelBounded(edges, a, b, maxIter)
     require(r.isDefined, s"connectedComponents did not converge in $maxIter rounds")
     r.get
@@ -700,13 +705,13 @@ object TrainingData {
     * under a TARGET domain's distribution than under the raw corpus
     * distribution — sum over tokens of
     * `ln(p_target(bucket)) − ln(p_raw(bucket))` with add-1 smoothing over
-    * `buckets` hash buckets — and flag documents above the corpus-mean
+    * [[DsirBuckets]] hash buckets — and flag documents above the corpus-mean
     * score as selected. This is the domain-selection stage: given a small
     * high-quality target (e.g. one language / curated subset), rank the
     * whole corpus by target-likeness without training a classifier.
     *
     * Scale shape: ONE tokenize pass feeds both the bucket-count aggregate
-    * (≤ `buckets` rows → the broadcast model) and the per-doc rescore
+    * (≤ [[DsirBuckets]] rows → the broadcast model) and the per-doc rescore
     * join; the selection threshold is a 1-row broadcast aggregate, never
     * a global sort. Per-token log terms come out of IEEE-identical `ln`
     * on integer-derived ratios and are summed with [[graft.Det.dsum]]'s
@@ -714,21 +719,20 @@ object TrainingData {
     * engine-portable and partitioning-independent.
     */
   def dsirImportance(
-      docs: DataFrame, isTarget: Column, id: String, text: Column,
-      buckets: Int = 256): DataFrame = {
+      docs: DataFrame, isTarget: Column, id: String, text: Column): DataFrame = {
     val tok = docs
       .select(col(id), isTarget.as("__tgt"),
         explode(TextFunctions.tokens(text)).as("__t"))
       .select(col(id), col("__tgt"),
-        pmod(TextFunctions.tokenHash60(col("__t")), lit(buckets.toLong)).as("__b"))
+        pmod(TextFunctions.tokenHash60(col("__t")), lit(DsirBuckets.toLong)).as("__b"))
     val counts = tok.groupBy("__b").agg(
       count(lit(1)).as("__cr"),
       sum(when(col("__tgt"), lit(1L)).otherwise(lit(0L))).as("__ct"))
     val totals = counts.agg(sum("__cr").as("__tr"), sum("__ct").as("__tt"))
     val model = broadcast(counts.crossJoin(broadcast(totals))
       .select(col("__b"),
-        (log((col("__ct") + 1).cast("double") / (col("__tt") + buckets))
-          - log((col("__cr") + 1).cast("double") / (col("__tr") + buckets)))
+        (log((col("__ct") + 1).cast("double") / (col("__tt") + DsirBuckets))
+          - log((col("__cr") + 1).cast("double") / (col("__tr") + DsirBuckets)))
           .as("__lw")))
     val scored = tok.join(model, "__b")
       .groupBy(col(id))

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import graft.{Det, Q}
+import graft.operators.EventsOps
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -395,8 +396,8 @@ object StreamingOps {
     * uses the full-series mean so it stays batch-equivalent for the
     * oracle (same contract as the batch `events_cusum_changepoint`).
     */
-  def streamCusumAlert(spark: SparkSession, sfDir: String): DataFrame = {
-    val dc = replayEvents(spark, sfDir, "stream_cusum") { (_, events) =>
+  def streamCusumAlert(spark: SparkSession, sfDir: String): DataFrame =
+    EventsOps.cusumPeaks(replayEvents(spark, sfDir, "stream_cusum") { (_, events) =>
       (events()
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -404,22 +405,7 @@ object StreamingOps {
         .select(col("window.start").cast(TimestampNTZType).as("day"),
           col("event_type"), col("c")),
         OutputMode.Complete())
-    }
-    val w = org.apache.spark.sql.expressions.Window
-    val tot = dc.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("c")).as("t"))
-    val cum = dc.join(tot, "event_type")
-      .select(col("event_type"), col("day"), col("n"),
-        sum(col("c") * col("n") - col("t"))
-          .over(w.partitionBy("event_type").orderBy("day")).as("s_k"))
-    cum
-      .withColumn("rk", row_number().over(
-        w.partitionBy("event_type").orderBy(abs(col("s_k")).desc, col("day"))))
-      .filter(col("rk") === 1)
-      .select(col("event_type"), col("n").as("n_days"),
-        col("day").as("cp_day"), abs(col("s_k")).as("cusum_peak"))
-      .orderBy("event_type")
-  }
+    })
 
   /** Streaming SLIDING-window aggregation (2 h windows every 30 min):
     * each event lands in size/slide = 4 overlapping windows — the window
@@ -795,29 +781,25 @@ object StreamingOps {
         OutputMode.Append())
     }.orderBy("event_id")
 
+  /** Oracle of both stateful per-user totals rows. */
+  private val UserTotalsOracle =
+    """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+      |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
+      |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
+
   val queries: Seq[Q] = Seq(
     // identical semantics to the batch events_sessionize_agg — that's the
     // point: stream results must reconcile with batch over the same data
     Q(
       "stream_hourly_agg",
-      """SELECT event_type, DATE_TRUNC('hour', ts) AS hour_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
+      EventsOps.HourlyAggOracle,
     )(hourlyCountsStreaming),
 
     // ---- streaming rolling-DAU: per-day HLL state (sketch bytes, never
     // raw ids) + the 7-day window union; exact-contract per day ----
     Q(
       "stream_rolling_dau",
-      """WITH du AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
-        |  FROM events),
-        |cover AS (SELECT unnest(range(day, day + 7)) AS day, user_id FROM du),
-        |days AS (SELECT DISTINCT day FROM du),
-        |ex AS (SELECT c.day, CAST(COUNT(DISTINCT c.user_id) AS BIGINT) AS n_exact
-        |  FROM cover c JOIN days d ON d.day = c.day GROUP BY 1)
-        |SELECT CAST(day AS BIGINT) AS day, n_exact, TRUE AS within_tol
-        |FROM ex ORDER BY day""".stripMargin,
+      EventsOps.RollingDauOracle,
     )(streamRollingDau),
 
     // ---- streaming drift monitor: per-hour PSI of the value-bucket
@@ -860,26 +842,7 @@ object StreamingOps {
     // on one relational answer ----
     Q(
       "stream_cusum_alert",
-      """WITH dc AS (
-        |  SELECT event_type, DATE_TRUNC('day', ts) AS day,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(c) AS BIGINT) AS t FROM dc GROUP BY 1),
-        |cum AS (
-        |  SELECT dc.event_type, dc.day,
-        |    CAST(SUM(dc.c * tot.n - tot.t) OVER (PARTITION BY dc.event_type
-        |      ORDER BY dc.day) AS BIGINT) AS s_k,
-        |    tot.n
-        |  FROM dc JOIN tot ON tot.event_type = dc.event_type),
-        |pk AS (
-        |  SELECT event_type, day, s_k, n,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ABS(s_k) DESC, day) AS rk
-        |  FROM cum)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_days, day AS cp_day,
-        |  CAST(ABS(s_k) AS BIGINT) AS cusum_peak
-        |FROM pk WHERE rk = 1 ORDER BY event_type""".stripMargin,
+      EventsOps.CusumOracle,
     )(streamCusumAlert),
 
     // ---- sliding windows (every event in 4 overlapping 2h/30m windows):
@@ -907,9 +870,7 @@ object StreamingOps {
     // per-user state never transits the driver ----
     Q(
       "stream_user_totals",
-      """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+      UserTotalsOracle,
     )(statefulUserTotals),
 
     // ---- the SAME totals through transformWithState (state store v2 /
@@ -918,32 +879,14 @@ object StreamingOps {
     // with each other ----
     Q(
       "stream_user_totals_tws",
-      """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+      UserTotalsOracle,
     )(statefulUserTotalsTws),
 
     // ---- streaming session windows (merging-window state), oracle =
     // the batch gap-sessionization SQL (same as q_session_window) ----
     Q(
       "stream_session_agg",
-      """WITH marked AS (
-        |  SELECT user_id, ts, value, event_id,
-        |    CASE WHEN epoch_us(ts) -
-        |        LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
-        |      OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |    THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM marked)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+      EventsOps.GapSessionOracle,
     )(sessionWindowStreaming),
 
     // ---- timer-closed sessionization (event-time timers + state-store
@@ -952,23 +895,7 @@ object StreamingOps {
     // timer-driven stateful) must agree on one relational answer ----
     Q(
       "stream_session_timers",
-      """WITH marked AS (
-        |  SELECT user_id, ts, value, event_id,
-        |    CASE WHEN epoch_us(ts) -
-        |        LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
-        |      OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |    THEN 1 ELSE 0 END AS new_session
-        |  FROM events),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM marked)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  CAST(COUNT(*) AS BIGINT) AS n_events,
-        |  CAST(SUM(CAST(ROUND((value)*1000000.0, 0) AS BIGINT)) AS DOUBLE)/1000000.0 AS sum_value
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
+      EventsOps.GapSessionOracle,
     )(sessionWindowTimers),
 
     // ---- stream-static enrichment join (stateless; dim side planned per

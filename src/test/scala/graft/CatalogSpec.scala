@@ -1242,6 +1242,21 @@ class CatalogSpec extends SparkSpec {
       cat2.importTable("x", Files.createTempDirectory("graft_notsnap_").toString))
   }
 
+  test("catalog_export_import leaves no export directory in java.io.tmpdir") {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def exports(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_exp_")).toSet
+      finally ls.close()
+    }
+    val before = exports()
+    SparkEntry.queries("catalog_export_import")(spark, sf0001).collect()
+    assert(exports() -- before === Set.empty[String],
+      "the row's export must live under its own warehouse")
+  }
+
   test("OCC: concurrent appends both commit, log stays linear, content = serial") {
     import spark.implicits._
     val cat = freshCatalog()

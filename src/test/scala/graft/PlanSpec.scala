@@ -463,6 +463,47 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("catalog-tier rows plan no more Exchanges than their pinned counts") {
+    // measured at sf0.001 before the catalog rows shared one staged docs
+    // table, one SQL session, one language profile and one mutation
+    // lifecycle (pre-execution AQE plan, broadcast exchanges counted)
+    val rows = Map(
+      "catalog_roundtrip" -> 2, "catalog_concurrent_commit" -> 2,
+      "catalog_export_import" -> 2, "catalog_sql_dml" -> 2,
+      "catalog_sql_merge_cond" -> 2, "catalog_sql_update" -> 2,
+      "catalog_sql_views" -> 2, "catalog_sql_zorder" -> 2,
+      "catalog_sql_merge_evolve" -> 2, "catalog_sql_udf" -> 2,
+      "catalog_sql_copy" -> 2, "catalog_sql_time_travel" -> 4,
+      "catalog_sql_time_travel_ts" -> 4, "catalog_sql_constraints" -> 2,
+      "catalog_sql_mview" -> 1, "catalog_sql_analyze" -> 1,
+      "catalog_partition_prune" -> 2, "catalog_partition_delete" -> 2,
+      "catalog_delete_rows" -> 2, "catalog_merge" -> 2,
+      "catalog_time_travel" -> 3, "catalog_erase" -> 2, "catalog_clone" -> 3,
+      "catalog_bucketed_join" -> 3, "catalog_changes" -> 3,
+      "catalog_restore" -> 2, "catalog_incremental_agg" -> 5,
+      "catalog_csv_roundtrip" -> 2, "catalog_ingest_quarantine" -> 3,
+      "catalog_orc_roundtrip" -> 2, "catalog_avro_roundtrip" -> 2,
+      "avro_wire_parse" -> 2, "catalog_zorder_prune" -> 1,
+      "catalog_zorder_3d" -> 1, "catalog_hilbert_prune" -> 1,
+      "catalog_compact" -> 2, "catalog_replace_where" -> 2,
+      "catalog_compact_where" -> 2, "catalog_add_column" -> 1,
+      "catalog_rename_column" -> 1, "catalog_widen_column" -> 1,
+      "catalog_nest" -> 2)
+    assert(rows.keySet == graft.operators.CatalogOps.queries.map(_.name).toSet)
+    // the stream rows and their batch twins that share one oracle text
+    val pinned = rows ++ Map(
+      "q_session_window" -> 2, "stream_session_agg" -> 1,
+      "stream_session_timers" -> 0, "events_cusum_changepoint" -> 6,
+      "stream_cusum_alert" -> 4, "rolling_active_users_check" -> 10,
+      "stream_rolling_dau" -> 8, "events_sessionize_agg" -> 2,
+      "stream_hourly_agg" -> 1, "stream_user_totals" -> 1,
+      "stream_user_totals_tws" -> 1)
+    pinned.foreach { case (name, maxEx) =>
+      val (ex, _) = exchangesAndGenerates(SparkEntry.queries(name)(spark, sf0001))
+      assert(ex <= maxEx, s"$name plans $ex Exchanges (pinned $maxEx)")
+    }
+  }
+
   test("tokenizer plans do not grow with the model: 10 vs 30,000 merges") {
     import spark.implicits._
     val docs = Seq((1L, "the lower lowest"), (2L, "newer wider"), (3L, "aaaa b"))
