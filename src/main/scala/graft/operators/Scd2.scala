@@ -106,14 +106,9 @@ object Scd2 {
       .unionByName(cust.filter(col("k") % 7 === 3 && col("k") % 5 =!= 2))
       .unionByName(cust.filter(col("k") % 11 === 5)
         .withColumn("k", col("k") + 1000000L))
-    // merge drives several actions over the delta (key-uniqueness audit,
-    // file tagging, staged write); persist so the change-detection join
-    // runs once, not once per action
-    val delta = scd2Updates(
-      cat.table(tableName), batch, "k", Seq("seg", "bal"), batchNo = 1)
-      .persist()
-    try cat.merge(tableName, delta, "sk")
-    finally delta.unpersist(false)
+    // merge evaluates the delta (the change-detection join) once
+    cat.merge(tableName,
+      scd2Updates(cat.table(tableName), batch, "k", Seq("seg", "bal"), batchNo = 1), "sk")
   }
 
   val queries: Seq[Q] = Seq(

@@ -4,11 +4,18 @@ import java.nio.file.{Files, Paths}
 
 import graft.LocalFiles
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType, DecimalType,
+  IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Table catalog + append-only ingest (SURVEY.md §2.1 S4/S8/S9, §3.2/§3.3).
@@ -458,10 +465,14 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private def parquetRowCount(name: String, files: Seq[String]): Long =
     try {
       val conf = spark.sessionState.newHadoopConf()
+      // read options built from this loaded conf: the options-less open
+      // builds a fresh Hadoop Configuration per file, which re-parses the
+      // Hadoop XML resources (most of an insert's driver time)
+      val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
       files.map { rel =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new org.apache.hadoop.fs.Path(dataDir(name).resolve(rel).toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
         try r.getRecordCount finally r.close()
       }.sum
     } catch {
@@ -1439,61 +1450,62 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
 
   /** Driver-side scale bound for the row-level DML manifest passes.
     *
-    * [[deleteRows]] and [[merge]] collect one row PER AFFECTED DATA FILE
-    * (path string + matched-row count — ~200 bytes each) to plan the
-    * copy-on-write rewrite; the same driver-side, file-count-sized
-    * manifest discipline Delta/Iceberg commits use. That is NOT data-sized
-    * (never rows), but it is unbounded in file count, so a DML whose
-    * predicate touches more files than this bound fails loudly with
-    * [[Catalog.ManifestScaleException]] instead of silently ballooning
-    * driver memory. The default (1M files ≈ 200 MB of driver heap — about
-    * where a single COW commit stops being sensible anyway) is
-    * configurable via the Spark conf `graft.dml.maxAffectedFiles`; a DML
-    * legitimately hitting it should be partition-granular
-    * ([[deletePartition]]) or split by predicate instead.
+    * Every row-level DML op plans its copy-on-write rewrite from one
+    * entry PER AFFECTED DATA FILE (path string + hit count — ~200 bytes
+    * each) on the driver; the same driver-side, file-count-sized
+    * manifest discipline Delta/Iceberg commits use. That is NOT
+    * data-sized (never rows), but it is unbounded in file count, so a DML
+    * whose predicate touches more files than this bound fails loudly with
+    * [[Catalog.ManifestScaleException]] before anything is written. The
+    * default (1M files ≈ 200 MB of driver heap — about where a single COW
+    * commit stops being sensible anyway) is configurable via the Spark
+    * conf `graft.dml.maxAffectedFiles`; a DML legitimately hitting it
+    * should be partition-granular ([[deletePartition]]) or split by
+    * predicate instead.
     */
   private def maxAffectedFiles: Int =
     spark.conf.getOption("graft.dml.maxAffectedFiles").map(_.toInt)
       .getOrElse(1000000)
 
-  /** Collect the per-file manifest pass BOUNDED: retrieves at most
-    * `maxAffectedFiles + 1` rows to the driver (the aggregation itself
-    * stays fully distributed), then fails loudly if the bound is hit —
-    * the driver never materializes an over-bound file list.
-    */
-  private def collectBounded(op: String, name: String,
-      perFile: DataFrame,
-      rollupTotalRow: Boolean = false): Array[org.apache.spark.sql.Row] = {
-    val cap = maxAffectedFiles
-    // a rollup grand-total row (null in the file column) is bookkeeping
-    // riding along in the same pass, not a file to rewrite — it gets a
-    // seat beyond the cap and is excluded from the bound check, so a
-    // merge touching exactly `cap` files still commits
-    val extra = if (rollupTotalRow) 1 else 0
-    val rows = perFile.take(cap + extra + 1)
-    val fileRows =
-      if (rollupTotalRow) rows.count(!_.isNullAt(0)) else rows.length
-    if (fileRows > cap)
-      throw new Catalog.ManifestScaleException(
-        s"$op on $name touches more than $cap data files; a copy-on-write " +
-          "rewrite of that many files in one commit is driver-unbounded — " +
-          "use a partition-granularity delete, split the predicate, or " +
-          "raise spark conf graft.dml.maxAffectedFiles")
-    rows
-  }
-
   /** The manifest pass of the row-level DML: the `live` files holding at
-    * least one row of `hits` (a filter or semi-join of [[logicalWithFile]]),
-    * as manifest entries with their hit counts, sorted — one job, driver
-    * retrieval bounded by `graft.dml.maxAffectedFiles`. An empty snapshot
-    * has no hits and runs no job.
+    * least one row of `hits` (a filter or join of [[logicalWithFile]])
+    * and, given a `key` column of `hits`, the number of distinct values
+    * of that column among those rows, told apart by their bytes. One
+    * Spark job with no shuffle of its own: each task counts its hits per
+    * file and gathers its distinct `key` values, and the driver merges
+    * the partial results. The driver receives at most one
+    * entry per (task, file), so its input is bounded by the file splits
+    * it has already planned, plus each task's distinct hit keys (at most
+    * the merge source's rows); more affected files than
+    * `graft.dml.maxAffectedFiles` fail with
+    * [[Catalog.ManifestScaleException]]. An empty snapshot has no hits
+    * and runs no job.
     */
-  private def affectedFiles(op: String, name: String, live: Seq[String])(
-      hits: DataFrame => DataFrame): Seq[(String, Long)] =
-    if (live.isEmpty) Seq.empty
-    else collectBounded(op, name,
-        hits(logicalWithFile(name, live)).groupBy(Catalog.FileCol).agg(count(lit(1))))
-      .map(r => relativize(name, r.getString(0)) -> r.getLong(1)).toSeq.sortBy(_._1)
+  private def affectedFiles(op: String, name: String, live: Seq[String],
+      key: Option[String] = None)(hits: DataFrame => DataFrame): Catalog.Hits =
+    if (live.isEmpty) Catalog.NoHits
+    else {
+      val tagged = hits(logicalWithFile(name, live))
+        .select((col(Catalog.FileCol) +: key.map(col).toSeq): _*)
+      val keyType = key.map(_ => tagged.schema(1).dataType)
+      val qe = tagged.queryExecution
+      val partials = SQLExecution.withNewExecutionId(qe, Some(s"$op manifest pass"))(
+        qe.toRdd.mapPartitions(Catalog.tallyHits(keyType)).collect())
+      val files = mutable.HashMap.empty[String, Long]
+      val keys = mutable.HashSet.empty[UnsafeRow]
+      partials.foreach { case (perFile, hitKeys) =>
+        perFile.foreach { case (f, n) => files(f) = files.getOrElse(f, 0L) + n }
+        keys ++= hitKeys
+      }
+      val cap = maxAffectedFiles
+      if (files.size > cap)
+        throw new Catalog.ManifestScaleException(
+          s"$op on $name touches more than $cap data files; a copy-on-write " +
+            "rewrite of that many files in one commit is driver-unbounded — " +
+            "use a partition-granularity delete, split the predicate, or " +
+            "raise spark conf graft.dml.maxAffectedFiles")
+      Catalog.Hits(files.toSeq.map { case (f, n) => relativize(name, f) -> n }.sortBy(_._1), keys.size)
+    }
 
   /** The one commit of every copy-on-write rewrite: stage `rewritten` (the
     * physical rows replacing the `affected` files) and publish snapshot
@@ -1516,11 +1528,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val base = currentVersion(name)
     val live = manifest(name, base)
     val hits = affectedFiles(op, name, live)(_.filter(condition))
-    if (hits.nonEmpty) {
-      val affected = hits.map(_._1)
-      commitRewrite(name, op, base, live, affected, rewrite(readFiles(name, affected)))
-    }
-    hits.map(_._2).sum
+    if (hits.files.nonEmpty)
+      commitRewrite(name, op, base, live, hits.affected, rewrite(readFiles(name, hits.affected)))
+    hits.rows
   }
 
   /** The rows of `raw` (stored rows of rewritten files) where `condition`
@@ -1571,11 +1581,10 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val base = currentVersion(name)
     val live = manifest(name, base)
     val hits = affectedFiles("replace_where", name, live)(_.filter(condition))
-    val affected = hits.map(_._1)
-    commitRewrite(name, "replace_where", base, live, affected, projectToPhysical(name,
-      notMatching(name, readFiles(name, affected), condition)
+    commitRewrite(name, "replace_where", base, live, hits.affected, projectToPhysical(name,
+      notMatching(name, readFiles(name, hits.affected), condition)
         .unionByName(alignLogical(name, df))))
-    hits.map(_._2).sum
+    hits.rows
   }
 
   /** Right-to-be-forgotten erasure (GDPR art.17 shape): COW-delete the
@@ -1634,19 +1643,101 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     commitVersion(name, "truncate", Seq.empty)
   }
 
+  /** Fail unless the merge source's `rows` rows carry `keys` distinct keys
+    * (multiple update rows per key is the ambiguity SQL MERGE rejects at
+    * runtime). The NULL key counts as one key: a SINGLE NULL-keyed row
+    * passes, two or more are duplicates of one key group.
+    */
+  private def requireKeyUnique(key: String, rows: Long, keys: Long): Unit =
+    require(rows == keys,
+      s"merge updates must be key-unique on $key: $rows rows over $keys keys")
+
   /** The number of `updates` rows, checked key-unique on `key` in one
-    * pass (multiple update rows per key is the ambiguity SQL MERGE
-    * rejects at runtime). count_distinct ignores NULLs, so the null key
-    * group is counted back in (max(isNull) = 1 if any): a SINGLE
-    * NULL-keyed row passes, two or more are duplicates of one key group.
+    * pass. count_distinct ignores NULLs, so the null key group is counted
+    * back in (max(isNull) = 1 if any).
     */
   private def keyUniqueCount(updates: DataFrame, key: String): Long = {
     val st = updates.agg(count(lit(1)),
       count_distinct(col(key)) + coalesce(max(col(key).isNull.cast("long")), lit(0L))).head()
-    val (nUpd, nKeys) = (st.getLong(0), st.getLong(1))
-    require(nUpd == nKeys,
-      s"merge updates must be key-unique on $key: $nUpd rows over $nKeys keys")
-    nUpd
+    requireKeyUnique(key, st.getLong(0), st.getLong(1))
+    st.getLong(0)
+  }
+
+  /** A merge source after its one evaluation: its `rows`, their `count`
+    * (checked key-unique on `key`), and — for a source collected to the
+    * driver — the typed literals of its distinct non-NULL keys, against
+    * which a stored row matches by an IN-set filter instead of a join.
+    */
+  private final class MergeSource(val rows: DataFrame, val count: Long, key: String,
+      localKeys: Option[Seq[org.apache.spark.sql.Column]]) {
+    /** The manifest pass over `live` for the stored rows whose key matches
+      * a source key, counting the distinct matched keys if `countKeys`.
+      * No job when no source row has a non-NULL key: nothing can match.
+      */
+    def hits(name: String, live: Seq[String], countKeys: Boolean): Catalog.Hits =
+      localKeys match {
+        case Some(ks) if ks.isEmpty => Catalog.NoHits
+        case Some(ks) => affectedFiles("merge", name, live, Option.when(countKeys)(key))(
+          _.filter(col(key).isin(ks: _*)))
+        // the matched SOURCE key rides along: key-unique under Spark's
+        // equality, its distinct bytes are the distinct matched keys even
+        // where stored keys differ in bytes but not in Spark's equality
+        // (-0.0 and 0.0, NaNs)
+        case None => affectedFiles("merge", name, live, Option.when(countKeys)(Catalog.SourceKeyCol))(
+          _.join(rows.select(col(key).as(Catalog.SourceKeyCol)), col(key) === col(Catalog.SourceKeyCol)))
+      }
+
+    /** The rows of `target` whose key matches no source key — stored
+      * NULL-key rows among them, since NULL matches nothing.
+      */
+    def notMatching(target: DataFrame): DataFrame = localKeys match {
+      case Some(ks) => target.filter(!coalesce(col(key).isin(ks: _*), lit(false)))
+      case None => target.join(rows.select(col(key)), Seq(key), "left_anti")
+    }
+  }
+
+  /** Run `body` on merge source `updates` evaluated exactly once, so the
+    * rows counted and matched are the rows written even when a second
+    * evaluation would differ (a nondeterministic source, files replaced
+    * under a path read). Spark's own broadcast rule picks the path:
+    *  - a source whose optimized plan is at most
+    *    `spark.sql.autoBroadcastJoinThreshold` bytes, keyed by the
+    *    table's declared key type where Spark's equality is JVM equality
+    *    (integral, decimal, date/time, default-collation string), is
+    *    collected once — no job when it is already local — and continues
+    *    as a local relation of those rows; its key check runs on the
+    *    driver;
+    *  - any other source (float, double, binary or complex keys, a key
+    *    type that differs from the table's, or more bytes) is pinned
+    *    once with [[graft.Tables.pin]], checked by one aggregate over the
+    *    pinned rows, and released when `body` returns.
+    */
+  private def withSource[T](name: String, updates: DataFrame, key: String)(
+      body: MergeSource => T): T = {
+    // the source's key column as the analyzer resolves `key` (its case may differ)
+    val keyField = updates.select(col(key)).schema.head
+    val keyType = keyField.dataType
+    val local = keyType == schema(name)(key).dataType && Catalog.jvmEquality(keyType) &&
+      updates.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (local) {
+      val rows = updates.collect()
+      val ki = updates.schema.fieldIndex(keyField.name)
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keyType)
+      val keys = rows.map(r => toCatalyst(r.get(ki)))
+      val nonNull = keys.filter(_ != null).distinct.toSeq
+      requireKeyUnique(key, rows.length.toLong,
+        nonNull.size + (if (keys.contains(null)) 1L else 0L))
+      body(new MergeSource(spark.createDataFrame(rows.toSeq.asJava, updates.schema),
+        rows.length.toLong, key, Some(nonNull.map(k => Bridge.column(Literal(k, keyType))))))
+    } else {
+      val pinned = graft.Tables.pin(updates)
+      try body(new MergeSource(pinned, keyUniqueCount(pinned, key), key, None))
+      finally pinned.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
+    }
   }
 
   /** Copy-on-write MERGE (upsert) by key — SQL MERGE's `WHEN MATCHED THEN
@@ -1670,50 +1761,34 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * insert-them-all behavior: split the NULL-keyed rows off and
     * [[insert]] them directly.
     *
-    * FILE-granular like [[deleteRows]]: the manifest pass semi-joins the
-    * update keys against the file-tagged table (AQE broadcasts the key
-    * side when it is small — the common shape: a trickle of updates
-    * against a huge table), and only files containing matched keys are
-    * rewritten. Returns (matchedRows, insertedRows).
+    * `updates` is evaluated once: a source whose optimized plan is at
+    * most `spark.sql.autoBroadcastJoinThreshold` bytes, keyed by the
+    * table's key type with an integral, decimal, date/time or
+    * default-collation string key, is collected to the driver (no job
+    * when it is already local, as a batch built on the driver is); any
+    * other source is pinned once and released before the call returns.
+    * FILE-granular like [[deleteRows]]: one manifest pass over the
+    * file-tagged table — an IN-set filter on the source's keys for a
+    * source collected to the driver, a join with the pinned source
+    * otherwise — counts the matched rows per file and the distinct
+    * matched keys, and only files containing matched keys are rewritten:
+    * their rows whose key matches no source key (stored NULL keys
+    * included), plus every source row. Returns (matchedRows, insertedRows).
     */
   def merge(name: String, updates: DataFrame, key: String): (Long, Long) = {
     val base = currentVersion(name)
     val live = manifest(name, base)
     val s = schema(name)
     require(s.fieldNames.contains(key), s"merge key $key not in schema of $name")
-    val nUpd = keyUniqueCount(updates, key)
-    // the semi and anti joins below ignore duplicate keys (and
-    // keyUniqueCount has rejected them), so the keys need no distinct
-    val keys = updates.select(col(key))
-    val updLogical = alignLogical(name, updates)
-    if (live.isEmpty) { insert(name, updLogical); return (0L, nUpd) }
-    // one rollup pass: the per-file rows are the rewrite set, the
-    // grand-total row carries the distinct matched key count. Expand
-    // doubles only the MATCHED rows (the trickle), never the full scan.
-    // fresh-aliased left side: `updates` routinely derives from this very
-    // table (read-modify-write), and an unqualified post-join reference to
-    // the key column would trip DetectAmbiguousSelfJoin
-    val tagged = logicalWithFile(name, live)
-      .select(col(Catalog.FileCol).as("__f"), col(key).as("__k"))
-    val perFileAll = collectBounded("merge", name,
-      tagged.as("t").join(keys.as("u"),
-          col("t.__k") === col(s"u.$key"), "left_semi")
-        .rollup(col("t.__f"))
-        .agg(count(lit(1)).as("n"), count_distinct(col("t.__k")).as("nk")),
-      rollupTotalRow = true)
-    val perFile = perFileAll.filter(!_.isNullAt(0))
-    if (perFile.isEmpty) { insert(name, updLogical); return (0L, nUpd) }
-    val affected = perFile.map(r => relativize(name, r.getString(0))).toSeq.sorted
-    val matched = perFile.map(_.getLong(1)).sum
-    val matchedKeys = perFileAll.find(_.isNullAt(0)).map(_.getLong(2)).getOrElse(0L)
-    // retained non-matched rows of the affected files + ALL update rows
-    // (matched replacements and fresh inserts alike) form the staged write
-    val retained = toLogical(name, readFiles(name, affected))
-      .join(keys, Seq(key), "left_anti")
-      .select(s.fieldNames.map(col).toSeq: _*)
-    commitRewrite(name, "merge", base, live, affected,
-      projectToPhysical(name, retained.unionByName(updLogical)))
-    (matched, nUpd - matchedKeys)
+    withSource(name, updates, key) { src =>
+      val updLogical = alignLogical(name, src.rows)
+      val hits = src.hits(name, live, countKeys = true)
+      if (hits.files.isEmpty) insert(name, updLogical)
+      else commitRewrite(name, "merge", base, live, hits.affected, projectToPhysical(name,
+        src.notMatching(toLogical(name, readFiles(name, hits.affected)))
+          .select(s.fieldNames.map(col).toSeq: _*).unionByName(updLogical)))
+      (hits.rows, src.count - hits.keys)
+    }
   }
 
   /** Copy-on-write MERGE with CONDITIONAL, MULTI-ACTION clauses — the full
@@ -1737,7 +1812,9 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * one target row is the ambiguity SQL MERGE rejects at runtime,
     * checked loudly here.
     *
-    * FILE-granular like [[merge]]: the manifest pass (bounded by
+    * `updates` is evaluated once, collected or pinned by the same rule
+    * as [[merge]]'s source. FILE-granular like [[merge]]: the
+    * manifest pass (an IN-set filter or a join, bounded by
     * `graft.dml.maxAffectedFiles`) finds files containing matched keys;
     * only those are rewritten under the clause logic, every other file is
     * untouched bytes. The clause decision itself is a single codegen'd
@@ -1764,52 +1841,51 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         "(an unconditional clause makes later ones unreachable)"))
     notMatched.dropRight(1).foreach(c => require(c.isDefined,
       "only the last WHEN NOT MATCHED clause may omit its AND condition"))
-    keyUniqueCount(updates, key)
-    // the semi and anti joins below ignore duplicate keys (and
-    // keyUniqueCount has rejected them), so the keys need no distinct
-    val keys = updates.select(col(key))
     // the source rows, each flagged with whether a NOT MATCHED clause
     // would insert it (all NOT MATCHED actions are INSERT *, so first-match
     // reduces to any-match: one OR over the clause conditions), evaluated
     // on the source alone so the conditions see only `sourceAlias`
     val insertable = coalesce(
       notMatched.map(_.map(expr).getOrElse(lit(true))).foldLeft(lit(false))(_ || _), lit(false))
-    val src = alignLogical(name, updates).alias(sourceAlias)
-      .withColumn(Catalog.InsertCol, insertable).withColumn(Catalog.SourceCol, lit(true))
-      .alias(sourceAlias)
-    val hits = affectedFiles("merge", name, live)(_.join(keys, Seq(key), "left_semi"))
-    if (hits.isEmpty) return (0L, 0L, insert(name, src.filter(col(Catalog.InsertCol))))
-    val affected = hits.map(_._1)
-    // one full outer join of the affected files' rows with the source
-    // decides every row: a matched pair takes the first applicable
-    // matched clause ('keep' when none holds), a target row without a
-    // source match is kept, and a source row without a target match (the
-    // affected files hold every matched key by construction) is inserted
-    // or skipped. A NULL key matches nothing on either side.
-    val target = toLogical(name, readFiles(name, affected))
-      .withColumn(Catalog.TargetCol, lit(true)).alias(targetAlias)
-    val joined = target.join(src,
-      col(s"$targetAlias.$key") === col(s"$sourceAlias.$key"), "full_outer")
-    val clauseChain = matched.foldRight(lit("keep"): org.apache.spark.sql.Column) { (c, els) =>
-      when(coalesce(c.cond.map(expr).getOrElse(lit(true)), lit(false)),
-        lit(if (c.delete) "delete" else "update")).otherwise(els)
+    withSource(name, updates, key) { source =>
+      val src = alignLogical(name, source.rows).alias(sourceAlias)
+        .withColumn(Catalog.InsertCol, insertable).withColumn(Catalog.SourceCol, lit(true))
+        .alias(sourceAlias)
+      val hits = source.hits(name, live, countKeys = false)
+      if (hits.files.isEmpty) (0L, 0L, insert(name, src.filter(col(Catalog.InsertCol))))
+      else {
+        // one full outer join of the affected files' rows with the source
+        // decides every row: a matched pair takes the first applicable
+        // matched clause ('keep' when none holds), a target row without a
+        // source match is kept, and a source row without a target match
+        // (the affected files hold every matched key by construction) is
+        // inserted or skipped. A NULL key matches nothing on either side.
+        val target = toLogical(name, readFiles(name, hits.affected))
+          .withColumn(Catalog.TargetCol, lit(true)).alias(targetAlias)
+        val joined = target.join(src,
+          col(s"$targetAlias.$key") === col(s"$sourceAlias.$key"), "full_outer")
+        val clauseChain = matched.foldRight(lit("keep"): org.apache.spark.sql.Column) { (c, els) =>
+          when(coalesce(c.cond.map(expr).getOrElse(lit(true)), lit(false)),
+            lit(if (c.delete) "delete" else "update")).otherwise(els)
+        }
+        val act =
+          when(col(s"$sourceAlias.${Catalog.SourceCol}").isNull, lit("keep"))
+            .when(col(s"$targetAlias.${Catalog.TargetCol}").isNull,
+              when(col(s"$sourceAlias.${Catalog.InsertCol}"), lit("insert")).otherwise(lit("skip")))
+            .otherwise(clauseChain)
+        val decided = joined.withColumn(Catalog.ActionCol, act)
+          .filter(col(Catalog.ActionCol) =!= "skip")
+        // the one action pass: every decision's count
+        val counts = decided.groupBy(Catalog.ActionCol).agg(count(lit(1)))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+        // kept rows are the target's, updated and inserted rows the source's
+        val fromTarget = col(Catalog.ActionCol) === "keep"
+        commitRewrite(name, "merge", base, live, hits.affected, projectToPhysical(name,
+          decided.filter(col(Catalog.ActionCol) =!= "delete").select(s.fieldNames.map(n =>
+            when(fromTarget, col(s"$targetAlias.$n")).otherwise(col(s"$sourceAlias.$n")).as(n)).toSeq: _*)))
+        (counts("update"), counts("delete"), counts("insert"))
+      }
     }
-    val act =
-      when(col(s"$sourceAlias.${Catalog.SourceCol}").isNull, lit("keep"))
-        .when(col(s"$targetAlias.${Catalog.TargetCol}").isNull,
-          when(col(s"$sourceAlias.${Catalog.InsertCol}"), lit("insert")).otherwise(lit("skip")))
-        .otherwise(clauseChain)
-    val decided = joined.withColumn(Catalog.ActionCol, act)
-      .filter(col(Catalog.ActionCol) =!= "skip")
-    // the one action pass: every decision's count
-    val counts = decided.groupBy(Catalog.ActionCol).agg(count(lit(1)))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
-    // kept rows are the target's, updated and inserted rows the source's
-    val fromTarget = col(Catalog.ActionCol) === "keep"
-    commitRewrite(name, "merge", base, live, affected, projectToPhysical(name,
-      decided.filter(col(Catalog.ActionCol) =!= "delete").select(s.fieldNames.map(n =>
-        when(fromTarget, col(s"$targetAlias.$n")).otherwise(col(s"$sourceAlias.$n")).as(n)).toSeq: _*)))
-    (counts("update"), counts("delete"), counts("insert"))
   }
 
   /** A `file:` URI as [[logicalWithFile]] tags it → its data-dir-relative
@@ -1859,6 +1935,58 @@ object Catalog {
     case other => other
   }
 
+  /** Whether Spark's equality on `dt` is JVM equality of its Catalyst
+    * values — the key types a merge source collected to the driver can
+    * be checked and matched by (not float or double, whose zeros and NaNs
+    * Spark normalizes, nor binary, complex or other-collation string).
+    */
+  private def jvmEquality(dt: DataType): Boolean = dt match {
+    case BooleanType | ByteType | ShortType | IntegerType | LongType | DateType |
+        TimestampType | TimestampNTZType | _: DecimalType => true
+    case s: StringType => s == StringType // the default, byte-compared collation
+    case _ => false
+  }
+
+  /** What a manifest pass found: the affected manifest entries with their
+    * hit counts, sorted, and the number of distinct keys among the hits
+    * (0 when the pass tracks no key).
+    */
+  private final case class Hits(files: Seq[(String, Long)], keys: Long) {
+    def affected: Seq[String] = files.map(_._1)
+    def rows: Long = files.map(_._2).sum
+  }
+
+  private val NoHits = Hits(Seq.empty, 0L)
+
+  /** One task's share of a row-level DML manifest pass over (file, key?)
+    * rows: its hit count per file, and its distinct non-NULL hit keys,
+    * each held as an UnsafeRow, whose bytes are its identity.
+    */
+  private def tallyHits(keyType: Option[DataType])(
+      rows: Iterator[InternalRow]): Iterator[(Seq[(String, Long)], Seq[UnsafeRow])] = {
+    val keyOf = keyType.map(dt => UnsafeProjection.create(Seq(BoundReference(1, dt, nullable = true))))
+    val perFile = mutable.HashMap.empty[String, Long]
+    val keys = mutable.HashSet.empty[UnsafeRow]
+    // a task reads each file split in one run of rows
+    var file: UTF8String = null
+    var n = 0L
+    def flush(): Unit =
+      if (file != null) perFile(file.toString) = perFile.getOrElse(file.toString, 0L) + n
+    rows.foreach { r =>
+      val f = r.getUTF8String(0)
+      if (file == null || f != file) { flush(); file = f.clone(); n = 0L }
+      n += 1
+      keyOf.foreach { proj =>
+        if (!r.isNullAt(1)) {
+          val k = proj(r)
+          if (!keys(k)) keys += k.copy()
+        }
+      }
+    }
+    flush()
+    Iterator((perFile.toSeq, keys.toSeq))
+  }
+
   /** Per-row decision column of [[Catalog.mergeConditional]]'s CASE chain. */
   private[sources] val ActionCol = "__graft_merge_action"
 
@@ -1868,6 +1996,8 @@ object Catalog {
   private[sources] val TargetCol = "__graft_merge_target"
   private[sources] val SourceCol = "__graft_merge_source"
   private[sources] val InsertCol = "__graft_merge_insertable"
+  /** The matched source key in [[Catalog.merge]]'s manifest pass over a pinned source. */
+  private[sources] val SourceKeyCol = "__graft_merge_source_key"
 
   /** One `WHEN MATCHED [AND cond] THEN UPDATE SET * | DELETE` clause. */
   final case class MatchedClause(cond: Option[String], delete: Boolean)

@@ -10,10 +10,24 @@ import org.apache.spark.sql.types._
   * plus the plan-level guarantees (partition pruning) the storage layout
   * exists to provide.
   */
-class CatalogSpec extends SparkSpec {
+class CatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  private def freshCatalog() =
-    new Catalog(spark, Files.createTempDirectory("graft_cat_test_").toString)
+  /** The directories the cases make (warehouses, staged inputs, export
+    * targets), deleted after the suite.
+    */
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+
+  private def tempDir(prefix: String): java.nio.file.Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => LocalFiles.deleteRecursively(d))
+    finally super.afterAll()
+
+  private def freshCatalog() = new Catalog(spark, tempDir("graft_cat_test_").toString)
 
   test("create → insert → table round-trips data and schema") {
     val cat = freshCatalog()
@@ -94,7 +108,7 @@ class CatalogSpec extends SparkSpec {
 
   test("insertJson ingests JSON lines against the declared schema") {
     val cat = freshCatalog()
-    val dir = Files.createTempDirectory("graft_json_")
+    val dir = tempDir("graft_json_")
     Files.writeString(dir.resolve("part1.json"),
       """{"a": 1, "b": "x"}
         |{"a": 2, "b": "y"}
@@ -109,7 +123,7 @@ class CatalogSpec extends SparkSpec {
   test("insertCsv round-trips a Spark-written CSV byte-exactly") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sf0001)
-    val dir = Files.createTempDirectory("graft_csv_").toString + "/stage"
+    val dir = tempDir("graft_csv_").toString + "/stage"
     docs.write.option("header", "true").option("escape", "\"").csv(dir)
     cat.create("docs_csv", docs.schema)
     cat.insertCsv("docs_csv", dir)
@@ -123,7 +137,7 @@ class CatalogSpec extends SparkSpec {
   test("insertOrc maps columns by NAME (survives a reordered ORC file)") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sf0001)
-    val dir = Files.createTempDirectory("graft_orc_").toString + "/stage"
+    val dir = tempDir("graft_orc_").toString + "/stage"
     // write the ORC stage with columns deliberately reordered: a positional
     // decoder (the CSV contract) would garble this; ORC's footer schema
     // must map them back by name
@@ -349,7 +363,7 @@ class CatalogSpec extends SparkSpec {
 
   test("z-order layout prunes most files for a 2-D box; results identical") {
     val ev = Tables.events(spark, sf0001).select("event_id", "user_id", "value")
-    val dir = Files.createTempDirectory("graft_z_").toString + "/z"
+    val dir = tempDir("graft_z_").toString + "/z"
     val stats = graft.sources.ZOrder.writeZOrdered(ev, "user_id", "value", dir, numFiles = 8)
     assert(stats.size == 8)
     // the box spans ~1/2 of the user range and ~1/8 of the value range;
@@ -371,7 +385,7 @@ class CatalogSpec extends SparkSpec {
   test("3-D z-order layout prunes a strict subset for a 3-D box; results identical") {
     val ev = Tables.events(spark, sf0001).select(col("event_id"), col("user_id"),
       col("value"), expr("ts_ns div 1000000000").as("ts_sec"))
-    val dir = Files.createTempDirectory("graft_z3_").toString + "/z3"
+    val dir = tempDir("graft_z3_").toString + "/z3"
     val cols = Seq("user_id", "value", "ts_sec")
     val stats = graft.sources.ZOrder.writeZOrdered(ev, cols, dir, numFiles = 8)
     assert(stats.size == 8)
@@ -440,7 +454,7 @@ class CatalogSpec extends SparkSpec {
 
   test("hilbert layout prunes files for a 2-D box; results identical to plain filter") {
     val ev = Tables.events(spark, sf0001).select("event_id", "user_id", "value")
-    val dir = Files.createTempDirectory("graft_h_").toString + "/h"
+    val dir = tempDir("graft_h_").toString + "/h"
     val stats = graft.sources.ZOrder.writeHilbertClustered(
       ev, "user_id", "value", dir, numFiles = 8)
     assert(stats.size == 8)
@@ -671,6 +685,88 @@ class CatalogSpec extends SparkSpec {
     assert(cat.table("docs").count() == 52)
   }
 
+  /** `op` once on each path a merge source can take: the default, and
+    * with broadcasting switched off, which sends every source down the
+    * pinned path.
+    */
+  private def onBothPaths(op: String => Unit): Unit = {
+    op("default")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try op("no broadcast")
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("a merge evaluates its source once: its counts agree with the rows it writes") {
+    // every evaluation of the source draws the next 20 keys of a
+    // 0..59 cycle, so a second evaluation sees other keys than the first
+    val key = udf(() => CatalogSpec.sourceDraws.getAndIncrement() % 60).asNondeterministic()
+    onBothPaths { path =>
+      val cat = freshCatalog()
+      idTable(cat, "t", 40)
+      CatalogSpec.sourceDraws.set(30)
+      val upd = spark.range(20).select(key().as("id"))
+        .select(col("id"), (col("id") % 4).cast("int").as("p"), lit(-1L).as("v"))
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val (matched, inserted) = cat.merge("t", upd, "id")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, s"$path: pin released")
+      val back = cat.table("t")
+      val written = back.filter(col("v") === -1L)
+      assert(written.count() == matched + inserted, path)
+      assert(written.filter(col("id") < 40).count() == matched, path)
+      assert(back.count() == 40 + inserted, path)
+      assert(back.select("id").distinct().count() == back.count(), path)
+    }
+  }
+
+  /** A (k, v) table over `rows`, merged with `upd` by `merge` and by an
+    * upsert-all `mergeConditional`: each call's counts or the word
+    * "rejected", then the table's rows as "k=v" (keys as Java prints
+    * them, so 0.0, -0.0 and NaN stay apart), sorted.
+    */
+  private def keyOutcomes[K: scala.reflect.runtime.universe.TypeTag](
+      rows: Seq[(Option[K], String)], upd: Seq[(Option[K], String)]): Seq[String] = {
+    import spark.implicits._
+    def outcome(run: Catalog => Any): String = {
+      val cat = freshCatalog()
+      val df = rows.toDF("k", "v")
+      cat.create("t", df.schema)
+      cat.insert("t", df.coalesce(1))
+      val res = try run(cat).toString catch { case _: IllegalArgumentException => "rejected" }
+      res + " " + cat.table("t").collect().map(r => s"${r.get(0)}=${r.get(1)}").sorted.mkString(",")
+    }
+    val src = upd.toDF("k", "v")
+    Seq(outcome(_.merge("t", src, "k")),
+      outcome(_.mergeConditional("t", src, "k",
+        Seq(Catalog.MatchedClause(None, delete = false)), Seq(None))))
+  }
+
+  test("merge keys compare with Spark's equality: DOUBLE zeros and NaN, STRING case") {
+    onBothPaths { path =>
+      val dbl = Seq(Some(0.0) -> "a", Some(-0.0) -> "b", Some(Double.NaN) -> "c",
+        Some(1.0) -> "d", None -> "e")
+      assert(keyOutcomes(dbl, Seq(Some(-0.0) -> "u0", Some(Double.NaN) -> "uN",
+        Some(2.0) -> "u2")) == Seq(
+        "(3,1) -0.0=u0,1.0=d,2.0=u2,NaN=uN,null=e",
+        "(3,0,1) -0.0=u0,-0.0=u0,1.0=d,2.0=u2,NaN=uN,null=e"), path)
+      // 0.0 and -0.0 are one key, and so are two NaNs
+      Seq(Seq(Some(0.0) -> "x", Some(-0.0) -> "y"),
+        Seq(Some(Double.NaN) -> "x", Some(Double.NaN) -> "y")).foreach { dup =>
+        assert(keyOutcomes(dbl, dup).forall(_.startsWith("rejected ")), s"$path $dup")
+      }
+      val str = Seq(Some("a") -> "1", Some("A") -> "2", Some("a ") -> "3", None -> "4")
+      assert(keyOutcomes(str, Seq(Some("a") -> "u", Some("c") -> "v", Some("C") -> "w")) == Seq(
+        "(1,2) A=2,C=w,a =3,a=u,c=v,null=4", "(1,0,2) A=2,C=w,a =3,a=u,c=v,null=4"), path)
+      assert(keyOutcomes(str, Seq(Some("c") -> "x", Some("c") -> "y"))
+        .forall(_.startsWith("rejected ")), path)
+      // one NULL-keyed source row matches nothing and is inserted; two
+      // are duplicates of the null key group
+      assert(keyOutcomes(str, Seq(None -> "n1", Some("A") -> "u")) == Seq(
+        "(1,1) A=u,a =3,a=1,null=4,null=n1", "(1,0,1) A=u,a =3,a=1,null=4,null=n1"), path)
+      assert(keyOutcomes(str, Seq(None -> "n1", None -> "n2"))
+        .forall(_.startsWith("rejected ")), path)
+    }
+  }
+
   test("time travel: every committed version stays readable until vacuumed") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sf0001)
@@ -880,7 +976,7 @@ class CatalogSpec extends SparkSpec {
     // the proof surface for the engine's two inherited optimizations:
     // partition pruning (lang = 'en' never reads other lang dirs) and
     // parquet predicate pushdown (n_chars > 100 reaches the scan)
-    val wh = Files.createTempDirectory("graft_expl_wh_").toString
+    val wh = tempDir("graft_expl_wh_").toString
     val cat = new Catalog(spark, wh)
     val docs = Tables.documents(spark, sf0001)
     cat.create("docs_expl", docs.schema, Some("lang"))
@@ -925,7 +1021,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("repl \\history and \\restore operate on the bound warehouse") {
-    val wh = Files.createTempDirectory("graft_repl_wh_").toString
+    val wh = tempDir("graft_repl_wh_").toString
     val cat = new Catalog(spark, wh)
     val docs = Tables.documents(spark, sf0001)
     cat.create("docs", docs.schema, Some("lang"))
@@ -986,7 +1082,7 @@ class CatalogSpec extends SparkSpec {
   test("quarantine ingest: bad rows preserved raw with reasons, repair path re-ingests") {
     import org.apache.spark.sql.types._
     val cat = freshCatalog()
-    val wh = Files.createTempDirectory("graft_q_csv_").toString
+    val wh = tempDir("graft_q_csv_").toString
     val tgt = StructType(Seq(
       StructField("id", LongType), StructField("n", LongType),
       StructField("s", StringType)))
@@ -1220,7 +1316,7 @@ class CatalogSpec extends SparkSpec {
     cat.insert("src_t", docs)
     cat.deleteRows("src_t", col("source") === "src0") // live snapshot ⊂ all files
     val want = cat.table("src_t").count()
-    val dest = Files.createTempDirectory("graft_export_").toString
+    val dest = tempDir("graft_export_").toString
     val nFiles = cat.exportTable("src_t", dest)
     assert(nFiles > 0)
     // only the LIVE snapshot's bytes travel — the deleted-rows originals
@@ -1239,7 +1335,7 @@ class CatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException](cat.exportTable("src_t", dest))
     intercept[IllegalArgumentException](cat2.importTable("imported", dest))
     intercept[IllegalArgumentException](
-      cat2.importTable("x", Files.createTempDirectory("graft_notsnap_").toString))
+      cat2.importTable("x", tempDir("graft_notsnap_").toString))
   }
 
   test("catalog_export_import leaves no export directory in java.io.tmpdir") {
@@ -1314,7 +1410,7 @@ class CatalogSpec extends SparkSpec {
 
   test("row-level DML works on a warehouse path with a space and a percent sign") {
     val wh = Files.createDirectories(
-      Files.createTempDirectory("graft_cat_test_").resolve("wh with space%"))
+      tempDir("graft_cat_test_").resolve("wh with space%"))
     // absolute, and relative to the working directory (`..` segments)
     val cwd = java.nio.file.Paths.get("").toAbsolutePath
     Seq(wh.toString, cwd.relativize(wh).toString).zipWithIndex.foreach {
@@ -1363,9 +1459,12 @@ class CatalogSpec extends SparkSpec {
     val upd = spark.range(190, 210).select(col("id"),
       (col("id") % 4).cast("int").as("p"), (col("id") * 10).as("v"))
     val cond = Seq((20L, 0, -1L), (21L, 1, 210L), (5000L, 0, 5L)).toDF("id", "p", "v")
+    // a batch built on the driver, the shape of the benchmark's merges
+    val localUpd = Seq((150L, 2, 1500L), (9000L, 0, 9L)).toDF("id", "p", "v")
     val counts = Seq(
       "insert" -> jobsOf(cat.insert("t", batch)),
       "merge" -> jobsOf(cat.merge("t", upd, "id")),
+      "merge (local source)" -> jobsOf(cat.merge("t", localUpd, "id")),
       "deleteRows" -> jobsOf(cat.deleteRows("t", col("v") % 5 === 0)),
       "updateRows" -> jobsOf(cat.updateRows("t", col("id") < 40, Seq("v" -> lit(-2L)))),
       "replaceWhere" -> jobsOf(cat.replaceWhere("t", col("p") === 3, batch.filter(col("p") === 3))),
@@ -1376,13 +1475,14 @@ class CatalogSpec extends SparkSpec {
       "compact" -> jobsOf(cat.compact("t")),
       "read" -> jobsOf(cat.table("t").filter(col("p") === 1).collect()))
     info(counts.map { case (op, n) => s"$op=$n" }.mkString(" "))
-    // one shared key-uniqueness pass and one full outer join whose one
-    // action pass counts every decision, with no distinct pass over the
-    // source keys (mergeConditional), and one write for the retained rows
-    // plus the incoming batch (replaceWhere)
-    val pinned = Map("insert" -> 1, "merge" -> 8, "deleteRows" -> 3, "updateRows" -> 3,
-      "replaceWhere" -> 3, "compactWhere" -> 4, "mergeConditional" -> 13, "compact" -> 2,
-      "read" -> 1)
+    // a row-level DML op runs one manifest pass and one write (plus its
+    // repartition's shuffle for compactWhere); a merge first collects a
+    // small source that is not yet local (none for a local one), and
+    // mergeConditional adds the action pass that counts every decision
+    // of its full outer join
+    val pinned = Map("insert" -> 1, "merge" -> 3, "merge (local source)" -> 2,
+      "deleteRows" -> 2, "updateRows" -> 2, "replaceWhere" -> 2, "compactWhere" -> 3,
+      "mergeConditional" -> 8, "compact" -> 2, "read" -> 1)
     counts.foreach { case (op, n) =>
       assert(n <= pinned(op), s"$op ran $n Spark jobs, pinned at most ${pinned(op)}")
     }
@@ -1412,7 +1512,7 @@ class CatalogSpec extends SparkSpec {
   test("catalog data files and partition directories get the stock local-write permissions") {
     val cat = freshCatalog()
     idTable(cat, "t", 40)
-    val stock = Files.createTempDirectory("graft_stock_write_").resolve("out")
+    val stock = tempDir("graft_stock_write_").resolve("out")
     spark.range(40).select(col("id"), (col("id") % 4).cast("int").as("p"), col("id").as("v"))
       .repartition(2).write.partitionBy("p").parquet(stock.toString)
     def perms(root: java.nio.file.Path): (Set[String], Set[String]) = {
@@ -1432,7 +1532,7 @@ class CatalogSpec extends SparkSpec {
   test("NioLocalFileSystem sets the same permission bits as RawLocalFileSystem") {
     import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
     import org.apache.hadoop.fs.permission.FsPermission
-    val dir = Files.createTempDirectory("graft_nio_perm_")
+    val dir = tempDir("graft_nio_perm_")
     val conf = new org.apache.hadoop.conf.Configuration()
     def fs(raw: RawLocalFileSystem) = { raw.initialize(java.net.URI.create("file:///"), conf); raw }
     val (stock, nio) = (fs(new RawLocalFileSystem), fs(new graft.sources.NioLocalFileSystem.Raw))
@@ -1480,7 +1580,7 @@ class CatalogSpec extends SparkSpec {
         s"$op ran a listing job: ${descs.mkString(" | ")}")
     }
     val pinned = Map("filtered read" -> 1, "count" -> 2, "tableAt" -> 2,
-      "deleteRows" -> 3, "merge" -> 8)
+      "deleteRows" -> 2, "merge" -> 3)
     runs.foreach { case (op, descs) =>
       assert(descs.size <= pinned(op), s"$op ran ${descs.size} Spark jobs, pinned at most ${pinned(op)}")
     }
@@ -1523,7 +1623,7 @@ class CatalogSpec extends SparkSpec {
 
   test("table, tableAt and tableChanges read back on a warehouse path with a space and a percent sign") {
     val wh = Files.createDirectories(
-      Files.createTempDirectory("graft_cat_test_").resolve("wh with space%"))
+      tempDir("graft_cat_test_").resolve("wh with space%"))
     val cat = new Catalog(spark, wh.toString)
     idTable(cat, "t", 20)
     cat.insert("t", spark.range(20, 30).select(col("id"),
@@ -1559,4 +1659,9 @@ class CatalogSpec extends SparkSpec {
     cat.truncate("part")
     assert(cat.table("part").count() == 0)
   }
+}
+
+object CatalogSpec {
+  /** The draw counter of the source-once spec's nondeterministic key. */
+  val sourceDraws = new java.util.concurrent.atomic.AtomicLong
 }
