@@ -767,6 +767,70 @@ class CatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
   }
 
+  /** The bytes of every task result the driver receives while `op` runs. */
+  private def taskResultBytes(op: => Any): Long = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val total = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => total.addAndGet(m.resultSize))
+    }
+    org.apache.spark.SpecAccess.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      op
+      org.apache.spark.SpecAccess.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    total.get
+  }
+
+  test("a pinned merge source's matched keys stay in the cluster") {
+    // with broadcasting off the source is pinned and its join with the
+    // table shuffles; what the driver receives must grow with the files
+    // a merge touches, not with the keys it matches. Both merges touch
+    // every file of a 100k-row table: one matches 1k keys, one all 100k
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val upd = (step: Int) => spark.range(0, 100000, step, 2).select(col("id"),
+        (col("id") % 4).cast("int").as("p"), lit(-1L).as("v"))
+      val bytes = Seq(100, 1).map { step =>
+        val cat = freshCatalog()
+        idTable(cat, "t", 100000)
+        var counts = (0L, 0L)
+        val n = taskResultBytes { counts = cat.merge("t", upd(step), "id") }
+        assert(counts == ((100000L / step, 0L)))
+        n
+      }
+      info(s"task result bytes: 1k keys ${bytes(0)}, 100k keys ${bytes(1)}")
+      assert(bytes(1) - bytes(0) < 99000L,
+        s"99k more matched keys sent ${bytes(1) - bytes(0)} more bytes to the driver")
+      // the affected-file bound holds on this path too
+      val cat = freshCatalog()
+      idTable(cat, "t", 100000)
+      spark.conf.set("graft.dml.maxAffectedFiles", (dataFiles(cat, "t").size - 1).toString)
+      intercept[Catalog.ManifestScaleException] { cat.merge("t", upd(1), "id") }
+    } finally {
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("graft.dml.maxAffectedFiles")
+    }
+  }
+
+  test("a local merge source of more keys than an IN-set holds matches by join") {
+    import spark.implicits._
+    val cat = freshCatalog()
+    idTable(cat, "t", 10000)
+    cat.insert("t", Seq((None: Option[Long], 1, 7L)).toDF("id", "p", "v"))
+    // 6000 keys collected to the driver: 3000 stored, 3000 new
+    val upd = (7000L until 13000L).map(i => (i, (i % 4).toInt, -1L)).toDF("id", "p", "v")
+    assert(cat.merge("t", upd, "id") == ((3000L, 3000L)))
+    val back = cat.table("t")
+    assert(back.count() == 13001)
+    assert(back.filter(col("v") === -1L).count() == 6000)
+    assert(back.filter(col("id").isNull && col("v") === 7L).count() == 1, "stored NULL key kept")
+    assert(back.filter(col("id").isNotNull).select("id").distinct().count() == 13000)
+  }
+
   test("time travel: every committed version stays readable until vacuumed") {
     val cat = freshCatalog()
     val docs = Tables.documents(spark, sf0001)
