@@ -16,9 +16,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * construction time (works with spark-submit, the thrift server, and
   * Connect servers alike — anywhere the session is built from conf rather
   * than code), and adds the planner's [[graft.plans.SmallSortStrategy]].
-  * The per-session `register(spark)` helpers on the companion objects
-  * remain for programmatic use; this class is the zero-code-change route.
-  * A session built without it gets the strategy from
+  * A session built without it gets the same functions and strategy from
   * [[GraftExtensions.install]], which graft calls on every session it
   * builds or reads through.
   */
@@ -68,17 +66,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Append graft's planner strategy to `spark`'s extra strategies once;
-    * a second call changes nothing. `GraftSession.local`, `Tables.load`,
-    * the `Catalog` constructor and `Hustle.select` call it, so a session
-    * graft did not build plans graft's reads the same way from their
-    * first use.
+  /** The sessions [[install]] has run on (weak: a dropped session goes). */
+  private val installed = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
+
+  /** Give `spark` what `spark.sql.extensions=graft.GraftExtensions` would
+    * have given it at construction — every graft SQL function, arity
+    * checked, and the planner strategy — once per session; later calls
+    * are a set-membership check. `GraftSession.local`, `Tables.load`, the
+    * `Catalog` constructor and `Hustle.select` call it, so a session graft
+    * did not build plans graft's reads and resolves graft's SQL functions
+    * the same way from their first use.
     */
-  def install(spark: SparkSession): Unit = {
-    val methods = spark.experimental
-    methods.synchronized {
-      if (!methods.extraStrategies.contains(SmallSortStrategy))
-        methods.extraStrategies = methods.extraStrategies :+ SmallSortStrategy
+  def install(spark: SparkSession): Unit =
+    if (!installed.contains(spark)) installed.synchronized {
+      if (!installed.contains(spark)) {
+        val ext = new SparkSessionExtensions
+        new GraftExtensions()(ext)
+        org.apache.spark.sql.graft.Bridge.applyExtensions(ext, spark)
+        val methods = spark.experimental
+        if (!methods.extraStrategies.contains(SmallSortStrategy))
+          methods.extraStrategies = methods.extraStrategies :+ SmallSortStrategy
+        installed.add(spark)
+      }
     }
-  }
 }

@@ -63,18 +63,32 @@ object CatalogOps {
     ((q: String) => CatalogSql.exec(s, cat, q), cat, wh)
   }
 
-  /** Per-language document count and char total; `chars` is the summed
-    * column (rows that widen it pass the cast).
+  /** `CREATE TABLE table AS` the documents fixture's doc_id, [text,] lang
+    * and n_chars (as BIGINT), through the statement runner `x`.
     */
-  private def langProfile(df: DataFrame, chars: Column = col("n_chars")): DataFrame =
-    df.groupBy("lang").agg(count(lit(1)).as("n_docs"), sum(chars).as("total_chars"))
+  private def createDocs(x: String => DataFrame, table: String, text: Boolean = true): Unit =
+    x(s"""CREATE TABLE $table AS
+        |SELECT doc_id, ${if (text) "text, " else ""}lang, CAST(n_chars AS BIGINT) AS n_chars
+        |FROM documents""".stripMargin)
+
+  /** Per-`keys` (default: per-language) document count and char total,
+    * then `extra` aggregates; `chars` is the summed column (rows that
+    * widen it pass the cast).
+    */
+  private def langProfile(df: DataFrame, keys: Seq[String] = Seq("lang"),
+      chars: Column = col("n_chars"), extra: Seq[Column] = Nil): DataFrame =
+    df.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_docs"), sum(chars).as("total_chars") +: extra: _*)
+
+  /** The (lang, source) key of the per-source profiles. */
+  private val LangSource = Seq("lang", "source")
 
   /** [[langProfile]] of each named snapshot, tagged `snap`, in one result
     * ordered by (snap, lang).
     */
   private def snapProfiles(chars: Column, snaps: (String, DataFrame)*): DataFrame =
     snaps.map { case (snap, df) =>
-      langProfile(df, chars)
+      langProfile(df, chars = chars)
         .select(lit(snap).as("snap"), col("lang"), col("n_docs"), col("total_chars"))
     }.reduce(_ unionByName _).orderBy("snap", "lang")
 
@@ -186,9 +200,7 @@ object CatalogOps {
   private def sqlTimeTravel(table: String)(asOf: Catalog => String)(
       s: SparkSession, d: String): DataFrame = {
     val (x, cat, _) = sqlSession(s, d)
-    x(s"""CREATE TABLE $table AS
-        |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-        |FROM documents""".stripMargin)
+    createDocs(x, table, text = false)
     x(s"DELETE FROM $table WHERE doc_id % 4 = 1") // v2
     x(s"""SELECT a1.lang, a1.n1 AS n_v1, a2.n2 AS n_head,
         |  CAST(a1.n1 - a2.n2 AS BIGINT) AS n_deleted
@@ -319,9 +331,7 @@ object CatalogOps {
         |FROM fin GROUP BY lang, tag ORDER BY lang, tag""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_sql AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_sql")
       x("ALTER TABLE docs_sql ADD COLUMN tag STRING DEFAULT 'base'")
       x("""MERGE INTO docs_sql USING (
           |  SELECT doc_id, text, lang, CAST(n_chars + 1000 AS BIGINT) AS n_chars,
@@ -378,9 +388,7 @@ object CatalogOps {
         |FROM merged GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_cm AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_cm")
       x("""MERGE INTO docs_cm AS t USING (
           |  SELECT doc_id, text, lang, CAST(n_chars + 5000 AS BIGINT) AS n_chars
           |  FROM documents WHERE doc_id % 3 = 0
@@ -415,9 +423,7 @@ object CatalogOps {
         |FROM up GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_up AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_up")
       x("""UPDATE docs_up SET n_chars = n_chars * 2 + length(lang),
           |  lang = upper(lang) WHERE doc_id % 4 = 1""".stripMargin)
       x("""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -442,9 +448,7 @@ object CatalogOps {
         |SELECT lang, n_docs, total_chars FROM v_big ORDER BY lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_v AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_v")
       x("""CREATE VIEW v_lang AS
           |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
           |       CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -470,9 +474,7 @@ object CatalogOps {
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_zo AS
-          |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_zo", text = false)
       x("OPTIMIZE docs_zo FILES 4 ZORDER BY (doc_id, n_chars)")
       x("""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
           |  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
@@ -505,9 +507,7 @@ object CatalogOps {
         |FROM m GROUP BY lang ORDER BY lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_me AS
-          |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_me", text = false)
       x("""MERGE WITH SCHEMA EVOLUTION INTO docs_me AS t USING (
           |  SELECT doc_id, lang, CAST(n_chars + 100 AS BIGINT) AS n_chars,
           |         CAST(doc_id % 7 AS BIGINT) AS score
@@ -568,9 +568,7 @@ object CatalogOps {
       LangTextProfileOracle,
     ) { (s, d) =>
       val (x, _, wh) = sqlSession(s, d)
-      x("""CREATE TABLE docs_exp AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_exp")
       x(s"COPY docs_exp TO '$wh/exported_csv' FORMAT csv")
       x("""CREATE TABLE docs_imp (
           |  doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT)""".stripMargin)
@@ -679,9 +677,7 @@ object CatalogOps {
         |ORDER BY phase, lang""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_mb AS
-          |SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_mb", text = false)
       x("""CREATE MATERIALIZED VIEW mv_lang AS
           |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
           |       CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -723,9 +719,7 @@ object CatalogOps {
         |ORDER BY col_name""".stripMargin,
     ) { (s, d) =>
       val (x, _, _) = sqlSession(s, d)
-      x("""CREATE TABLE docs_an AS
-          |SELECT doc_id, text, lang, CAST(n_chars AS BIGINT) AS n_chars
-          |FROM documents""".stripMargin)
+      createDocs(x, "docs_an")
       x("ANALYZE TABLE docs_an")
       x("SHOW STATS docs_an")
         .select(col("column").as("col_name"), col("n_rows"), col("n_nulls"),
@@ -778,10 +772,7 @@ object CatalogOps {
     ) { (s, d) =>
       val (cat, _, _) = stagedDocs(s, d, "docs_wh")
       cat.deleteRows("docs_wh", col("source") === "src0" || col("n_chars") % 17 === 3)
-      cat.table("docs_wh")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
-        .orderBy("lang", "source")
+      langProfile(cat.table("docs_wh"), LangSource).orderBy("lang", "source")
     },
 
     // ---- copy-on-write MERGE (upsert): a deterministic update set built
@@ -802,10 +793,8 @@ object CatalogOps {
     ) { (s, d) =>
       val (cat, docs, _) = stagedDocs(s, d, "docs_wh")
       cat.merge("docs_wh", upsertBatch(docs), "doc_id")
-      cat.table("docs_wh")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+      langProfile(cat.table("docs_wh"), LangSource,
+        extra = Seq(min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id")))
         .orderBy("lang", "source")
     },
 
@@ -967,9 +956,7 @@ object CatalogOps {
       cat.deleteRows("docs_wh", col("source") === "src0") // v2
       cat.restoreVersion("docs_wh", 1) // v3: src0 rows live again
       cat.deleteRows("docs_wh", col("n_chars") % 13 === 7) // v4
-      cat.table("docs_wh")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
+      langProfile(cat.table("docs_wh"), LangSource)
         .withColumn("head_version", lit(cat.currentVersion("docs_wh")))
         .orderBy("lang", "source")
     },
@@ -987,11 +974,9 @@ object CatalogOps {
         |FROM head GROUP BY lang, source ORDER BY lang, source""".stripMargin,
     ) { (s, d) =>
       val (cat, docs, _) = stagedDocs(s, d, "docs_wh") // v1
-      val prior = cat.tableAt("docs_wh", 1) // the materialized view build
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
+      val prior = langProfile(cat.tableAt("docs_wh", 1), LangSource) // the materialized view build
       deleteThenMerge(cat, upsertBatch(docs)) // v2, v3
-      rollForward(cat, "docs_wh", 1, 3, prior, Seq("lang", "source"),
+      rollForward(cat, "docs_wh", 1, 3, prior, LangSource,
         "n_docs", Map("total_chars" -> "n_chars"))
         .orderBy("lang", "source")
     },
@@ -1220,10 +1205,7 @@ object CatalogOps {
         .withColumn("source", lit("backfill"))
         .withColumn("n_chars", col("n_chars") + 1000)
       cat.replaceWhere("docs_rw", col("lang") === "en", corrected)
-      cat.table("docs_rw")
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars").cast("long")).as("total_chars"))
+      langProfile(cat.table("docs_rw"), LangSource, col("n_chars").cast("long"))
         .orderBy("lang", "source")
     },
 

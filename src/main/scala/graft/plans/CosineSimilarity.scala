@@ -123,11 +123,4 @@ object CosineSimilarity {
   def cosine(a: Column, b: Column): Column =
     Bridge.column(
       CosineSimilarity(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register as a SQL function: `SELECT cosine_similarity(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
 }

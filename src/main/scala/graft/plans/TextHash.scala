@@ -138,12 +138,4 @@ object TokenHash60 {
 
   def rollingTokenHash(text: Column): Column =
     Bridge.column(RollingTokenHash(Bridge.expression(text)))
-
-  /** Register both as SQL functions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_hash60", exprs => TokenHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_token_hash", exprs => RollingTokenHash(exprs.head), "built-in")
-  }
 }

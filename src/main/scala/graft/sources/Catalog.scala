@@ -204,7 +204,8 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private val DefaultKey = Catalog.DefaultKey
   private val PhysicalKey = "graft.physical"
 
-  private def defaultOf(f: org.apache.spark.sql.types.StructField): Option[String] =
+  /** A column's declared DEFAULT (SQL text), if any. */
+  private[sources] def defaultOf(f: org.apache.spark.sql.types.StructField): Option[String] =
     if (f.metadata.contains(DefaultKey)) Some(f.metadata.getString(DefaultKey))
     else None
 
@@ -1863,7 +1864,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   def mergeConditional(
       name: String, updates: DataFrame, key: String,
       matched: Seq[Catalog.MatchedClause],
-      notMatched: Seq[Option[String]],
+      notMatched: Seq[Option[org.apache.spark.sql.Column]],
       targetAlias: String = "t", sourceAlias: String = "s"): (Long, Long, Long) = {
     val base = currentVersion(name)
     val live = manifest(name, base)
@@ -1883,7 +1884,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     // reduces to any-match: one OR over the clause conditions), evaluated
     // on the source alone so the conditions see only `sourceAlias`
     val insertable = coalesce(
-      notMatched.map(_.map(expr).getOrElse(lit(true))).foldLeft(lit(false))(_ || _), lit(false))
+      notMatched.map(_.getOrElse(lit(true))).foldLeft(lit(false))(_ || _), lit(false))
     withSource(name, updates, key) { source =>
       val src = alignLogical(name, source.rows).alias(sourceAlias)
         .withColumn(Catalog.InsertCol, insertable).withColumn(Catalog.SourceCol, lit(true))
@@ -1902,7 +1903,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         val joined = target.join(src,
           col(s"$targetAlias.$key") === col(s"$sourceAlias.$key"), "full_outer")
         val clauseChain = matched.foldRight(lit("keep"): org.apache.spark.sql.Column) { (c, els) =>
-          when(coalesce(c.cond.map(expr).getOrElse(lit(true)), lit(false)),
+          when(coalesce(c.cond.getOrElse(lit(true)), lit(false)),
             lit(if (c.delete) "delete" else "update")).otherwise(els)
         }
         val act =
@@ -2048,5 +2049,5 @@ object Catalog {
   private val MaxInSetKeys = 4000
 
   /** One `WHEN MATCHED [AND cond] THEN UPDATE SET * | DELETE` clause. */
-  final case class MatchedClause(cond: Option[String], delete: Boolean)
+  final case class MatchedClause(cond: Option[org.apache.spark.sql.Column], delete: Boolean)
 }

@@ -26,7 +26,6 @@ object GraftSql {
   def registerFixtures(spark: SparkSession, sfDir: String): Unit = {
     val key = (System.identityHashCode(spark), sfDir)
     if (!registered.contains(key)) {
-      graft.plans.TokenHash60.register(spark)
       Tables.tpch.foreach(n => Tables.load(spark, sfDir, n).createOrReplaceTempView(n))
       Tables.events(spark, sfDir).createOrReplaceTempView("events")
       Tables.documents(spark, sfDir).createOrReplaceTempView("documents")

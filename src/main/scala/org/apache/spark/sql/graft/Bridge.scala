@@ -16,6 +16,15 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over a logical plan, analyzed now (`Dataset.ofRows` is
+    * `private[sql]`) — runs a plan Spark's parser returned without
+    * printing it back to SQL text.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Apply the function injections of a built-up `SparkSessionExtensions`
     * to an existing session's registry (`registerFunctions` is
     * `private[sql]`) — lets specs exercise `graft.GraftExtensions` exactly

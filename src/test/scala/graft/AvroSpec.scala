@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.{AvroCodec, Catalog, CatalogSql}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -14,7 +12,7 @@ import org.apache.spark.sql.types._
   */
 class AvroSpec extends SparkSpec {
 
-  private def tmp() = Files.createTempDirectory("graft_avro_").toString
+  private def tmp() = tempDir("graft_avro_").toString
 
   test("typed round-trip: scalars, timestamp, date, array, struct, nulls") {
     import spark.implicits._

@@ -10,22 +10,7 @@ import org.apache.spark.sql.types._
   * plus the plan-level guarantees (partition pruning) the storage layout
   * exists to provide.
   */
-class CatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
-
-  /** The directories the cases make (warehouses, staged inputs, export
-    * targets), deleted after the suite.
-    */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val d = Files.createTempDirectory(prefix)
-    tempDirs.add(d)
-    d
-  }
-
-  override def afterAll(): Unit =
-    try tempDirs.forEach(d => LocalFiles.deleteRecursively(d))
-    finally super.afterAll()
+class CatalogSpec extends SparkSpec {
 
   private def freshCatalog() = new Catalog(spark, tempDir("graft_cat_test_").toString)
 
@@ -1506,7 +1491,7 @@ class CatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     want = want + (12L -> ((0, 120L))) + (2000L -> ((3, 7L))); check()
     val cond = Seq((14L, 2, 140L), (15L, 3, -1L), (3000L, 0, 5L)).toDF("id", "p", "v")
     assert(cat.mergeConditional(t, cond, "id",
-      Seq(Catalog.MatchedClause(Some("s.v < 0"), delete = true),
+      Seq(Catalog.MatchedClause(Some(expr("s.v < 0")), delete = true),
         Catalog.MatchedClause(None, delete = false)),
       Seq(None)) === ((1L, 1L, 1L)))
     want = want - 15L + (14L -> ((2, 140L))) + (3000L -> ((0, 5L))); check()
@@ -1534,7 +1519,7 @@ class CatalogSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "replaceWhere" -> jobsOf(cat.replaceWhere("t", col("p") === 3, batch.filter(col("p") === 3))),
       "compactWhere" -> jobsOf(cat.compactWhere("t", col("p") === 2)),
       "mergeConditional" -> jobsOf(cat.mergeConditional("t", cond, "id",
-        Seq(Catalog.MatchedClause(Some("s.v < 0"), delete = true),
+        Seq(Catalog.MatchedClause(Some(expr("s.v < 0")), delete = true),
           Catalog.MatchedClause(None, delete = false)), Seq(None))),
       "compact" -> jobsOf(cat.compact("t")),
       "read" -> jobsOf(cat.table("t").filter(col("p") === 1).collect()))

@@ -661,7 +661,7 @@ class CatalogSqlSpec extends SparkSpec {
     val cat = freshCat()
     CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT, v STRING)")
     CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1, 'a'), (2, 'b')")
-    val out = java.nio.file.Files.createTempDirectory("graft_copy").toString
+    val out = tempDir("graft_copy").toString
     val exp = CatalogSql.exec(spark, cat, s"COPY t TO '$out/p' FORMAT parquet")
       .collect()(0)
     assert(exp.getString(0) == "copy_to" && exp.getLong(2) == 2L)
@@ -685,7 +685,7 @@ class CatalogSqlSpec extends SparkSpec {
     CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT, v STRING)")
     CatalogSql.exec(spark, cat,
       "CREATE TABLE t_dead (id STRING, v STRING, _reason STRING)")
-    val dir = java.nio.file.Files.createTempDirectory("graft_qcsv").toString
+    val dir = tempDir("graft_qcsv").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/in.csv"), "id,v\n1,a\nnope,b\n3,c\n")
     val st = CatalogSql.exec(spark, cat,
@@ -825,5 +825,112 @@ class CatalogSqlSpec extends SparkSpec {
     assert(CatalogSql.exec(spark, cat,
       s"SELECT * FROM tt TIMESTAMP AS OF '$tomorrow'")
       .collect().head.getInt(0) === 1)
+  }
+
+  test("UPDATE SET: a literal carrying WHERE stays inside its assignment") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT, note STRING)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    val st = CatalogSql.exec(spark, cat, "UPDATE t SET note = 'moved WHERE needed'")
+      .collect().head
+    assert(st.getString(0) === "update" && st.getLong(2) === 2L)
+    assert(CatalogSql.exec(spark, cat, "SELECT DISTINCT note FROM t").collect()
+      .map(_.getString(0)).toSeq === Seq("moved WHERE needed"))
+  }
+
+  test("VERSION AS OF keeps the table's name: qualified columns resolve") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1), (2)") // v1
+    CatalogSql.exec(spark, cat, "DELETE FROM t WHERE id = 2")     // v2
+    assert(CatalogSql.exec(spark, cat, "SELECT t.id FROM t VERSION AS OF 1 ORDER BY t.id")
+      .collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
+  }
+
+  test("VERSION AS OF next to a backslash-escaped quote in a literal") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1), (2)") // v1
+    CatalogSql.exec(spark, cat, "DELETE FROM t WHERE id = 2")     // v2
+    val r = CatalogSql.exec(spark, cat,
+      "SELECT 'it\\'s' AS s, COUNT(*) FROM t VERSION AS OF 1").collect().head
+    assert(r.getString(0) === "it's" && r.getLong(1) === 2L)
+  }
+
+  test("backticked table names; DELETE without WHERE empties the table") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE `t` (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO `t` VALUES (1), (2), (3)")
+    val del = CatalogSql.exec(spark, cat, "DELETE FROM `t` WHERE id = 1").collect().head
+    assert(del.getString(1) === "t" && del.getLong(2) === 1L)
+    assert(CatalogSql.exec(spark, cat, "DELETE FROM t").collect().head.getLong(2) === 2L)
+    assert(cat.table("t").count() === 0L)
+  }
+
+  test("ALTER TABLE ADD COLUMN takes a complex type") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1)")
+    CatalogSql.exec(spark, cat, "ALTER TABLE t ADD COLUMN tags ARRAY<STRING>")
+    assert(cat.schema("t")("tags").dataType === ArrayType(StringType))
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (2, array('a', 'b'))")
+    val rows = CatalogSql.exec(spark, cat, "SELECT id, tags FROM t ORDER BY id")
+      .collect().map(r => (r.getLong(0), Option(r.getSeq[String](1)))).toSeq
+    assert(rows === Seq((1L, None), (2L, Some(Seq("a", "b")))))
+  }
+
+  test("time travel inside a CTE, an IN subquery and a MERGE source") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT, v BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)") // v1
+    CatalogSql.exec(spark, cat, "DELETE FROM t WHERE id >= 2")                     // v2
+    def n(q: String) = CatalogSql.exec(spark, cat, q).collect().head.getLong(0)
+    assert(n("WITH old AS (SELECT id FROM t VERSION AS OF 1) SELECT COUNT(*) FROM old") === 3L)
+    assert(n("""WITH a AS (SELECT id FROM t VERSION AS OF 1),
+               |b AS (SELECT id FROM a WHERE id IN (SELECT id FROM t VERSION AS OF 1 WHERE v > 15))
+               |SELECT COUNT(*) FROM b""".stripMargin) === 2L)
+    assert(n("SELECT COUNT(*) FROM t WHERE id NOT IN (SELECT id FROM t VERSION AS OF 1)") === 0L)
+    CatalogSql.exec(spark, cat,
+      """MERGE INTO t USING (SELECT id, v FROM t VERSION AS OF 1 WHERE id = 3) s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(CatalogSql.exec(spark, cat, "SELECT id, v FROM t ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 10L), (3L, 30L)))
+  }
+
+  test("MERGE takes a table as its source, bare or aliased") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT, v BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1, 1), (2, 2)")
+    CatalogSql.exec(spark, cat, "CREATE TABLE u (id BIGINT, v BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO u VALUES (2, 20), (3, 30)")
+    CatalogSql.exec(spark, cat,
+      """MERGE INTO t USING u ON t.id = u.id
+        |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    def rows() = CatalogSql.exec(spark, cat, "SELECT id, v FROM t ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows() === Seq((1L, 1L), (2L, 20L), (3L, 30L)))
+    CatalogSql.exec(spark, cat,
+      """MERGE INTO t AS x USING u AS s ON x.id = s.id
+        |WHEN MATCHED AND s.v >= 30 THEN DELETE""".stripMargin)
+    assert(rows() === Seq((1L, 1L), (2L, 20L)))
+  }
+
+  test("forms graft does not implement stay unsupported statements") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1)")
+    Seq(
+      "INSERT OVERWRITE t SELECT CAST(2 AS BIGINT)",
+      "INSERT INTO t (id) SELECT CAST(2 AS BIGINT)",
+      "CREATE TABLE p (id INT) USING parquet",
+      "CREATE TABLE IF NOT EXISTS t (id BIGINT)",
+      """MERGE INTO t USING (SELECT CAST(1 AS BIGINT) AS id) s ON t.id = s.id
+        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin,
+      "GRANT SELECT ON t TO someone").foreach { q =>
+      val e = intercept[IllegalArgumentException](CatalogSql.exec(spark, cat, q))
+      assert(e.getMessage.contains("unsupported statement"), q)
+    }
+    assert(cat.tables() === Seq("t") && cat.table("t").count() === 1L)
   }
 }

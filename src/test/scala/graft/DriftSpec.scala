@@ -21,7 +21,7 @@ class DriftSpec extends SparkSpec {
     * under `nanosAsLong`, so it exercises the Long branch of the loader.
     */
   private lazy val nanosDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_nanos_")
+    val dir = tempDir("graft_drift_nanos_")
     val ev = Tables.events(spark, sf0001)
     ev.select(
       col("event_id"), col("ts_ns").as("ts"), col("user_id"),
@@ -76,7 +76,7 @@ class DriftSpec extends SparkSpec {
   }
 
   test("an unsupported ts encoding fails loud, not silently wrong") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift_bad_")
+    val dir = tempDir("graft_drift_bad_")
     Tables.events(spark, sf0001)
       .select(col("event_id"), col("ts").cast(StringType).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -72,7 +72,7 @@ class DslSpec extends SparkSpec {
 
   test("nest= materializes the result as a catalog table") {
     val cat = new graft.sources.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_nest_").toString)
+      tempDir("graft_nest_").toString)
     val got = select(lineitem("l_returnflag"), h_sum(lineitem("l_quantity")))(
       nest = Some((cat, "flag_totals")))
     assert(cat.tables().contains("flag_totals"))

@@ -224,7 +224,7 @@ class EventsSpec extends SparkSpec {
         hll_union_agg(col("sk"), allowDifferentLgConfigK = false)).as("e"))
       .collect()(0).getLong(0)
     val live = unionEstimate(byDay)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_").toString
+    val dir = tempDir("graft_hll_").toString
     byDay.write.mode("overwrite").parquet(dir)
     val persisted = unionEstimate(spark.read.parquet(dir))
     assert(persisted === live)

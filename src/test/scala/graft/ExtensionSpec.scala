@@ -47,6 +47,18 @@ class ExtensionSpec extends SparkSpec {
     assert(e.getMessage.contains("cosine_similarity"))
   }
 
+  test("a session built without spark.sql.extensions gets graft's SQL functions, arity-checked") {
+    val s = spark.newSession() // fresh registry, no spark.sql.extensions
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      graft.sources.GraftSql.sql(s, sf0001, "SELECT token_hash60()").collect()
+    }
+    assert(e.getMessage.contains("token_hash60"))
+    val r = graft.sources.GraftSql.sql(s, sf0001,
+      "SELECT redact_pii('mail a@b.co') AS p, " +
+        "cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c").collect().head
+    assert(r.getString(0) === "mail <EMAIL>" && math.abs(r.getDouble(1) - 1.0) < 1e-12)
+  }
+
   test("GraftExtensions injects the small-sort planner strategy") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions()(ext)
@@ -55,7 +67,7 @@ class ExtensionSpec extends SparkSpec {
   }
 
   test("native cosine registers as a SQL function") {
-    CosineSimilarity.register(spark)
+    GraftExtensions.install(spark)
     Tables.embeddings(spark, sf0001).limit(5).createOrReplaceTempView("emb_t")
     val r = spark.sql(
       "SELECT cosine_similarity(embedding, embedding) c FROM emb_t").collect()
@@ -390,7 +402,7 @@ class ExtensionSpec extends SparkSpec {
 
   test("catalog createFromSpecs persists indexed columns; insert applies bloom") {
     val cat = new graft.sources.Catalog(spark,
-      java.nio.file.Files.createTempDirectory("graft_spec_").toString)
+      tempDir("graft_spec_").toString)
     cat.createFromSpecs("imps",
       Seq("index string token", "uint32 ad_id", "index string date"),
       partitionBy = Some("date"))

@@ -163,7 +163,7 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("token_hash60 / rolling_token_hash registered on the SQL surface") {
-    graft.plans.TokenHash60.register(spark)
+    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT token_hash60('abc') = conv(substring(md5('abc'), 1, 15), 16, 10) AS a, " +
       "rolling_token_hash('a b') AS rb").collect().head

@@ -10,11 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class ModelStoreSpec extends SparkSpec {
 
-  private def tmpDir(tag: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft_ms_$tag")
-    p.toFile.deleteOnExit()
-    p.toString
-  }
+  private def tmpDir(tag: String): String = tempDir(s"graft_ms_$tag").toString
 
   private def emb = Tables.embeddings(spark, sf0001)
 

@@ -202,7 +202,7 @@ class PlanSpec extends SparkSpec {
   test("bucketed tables co-locate: the fact-fact join plans zero exchanges") {
     val s = spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    val wh = java.nio.file.Files.createTempDirectory("graft_bkt_test_").toString
+    val wh = tempDir("graft_bkt_test_").toString
     graft.sources.Bucketing.writeBucketed(
       Tables.orders(s, sf0001), "bkt_o_spec", s"$wh/o", 8, "o_custkey")
     graft.sources.Bucketing.writeBucketed(

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class RobustnessSpec extends SparkSpec {
 
   test("a throwing loader does not poison the SQL-surface registration memo") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_poison_")
+    val dir = tempDir("graft_poison_")
     // stage a dir that registers TPC-H + events fine but fails on documents
     (Tables.tpch :+ "events").foreach { n =>
       java.nio.file.Files.copy(
@@ -34,7 +34,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("stagePublish: memoizes per identity, rebuilds on identity mismatch") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_stagepub_")
+    val stage = tempDir("graft_stagepub_")
       .resolve("stage")
     var builds = 0
     def publish(ident: String, payload: String): String =
@@ -59,7 +59,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("stagePublish: concurrent same-JVM publishers build once, both read it") {
-    val stage = java.nio.file.Files.createTempDirectory("graft_stagepub2_")
+    val stage = tempDir("graft_stagepub2_")
       .resolve("stage")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -84,7 +84,7 @@ class RobustnessSpec extends SparkSpec {
   }
 
   test("writeBatch: a retried Append-mode micro-batch does not double-write") {
-    val out = java.nio.file.Files.createTempDirectory("graft_retry_").resolve("out").toString
+    val out = tempDir("graft_retry_").resolve("out").toString
     val b0 = spark.range(0, 100).toDF("id")
     val b1 = spark.range(100, 150).toDF("id")
     streaming.StreamingOps.writeBatch(b0.toDF(), out, complete = false, 0L)

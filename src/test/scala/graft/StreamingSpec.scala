@@ -83,7 +83,7 @@ class StreamingSpec extends SparkSpec {
     session.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import session.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_restart_")
+    val work = tempDir("graft_restart_")
     val feed = java.nio.file.Files.createDirectory(work.resolve("feed"))
     val ckpt = work.resolve("ckpt").toString
     val out = work.resolve("out").toString

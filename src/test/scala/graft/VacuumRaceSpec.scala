@@ -27,7 +27,7 @@ class VacuumRaceSpec extends SparkSpec {
     }
 
   test("vacuum never reclaims a forked live writer's staged-but-uncommitted files; aged sweep does") {
-    val wh = Files.createTempDirectory("graft_vrace_").toString
+    val wh = tempDir("graft_vrace_").toString
     val cat = new Catalog(spark, wh)
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("src", StringType)))
@@ -54,7 +54,7 @@ class VacuumRaceSpec extends SparkSpec {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val log = Files.createTempFile("graft_vrace_child_", ".log").toFile
+    val log = tempDir("graft_vrace_child_").resolve("child.log").toFile
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx2g", "-Dspark.ui.enabled=false",
       "-cp", sys.props("java.class.path"),
