@@ -1,6 +1,9 @@
 package graft.dsl
 
+import graft.sources.{Catalog, CatalogSql, GraftSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.types.{ArrayType, BinaryType, MapType, StructType}
 
 /** Result dump / CLI (SURVEY.md §2.1 S7): the reference's pretty-printed
   * result table and one-shot SQL runner.
@@ -43,16 +46,20 @@ object Dump {
     * trailing `;` always completes); a line that parses as incomplete
     * (unclosed paren, trailing operator, ...) opens a buffer that
     * accumulates until a `;`-terminated or otherwise-complete line.
-    * Meta commands, recognized between statements only: `\d` (list
-    * tables), `\d <table>` (schema), `\timing` (toggle per-statement
-    * wall-clock), `\q` (quit). I/O is injected so specs can drive it;
-    * [[main]] wires stdin/stdout.
+    * Meta commands, recognized between statements only, are listed by
+    * `\help`. With a `warehouse` bound, every statement runs through
+    * [[graft.sources.CatalogSql.exec]] and every meta command's table
+    * name resolves through [[graft.sources.CatalogSql.table]], so the
+    * catalog's tables and views (time travel included) read as they do
+    * there, beside the fixture views; without one, statements are plain
+    * Spark SQL over the fixture views. I/O is injected so specs can drive
+    * it; [[main]] wires stdin/stdout.
     */
   def repl(
       spark: SparkSession, sfDir: String,
       lines: Iterator[String], out: String => Unit, limit: Int = 20,
       warehouse: Option[String] = None): Unit = {
-    graft.sources.GraftSql.registerFixtures(spark, sfDir)
+    GraftSql.registerFixtures(spark, sfDir)
     // command-first, one per line — the shape a line-completion hook
     // (rlwrap, jline) consumes directly
     val helpText = Seq(
@@ -68,51 +75,19 @@ object Dump {
       "\\q                     quit",
     ).mkString("\n")
     out(s"graft on $sfDir — \\help lists commands, \\q quits")
-    lazy val cat: Option[graft.sources.Catalog] =
-      warehouse.map(new graft.sources.Catalog(spark, _))
-    def withCat(f: graft.sources.Catalog => Unit): Unit = cat match {
-      case Some(c) =>
-        try f(c) catch { case e: Exception => out(s"error: ${e.getMessage}") }
-      case None =>
-        out("error: no warehouse bound — set SPARK_GRAFT_WAREHOUSE or pass one")
-    }
+    lazy val cat: Option[Catalog] = warehouse.map(new Catalog(spark, _))
+    def withCat(f: Catalog => Unit): Unit =
+      cat.fold(out("error: no warehouse bound — set SPARK_GRAFT_WAREHOUSE or pass one"))(f)
+    // with a warehouse bound, statements and table names go through the
+    // catalog's SQL surface; without one, through plain Spark SQL
+    def table(t: String): DataFrame = cat.fold(spark.table(t))(CatalogSql.table(spark, _, t))
     var done = false
     var timing = false
     val buf = new StringBuilder
-    // catalog-table view names WE registered: the set that must be swept
-    // when a table disappears (DROP TABLE here, or dropped externally) —
-    // a stale view would keep resolving over deleted files, and a catalog
-    // table that shadowed a same-named fixture view (e.g. 'events') would
-    // keep shadowing it forever
-    var catViews = Set.empty[String]
-    def syncCatalogViews(c: graft.sources.Catalog): Unit = {
-      val cur = c.tables().toSet ++ c.views().toSet
-      val stale = catViews.diff(cur)
-      stale.foreach(spark.catalog.dropTempView(_))
-      if (stale.exists(graft.sources.GraftSql.fixtureNames.contains))
-        graft.sources.GraftSql.refreshFixtures(spark, sfDir)
-      // tables + catalog VIEWS (fixpoint-resolved SQL text) in one pass
-      graft.sources.CatalogSql.registerAll(spark, c)
-      catViews = cur
-    }
     def exec(sql: String): Unit = {
       val t0 = System.nanoTime()
       try {
-        // DDL/DML commands route to the bound warehouse via CatalogSql
-        // (CREATE/INSERT/MERGE/DELETE/ALTER/DROP as text); everything
-        // else stays plain Spark SQL over the registered views, with the
-        // catalog's tables also visible when a warehouse is bound
-        val df = cat match {
-          case Some(c) if graft.sources.CatalogSql.isCommand(sql) =>
-            val r = graft.sources.CatalogSql.exec(spark, c, sql)
-            syncCatalogViews(c) // commands can create or drop tables
-            r
-          case Some(c) =>
-            syncCatalogViews(c)
-            spark.sql(sql)
-          case None => spark.sql(sql)
-        }
-        val rendered = dump(df, limit)
+        val rendered = dump(cat.fold(spark.sql(sql))(CatalogSql.exec(spark, _, sql)), limit)
         val dt = (System.nanoTime() - t0) / 1e9
         out(if (timing) rendered + f"\nTime: $dt%.3f s" else rendered)
       } catch { case e: Exception => out(s"error: ${e.getMessage}") }
@@ -125,79 +100,66 @@ object Dump {
         buf.append('\n').append(line)
         val stmt = buf.toString
         if (terminated || !incompleteSql(spark, stmt)) { buf.clear(); exec(stmt) }
-      } else if (line.nonEmpty) {
-        if (line == "\\q") done = true
-        else if (line == "\\timing") {
+      } else if (line.nonEmpty) try line.split("\\s+", 2) match {
+        case Array("\\q") => done = true
+        case Array("\\timing") =>
           timing = !timing
           out(s"Timing is ${if (timing) "on" else "off"}.")
-        } else if (line == "\\d")
-          out(spark.catalog.listTables().collect().map(_.name).sorted.mkString("\n"))
-        else if (line.startsWith("\\d "))
-          try out(spark.table(line.drop(3).trim).schema.treeString.stripLineEnd)
-          catch { case e: Exception => out(s"error: ${e.getMessage}") }
-        else if (line.startsWith("\\schema ")) {
+        case Array("\\d") =>
+          out((spark.catalog.listTables().collect().map(_.name) ++
+            cat.toSeq.flatMap(c => c.tables() ++ c.views())).distinct.sorted.mkString("\n"))
+        case Array("\\d", t) => out(table(t).schema.treeString.stripLineEnd)
+        case Array("\\schema", t) =>
           // DDL-style column list (name TYPE [NOT NULL]) — the catalog's
           // declared-schema view, vs \d's nested treeString
-          val t = line.drop(8).trim
-          try out(spark.table(t).schema.fields.map(f =>
+          out(table(t).schema.fields.map(f =>
             s"  ${f.name} ${f.dataType.sql}${if (f.nullable) "" else " NOT NULL"}")
             .mkString(s"$t (\n", ",\n", "\n)"))
-          catch { case e: Exception => out(s"error: ${e.getMessage}") }
-        }
-        else if (line.startsWith("\\profile ")) {
+        case Array("\\profile", t) =>
           // ANALYZE-style per-column stats (null/distinct/min/max), one
           // aggregate pass — see operators.DataQuality.profile
-          val t = line.drop(9).trim
-          try {
-            val df = spark.table(t)
-            // atomic columns only — nested/binary have no portable order
-            val cols = df.schema.fields.collect {
-              case f if !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
-                !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] &&
-                !f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] &&
-                f.dataType != org.apache.spark.sql.types.BinaryType => f.name
-            }.toSeq
-            out(dump(graft.operators.DataQuality.profile(df, cols), cols.size))
-          } catch { case e: Exception => out(s"error: ${e.getMessage}") }
-        }
-        else if (line.startsWith("\\history ")) withCat { c =>
+          val df = table(t)
+          // atomic columns only — nested/binary have no portable order
+          val cols = df.schema.fields.toSeq.collect { case f if (f.dataType match {
+            case _: ArrayType | _: MapType | _: StructType | BinaryType => false
+            case _ => true
+          }) => f.name }
+          out(dump(graft.operators.DataQuality.profile(df, cols), cols.size))
+        case Array("\\history", t) => withCat { c =>
           // DESCRIBE HISTORY over the manifest log of the bound warehouse
-          val t = line.drop(9).trim
           out(c.history(t).map { case (v, op, nf) =>
             f"  v$v%-4d $op%-24s $nf%4d files" }
             .mkString(s"$t history (HEAD v${c.currentVersion(t)})\n", "\n", ""))
         }
-        else if (line.startsWith("\\restore ")) withCat { c =>
-          line.drop(9).trim.split("\\s+") match {
+        case Array("\\restore", arg) => withCat { c =>
+          arg.split("\\s+") match {
             case Array(t, v) if v.forall(_.isDigit) =>
               val nv = c.restoreVersion(t, v.toInt)
               out(s"$t restored to v$v as new version v$nv")
             case _ => out("usage: \\restore <table> <version>")
           }
         }
-        else if (line == "\\help") out(helpText)
-        else if (line.startsWith("\\explain "))
+        case Array("\\help") => out(helpText)
+        case Array("\\explain", arg) =>
           // default FormattedMode is the proof surface for the engine's
           // two inherited optimizations: a pruned parquet scan prints its
           // `PushedFilters:` and `PartitionFilters:` lines there; the
           // other EXPLAIN modes (extended/codegen/cost — same set as the
           // SQL `EXPLAIN <MODE>` statement) select via a leading word
-          try {
-            cat.foreach(syncCatalogViews) // catalog tables explainable too
-            val arg = line.drop(9).trim.stripSuffix(";")
-            val modes = Set("formatted", "extended", "codegen", "cost")
-            val (mode, sql) = arg.split("\\s+", 2) match {
-              case Array(m, rest) if modes(m.toLowerCase) => (m.toLowerCase, rest)
-              case _ => ("formatted", arg)
-            }
-            out(spark.sql(sql).queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(mode))
-              .stripLineEnd)
-          } catch { case e: Exception => out(s"error: ${e.getMessage}") }
-        else if (!terminated && incompleteSql(spark, line))
+          val modes = Set("formatted", "extended", "codegen", "cost")
+          val (mode, sql) = arg.split("\\s+", 2) match {
+            case Array(m, rest) if modes(m.toLowerCase) => (m.toLowerCase, rest)
+            case _ => ("formatted", arg)
+          }
+          // with a warehouse, the router's EXPLAIN: it binds the catalog's
+          // names and refuses to run a command
+          out(cat.fold(spark.sql(sql).queryExecution.explainString(ExplainMode.fromString(mode)))(
+            CatalogSql.exec(spark, _, s"EXPLAIN ${mode.toUpperCase} $sql").head().getString(0))
+            .stripLineEnd)
+        case _ if !terminated && incompleteSql(spark, line) =>
           buf.append(line) // open a multi-line statement
-        else exec(line)
-      }
+        case _ => exec(line)
+      } catch { case e: Exception => out(s"error: ${e.getMessage}") }
     }
     if (!done && buf.nonEmpty) exec(buf.toString) // EOF flushes a pending statement
   }
@@ -215,7 +177,7 @@ object Dump {
     val spark = graft.GraftSession.local()
     try {
       if (args.nonEmpty)
-        println(dump(graft.sources.GraftSql.sql(spark, sfDir, args(0)), n))
+        println(dump(GraftSql.sql(spark, sfDir, args(0)), n))
       else
         repl(spark, sfDir,
           Iterator.continually(scala.io.StdIn.readLine("graft> "))

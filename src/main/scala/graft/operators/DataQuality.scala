@@ -43,7 +43,7 @@ object DataQuality {
     val keyed = cols.map { c =>
       df.schema(c).dataType match {
         case DoubleType | FloatType =>
-          expr(s"CAST(FLOOR(`$c`*1000000.0 + 0.5) AS BIGINT)")
+          floor(col(c) * lit(1000000.0) + lit(0.5)).cast("bigint")
         case _ => col(c)
       }
     }

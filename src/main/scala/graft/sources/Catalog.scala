@@ -48,10 +48,18 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
+  /** A column name every read and write can address by name: `.` would
+    * read as a struct path and a backtick would end a quoted identifier.
+    */
+  private def requireColumnName(colName: String): Unit =
+    require(!colName.exists(c => c == '.' || c == '`'),
+      s"column name '$colName' may not contain '.' or '`'")
+
   /** Declare a table: fixed schema + optional partition column. */
   def create(name: String, schema: StructType, partitionBy: Option[String] = None): Unit = {
     require(!exists(name), s"table $name already exists")
     require(!viewExists(name), s"$name is a view; views and tables share a namespace")
+    schema.fieldNames.foreach(requireColumnName)
     partitionBy.foreach(p =>
       require(schema.fieldNames.contains(p), s"partition column $p not in schema"))
     Files.createDirectories(metaDir(name))
@@ -117,6 +125,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
       dataType: DataType, defaultSql: String): Unit = {
     val s = schema(name)
     require(!s.fieldNames.contains(colName), s"column $colName already exists")
+    requireColumnName(colName)
     // a logical name may be reused; its PHYSICAL storage name must never
     // collide with bytes already in files (current columns or retired ones)
     val used = (s.fields.map(physicalName) ++ retired(name)).toSet
@@ -162,6 +171,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     val s = schema(name)
     require(s.fieldNames.contains(from), s"column $from does not exist")
     require(!s.fieldNames.contains(to), s"column $to already exists")
+    requireColumnName(to)
     require(!partitionColumn(name).contains(from),
       s"cannot rename partition column $from")
     val ns = StructType(s.fields.map { f =>
@@ -273,11 +283,13 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
   private val functionDefs = new SqlDefs("fnsql", "function")
   private val mviewDefs = new SqlDefs("msql", "materialized view")
 
-  /** Persist a named view: the SQL TEXT is the stored artifact (resolved
-    * against the catalog at every read, like any SQL-engine view — a view
-    * over a table sees the table's CURRENT version, and column
-    * adds/renames flow through on the next read). Views live beside
-    * tables in the warehouse under `_views/`, one file per view.
+  /** Persist a named view: the SQL TEXT is the stored artifact, parsed
+    * and bound against the catalog wherever a statement names the view
+    * ([[CatalogSql]]), like any SQL-engine view — a view over a table sees
+    * the table's CURRENT version (or the snapshot its own `VERSION AS OF`
+    * names), and column adds/renames flow through on the next read.
+    * Views live beside tables in the warehouse under `_views/`, one file
+    * per view.
     */
   def createView(name: String, sql: String, orReplace: Boolean = false): Unit = {
     require(!exists(name), s"$name is a table; views and tables share a namespace")
@@ -300,9 +312,11 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
     * <name>` — parameter list, RETURNS clause, RETURN body). Spark's
     * native SQL UDFs analyze and INLINE the body into the calling plan
     * (scalar and TABLE functions both), so persisted functions stay
-    * whole-stage-codegen-friendly — no interpreted UDF boundary. Like
-    * views, the stored artifact is TEXT re-registered against the session
-    * per statement.
+    * whole-stage-codegen-friendly — no interpreted UDF boundary. The
+    * stored artifact is TEXT, registered as a session temp function before
+    * each [[CatalogSql]] statement is analyzed; since the session does not
+    * see the catalog's names, CREATE FUNCTION rejects a body that reads a
+    * catalog table or view (a view is the form for that).
     */
   def defineFunction(name: String, defText: String, orReplace: Boolean = false): Unit = {
     require(orReplace || !functionExists(name), s"function $name already exists")
@@ -1072,8 +1086,7 @@ final class Catalog(spark: SparkSession, val warehouse: String) {
         "strings plus a _reason string column")
     val raw = raw0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def tryCast(f: org.apache.spark.sql.types.StructField) =
-      expr(s"try_cast(`${f.name}` AS ${f.dataType.sql})")
+    def tryCast(f: org.apache.spark.sql.types.StructField) = col(f.name).try_cast(f.dataType)
     def cellBad(f: org.apache.spark.sql.types.StructField) =
       col(f.name).isNotNull && tryCast(f).isNull
     val rowBad = target.fields.map(cellBad).reduce(_ || _)

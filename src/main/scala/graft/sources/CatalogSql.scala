@@ -1,9 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, FieldName, RelationTimeTravel, UnresolvedAttribute, UnresolvedFunctionName, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, FieldName, RelationTimeTravel, UnresolvedAlias, UnresolvedAttribute, UnresolvedFunctionName, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.catalog.LanguageSQL
-import org.apache.spark.sql.catalyst.expressions.{CheckConstraint, ConstraintCharacteristic, EqualTo, Literal, TableConstraint}
+import org.apache.spark.sql.catalyst.expressions.{CheckConstraint, ConstraintCharacteristic, EqualTo, Literal, SubqueryExpression, TableConstraint}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
@@ -30,10 +30,12 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StringType, Struct
   * unsupported statement. Graft owns only the verbs Spark's grammar lacks
   * or reads as something else: CLONE, ERASE, VACUUM, OPTIMIZE, DESCRIBE
   * HISTORY, bare ANALYZE TABLE, SHOW STATS, REFRESH / DROP MATERIALIZED
-  * VIEW and COPY INTO / TO. Queries run as Spark's parsed plans with every
-  * catalog table and view registered as a temp view, and `VERSION AS OF` /
-  * `TIMESTAMP AS OF` on a catalog table bound to that snapshot in the plan
-  * itself — one grammar, and no statement text is rewritten.
+  * VIEW and COPY INTO / TO. Queries run as Spark's parsed plans in which
+  * each catalog table and view name — `VERSION AS OF` / `TIMESTAMP AS OF`
+  * on a table included — is bound to the catalog's plan for it before
+  * analysis: one grammar, no statement text rewritten, and a statement
+  * reads only the tables it names. Other names (the fixture views) are
+  * Spark's to resolve.
   *
   * MERGE takes an equi-key ON clause with either the ANSI upsert-all form
   * (`WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` →
@@ -63,51 +65,21 @@ object CatalogSql {
   private val CopyTo = """(?is)^COPY\s+(\w+)\s+TO\s+'([^']+)'(?:\s+FORMAT\s+(\w+))?\s*$""".r
 
   /** True when the statement is one of the catalog COMMANDS this router
-    * owns — callers with their own SQL path (e.g. the REPL) route commands
-    * here and leave everything else to plain Spark SQL.
+    * owns, as opposed to a query.
     */
   def isCommand(statement: String): Boolean =
     scala.util.Try(route(SparkSession.active, clean(statement))).toOption.exists(_.isRight)
 
-  /** Register every catalog table AND view as a temp view (reads go
-    * through [[Catalog.table]], so time-travel/COW resolution applies as
-    * usual). Views are SQL text resolved HERE, against the current
-    * catalog state; a view may reference other views, so registration
-    * iterates to a fixpoint. A view whose reference no longer resolves
-    * (e.g. its base table was dropped) is left unregistered — it errors
-    * only when actually referenced, like an invalidated view in any SQL
-    * engine, instead of poisoning every other statement.
+  /** Register the catalog's persisted SQL functions as session temp
+    * functions, before a statement is analyzed. Native SQL UDF
+    * registration analyzes AND inlines the body at call sites, so
+    * persisted functions stay inside whole-stage codegen.
     */
-  private[graft] def registerAll(spark: SparkSession, cat: Catalog): Unit = {
-    // functions first: views (and any statement) may call them. Native SQL
-    // UDF registration analyzes AND inlines the body at call sites, so
-    // persisted functions stay inside whole-stage codegen.
+  private def registerFunctions(spark: SparkSession, cat: Catalog): Unit =
     cat.functions().foreach { f =>
       try spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $f ${cat.functionSql(f)}")
       catch { case _: Exception => () } // invalid defs error when referenced
     }
-    cat.tables().foreach(n => cat.table(n).createOrReplaceTempView(n))
-    // drop every catalog view's temp view FIRST: a temp view snapshots its
-    // analyzed plan, so a view-on-view registered this round must not bind
-    // to a stale registration from an earlier statement (it would keep
-    // reading the base table's pre-DML state — or deleted files). The
-    // fixpoint below then re-resolves dependencies bottom-up against
-    // exclusively CURRENT state.
-    var pending = cat.views().toList
-    pending.foreach(v => spark.catalog.dropTempView(v))
-    var progress = true
-    while (pending.nonEmpty && progress) {
-      val next = pending.filter { v =>
-        try {
-          spark.sql(cat.viewSql(v)).createOrReplaceTempView(v); false
-        } catch { case _: org.apache.spark.sql.AnalysisException => true }
-      }
-      progress = next.size < pending.size
-      pending = next
-    }
-    // anything still pending is an invalidated view (e.g. base table
-    // dropped): left unregistered, it errors only when referenced
-  }
 
   /** Parse a time-travel timestamp literal: ISO-8601 instant
     * (`2026-08-15T00:00:00Z`) or the SQL `yyyy-MM-dd HH:mm:ss[.fff]`
@@ -129,42 +101,86 @@ object CatalogSql {
           "(midnight UTC)"))
   }
 
-  /** Each `t VERSION AS OF v` / `t TIMESTAMP AS OF ts` on a catalog table
-    * anywhere in `plan` — subqueries and CTE bodies included — bound to
-    * that manifest snapshot ([[Catalog.tableAt]] / [[Catalog.tableAsOf]])
-    * under the table's own name, the query-side companion of DESCRIBE
-    * HISTORY / RESTORE. Other names are left for Spark to resolve (and
-    * reject).
+  /** `plan` with each one-part relation name it reads — subqueries and
+    * CTE bodies included — that no enclosing WITH defines replaced by the
+    * plan `f(name, travel)` returns, if any; `travel` is the `VERSION AS
+    * OF` / `TIMESTAMP AS OF` node around the name.
     */
-  private def travel(cat: Catalog, plan: LogicalPlan): LogicalPlan =
-    plan.transformUpWithSubqueries {
-      // CTE bodies are not children of the WITH node: bind them too
-      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
-        case (n, body, depth) => (n, travel(cat, body).asInstanceOf[SubqueryAlias], depth)
-      })
-      case tt: RelationTimeTravel => tt.relation match {
-        case u: UnresolvedRelation if u.multipartIdentifier.size == 1 &&
-            cat.exists(u.multipartIdentifier.head) =>
-          val t = u.multipartIdentifier.head
-          val snapshot = tt.version match {
-            case Some(v) => cat.tableAt(t, v.toInt)
-            case None => cat.tableAsOf(t, parseTravelTs(tt.timestamp.get match {
-              case l: Literal if l.dataType.isInstanceOf[StringType] => l.value.toString
-              case e => e.sql
-            }))
-          }
-          SubqueryAlias(t, snapshot.queryExecution.analyzed)
-        case _ => tt
+  private def mapNames(plan: LogicalPlan, ctes: Set[String] = Set.empty)(
+      f: (String, Option[RelationTimeTravel]) => Option[LogicalPlan]): LogicalPlan = {
+    def named(p: LogicalPlan, travel: Option[RelationTimeTravel]): Option[LogicalPlan] = p match {
+      case UnresolvedRelation(Seq(n), _, _) if !ctes.exists(_.equalsIgnoreCase(n)) => f(n, travel)
+      case _ => None
+    }
+    plan match {
+      // CTE bodies are not children of the WITH node: a body sees the CTEs
+      // before it (and itself when recursive), the child sees them all
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(_._1)
+        w.copy(child = mapNames(w.child, ctes ++ names)(f),
+          cteRelations = w.cteRelations.zipWithIndex.map { case ((n, body, depth), i) =>
+            val seen = names.take(if (w.allowRecursion) i + 1 else i)
+            (n, mapNames(body, ctes ++ seen)(f).asInstanceOf[SubqueryAlias], depth)
+          })
+      case tt: RelationTimeTravel => named(tt.relation, Some(tt)).getOrElse(tt)
+      case u: UnresolvedRelation => named(u, None).getOrElse(u)
+      case p => p.mapChildren(mapNames(_, ctes)(f)).transformExpressions {
+        case s: SubqueryExpression => s.withNewPlan(mapNames(s.plan, ctes)(f))
       }
     }
-
-  /** Run a parsed query with the whole catalog (tables + views) visible
-    * and its time travel bound.
-    */
-  private def query(spark: SparkSession, cat: Catalog, plan: LogicalPlan): DataFrame = {
-    registerAll(spark, cat)
-    Bridge.ofRows(spark, travel(cat, plan))
   }
+
+  /** The catalog table or view `name` names, in its stored spelling (SQL
+    * names are case-insensitive).
+    */
+  private def catalogName(cat: Catalog, name: String): Option[String] =
+    (Iterator(name) ++ (cat.tables() ++ cat.views()).iterator.filter(_.equalsIgnoreCase(name)))
+      .find(n => cat.exists(n) || cat.viewExists(n))
+
+  /** Bind each catalog name in `plan` under its own name, as Spark would
+    * resolve a temp view: a table to its head snapshot's plan, or with
+    * `VERSION AS OF` / `TIMESTAMP AS OF` to that snapshot
+    * ([[Catalog.tableAt]] / [[Catalog.tableAsOf]]); a view to its stored
+    * text, parsed, bound the same way and analyzed on its own. `path` is
+    * the chain of views being bound (or defined): a name on it again is a
+    * cycle. Every other name is left for Spark to resolve (and reject).
+    */
+  private def bind(spark: SparkSession, cat: Catalog, plan: LogicalPlan,
+      path: List[String]): LogicalPlan = mapNames(plan) { (name, travel) =>
+    if (path.exists(_.equalsIgnoreCase(name))) throw new IllegalArgumentException(
+      s"view cycle: ${(path :+ name).mkString(" -> ")}")
+    // a view has no versions: its time travel is left for Spark to reject
+    catalogName(cat, name).filter(t => travel.isEmpty || cat.exists(t)).map { t =>
+      val df = travel match {
+        case None if cat.exists(t) => cat.table(t)
+        case None => Bridge.ofRows(spark,
+          bind(spark, cat, spark.sessionState.sqlParser.parsePlan(cat.viewSql(t)), path :+ t))
+        case Some(tt) => tt.version match {
+          case Some(v) => cat.tableAt(t, v.toInt)
+          case None => cat.tableAsOf(t, parseTravelTs(tt.timestamp.get match {
+            case l: Literal if l.dataType.isInstanceOf[StringType] => l.value.toString
+            case e => e.sql
+          }))
+        }
+      }
+      SubqueryAlias(t, df.queryExecution.analyzed)
+    }
+  }
+
+  /** Run a parsed query with the catalog's functions registered and its
+    * names bound; `path` as in [[bind]].
+    */
+  private def query(spark: SparkSession, cat: Catalog, plan: LogicalPlan,
+      path: List[String] = Nil): DataFrame = {
+    registerFunctions(spark, cat)
+    Bridge.ofRows(spark, bind(spark, cat, plan, path))
+  }
+
+  /** The relation `name` as a statement's FROM binds it: a catalog table
+    * or view, else whatever the session resolves (a fixture view).
+    */
+  def table(spark: SparkSession, cat: Catalog, name: String): DataFrame =
+    query(spark, cat, UnresolvedRelation(spark.sessionState.sqlParser.parseMultipartIdentifier(name)))
 
   /** A plan that only reads: no command, statement or directory write. */
   private def isQuery(plan: LogicalPlan): Boolean = !plan.exists(n =>
@@ -287,7 +303,6 @@ object CatalogSql {
       case DropMView(v) => did("drop_materialized_view", v) { cat =>
         cat.dropMaterializedViewDef(v)
         cat.drop(v)
-        spark.catalog.dropTempView(v)
       }
       case CopyInto(t, path, fmt, quarantine) => done("copy_into", t) { cat =>
         val fmtName = Option(fmt).map(_.toLowerCase).getOrElse("parquet")
@@ -383,7 +398,8 @@ object CatalogSql {
               v.properties.isEmpty && !v.allowExisting)
             val n = name(v.child)
             did("create_view", n) { cat =>
-              query(spark, cat, v.query) // analyze now: reject an invalid definition loudly
+              // analyze now: reject an invalid or cyclic definition loudly
+              query(spark, cat, v.query, path = List(n))
               cat.createView(n, v.originalText.get, orReplace = v.replace)
             }
           case i: InsertIntoStatement =>
@@ -497,15 +513,11 @@ object CatalogSql {
               require(!cat.materializedViewExists(t),
                 s"$t is a materialized view — use DROP MATERIALIZED VIEW $t")
               cat.drop(t)
-              // the temp view a query registered for this table would
-              // otherwise keep resolving (over deleted files) for the rest
-              // of the session
-              spark.catalog.dropTempView(t)
             }
           case d: DropView =>
             need(!d.ifExists)
             val v = name(d.child)
-            did("drop_view", v) { cat => cat.dropView(v); spark.catalog.dropTempView(v) }
+            did("drop_view", v)(_.dropView(v))
           case s: ShowTables =>
             need(s.namespace == CurrentNamespace && s.pattern.isEmpty)
             run { cat =>
@@ -551,6 +563,17 @@ object CatalogSql {
             val defText = s"(${f.inputParamText.getOrElse("")})$returns RETURN $body"
             did("create_function", fn) { cat =>
               require(f.replace || !cat.functionExists(fn), s"function $fn already exists")
+              // a function is registered per session, where catalog names are
+              // not bound: a body that reads one is a view's job
+              val parser = spark.sessionState.sqlParser
+              val plan = f.queryText.map(parser.parsePlan).getOrElse(
+                Project(Seq(UnresolvedAlias(parser.parseExpression(body))), OneRowRelation()))
+              mapNames(plan) { (t, _) =>
+                catalogName(cat, t).foreach(c => throw new IllegalArgumentException(
+                  s"function $fn reads the catalog ${if (cat.exists(c)) "table" else "view"} $c; " +
+                    "a function body may not read catalog tables or views — define a view instead"))
+                None
+              }
               // validate NOW: the native registration parses and analyzes the
               // parameter list, RETURNS clause and body before anything persists
               spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $fn $defText")

@@ -34,23 +34,6 @@ object GraftSql {
     }
   }
 
-  /** Fixture view names [[registerFixtures]] owns — callers that let other
-    * views (e.g. catalog tables) shadow these use this list to know when a
-    * later un-shadowing needs [[refreshFixtures]].
-    */
-  def fixtureNames: Seq[String] =
-    Tables.tpch ++ Seq("events", "documents", "embeddings")
-
-  /** Re-register the fixture views unconditionally, dropping the memo —
-    * for when a same-named temp view (a catalog table registered on the
-    * SQL path) shadowed a fixture and has since been dropped: the memo
-    * would otherwise skip restoring the fixture view.
-    */
-  def refreshFixtures(spark: SparkSession, sfDir: String): Unit = {
-    registered.remove((System.identityHashCode(spark), sfDir))
-    registerFixtures(spark, sfDir)
-  }
-
   def sql(spark: SparkSession, sfDir: String, query: String): DataFrame = {
     registerFixtures(spark, sfDir)
     spark.sql(query)

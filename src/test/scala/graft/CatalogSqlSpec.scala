@@ -5,6 +5,8 @@ import graft.sources.{Catalog, CatalogSql}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** The SQL-text command surface over the warehouse catalog. The happy-path
   * lifecycle (CTAS → ALTER ADD → MERGE → DELETE → INSERT → SELECT) is
   * oracle-checked by the registered `catalog_sql_dml` query; these specs
@@ -932,5 +934,140 @@ class CatalogSqlSpec extends SparkSpec {
       assert(e.getMessage.contains("unsupported statement"), q)
     }
     assert(cat.tables() === Seq("t") && cat.table("t").count() === 1L)
+  }
+
+  test("repl with a warehouse binds VERSION AS OF as CatalogSql.exec does") {
+    val wh = CatalogOps.tempWarehouse()
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    graft.dsl.Dump.repl(
+      spark, sf0001,
+      Iterator(
+        "CREATE TABLE tv (id BIGINT);",
+        "INSERT INTO tv VALUES (1), (2), (3);", // v1
+        "DELETE FROM tv WHERE id = 3;",         // v2
+        "SELECT COUNT(*) AS n FROM tv VERSION AS OF 1;",
+        "\\q"),
+      out += _, warehouse = Some(wh))
+    assert(!out(4).startsWith("error:"), out(4))
+    assert(out(4).contains("| 3 "))
+  }
+
+  test("a view defined with VERSION AS OF reads that snapshot") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1), (2), (3)") // v1
+    CatalogSql.exec(spark, cat, "DELETE FROM t WHERE id = 3")         // v2
+    CatalogSql.exec(spark, cat, "CREATE VIEW old AS SELECT id FROM t VERSION AS OF 1")
+    CatalogSql.exec(spark, cat, "CREATE VIEW old_big AS SELECT id FROM old WHERE id > 1")
+    def n(q: String) = CatalogSql.exec(spark, cat, q).collect().head.getLong(0)
+    assert(n("SELECT COUNT(*) FROM old") === 3L)
+    assert(n("SELECT COUNT(*) FROM old_big") === 2L)
+  }
+
+  test("a statement reads only the tables it names: a broken table fails only its reads") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE a (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO a VALUES (1)")
+    CatalogSql.exec(spark, cat, "CREATE TABLE b (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO b VALUES (1), (2)")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(cat.warehouse, "b"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".parquet")).take(1)
+      .foreach(java.nio.file.Files.delete)
+    finally files.close()
+    def n(q: String) = CatalogSql.exec(spark, cat, q).collect().head.getLong(0)
+    assert(n("SELECT COUNT(*) FROM a") === 1L)
+    CatalogSql.exec(spark, cat, "INSERT INTO a VALUES (2)")
+    assert(n("SELECT COUNT(*) FROM a") === 2L)
+    intercept[Exception](n("SELECT COUNT(*) FROM b"))
+  }
+
+  test("repl with a warehouse: \\d and \\schema see the catalog from the first line") {
+    val wh = CatalogOps.tempWarehouse()
+    val cat = new Catalog(spark, wh)
+    cat.create("first_kv", StructType(Seq(StructField("k", LongType), StructField("v", StringType))))
+    cat.createView("first_kv_k", "SELECT k FROM first_kv")
+    val out = scala.collection.mutable.ArrayBuffer[String]()
+    graft.dsl.Dump.repl(
+      spark, sf0001,
+      Iterator("\\d", "\\schema first_kv", "\\d first_kv_k", "\\q"),
+      out += _, warehouse = Some(wh))
+    val listed = out(1).split("\n").toSet
+    assert(Set("first_kv", "first_kv_k", "lineitem").subsetOf(listed), out(1))
+    assert(out(2).startsWith("first_kv (") && out(2).contains("  k BIGINT"), out(2))
+    assert(out(3).contains("k: long") && !out(3).contains("v:"), out(3))
+  }
+
+  test("a CTE named like a catalog table shadows it; its body still reads the table") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1), (2), (3)")
+    def n(q: String) = CatalogSql.exec(spark, cat, q).collect().head.getLong(0)
+    assert(n("WITH t AS (SELECT CAST(7 AS BIGINT) AS id) SELECT COUNT(*) FROM t") === 1L)
+    assert(n("WITH t AS (SELECT CAST(7 AS BIGINT) AS id) " +
+      "SELECT COUNT(*) FROM (SELECT id FROM t WHERE id IN (SELECT id FROM t))") === 1L)
+    assert(n("WITH u AS (SELECT id FROM t WHERE id > 1) SELECT COUNT(*) FROM u") === 2L)
+  }
+
+  test("two views that refer to each other fail with an error naming both") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1)")
+    CatalogSql.exec(spark, cat, "CREATE VIEW va AS SELECT id FROM t")
+    CatalogSql.exec(spark, cat, "CREATE VIEW vb AS SELECT id FROM va")
+    // closing the cycle through SQL is refused, and the old definition stays
+    val e1 = intercept[IllegalArgumentException] {
+      CatalogSql.exec(spark, cat, "CREATE OR REPLACE VIEW va AS SELECT id FROM vb")
+    }
+    assert(e1.getMessage.contains("va") && e1.getMessage.contains("vb"), e1.getMessage)
+    assert(cat.viewSql("va") === "SELECT id FROM t")
+    // a cycle stored by the API fails where it is read
+    cat.createView("va", "SELECT id FROM vb", orReplace = true)
+    val e2 = intercept[IllegalArgumentException] {
+      CatalogSql.exec(spark, cat, "SELECT COUNT(*) FROM vb").collect()
+    }
+    assert(e2.getMessage.contains("va") && e2.getMessage.contains("vb"), e2.getMessage)
+  }
+
+  test("CREATE FUNCTION rejects a body that reads a catalog table or view") {
+    val cat = freshCat()
+    CatalogSql.exec(spark, cat, "CREATE TABLE t (id BIGINT)")
+    CatalogSql.exec(spark, cat, "INSERT INTO t VALUES (1), (2)")
+    CatalogSql.exec(spark, cat, "CREATE VIEW v AS SELECT id FROM t")
+    Seq(
+      "CREATE FUNCTION cnt() RETURNS BIGINT RETURN (SELECT COUNT(*) FROM t)" -> "table t",
+      "CREATE FUNCTION big2() RETURNS TABLE (id BIGINT) RETURN SELECT id FROM v WHERE id > 1" ->
+        "view v").foreach { case (q, rel) =>
+      val e = intercept[IllegalArgumentException](CatalogSql.exec(spark, cat, q))
+      assert(e.getMessage.contains(rel) && e.getMessage.contains("define a view"), e.getMessage)
+    }
+    assert(cat.functions().isEmpty)
+    // a body that names a CTE of a catalog table's name reads no catalog table
+    CatalogSql.exec(spark, cat,
+      "CREATE FUNCTION seven() RETURNS TABLE (id INT) RETURN WITH t AS (SELECT 7 AS id) SELECT id FROM t")
+    assert(CatalogSql.exec(spark, cat, "SELECT id FROM seven()").collect().head.getInt(0) === 7)
+  }
+
+  test("column names with '.' or '`' are rejected on every schema path") {
+    val cat = freshCat()
+    Seq("a.b", "a`b").foreach { c =>
+      val e = intercept[IllegalArgumentException] {
+        cat.create("t", StructType(Seq(StructField(c, LongType))))
+      }
+      assert(e.getMessage.contains(c))
+    }
+    intercept[IllegalArgumentException](cat.nest("n", spark.range(1).toDF("a.b")))
+    CatalogSql.exec(spark, cat, "CREATE TABLE u (id BIGINT)")
+    Seq(
+      "CREATE TABLE w (`x.y` BIGINT)",
+      "CREATE TABLE w AS SELECT 1 AS `x.y`",
+      "ALTER TABLE u ADD COLUMN `x.y` BIGINT",
+      "ALTER TABLE u RENAME COLUMN id TO `x``y`").foreach { q =>
+      val e = intercept[IllegalArgumentException](CatalogSql.exec(spark, cat, q))
+      assert(e.getMessage.contains("may not contain"), q)
+    }
+    assert(cat.tables() === Seq("u") && cat.schema("u").fieldNames.toSeq === Seq("id"))
+    // the warehouse stays usable
+    CatalogSql.exec(spark, cat, "INSERT INTO u VALUES (1)")
+    assert(CatalogSql.exec(spark, cat, "SELECT COUNT(*) FROM u").collect().head.getLong(0) === 1L)
   }
 }
